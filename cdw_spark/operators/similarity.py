@@ -325,26 +325,6 @@ def _dot_sql(name: str, weights: list[float]) -> str:
     return "(" + " + ".join(f"{name}[{i}]*({w!r})" for i, w in enumerate(weights)) + ")"
 
 
-def _scores_sql(name: str, norm_name: str, cents: list[tuple[int, list[float]]]) -> str:
-    """array(cosine vs every unit centroid) — centroids ride the plan as
-    literal weights: scoring needs no join, no shuffle, no HOF."""
-    return (
-        "array("
-        + ", ".join(f"{_dot_sql(name, w)}/{norm_name}" for _, w in cents)
-        + ")"
-    )
-
-
-def _cid_sql(scores_name: str, cents: list[tuple[int, list[float]]]) -> str:
-    """Argmax-score centroid id: array_position takes the FIRST maximum —
-    deterministic tie-break toward the lower list index."""
-    cid_arr = "array(" + ", ".join(str(cid) for cid, _ in cents) + ")"
-    return (
-        f"element_at({cid_arr}, cast(array_position({scores_name}, "
-        f"array_max({scores_name})) as int))"
-    )
-
-
 def ivf_train(
     corpus: DataFrame,
     nlist: int = 16,
@@ -1461,25 +1441,6 @@ def _int_assign_stats_arrow(
     if mode == "train":
         return q.select("qv").mapInPandas(run, "cid int, n long, s array<long>")
     return q.select("qv").mapInPandas(run, "cid int, n long, inertia long")
-
-
-def _assign_to_centroids(frame: DataFrame, cents: list[list[int]], dim: int) -> DataFrame:
-    """Argmin assignment against literal centroids (ties to the lower cid):
-    k codegen'd distance folds per row, zero join, zero shuffle. Adds
-    ``cid`` and the min distance ``_dm``."""
-    k = len(cents)
-    d = frame
-    for c_idx, c in enumerate(cents):
-        d = d.withColumn(f"_d{c_idx}", F.expr(_centroid_dist_expr(c, dim)))
-    dmin = F.least(*[F.col(f"_d{c_idx}") for c_idx in range(k)])
-    cid = F.lit(None)
-    for c_idx in reversed(range(k)):
-        cid = F.when(F.col(f"_d{c_idx}") == F.col("_dm"), c_idx).otherwise(cid)
-    return (
-        d.withColumn("_dm", dmin)
-        .withColumn("cid", cid.cast("int"))
-        .drop(*[f"_d{c_idx}" for c_idx in range(k)])
-    )
 
 
 def _kmeans_train_centroids(q: DataFrame, k: int, iters: int, dim: int) -> list[list[int]]:

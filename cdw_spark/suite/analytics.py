@@ -2204,16 +2204,12 @@ def timeseries_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     materializes every group value in one in-memory row — measured
     Java-heap OOM on a 1 GiB default session at 9.4M slopes) and NOT a
     full per-group window sort (3 flags -> 3 tasks sort 3.1M rows each —
-    measured 11 s): it is the two-pass banded exact median (r13: the
-    former approx_percentile sketch band was this query's costliest
-    stage — 42 s of QuantileSummaries task time at sf0.1; the fixed
-    log-grid cell histogram replaced it, measured 5.5 -> 3.9 s
-    interleaved same-session A/B). Pass 1: per-flag cell counts on a
-    fixed log grid — pure arithmetic, map-side combined; the bounded
-    cell cumsum locates the middle-rank cells AND the exact
-    rows-below-band count. Pass 2: ONLY the band cells' rows sort in
-    the per-group window, and the global midpoint ranks are picked as
-    count_below + band_rank. Pair generation broadcasts the
+    measured 11 s): it is the two-pass banded exact median. Pass 1:
+    per-flag cell counts on a fixed log grid — pure arithmetic,
+    map-side combined; the bounded cell cumsum locates the middle-rank
+    cells AND the exact rows-below-band count. Pass 2: ONLY the band
+    cells' rows sort in the per-group window, and the global midpoint
+    ranks are picked as count_below + band_rank. Pair generation broadcasts the
     calendar-bounded daily relation so the fanout join parallelizes
     across the repartitioned probe side instead of the 3 flag keys.
     Both engines state the identical midpoint formula (avg of the one
@@ -2254,14 +2250,14 @@ def timeseries_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("rb") - F.col("ra"), F.datediff("db", "da").cast("double")
             ).alias("slope"),
         )
-        # the sketch/count pass and the band pass both consume this
+        # the cell-count pass and the band pass both consume this
         # |days|^2-row relation; materialize it once.
         .localCheckpoint(eager=False)
     )
     from ..operators.stats import banded_exact_median
 
     med = banded_exact_median(
-        slopes, ["flag"], "slope", margin=0.01, accuracy=1000, out_col="sen_slope"
+        slopes, ["flag"], "slope", out_col="sen_slope"
     ).withColumnRenamed("n", "n_pairs")
     days = daily.groupBy("flag").agg(F.count(F.lit(1)).cast("bigint").alias("n_days"))
     return days.join(med, "flag").select(
@@ -2595,52 +2591,44 @@ def sketch_hll_set_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     "order.",
 )
 def agg_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale shape (VERDICT r5 #2 paid): NO per-group sort over the fact
-    relation. Rows collapse to the DISTINCT-value relation (flag, price,
-    count) in one map-side-combined shuffle; the exact running count per
-    value comes from the two-level prefix-sum (two_level_cumsum —
-    range-bucketed, parallel within-bucket sorts). Rank-trim arithmetic
-    then runs per distinct value: a value whose rank run [cumc-c+1, cumc]
-    straddles a cut contributes exactly the clamped number of copies, so
-    the trimmed/winsorized sums are EXACT — ties at the cut drop
-    identical values either way. The oracle's per-row rank window is the
+    """Scale shape: NO per-group sort over the fact relation. Rows
+    collapse to the DISTINCT-value relation (flag, price, count, sum) in
+    one map-side-combined shuffle; the exact running count per value and
+    the per-flag totals come from value_ranks (range-bucketed, parallel
+    within-bucket sorts). Rank-trim arithmetic then runs per distinct
+    value: a value whose rank run [cum_c-c+1, cum_c] straddles a cut
+    contributes exactly the clamped number of copies, so the
+    trimmed/winsorized sums are EXACT — ties at the cut drop identical
+    values either way. The oracle's per-row rank window is the
     semantic spec, not the plan."""
-    from ..operators.stats import two_level_cumsum
-    from ..plans.hints import broadcast_if_small
+    from ..operators.stats import value_ranks
 
     li = load_fixture(spark, sf_dir, "lineitem")
     dec = F.col("l_extendedprice").cast("decimal(18,2)")
-    # checkpoint: the distinct-value relation feeds BOTH the prefix-sum
-    # and the per-flag totals — one fact shuffle, not two
-    d = (
-        li.groupBy(F.col("l_returnflag").alias("flag"), dec.alias("v"))
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
-    )
-    cum = two_level_cumsum(d, ["flag"], "v", [], {"cumc": "c"})
-    st = d.groupBy("flag").agg(
-        F.sum("c").alias("n"),
-        # count operand at (19,0): (18,2)x(19,0) lands exactly at the
-        # DECIMAL(38,2) cap, so per-distinct-value counts stay exact to
-        # ~1e19 (the old (10,0) silently NULLed past 1e10 — ADVICE r8)
-        F.sum(F.col("v") * F.col("c").cast("decimal(19,0)")).alias("s_all"),
-    ).withColumn("lo", F.expr("n div 10"))
-    j = cum.join(broadcast_if_small(st), "flag")
+    # s: the exact DECIMAL sum of the value's copies (v * count)
+    j = value_ranks(
+        li.select(F.col("l_returnflag").alias("flag"), dec.alias("v")),
+        ["flag"],
+        "v",
+        {"c": F.lit(1), "s": F.col("v")},
+    ).withColumn("lo", F.expr("tot_c div 10"))
     trim_lo = F.greatest(
-        F.lit(0), F.least(F.col("c"), F.col("lo") - (F.col("cumc") - F.col("c")))
+        F.lit(0), F.least(F.col("c"), F.col("lo") - (F.col("cum_c") - F.col("c")))
     )
     trim_hi = F.greatest(
-        F.lit(0), F.least(F.col("c"), F.col("cumc") - (F.col("n") - F.col("lo")))
+        F.lit(0), F.least(F.col("c"), F.col("cum_c") - (F.col("tot_c") - F.col("lo")))
     )
     agg = j.groupBy("flag").agg(
-        F.max("n").alias("n"),
+        F.max("tot_c").alias("n"),
         F.max("lo").alias("lo"),
-        F.max("s_all").alias("s_all"),
+        F.max("tot_s").alias("s_all"),
         F.sum(trim_lo.cast("decimal(19,0)") * F.col("v")).alias("s_tlo"),
         F.sum(trim_hi.cast("decimal(19,0)") * F.col("v")).alias("s_thi"),
-        F.min(F.when(F.col("cumc") > F.col("lo"), F.col("v"))).alias("low_val"),
+        F.min(F.when(F.col("cum_c") > F.col("lo"), F.col("v"))).alias("low_val"),
         F.max(
-            F.when(F.col("cumc") - F.col("c") < F.col("n") - F.col("lo"), F.col("v"))
+            F.when(
+                F.col("cum_c") - F.col("c") < F.col("tot_c") - F.col("lo"), F.col("v")
+            )
         ).alias("high_val"),
     )
     s_kept = F.col("s_all") - F.coalesce(F.col("s_tlo"), F.lit(0)) - F.coalesce(
@@ -2696,38 +2684,32 @@ def agg_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     "engine-identical.",
 )
 def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale shape (VERDICT r5 #2 paid): NO per-group sort over the fact
-    relation. Rows collapse to the DISTINCT-value relation (flag, price,
-    weight sum) in one map-side-combined shuffle; the exact inclusive
-    running weight per value comes from the two-level prefix-sum
-    (two_level_cumsum). The crossing value — the smallest price whose
-    inclusive cumulative weight reaches half the total — is identical to
-    the oracle's first crossing ROW's price: within a tie run the
-    row-level crossing happens at the same price the run-level crossing
-    names. The oracle's per-row window is the semantic spec, not the
+    """Scale shape: NO per-group sort over the fact relation. Rows
+    collapse to the DISTINCT-value relation (flag, price, weight sum) in
+    one map-side-combined shuffle; the exact inclusive running weight
+    per value and the per-flag total weight come from value_ranks. The
+    crossing value — the smallest price whose inclusive cumulative weight
+    reaches half the total — is identical to the oracle's first crossing
+    ROW's price: within a tie run the row-level crossing happens at the
+    same price the run-level crossing names. The oracle's per-row window is the semantic spec, not the
     plan."""
-    from ..operators.stats import two_level_cumsum
-    from ..plans.hints import broadcast_if_small
+    from ..operators.stats import value_ranks
 
     li = load_fixture(spark, sf_dir, "lineitem")
     v = F.col("l_extendedprice").cast("decimal(18,2)")
     w = F.col("l_quantity").cast("decimal(18,2)")
-    # checkpoint: the distinct-value relation feeds BOTH the prefix-sum
-    # and the per-flag totals — one fact shuffle, not two
-    d = (
-        li.groupBy(F.col("l_returnflag").alias("flag"), v.alias("v"))
-        .agg(F.sum(w).alias("wv"))
-        .localCheckpoint(eager=True)
-    )
-    cum = two_level_cumsum(d, ["flag"], "v", [], {"cw": "wv"})
-    tot = d.groupBy("flag").agg(F.sum("wv").alias("tw"))
     return (
-        cum.join(broadcast_if_small(tot), "flag")
-        .filter(F.col("cw") * 2 >= F.col("tw"))
+        value_ranks(
+            li.select(F.col("l_returnflag").alias("flag"), v.alias("v"), w.alias("w")),
+            ["flag"],
+            "v",
+            {"w": F.col("w")},
+        )
+        .filter(F.col("cum_w") * 2 >= F.col("tot_w"))
         .groupBy("flag")
         .agg(
             F.round(F.min("v").cast("double"), 2).alias("weighted_median_price"),
-            F.round(F.max("tw").cast("double"), 2).alias("total_weight"),
+            F.round(F.max("tot_w").cast("double"), 2).alias("total_weight"),
         )
     )
 
@@ -2871,12 +2853,8 @@ def agg_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.stats import two_level_cumsum
 
     o = load_fixture(spark, sf_dir, "orders")
-    # checkpoint: the per-customer aggregate feeds the prefix-sum's
-    # sketch and main pass — one fact shuffle, not two
-    spend = (
-        o.groupBy(F.col("o_custkey").alias("cust"))
-        .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("x"))
-        .localCheckpoint(eager=True)
+    spend = o.groupBy(F.col("o_custkey").alias("cust")).agg(
+        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("x")
     )
     ranked = two_level_cumsum(
         spend.withColumn("_one", F.lit(1)),
@@ -2956,25 +2934,24 @@ def agg_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: one groupBy on the value column (distinct values,
-    not rows), then the exact running count via the two-level prefix-sum
-    (two_level_cumsum — range-bucketed, parallel within-bucket sorts; no
-    single-partition window even when the distinct domain is dense),
-    then a single-row reduce."""
-    from ..operators.stats import two_level_cumsum
+    not rows), then the exact running count via value_ranks (range-
+    bucketed, parallel within-bucket sorts; no single-partition window
+    even when the distinct domain is dense), then a single-row reduce."""
+    from ..operators.stats import value_ranks
 
     o = load_fixture(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus").isin("F", "O")
     )
-    vals = (
-        o.groupBy(F.col("o_totalprice").alias("v"))
-        .agg(
-            F.count(F.lit(1)).alias("c"),
-            F.sum(F.when(F.col("o_orderstatus") == "F", 1).otherwise(0)).alias("cf"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    ranked = two_level_cumsum(vals, [], "v", [], {"cum": "c"}).select(
-        "c", "cf", (F.lit(2) * F.col("cum") - F.col("c") + F.lit(1)).alias("dr2")
+    ranked = value_ranks(
+        o,
+        [],
+        "o_totalprice",
+        {
+            "c": F.lit(1),
+            "cf": F.when(F.col("o_orderstatus") == "F", 1).otherwise(0),
+        },
+    ).select(
+        "c", "cf", (F.lit(2) * F.col("cum_c") - F.col("c") + F.lit(1)).alias("dr2")
     )
     s = ranked.agg(
         F.sum("cf").cast("bigint").alias("n1"),
@@ -3132,15 +3109,14 @@ def agg_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation. Doubled tie-averaged ranks (2*cum_count - c + 1) come from
     the two marginal distinct-value relations: quantity's ~50-value
     domain ranks in a trivially bounded window; the dense price marginal
-    ranks via the two-level prefix-sum (two_level_cumsum). Cell products
-    c * rx2 * ry2 stay exact in DECIMAL(38,0) for group sizes to ~5e18
-    rows (2n <= 1e19 per doubled-rank operand cast — VERDICT r9 #3
-    promoted the last (10,0) casts; DuckDB's 19x19 product width is
-    exactly its 38-digit physical max). The oracle's
-    per-row rank windows are the semantic spec, not the plan."""
+    ranks via value_ranks. Cell products c * rx2 * ry2 stay exact in
+    DECIMAL(38,0) for group sizes to ~5e18 rows (2n <= 1e19 per
+    doubled-rank operand cast; DuckDB's 19x19 product width is exactly
+    its 38-digit physical max). The oracle's per-row rank windows are
+    the semantic spec, not the plan."""
     from pyspark.sql.window import Window
 
-    from ..operators.stats import two_level_cumsum
+    from ..operators.stats import value_ranks
     from ..plans.hints import broadcast_if_small
 
     li = load_fixture(spark, sf_dir, "lineitem")
@@ -3168,11 +3144,10 @@ def agg_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(2) * F.sum("cx").over(wq) - F.col("cx") + F.lit(1)).alias("rx2"),
     )
     # price marginal: dense domain -> two-level prefix-sum rank
-    dp = joint.groupBy("flag", "y").agg(F.sum("c").alias("cy"))
-    dp = two_level_cumsum(dp, ["flag"], "y", [], {"cumy": "cy"}).select(
+    dp = value_ranks(joint, ["flag"], "y", {"cy": F.col("c")}).select(
         "flag",
         "y",
-        (F.lit(2) * F.col("cumy") - F.col("cy") + F.lit(1)).alias("ry2"),
+        (F.lit(2) * F.col("cum_cy") - F.col("cy") + F.lit(1)).alias("ry2"),
     )
     r = joint.join(broadcast_if_small(dq), ["flag", "x"]).join(
         broadcast_if_small(dp), ["flag", "y"]
@@ -3483,38 +3458,30 @@ def timeseries_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: one groupBy on the value column, then BOTH exact
-    running counts in one two-level prefix-sum pass (two_level_cumsum —
-    no single-partition window even when the distinct domain is dense),
+    running counts and totals in one value_ranks pass (no
+    single-partition window even when the distinct domain is dense),
     single-row reduce."""
-    from ..operators.stats import two_level_cumsum
+    from ..operators.stats import value_ranks
 
     o = load_fixture(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus").isin("F", "O")
     )
-    vals = (
-        o.groupBy(F.col("o_totalprice").alias("v"))
-        .agg(
-            F.sum(F.when(F.col("o_orderstatus") == "F", 1).otherwise(0))
-            .cast("bigint")
-            .alias("cf"),
-            F.sum(F.when(F.col("o_orderstatus") == "O", 1).otherwise(0))
-            .cast("bigint")
-            .alias("co"),
-        )
-        .localCheckpoint(eager=True)
+    status = F.col("o_orderstatus")
+    cum = value_ranks(
+        o,
+        [],
+        "o_totalprice",
+        {
+            "cf": F.when(status == "F", 1).otherwise(0),
+            "co": F.when(status == "O", 1).otherwise(0),
+        },
     )
-    cum = two_level_cumsum(
-        vals, [], "v", [], {"c1": "cf", "c2": "co"}
-    ).select("c1", "c2")
-    tot = vals.agg(
-        F.sum("cf").cast("bigint").alias("n1"), F.sum("co").cast("bigint").alias("n2")
-    )
-    d = cum.crossJoin(F.broadcast(tot)).agg(
-        F.max(F.abs(F.col("c1") * F.col("n2") - F.col("c2") * F.col("n1"))).alias(
-            "dnum"
-        ),
-        F.max("n1").alias("n1"),
-        F.max("n2").alias("n2"),
+    d = cum.agg(
+        F.max(
+            F.abs(F.col("cum_cf") * F.col("tot_co") - F.col("cum_co") * F.col("tot_cf"))
+        ).alias("dnum"),
+        F.max("tot_cf").alias("n1"),
+        F.max("tot_co").alias("n2"),
     )
     n1d = F.col("n1").cast("double")
     n2d = F.col("n2").cast("double")
@@ -6033,11 +6000,10 @@ def events_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_exact_delay_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: one fact-fact join co-partitioned on the order key,
-    one groupBy to the distinct-value relation, two_level_cumsum for
-    the running counts (no single-partition sort even on a dense value
-    domain), a |values|-row aggregate."""
-    from ..operators.stats import two_level_cumsum
-    from ..plans.hints import broadcast_if_small
+    value_ranks for the distinct-value running counts and totals (no
+    single-partition sort even on a dense value domain), a |values|-row
+    aggregate."""
+    from ..operators.stats import value_ranks
 
     li = load_fixture(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_shipdate"
@@ -6047,25 +6013,19 @@ def agg_exact_delay_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_returnflag").alias("flag"),
         F.datediff("l_shipdate", "o_orderdate").cast("bigint").alias("d"),
     )
-    cells = (
-        j.groupBy("flag", "d")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .localCheckpoint(eager=True)
-    )
-    cum = two_level_cumsum(cells, ["flag"], "d", [], {"cumc": "c"})
-    n = cells.groupBy("flag").agg(F.sum("c").cast("bigint").alias("n"))
     return (
-        cum.join(broadcast_if_small(n), "flag")
+        value_ranks(j, ["flag"], "d", {"c": F.lit(1)})
+        .withColumnRenamed("tot_c", "n")
         .groupBy("flag")
         .agg(
             F.max("n").cast("bigint").alias("n"),
-            F.min(F.when(F.expr("cumc >= (n + 1) div 2"), F.col("d")))
+            F.min(F.when(F.expr("cum_c >= (n + 1) div 2"), F.col("d")))
             .cast("bigint")
             .alias("p50"),
-            F.min(F.when(F.expr("cumc >= (9 * n + 9) div 10"), F.col("d")))
+            F.min(F.when(F.expr("cum_c >= (9 * n + 9) div 10"), F.col("d")))
             .cast("bigint")
             .alias("p90"),
-            F.min(F.when(F.expr("cumc >= (99 * n + 99) div 100"), F.col("d")))
+            F.min(F.when(F.expr("cum_c >= (99 * n + 99) div 100"), F.col("d")))
             .cast("bigint")
             .alias("p99"),
         )
@@ -6372,10 +6332,9 @@ def agg_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: one per-order aggregate (co-partitioned fact
-    shuffle), collapse to the distinct-|d| relation (the two_level_cumsum
-    skew contract), the two-level running count for ranks, then one
+    shuffle), value_ranks over |d| for the tie-averaged ranks, then one
     map-side-combined reduce and two broadcast 1-row joins."""
-    from ..operators.stats import two_level_cumsum
+    from ..operators.stats import value_ranks
 
     li = load_fixture(spark, sf_dir, "lineitem")
     cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("bigint")
@@ -6388,15 +6347,8 @@ def agg_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.abs(F.col("d")).alias("ad"),
         F.when(F.col("d") > 0, 1).otherwise(0).alias("pos"),
     )
-    cells = (
-        nz.groupBy("ad")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("c"),
-            F.sum("pos").cast("bigint").alias("cpos"),
-        )
-    )
-    r = two_level_cumsum(cells, [], "ad", [], {"cum": "c"}).select(
-        "c", "cpos", (F.lit(2) * F.col("cum") - F.col("c") + F.lit(1)).alias("dr2")
+    r = value_ranks(nz, [], "ad", {"c": F.lit(1), "cpos": F.col("pos")}).select(
+        "c", "cpos", (F.lit(2) * F.col("cum_c") - F.col("c") + F.lit(1)).alias("dr2")
     )
     s = r.agg(
         F.sum("c").cast("decimal(38,0)").alias("n"),
@@ -7118,7 +7070,7 @@ def intervals_union_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the inner loop of tree learners and the one-feature baseline "
     "every curation-classifier review asks for, computed EXACTLY over "
     "all thresholds at once. Candidates collapse to distinct score "
-    "values (the two_level_cumsum skew contract), running class counts "
+    "values (value_ranks), running class counts "
     "give each split's left/right compositions in one pass, and every "
     "weighted-impurity term 2*pL*(nL-pL)/nL is half-away micro-rounded "
     "with HUGEINT/DECIMAL(38,0) operands (quotient < n*5e5, int64 to "
@@ -7126,31 +7078,26 @@ def intervals_union_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     "min-score broadcast, never an engine-specific arg_min).",
 )
 def agg_stump_split_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale shape: one groupBy to the distinct-value relation, the
-    two-level prefix-sum for running class counts, then three 1-row
-    broadcast reductions — no per-threshold pass, no sort."""
-    from ..operators.stats import two_level_cumsum
-    from ..plans.hints import broadcast_if_small
+    """Scale shape: value_ranks for the distinct-value running class
+    counts and totals, then two 1-row broadcast reductions — no
+    per-threshold pass, no sort."""
+    from ..operators.stats import value_ranks
 
-    d = load_fixture(spark, sf_dir, "documents")
-    cells = (
-        d.groupBy(F.col("n_chars").alias("v"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("c"),
-            F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
-            .cast("bigint")
-            .alias("p"),
-        )
-        .localCheckpoint(eager=True)
+    d = load_fixture(spark, sf_dir, "documents").select(
+        F.col("n_chars").alias("v"), "lang"
     )
-    cum = two_level_cumsum(cells, [], "v", [], {"cumn": "c", "cump": "p"})
-    tot = cells.agg(
-        F.sum("c").cast("decimal(38,0)").alias("n"),
-        F.sum("p").cast("decimal(38,0)").alias("np"),
+    cum = value_ranks(
+        d, [], "v", {"c": F.lit(1), "p": F.when(F.col("lang") == "en", 1).otherwise(0)}
+    ).select(
+        "v",
+        F.col("cum_c").alias("cumn"),
+        F.col("cum_p").alias("cump"),
+        F.col("tot_c").cast("decimal(38,0)").alias("n"),
+        F.col("tot_p").cast("decimal(38,0)").alias("np"),
     )
+    tot = cum.agg(F.max("n").alias("n"), F.max("np").alias("np"))
     scored = (
-        cum.crossJoin(F.broadcast(tot))
-        .filter(F.expr("cumn < n"))
+        cum.filter(F.expr("cumn < n"))
         .selectExpr(
             "v",
             "(2 * 2 * CAST(cump AS DECIMAL(38,0)) * (cumn - cump) * 1000000"
@@ -7507,12 +7454,12 @@ def events_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Spark).",
 )
 def agg_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale shape: one groupBy to (value, priority) cells, one to
-    distinct values, exact running counts via two_level_cumsum (range-
-    bucketed parallel within-bucket windows — no single-partition sort),
-    one broadcast join back to the cell relation, then two bounded
-    reduces. The fact table is shuffled once, on the value column."""
-    from ..operators.stats import two_level_cumsum
+    """Scale shape: one groupBy to (value, priority) cells, exact
+    running counts over distinct values via value_ranks (range-bucketed
+    parallel within-bucket windows — no single-partition sort), one
+    broadcast join back to the cell relation, then two bounded reduces.
+    The fact table is shuffled once, on the value column."""
+    from ..operators.stats import value_ranks
 
     o = load_fixture(spark, sf_dir, "orders")
     cells = (
@@ -7520,12 +7467,14 @@ def agg_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
         .localCheckpoint(eager=True)
     )
-    vals = cells.groupBy("v").agg(F.sum("c").cast("bigint").alias("cv"))
-    ranked = two_level_cumsum(vals, [], "v", [], {"cum": "cv"}).select(
-        "v", (F.lit(2) * F.col("cum") - F.col("cv") + F.lit(1)).alias("dr2")
-    )
+    ranked = value_ranks(cells, [], "v", {"cv": F.col("c")})
     grp = (
-        cells.join(ranked, "v")
+        cells.join(
+            ranked.select(
+                "v", (F.lit(2) * F.col("cum_cv") - F.col("cv") + F.lit(1)).alias("dr2")
+            ),
+            "v",
+        )
         .groupBy("g")
         .agg(
             F.sum("c").cast("bigint").alias("nj"),
@@ -7534,8 +7483,8 @@ def agg_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("r2j"),
         )
     )
-    tot = vals.agg(
-        F.sum("cv").cast("bigint").alias("n"),
+    tot = ranked.agg(
+        F.max("tot_cv").alias("n"),
         F.sum(F.col("cv") * F.col("cv") * F.col("cv") - F.col("cv"))
         .cast("decimal(38,0)")
         .alias("tie3"),
@@ -7981,10 +7930,10 @@ def window_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     "quantize half-away to exact micro integers. No doubles anywhere.",
 )
 def agg_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale shape: one fact aggregate to customers, one collapse to
-    distinct totals, exact running sums via two_level_cumsum (bucketed
-    parallel windows), a 10-row group — no single-partition sort."""
-    from ..operators.stats import two_level_cumsum
+    """Scale shape: one fact aggregate to customers, exact running sums
+    over the distinct customer totals via value_ranks (bucketed parallel
+    windows), a 10-row group — no single-partition sort."""
+    from ..operators.stats import value_ranks
 
     o = load_fixture(spark, sf_dir, "orders")
     cust = o.groupBy("o_custkey").agg(
@@ -7992,26 +7941,18 @@ def agg_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("v")
     )
-    cells = (
-        cust.groupBy("v")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        .selectExpr("v", "cnt", "CAST(v * cnt AS BIGINT) AS sval")
-        .localCheckpoint(eager=True)
-    )
-    ranked = two_level_cumsum(cells, [], "v", [], {"cumn": "cnt", "cumv": "sval"})
-    tot = cells.agg(
-        F.sum("cnt").cast("bigint").alias("n"),
-        F.sum("sval").cast("bigint").alias("tv"),
-    )
-    dec = (
-        ranked.crossJoin(F.broadcast(tot))
-        .groupBy(F.expr("CAST((10 * cumn + n - 1) div n AS BIGINT)").alias("decile"))
-        .agg(
-            F.max("cumn").alias("cumn"),
-            F.max("cumv").alias("cumv"),
+    ranked = value_ranks(cust, [], "v", {"cnt": F.lit(1), "sval": F.col("v")})
+    dec = ranked.groupBy(
+        F.expr("CAST((10 * cum_cnt + tot_cnt - 1) div tot_cnt AS BIGINT)").alias(
+            "decile"
         )
+    ).agg(
+        F.max("cum_cnt").alias("cumn"),
+        F.max("cum_sval").alias("cumv"),
+        F.max("tot_cnt").alias("n"),
+        F.max("tot_sval").alias("tv"),
     )
-    return dec.crossJoin(F.broadcast(tot)).selectExpr(
+    return dec.selectExpr(
         "decile",
         "CAST(cumn AS BIGINT) AS cum_customers",
         "CAST((2 * CAST(cumn AS DECIMAL(19,0)) * 1000000 + n)"
@@ -8454,36 +8395,28 @@ def window_sortino_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_bowley_skewness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: one fact shuffle to distinct (flag, cents) cells,
-    exact running counts via two_level_cumsum (bucketed parallel
-    windows), one bounded join + 3-row reduce."""
-    from ..operators.stats import two_level_cumsum
-    from ..plans.hints import broadcast_if_small
+    exact running counts via value_ranks (bucketed parallel windows),
+    one 3-row reduce."""
+    from ..operators.stats import value_ranks
 
-    li = load_fixture(spark, sf_dir, "lineitem")
-    cells = (
-        li.selectExpr(
-            "l_returnflag AS flag",
-            "CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents",
-        )
-        .groupBy("flag", "cents")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .localCheckpoint(eager=True)
+    li = load_fixture(spark, sf_dir, "lineitem").selectExpr(
+        "l_returnflag AS flag",
+        "CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents",
     )
-    cum = two_level_cumsum(cells, ["flag"], "cents", [], {"cumc": "c"})
-    st = cells.groupBy("flag").agg(F.sum("c").cast("bigint").alias("n"))
     picked = (
-        cum.join(broadcast_if_small(st), "flag")
+        value_ranks(li, ["flag"], "cents", {"c": F.lit(1)})
+        .withColumnRenamed("tot_c", "n")
         .groupBy("flag")
         .agg(
             F.max("n").alias("n"),
             F.min(
-                F.when(F.col("cumc") >= F.expr("(n + 3) div 4"), F.col("cents"))
+                F.when(F.col("cum_c") >= F.expr("(n + 3) div 4"), F.col("cents"))
             ).alias("q1"),
             F.min(
-                F.when(F.col("cumc") >= F.expr("(n + 1) div 2"), F.col("cents"))
+                F.when(F.col("cum_c") >= F.expr("(n + 1) div 2"), F.col("cents"))
             ).alias("q2"),
             F.min(
-                F.when(F.col("cumc") >= F.expr("(3 * n + 3) div 4"), F.col("cents"))
+                F.when(F.col("cum_c") >= F.expr("(3 * n + 3) div 4"), F.col("cents"))
             ).alias("q3"),
         )
     )
@@ -10358,10 +10291,11 @@ def window_aroon(spark: SparkSession, sf_dir: str) -> DataFrame:
     "under the DECIMAL(38,0) ceiling.",
 )
 def agg_wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale shape: one groupBy on the quantized value, exact running
-    counts via two_level_cumsum (no single-partition sort), the
-    next-support gap via a rank equi-join (rank+1), a 1-row reduce."""
-    from ..operators.stats import two_level_cumsum
+    """Scale shape: exact running counts over the distinct quantized
+    values via value_ranks (no single-partition sort), the next-support
+    gap via an equi-join on the running count (a value's cum_n - n is
+    its predecessor's cum_n), a 1-row reduce."""
+    from ..operators.stats import value_ranks
 
     e = load_fixture(spark, sf_dir, "events").filter(
         F.col("event_type").isin("purchase", "click")
@@ -10369,28 +10303,29 @@ def agg_wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5)).cast(
         "bigint"
     )
-    vals = (
-        e.select("event_type", x.alias("x"))
-        .groupBy("x")
-        .agg(
-            F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-            .cast("bigint")
-            .alias("ca"),
-            F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-            .cast("bigint")
-            .alias("cb"),
-        )
-        .withColumn("one", F.lit(1))
-        .localCheckpoint(eager=True)
+    cum = value_ranks(
+        e.select("event_type", x.alias("x")),
+        [],
+        "x",
+        {
+            "n": F.lit(1),
+            "ca": F.when(F.col("event_type") == "purchase", 1).otherwise(0),
+            "cb": F.when(F.col("event_type") == "click", 1).otherwise(0),
+        },
     )
-    cum = two_level_cumsum(vals, [], "x", [], {"a1": "ca", "a2": "cb", "rk": "one"})
-    nxt = cum.select((F.col("rk") - F.lit(1)).alias("rk"), F.col("x").alias("nx"))
-    stepped = cum.join(nxt, "rk").select("x", "nx", "a1", "a2")
-    tot = vals.agg(
-        F.sum("ca").cast("bigint").alias("na"),
-        F.sum("cb").cast("bigint").alias("nb"),
+    nxt = cum.select(
+        (F.col("cum_n") - F.col("n")).alias("cum_n"), F.col("x").alias("nx")
     )
-    s = stepped.crossJoin(F.broadcast(tot)).agg(
+    stepped = cum.join(nxt, "cum_n").select(
+        "x",
+        "nx",
+        F.col("cum_ca").alias("a1"),
+        F.col("cum_cb").alias("a2"),
+        F.col("tot_ca").alias("na"),
+        F.col("tot_cb").alias("nb"),
+    )
+    tot = cum.agg(F.max("tot_ca").alias("na"), F.max("tot_cb").alias("nb"))
+    s = stepped.agg(
         F.sum(
             F.expr(
                 "abs(CAST(a1 AS DECIMAL(19,0)) * nb"
@@ -10472,11 +10407,11 @@ def agg_wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(604800e6 us) are TZ-free.",
 )
 def events_weekly_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale shape: one union projection of the fact table, one
-    (pair, value) groupBy, per-pair exact running counts via
-    two_level_cumsum (partitioned by pair — no single-partition sort),
-    a |pairs|-row join + rollup."""
-    from ..operators.stats import two_level_cumsum
+    """Scale shape: one union projection of the fact table, per-pair
+    exact running counts and totals over distinct values via
+    value_ranks (partitioned by pair — no single-partition sort), a
+    |pairs|-row rollup."""
+    from ..operators.stats import value_ranks
 
     e = load_fixture(spark, sf_dir, "events").filter(
         F.col("event_type") == "purchase"
@@ -10487,35 +10422,24 @@ def events_weekly_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides = base.select(
         (F.col("wk") + F.lit(1)).alias("p"), "v", F.lit(1).alias("s")
     ).unionAll(base.select(F.col("wk").alias("p"), "v", F.lit(2).alias("s")))
-    vals = (
-        sides.groupBy("p", "v")
-        .agg(
-            F.sum(F.when(F.col("s") == 1, 1).otherwise(0))
-            .cast("bigint")
-            .alias("c1"),
-            F.sum(F.when(F.col("s") == 2, 1).otherwise(0))
-            .cast("bigint")
-            .alias("c2"),
-        )
-        .localCheckpoint(eager=True)
+    cum = value_ranks(
+        sides,
+        ["p"],
+        "v",
+        {
+            "c1": F.when(F.col("s") == 1, 1).otherwise(0),
+            "c2": F.when(F.col("s") == 2, 1).otherwise(0),
+        },
     )
-    cum = two_level_cumsum(vals, ["p"], "v", [], {"a1": "c1", "a2": "c2"})
-    tot = vals.groupBy("p").agg(
-        F.sum("c1").cast("bigint").alias("n1"),
-        F.sum("c2").cast("bigint").alias("n2"),
-    )
-    d = (
-        cum.join(F.broadcast(tot), "p")
-        .groupBy("p")
-        .agg(
-            F.max(
-                F.abs(F.col("a1") * F.col("n2") - F.col("a2") * F.col("n1"))
-            ).alias("dnum")
-        )
+    d = cum.groupBy("p").agg(
+        F.max(
+            F.abs(F.col("cum_c1") * F.col("tot_c2") - F.col("cum_c2") * F.col("tot_c1"))
+        ).alias("dnum"),
+        F.max("tot_c1").alias("n1"),
+        F.max("tot_c2").alias("n2"),
     )
     return (
-        d.join(F.broadcast(tot), "p")
-        .filter((F.col("n1") > 0) & (F.col("n2") > 0))
+        d.filter((F.col("n1") > 0) & (F.col("n2") > 0))
         .selectExpr(
             "p AS week_bucket",
             "n1 AS n_prev",
@@ -10905,39 +10829,26 @@ def timeseries_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     "on a degenerate margin (all mass on one side).",
 )
 def agg_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale shape: one groupBy on the DISTINCT value column, the exact
-    running count via the two-level prefix-sum (no single-partition
-    window), then three 1-row broadcast reduces (total, cutoff,
-    above-counts) — the fact table is scanned once."""
-    from ..operators.stats import two_level_cumsum
+    """Scale shape: the exact running count and totals over the DISTINCT
+    value column via value_ranks (no single-partition window), then
+    three 1-row broadcast reduces (total, cutoff, above-counts) — the
+    fact table is scanned once."""
+    from ..operators.stats import value_ranks
 
     o = load_fixture(spark, sf_dir, "orders")
-    vals = (
-        o.groupBy(F.col("o_totalprice").alias("v"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("c"),
-            F.sum(
-                F.when(
-                    F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("ch"),
-        )
-        .localCheckpoint(eager=True)
+    hi = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
+    ranked = value_ranks(
+        o.select(F.col("o_totalprice").alias("v"), hi.alias("hi")),
+        [],
+        "v",
+        {"c": F.lit(1), "ch": F.when(F.col("hi"), 1).otherwise(0)},
     )
-    ranked = two_level_cumsum(vals, [], "v", [], {"cum": "c"})
-    tot = vals.agg(
-        F.sum("c").cast("bigint").alias("nn"),
-        F.sum("ch").cast("bigint").alias("n1"),
-    )
-    cut = (
-        ranked.crossJoin(F.broadcast(tot))
-        .filter(F.col("cum") >= F.expr("(nn + 1) div 2"))
-        .agg(F.min("v").alias("cutv"))
+    tot = ranked.agg(F.max("tot_c").alias("nn"), F.max("tot_ch").alias("n1"))
+    cut = ranked.filter(F.col("cum_c") >= F.expr("(tot_c + 1) div 2")).agg(
+        F.min("v").alias("cutv")
     )
     ab = (
-        vals.crossJoin(F.broadcast(cut))
+        ranked.crossJoin(F.broadcast(cut))
         .filter(F.col("v") > F.col("cutv"))
         .agg(
             F.coalesce(F.sum("ch"), F.lit(0)).cast("bigint").alias("a"),
@@ -11042,10 +10953,10 @@ def agg_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_conover_squared_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: one fact scan -> 2-row group stats broadcast back ->
-    distinct-deviation collapse -> two-level prefix-sum ranks -> one
-    1-row moment reduce. No single-partition window, no row-level
-    shuffle beyond the two groupBys."""
-    from ..operators.stats import two_level_cumsum
+    distinct-deviation ranks via value_ranks -> one 1-row moment
+    reduce. No single-partition window, no row-level shuffle beyond the
+    two groupBys."""
+    from ..operators.stats import value_ranks
 
     o = load_fixture(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus").isin("F", "O")
@@ -11073,20 +10984,12 @@ def agg_conover_squared_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("dm"),
     )
-    vals = (
-        d.groupBy("dm")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("c"),
-            F.sum(F.when(F.col("g") == "F", 1).otherwise(0))
-            .cast("bigint")
-            .alias("cf"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    rk = two_level_cumsum(vals, [], "dm", [], {"cum": "c"}).select(
+    rk = value_ranks(
+        d, [], "dm", {"c": F.lit(1), "cf": F.when(F.col("g") == "F", 1).otherwise(0)}
+    ).select(
         "c",
         "cf",
-        (F.lit(2) * F.col("cum") - F.col("c") + F.lit(1)).alias("dr2"),
+        (F.lit(2) * F.col("cum_c") - F.col("c") + F.lit(1)).alias("dr2"),
     )
     s = rk.select(
         "c", "cf", "dr2", F.expr("dr2 * dr2").alias("d2")
@@ -11177,32 +11080,28 @@ def agg_conover_squared_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     "T and E[T] = 1/6 + 1/(6N) are one final double sequence.",
 )
 def agg_cvm_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale shape: one groupBy on the DISTINCT value column, two exact
-    running counts via ONE two-level prefix-sum pass, then a 1-row
-    reduce with the totals broadcast — the fact table is scanned once."""
-    from ..operators.stats import two_level_cumsum
+    """Scale shape: two exact running counts and their totals over the
+    DISTINCT value column via ONE value_ranks pass, then a 1-row reduce
+    — the fact table is scanned once."""
+    from ..operators.stats import value_ranks
 
     li = load_fixture(spark, sf_dir, "lineitem").filter(
         F.col("l_returnflag").isin("R", "N")
     )
-    vals = (
-        li.groupBy(F.col("l_extendedprice").alias("v"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("c"),
-            F.sum(F.when(F.col("l_returnflag") == "R", 1).otherwise(0))
-            .cast("bigint")
-            .alias("cr"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    ranked = two_level_cumsum(vals, [], "v", [], {"cum": "c", "cumr": "cr"})
-    tot = vals.agg(
-        F.sum("cr").cast("bigint").alias("n"),
-        F.sum(F.col("c") - F.col("cr")).cast("bigint").alias("m"),
+    ranked = value_ranks(
+        li,
+        [],
+        "l_extendedprice",
+        {"c": F.lit(1), "cr": F.when(F.col("l_returnflag") == "R", 1).otherwise(0)},
+    ).select(
+        "c",
+        F.col("cum_c").alias("cum"),
+        F.col("cum_cr").alias("cumr"),
+        F.col("tot_cr").alias("n"),
+        (F.col("tot_c") - F.col("tot_cr")).alias("m"),
     )
     s = (
-        ranked.crossJoin(F.broadcast(tot))
-        .groupBy("n", "m")
+        ranked.groupBy("n", "m")
         .agg(
             F.sum(
                 F.expr(
@@ -11302,10 +11201,10 @@ def agg_cvm_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "division. Quantities are centi-quantized exact integers.",
 )
 def agg_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale shape: one groupBy on the ~50-value DISTINCT quantity
-    domain, one two-level prefix-sum over it, one broadcast totals
-    join, one 1-row reduce — pair semantics with zero pair joins."""
-    from ..operators.stats import two_level_cumsum
+    """Scale shape: one value_ranks pass over the ~50-value DISTINCT
+    quantity domain (running counts and totals), one 1-row reduce —
+    pair semantics with zero pair joins."""
+    from ..operators.stats import value_ranks
 
     li = load_fixture(spark, sf_dir, "lineitem")
     base = li.select(
@@ -11314,22 +11213,18 @@ def agg_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("q"),
         F.when(F.col("l_discount") >= 0.05, 1).otherwise(0).alias("hi"),
     )
-    vals = (
-        base.groupBy("q")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("c"),
-            F.sum("hi").cast("bigint").alias("chi"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    ranked = two_level_cumsum(vals, [], "q", [], {"cum": "c", "cumhi": "chi"})
-    tot = vals.agg(
-        F.sum("chi").cast("bigint").alias("n"),
-        F.sum(F.col("c") - F.col("chi")).cast("bigint").alias("m"),
+    ranked = value_ranks(
+        base, [], "q", {"c": F.lit(1), "chi": F.col("hi")}
+    ).select(
+        "c",
+        "chi",
+        F.col("cum_c").alias("cum"),
+        F.col("cum_chi").alias("cumhi"),
+        F.col("tot_chi").alias("n"),
+        (F.col("tot_c") - F.col("tot_chi")).alias("m"),
     )
     s = (
-        ranked.crossJoin(F.broadcast(tot))
-        .groupBy("n", "m")
+        ranked.groupBy("n", "m")
         .agg(
             F.sum(
                 F.expr(
@@ -12941,34 +12836,30 @@ def ab_test_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     "NULLIF-guarded on an interquartile-degenerate distribution.",
 )
 def agg_moors_kurtosis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale shape: one groupBy on the DISTINCT value column, the exact
-    running count via the two-level prefix-sum, one 7-cutoff broadcast
-    probe, one 1-row assembly."""
-    from ..operators.stats import two_level_cumsum
+    """Scale shape: the exact running count over the DISTINCT value
+    column via value_ranks, one 7-cutoff broadcast probe, one 1-row
+    assembly."""
+    from ..operators.stats import value_ranks
 
     o = load_fixture(spark, sf_dir, "orders")
-    vals = (
-        o.groupBy(F.col("o_totalprice").alias("v"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .localCheckpoint(eager=True)
-    )
-    ranked = two_level_cumsum(vals, [], "v", [], {"cum": "c"})
-    tot = vals.agg(F.sum("c").cast("bigint").alias("n"))
-    ks = vals.sparkSession.range(1, 8).select(F.col("id").alias("k"))
+    ranked = value_ranks(
+        o.select(F.col("o_totalprice").alias("v")), [], "v", {"c": F.lit(1)}
+    ).withColumnRenamed("tot_c", "n")
+    ks = spark.range(1, 8).select(F.col("id").alias("k"))
     oct_ = (
-        ranked.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(ks))
-        .filter(F.col("cum") >= F.expr("(k * n + 7) div 8"))
+        ranked.crossJoin(F.broadcast(ks))
+        .filter(F.col("cum_c") >= F.expr("(k * n + 7) div 8"))
         .groupBy("k")
-        .agg(F.min("v").alias("e"))
+        .agg(F.min("v").alias("e"), F.max("n").alias("n"))
     )
     w = oct_.agg(
         *[
             F.max(F.when(F.col("k") == k, F.col("e"))).alias(f"e{k}")
             for k in (1, 2, 3, 5, 6, 7)
-        ]
+        ],
+        F.max("n").alias("n"),
     )
-    return w.crossJoin(F.broadcast(tot)).selectExpr(
+    return w.selectExpr(
         "n AS n_orders",
         "ROUND(e1, 2) AS e1",
         "ROUND(e3, 2) AS e3",
@@ -13252,10 +13143,9 @@ def dq_timestamp_heaping(spark: SparkSession, sf_dir: str) -> DataFrame:
     "signed accumulator; two final double sequences.",
 )
 def agg_gini_mean_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale shape: one groupBy on the DISTINCT centi-value column, the
-    exact running count via the two-level prefix-sum, one broadcast
-    totals join, one 1-row signed reduce."""
-    from ..operators.stats import two_level_cumsum
+    """Scale shape: the exact running count and totals over the DISTINCT
+    centi-value column via value_ranks, one 1-row signed reduce."""
+    from ..operators.stats import value_ranks
 
     o = load_fixture(spark, sf_dir, "orders")
     cust = o.select(
@@ -13266,23 +13156,16 @@ def agg_gini_mean_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("xc"),
     ).groupBy("o_custkey").agg(F.sum("xc").cast("bigint").alias("x"))
-    vals = (
-        cust.groupBy("x")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .localCheckpoint(eager=True)
-    )
-    ranked = two_level_cumsum(vals, [], "x", [], {"cum": "c"}).select(
+    ranked = value_ranks(
+        cust, [], "x", {"c": F.lit(1), "s": F.col("x").cast("decimal(19,0)")}
+    ).select(
         "x",
         "c",
-        (F.lit(2) * F.col("cum") - F.col("c") + F.lit(1)).alias("dr2"),
+        (F.lit(2) * F.col("cum_c") - F.col("c") + F.lit(1)).alias("dr2"),
+        F.col("tot_c").alias("n"),
+        F.col("tot_s").alias("s"),
     )
-    tot = vals.agg(
-        F.sum("c").cast("bigint").alias("n"),
-        F.sum(F.expr("CAST(c AS DECIMAL(19,0)) * x"))
-        .cast("decimal(38,0)")
-        .alias("s"),
-    )
-    g = ranked.crossJoin(F.broadcast(tot)).agg(
+    g = ranked.agg(
         F.sum(
             F.expr(
                 "CAST(c AS DECIMAL(19,0)) * (CAST(x AS DECIMAL(19,0))"
@@ -13290,9 +13173,11 @@ def agg_gini_mean_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         .cast("decimal(38,0)")
-        .alias("num")
+        .alias("num"),
+        F.max("n").alias("n"),
+        F.max("s").cast("decimal(38,0)").alias("s"),
     )
-    return g.crossJoin(F.broadcast(tot)).selectExpr(
+    return g.selectExpr(
         "n AS n_customers",
         "ROUND(2.0 * CAST(num AS DOUBLE)"
         " / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)) / 100.0, 6)"
@@ -13422,36 +13307,29 @@ def window_pivot_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     "NULLIF-guarded on the degenerate zero-sum case.",
 )
 def agg_quartile_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale shape: one groupBy on the DISTINCT value column, the exact
-    running count via the two-level prefix-sum, two 1-row cutoff
-    probes."""
-    from ..operators.stats import two_level_cumsum
+    """Scale shape: the exact running count over the DISTINCT value
+    column via value_ranks, one 1-row cutoff reduce."""
+    from ..operators.stats import value_ranks
 
     o = load_fixture(spark, sf_dir, "orders")
-    vals = (
-        o.groupBy(F.col("o_totalprice").alias("v"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .localCheckpoint(eager=True)
-    )
-    ranked = two_level_cumsum(vals, [], "v", [], {"cum": "c"})
-    tot = vals.agg(F.sum("c").cast("bigint").alias("n"))
-    rt = ranked.crossJoin(F.broadcast(tot))
-    q1 = rt.filter(F.col("cum") >= F.expr("(n + 3) div 4")).agg(
-        F.min("v").alias("q1")
-    )
-    q3 = rt.filter(F.col("cum") >= F.expr("(3 * n + 3) div 4")).agg(
-        F.min("v").alias("q3")
-    )
-    return (
-        tot.crossJoin(F.broadcast(q1))
-        .crossJoin(F.broadcast(q3))
-        .selectExpr(
-            "n AS n_orders",
-            "ROUND(q1, 2) AS q1",
-            "ROUND(q3, 2) AS q3",
-            "ROUND((q3 - q1) / NULLIF(q3 + q1, 0.0), 6)"
-            " AS quartile_dispersion",
+    q = (
+        value_ranks(o.select(F.col("o_totalprice").alias("v")), [], "v", {"c": F.lit(1)})
+        .withColumnRenamed("tot_c", "n")
+        .agg(
+            F.max("n").alias("n"),
+            F.min(F.when(F.col("cum_c") >= F.expr("(n + 3) div 4"), F.col("v"))).alias(
+                "q1"
+            ),
+            F.min(
+                F.when(F.col("cum_c") >= F.expr("(3 * n + 3) div 4"), F.col("v"))
+            ).alias("q3"),
         )
+    )
+    return q.selectExpr(
+        "n AS n_orders",
+        "ROUND(q1, 2) AS q1",
+        "ROUND(q3, 2) AS q3",
+        "ROUND((q3 - q1) / NULLIF(q3 + q1, 0.0), 6) AS quartile_dispersion",
     )
 
 

@@ -3475,23 +3475,22 @@ def mix_waterfill_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sample_pps_systematic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: running weights via the two-level prefix-sum over
-    doc_id (unique per row — the skew contract holds trivially), a
-    1-row total broadcast, one exact integer filter — no sort beyond
-    the bucketed windows, no per-tick work."""
+    doc_id (unique per row, so no distinct-value collapse is needed)
+    with the total weight alongside, one exact integer filter — no sort
+    beyond the bucketed windows, no per-tick work."""
     from ..operators.stats import two_level_cumsum
 
     d = load_fixture(spark, sf_dir, "documents").select(
         "doc_id", F.col("n_chars").cast("bigint").alias("wt")
-    ).localCheckpoint(eager=True)
+    )
     c = two_level_cumsum(d, [], "doc_id", [], {"cumw": "wt"})
-    tot = d.agg(F.sum("wt").cast("bigint").alias("tw"))
     cb = (
         "GREATEST(CAST(0 AS DECIMAL(38,0)), LEAST(CAST(50 AS DECIMAL(38,0)),"
         " CASE WHEN 100 * CAST({x} AS DECIMAL(38,0)) - tw > 0"
         " THEN (100 * CAST({x} AS DECIMAL(38,0)) - tw + 2 * tw - 1)"
         " div (2 * CAST(tw AS DECIMAL(38,0))) ELSE 0 END))"
     )
-    h = c.crossJoin(F.broadcast(tot)).selectExpr(
+    h = c.withColumnRenamed("tot_wt", "tw").selectExpr(
         "doc_id",
         "wt",
         "cumw",
@@ -3571,7 +3570,7 @@ def sample_pps_systematic(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sample_horvitz_thompson(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: one running-weight pass via the two-level prefix
-    sum (doc_id is unique — the skew contract holds trivially), 1-row
+    sum (doc_id is unique, so no distinct-value collapse is needed), 1-row
     broadcast totals, one exact integer filter + reduce. The word
     count y rides the same scan that the exact truth needs anyway."""
     from ..operators.stats import two_level_cumsum
@@ -3804,9 +3803,9 @@ def sample_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dq_volume_anomaly_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: one map-side-combined aggregate to calendar-bounded
-    day rows, two distinct-cell exact medians over that bounded
-    relation, 1-row broadcasts back onto it."""
-    from ..operators.stats import two_level_cumsum
+    day rows, two exact lower medians over that bounded relation
+    (value_ranks), 1-row broadcasts back onto it."""
+    from ..operators.stats import value_ranks
 
     e = load_fixture(spark, sf_dir, "events")
     d = e.groupBy(
@@ -3814,17 +3813,12 @@ def dq_volume_anomaly_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count(F.lit(1)).cast("bigint").alias("n_events")).localCheckpoint(
         eager=True
     )
-    tot = d.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
 
     def lower_median(vals, col):
-        cells = vals.groupBy(F.col(col).alias("v")).agg(
-            F.count(F.lit(1)).cast("bigint").alias("c")
-        )
-        cum = two_level_cumsum(cells, [], "v", [], {"cumc": "c"})
         return (
-            cum.crossJoin(F.broadcast(tot))
-            .filter(F.col("cumc") >= F.expr("(n + 1) div 2"))
-            .agg(F.min("v").alias("m"))
+            value_ranks(vals, [], col, {"c": F.lit(1)})
+            .filter(F.col("cum_c") >= F.expr("(tot_c + 1) div 2"))
+            .agg(F.min(col).alias("m"))
         )
 
     med = lower_median(d, "n_events").withColumnRenamed("m", "med")

@@ -301,8 +301,9 @@ def recs_catalog_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: the recommender build is the recs_item_cooccurrence
     plan (capped basket self-join, broadcast frequency joins, bounded
     per-item window); everything added is |items|-row aggregates, a
-    distinct-exposure-cell prefix sum, and 1-row broadcasts."""
-    from ..operators.stats import two_level_cumsum
+    distinct-exposure running count (value_ranks), and 1-row
+    broadcasts."""
+    from ..operators.stats import value_ranks
 
     rec = recs_item_cooccurrence(spark, sf_dir)
     expos = rec.groupBy(F.col("neighbor").alias("item")).agg(
@@ -315,8 +316,7 @@ def recs_catalog_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("item", F.coalesce("x", F.lit(0)).alias("x"))
         .localCheckpoint(eager=True)
     )
-    cells = xv.groupBy("x").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    cum = two_level_cumsum(cells, [], "x", [], {"cumc": "c"})
+    cum = value_ranks(xv, [], "x", {"c": F.lit(1)})
     tot = xv.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("x").cast("bigint").alias("sx"),
@@ -327,7 +327,7 @@ def recs_catalog_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     gn = cum.agg(
         F.sum(
             F.col("c").cast("decimal(19,0)")
-            * (F.lit(2) * F.col("cumc") - F.col("c") + F.lit(1))
+            * (F.lit(2) * F.col("cum_c") - F.col("c") + F.lit(1))
             * F.col("x").cast("decimal(19,0)")
         )
         .cast("decimal(38,0)")
@@ -909,7 +909,6 @@ def recs_gini_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "item", F.coalesce("e0", F.lit(0)).cast("bigint").alias("e")
         )
-        .localCheckpoint(eager=True)
     )
     ranked = two_level_cumsum(
         expo.withColumn("_one", F.lit(1)),

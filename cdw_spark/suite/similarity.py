@@ -2024,10 +2024,10 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def embedding_norm_outlier_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: one posexplode to (row, dim) with a map-side-combined
-    per-vector sum, a distinct-norm cell relation through the two-level
-    prefix-sum (no single-partition window), 1-row median/total
-    broadcasts, one counting pass."""
-    from ..operators.stats import two_level_cumsum
+    per-vector sum, the distinct-norm running count via value_ranks (no
+    single-partition window), 1-row median/total broadcasts, one
+    counting pass."""
+    from ..operators.stats import value_ranks
 
     e = load_fixture(spark, sf_dir, "embeddings")
     norms = (
@@ -2042,15 +2042,11 @@ def embedding_norm_outlier_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.col("qv") * F.col("qv")).cast("bigint").alias("norm2"))
         .localCheckpoint(eager=True)
     )
-    cells = norms.groupBy(F.col("norm2").alias("v")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("c")
-    )
-    cum = two_level_cumsum(cells, [], "v", [], {"cumc": "c"})
     tot = norms.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     med = (
-        cum.crossJoin(F.broadcast(tot))
-        .filter(F.col("cumc") >= F.expr("(n + 1) div 2"))
-        .agg(F.min("v").alias("med2"))
+        value_ranks(norms, [], "norm2", {"c": F.lit(1)})
+        .filter(F.col("cum_c") >= F.expr("(tot_c + 1) div 2"))
+        .agg(F.min("norm2").alias("med2"))
     )
     cnt = norms.crossJoin(F.broadcast(med)).agg(
         F.sum(F.when(F.lit(4) * F.col("norm2") < F.col("med2"), 1).otherwise(0))

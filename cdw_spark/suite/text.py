@@ -1238,23 +1238,19 @@ def eval_langid_classification_report(spark: SparkSession, sf_dir: str) -> DataF
     "the final display division.",
 )
 def eval_binary_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale shape: one groupBy on the score column (distinct values,
-    not rows), then the exact running count via the two-level prefix-sum
-    (two_level_cumsum — no single-partition window even when the score
-    domain is dense), then a single-row reduce."""
-    from ..operators.stats import two_level_cumsum
+    """Scale shape: the exact running count over the DISTINCT score
+    values via value_ranks (no single-partition window even when the
+    score domain is dense), then a single-row reduce."""
+    from ..operators.stats import value_ranks
 
     d = load_fixture(spark, sf_dir, "documents")
-    vals = (
-        d.groupBy(F.col("n_chars").alias("v"))
-        .agg(
-            F.count(F.lit(1)).alias("c"),
-            F.sum(F.when(F.col("lang") == "en", 1).otherwise(0)).alias("cp"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    ranked = two_level_cumsum(vals, [], "v", [], {"cum": "c"}).select(
-        "c", "cp", (F.lit(2) * F.col("cum") - F.col("c") + F.lit(1)).alias("dr2")
+    ranked = value_ranks(
+        d,
+        [],
+        "n_chars",
+        {"c": F.lit(1), "cp": F.when(F.col("lang") == "en", 1).otherwise(0)},
+    ).select(
+        "c", "cp", (F.lit(2) * F.col("cum_c") - F.col("c") + F.lit(1)).alias("dr2")
     )
     s = ranked.agg(
         F.sum("cp").cast("decimal(38,0)").alias("n1"),
@@ -1727,30 +1723,23 @@ def eval_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exactly; one display division at the end.",
 )
 def eval_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale shape: one groupBy to the distinct-score relation (the
-    two_level_cumsum skew contract), descending running counts via the
-    two-level prefix-sum on the negated score, then a 1-row reduce —
-    no single-partition sort on a dense score domain."""
-    from ..operators.stats import two_level_cumsum
+    """Scale shape: descending running counts over the DISTINCT scores
+    via value_ranks on the negated score, then a 1-row reduce — no
+    single-partition sort on a dense score domain."""
+    from ..operators.stats import value_ranks
 
     d = load_fixture(spark, sf_dir, "documents")
-    cells = (
-        d.groupBy(F.col("n_chars").alias("v"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("c"),
-            F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
-            .cast("bigint")
-            .alias("p"),
-        )
-        .withColumn("nv", -F.col("v"))
-        .localCheckpoint(eager=True)
+    cum = value_ranks(
+        d.select((-F.col("n_chars")).alias("nv"), "lang"),
+        [],
+        "nv",
+        {"c": F.lit(1), "p": F.when(F.col("lang") == "en", 1).otherwise(0)},
     )
-    cum = two_level_cumsum(cells, [], "nv", [], {"cumn": "c", "cump": "p"})
     t = cum.filter(F.col("p") > 0).agg(
         F.sum(
             F.expr(
-                "(2 * CAST(p AS DECIMAL(19,0)) * cump * 1000000000 + cumn)"
-                " div (2 * CAST(cumn AS DECIMAL(38,0)))"
+                "(2 * CAST(p AS DECIMAL(19,0)) * cum_p * 1000000000 + cum_c)"
+                " div (2 * CAST(cum_c AS DECIMAL(38,0)))"
             )
         )
         .cast("decimal(38,0)")
@@ -1829,39 +1818,25 @@ def eval_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpora to ~1e15 docs); no doubles anywhere.",
 )
 def eval_lift_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale shape: one groupBy to the distinct-score relation, the
-    two-level prefix-sum on the negated score (no single-partition
-    window on a dense domain), a <=10-row decile collapse, broadcast
-    totals."""
-    from ..operators.stats import two_level_cumsum
+    """Scale shape: running counts and totals over the DISTINCT scores
+    via value_ranks on the negated score (no single-partition window on
+    a dense domain), a <=10-row decile collapse."""
+    from ..operators.stats import value_ranks
 
     d = load_fixture(spark, sf_dir, "documents")
-    cells = (
-        d.groupBy(F.col("n_chars").alias("v"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("c"),
-            F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
-            .cast("bigint")
-            .alias("p"),
-        )
-        .withColumn("nv", -F.col("v"))
-        .localCheckpoint(eager=True)
+    cum = value_ranks(
+        d.select((-F.col("n_chars")).alias("nv"), "lang"),
+        [],
+        "nv",
+        {"c": F.lit(1), "p": F.when(F.col("lang") == "en", 1).otherwise(0)},
     )
-    tot = d.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
-        .cast("bigint")
-        .alias("np"),
-    )
-    cum = two_level_cumsum(cells, [], "nv", [], {"cumn": "c", "cump": "p"})
     dec = (
-        cum.crossJoin(F.broadcast(tot))
-        .selectExpr(
-            "CAST(1 + ((cumn - 1) * 10) div n AS INT) AS decile",
-            "cumn",
-            "cump",
-            "n",
-            "np",
+        cum.selectExpr(
+            "CAST(1 + ((cum_c - 1) * 10) div tot_c AS INT) AS decile",
+            "cum_c AS cumn",
+            "cum_p AS cump",
+            "tot_c AS n",
+            "tot_p AS np",
         )
         .groupBy("decile")
         .agg(
@@ -1953,8 +1928,9 @@ def eval_lift_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: one token shuffle for first-occurrences, one for
     per-doc token counts, then BOTH running sums ride one
-    two_level_cumsum over the per-doc relation (the skew contract:
-    doc_id is unique per row) and a 1-row OLS reduce."""
+    two_level_cumsum over the per-doc relation (doc_id is unique per
+    row, so no distinct-value collapse is needed) and a 1-row OLS
+    reduce."""
     from ..operators.stats import two_level_cumsum
 
     d = load_fixture(spark, sf_dir, "documents")
@@ -1969,12 +1945,8 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("newv")
     )
     tc = tok.groupBy("doc_id").agg(F.count(F.lit(1)).cast("bigint").alias("toks"))
-    base = (
-        tc.join(nv, "doc_id", "left")
-        .select(
-            "doc_id", "toks", F.coalesce("newv", F.lit(0)).alias("newv")
-        )
-        .localCheckpoint(eager=True)
+    base = tc.join(nv, "doc_id", "left").select(
+        "doc_id", "toks", F.coalesce("newv", F.lit(0)).alias("newv")
     )
     cur = two_level_cumsum(base, [], "doc_id", [], {"cumn": "toks", "cumv": "newv"})
     pts = cur.filter((F.col("cumn") > 0) & (F.col("cumv") > 0)).select(

@@ -1,12 +1,15 @@
-"""8x scale measurement for two_level_cumsum on a SKEWED sort key
-(VERDICT r8 #4): 90% of rows share one value. The guarded call pattern
-(distinct-collapse first, count in sum_cols) must scale ~linearly; the
-raw shape would funnel every hot-value copy into one task's sort.
+"""8x scale measurement for value_ranks on a SKEWED sort key: 90% of
+rows share one value. value_ranks collapses to distinct values before
+the two-level prefix sum, so it must scale ~linearly; feeding the raw
+rows to two_level_cumsum would funnel every hot-value copy into one
+task's sort.
 
-Prints a warmed 1x-vs-8x wall-clock table for the collapsed pattern
-(4M -> 32M raw rows, ~200k -> ~1.6M distinct cells) plus, for contrast,
-the raw shape at 1x only (running it at 8x just times one giant task).
-Record the output in BENCHNOTES.
+Prints a warmed 1x-vs-8x wall-clock table for value_ranks on the raw
+skewed relation (4M -> 32M raw rows, ~200k -> ~1.6M distinct values)
+plus, for contrast, two_level_cumsum on the raw rows at 1x only (running
+it at 8x just times one giant task). Record the output in BENCHNOTES.
+
+    python scripts/skew_cumsum_8x.py    # SKEW_N=<rows> sets the 1x size
 """
 
 from __future__ import annotations
@@ -19,7 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from cdw_spark.operators.stats import two_level_cumsum
+from cdw_spark.operators.stats import two_level_cumsum, value_ranks
 from cdw_spark.session import get_spark
 
 
@@ -35,8 +38,7 @@ def skewed(spark, n_rows: int):
 
 def time_collapsed(spark, n_rows: int) -> float:
     t0 = time.time()
-    cells = skewed(spark, n_rows).groupBy("v").agg(F.count(F.lit(1)).alias("c"))
-    two_level_cumsum(cells, [], "v", [], {"cumc": "c"}).write.format(
+    value_ranks(skewed(spark, n_rows), [], "v", {"c": F.lit(1)}).write.format(
         "noop"
     ).mode("overwrite").save()
     dt = time.time() - t0
@@ -70,10 +72,10 @@ def main():
     traw = time_raw(spark, n1)
     print("| shape | rows | seconds |")
     print("|---|---|---|")
-    print(f"| collapsed 1x | {n1} | {t1:.2f} |")
-    print(f"| collapsed 8x | {8 * n1} | {t8:.2f} |")
-    print(f"| RAW (hazard, 1x only) | {n1} | {traw:.2f} |")
-    print(f"collapsed 8x ratio: {t8 / t1:.2f}")
+    print(f"| value_ranks 1x | {n1} | {t1:.2f} |")
+    print(f"| value_ranks 8x | {8 * n1} | {t8:.2f} |")
+    print(f"| RAW two_level_cumsum (hazard, 1x only) | {n1} | {traw:.2f} |")
+    print(f"value_ranks 8x ratio: {t8 / t1:.2f}")
     spark.stop()
 
 

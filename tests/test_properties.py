@@ -674,7 +674,7 @@ def test_interval_concurrency_matches_bruteforce(spark, tmp_path):
 def test_banded_median_equals_statistics_median(spark, vals):
     """banded_exact_median == statistics.median on generated data,
     including all-equal groups (band collapses to a point), heavy ties,
-    and odd/even counts — the sketch narrows the sort, never the answer."""
+    and odd/even counts — the grid narrows the sort, never the answer."""
     import statistics
 
     from cdw_spark.operators.stats import banded_exact_median
@@ -699,22 +699,19 @@ def test_banded_median_equals_statistics_median(spark, vals):
         min_size=1,
         max_size=80,
     ),
-    n_buckets=st.sampled_from([2, 8, 64]),
 )
-def test_two_level_cumsum_equals_window_cumsum(spark, rows, n_buckets):
+def test_two_level_cumsum_equals_window_cumsum(spark, rows):
     """two_level_cumsum == a plain ordered-window running sum on generated
     data, across grouped and global calls, heavy ties (bias toward 7),
-    degenerate bucket counts, and multiple summands — the range bucketing
-    relocates the sorts, never the values."""
+    and multiple summands — the range bucketing relocates the sorts,
+    never the values."""
     from cdw_spark.operators.stats import two_level_cumsum
 
     df = spark.createDataFrame(
         [(g, float(v), i, w, 1) for i, (g, v, w) in enumerate(rows)],
         "k string, v double, id long, w long, one int",
     )
-    got = two_level_cumsum(
-        df, ["k"], "v", ["id"], {"rn": "one", "cw": "w"}, n_buckets=n_buckets
-    ).collect()
+    got = two_level_cumsum(df, ["k"], "v", ["id"], {"rn": "one", "cw": "w"}).collect()
     expect = {}
     for i, (g, v, w) in enumerate(rows):
         prior = [
@@ -727,13 +724,69 @@ def test_two_level_cumsum_equals_window_cumsum(spark, rows, n_buckets):
     for r in got:
         assert (r["rn"], r["cw"]) == expect[(r["k"], r["id"])], (r, expect)
     # global (ungrouped) call over the same data
-    got_g = two_level_cumsum(
-        df, [], "v", ["id"], {"rn": "one"}, n_buckets=n_buckets
-    ).collect()
+    got_g = two_level_cumsum(df, [], "v", ["id"], {"rn": "one"}).collect()
     order = sorted(range(len(rows)), key=lambda i: (rows[i][1], i))
     pos = {idx: p + 1 for p, idx in enumerate(order)}
     for r in got_g:
         assert r["rn"] == pos[r["id"]]
+
+
+@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.sampled_from(["g1", "g2", None]),  # a NULL key is its own group
+            st.one_of(
+                st.integers(min_value=-1000, max_value=1000),
+                st.just(7),  # heavy ties
+                st.none(),  # NULL values: one distinct value, ranked first
+            ),
+            st.integers(min_value=0, max_value=9),
+        ),
+        min_size=1,
+        max_size=80,
+    ),
+)
+def test_value_ranks_matches_python_model(spark, rows):
+    """value_ranks == a brute-force Python model of per-distinct-value
+    sums, inclusive running sums and group totals, for grouped and
+    global calls, with heavy ties, NULL keys and NULL values (ranked
+    first)."""
+    from cdw_spark.operators.stats import value_ranks
+
+    df = spark.createDataFrame(rows, "k string, v long, w long")
+
+    def model(key):
+        groups = {}
+        for g, v, w in rows:
+            cell = groups.setdefault(key(g), {}).setdefault(v, [0, 0])
+            cell[0] += 1
+            cell[1] += w
+        out = {}
+        for g, cells in groups.items():
+            tot_c = sum(c for c, _ in cells.values())
+            tot_w = sum(w for _, w in cells.values())
+            cum_c = cum_w = 0
+            # NULL first, then ascending
+            for v in sorted(cells, key=lambda x: (x is not None, x)):
+                c, w = cells[v]
+                cum_c += c
+                cum_w += w
+                out[(g, v)] = (c, w, cum_c, cum_w, tot_c, tot_w)
+        return out
+
+    cols = ("c", "w", "cum_c", "cum_w", "tot_c", "tot_w")
+    weights = {"c": F.lit(1), "w": F.col("w")}
+    got = {
+        (r["k"], r["v"]): tuple(r[c] for c in cols)
+        for r in value_ranks(df, ["k"], "v", weights).collect()
+    }
+    assert got == model(lambda g: g)
+    got_g = {
+        (None, r["v"]): tuple(r[c] for c in cols)
+        for r in value_ranks(df, [], "v", weights).collect()
+    }
+    assert got_g == model(lambda g: None)
 
 
 _word = st.sampled_from(["aa", "bb", "cc", "dd", "ee", "ff", "gg", "hh"])
