@@ -41,7 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 # would write the same tmp dir concurrently (observed: FileNotFoundException
 # in the commit protocol when plan construction was threaded). One lock per
 # content key: the first thread builds, the rest block briefly and then see
-# the published _SUCCESS marker.
+# the published _SUCCESS marker. A key's lock is dropped once its marker is
+# published, so the dict holds only the builds in flight.
 _build_locks: dict[str, threading.Lock] = {}
 _build_locks_guard = threading.Lock()
 
@@ -49,6 +50,14 @@ _build_locks_guard = threading.Lock()
 def _key_lock(key: str) -> threading.Lock:
     with _build_locks_guard:
         return _build_locks.setdefault(key, threading.Lock())
+
+
+def _drop_key_lock(key: str) -> None:
+    """Forget a key's lock once its ``_SUCCESS`` marker exists. Safe: a
+    thread still waiting on the old lock re-checks the marker after
+    acquiring it, and so does a later caller that makes a fresh one."""
+    with _build_locks_guard:
+        _build_locks.pop(key, None)
 
 
 def _store_base() -> str:
@@ -162,6 +171,7 @@ def serve_at_rest(
                         # instead of a later misleading path-not-found
                         raise
                 _sweep_orphans(base, os.path.basename(d))
+        _drop_key_lock(d)
     return spark.read.parquet(d)
 
 
@@ -204,6 +214,7 @@ def serve_summary_at_rest(
                     shutil.rmtree(tmp, ignore_errors=True)
                     if not os.path.exists(os.path.join(sdir, "_SUCCESS")):
                         raise
+        _drop_key_lock(sdir)
     return spark.read.parquet(sdir)
 
 

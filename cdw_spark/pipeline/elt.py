@@ -19,19 +19,38 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.layout import REFERENCE_LAYOUTS, write_table
 from ..sources.json_loader import load_staging_events, load_staging_songs
-from .sparkify import transform_all
+from .sparkify import (
+    build_artists,
+    build_songplays,
+    build_songs,
+    build_time,
+    latest_user_versions,
+    transform_all,
+    users_latest_versioned,
+)
 
 # Insert order fixed by the reference (sql_queries.py:227). Order is not a
 # correctness dependency (all five read only staging) — preserved for parity.
 INSERT_ORDER = ("songplays", "users", "songs", "artists", "time")
 
 
-def load_staging(spark: SparkSession, log_path: str, song_path: str) -> dict[str, DataFrame]:
-    """The COPY stage (etl.py:6-15)."""
-    return {
+def load_staging(
+    spark: SparkSession, log_path: str, song_path: str, out_dir: str, mode: str
+) -> tuple[dict[str, DataFrame], dict[str, str]]:
+    """The COPY stage (etl.py:6-15): read both JSON sources and write each
+    staging table under ``out_dir`` with its declared layout (the
+    reference keeps them queryable in Redshift). Returns the freshly read
+    frames and {table: parquet path}."""
+    staging = {
         "staging_events": load_staging_events(spark, log_path),
         "staging_songs": load_staging_songs(spark, song_path),
     }
+    paths: dict[str, str] = {}
+    for name, df in staging.items():
+        path = os.path.join(out_dir, name)
+        write_table(df, name, REFERENCE_LAYOUTS[name], mode=mode, path=path)
+        paths[name] = path
+    return staging, paths
 
 
 def run_elt(
@@ -44,15 +63,9 @@ def run_elt(
 ) -> dict[str, str]:
     """Full pipeline: stage JSON -> transform -> write star schema.
 
-    Returns {table: parquet path}. Staging tables are also materialized
-    (the reference keeps them queryable in Redshift). Each write applies
-    the table's declared DISTKEY/SORTKEY layout."""
-    staging = load_staging(spark, log_path, song_path)
-    paths: dict[str, str] = {}
-    for name, df in staging.items():
-        path = os.path.join(out_dir, name)
-        write_table(df, name, REFERENCE_LAYOUTS[name], mode=mode, path=path)
-        paths[name] = path
+    Returns {table: parquet path}, staging tables included. Each write
+    applies the table's declared DISTKEY/SORTKEY layout."""
+    _, paths = load_staging(spark, log_path, song_path, out_dir, mode)
 
     # Re-read staging from parquet: the reference transforms read staged
     # tables, not the raw JSON — and at scale re-reading columnar staging
@@ -66,33 +79,6 @@ def run_elt(
         write_table(star[name], name, REFERENCE_LAYOUTS[name], mode=mode, path=path)
         paths[name] = path
     return paths
-
-
-def _users_latest_versioned(events: DataFrame) -> DataFrame:
-    """Per-user latest profile row WITH its (ts, sessionId) version key —
-    the mergeable form of build_users(faithful=False): keeping the max
-    version across any partition of the event history reproduces the
-    full-history answer, which is what makes the dim upsert incremental."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    # NULL userId forms its own group, exactly as build_users' window does
-    # in the full rebuild — dropping it would diverge from full-run parity.
-    se = events.filter(F.col("page") == "NextSong")
-    w = Window.partitionBy("userId").orderBy(F.col("ts").desc(), F.col("sessionId").desc())
-    return (
-        se.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            F.col("userId").alias("user_id"),
-            F.col("firstName").alias("first_name"),
-            F.col("lastName").alias("last_name"),
-            F.col("gender").alias("gender"),
-            F.col("level").alias("level"),
-            F.col("ts").alias("_v_ts"),
-            F.col("sessionId").alias("_v_sid"),
-        )
-    )
 
 
 def run_elt_incremental(
@@ -138,7 +124,6 @@ def run_elt_incremental(
     is never rewritten. songplay_id stays the synthetic surrogate and is
     not compared across runs (monotonically_increasing_id is
     partition-dependent, K1's fixed variant)."""
-    from pyspark.sql import functions as F
     from pyspark.errors import AnalysisException
 
     def _read_if_exists(path: str) -> DataFrame | None:
@@ -154,15 +139,8 @@ def run_elt_incremental(
                 return None
             raise
 
-    staging = load_staging(spark, log_path, song_path)
+    staging, paths = load_staging(spark, log_path, song_path, out_dir, "append")
     events = staging["staging_events"]
-    paths: dict[str, str] = {}
-    for name, df in staging.items():
-        path = os.path.join(out_dir, name)
-        write_table(df, name, REFERENCE_LAYOUTS[name], mode="append", path=path)
-        paths[name] = path
-
-    from .sparkify import build_artists, build_songplays, build_songs, build_time
 
     # The fact join's catalog side is the ACCUMULATED staging_songs (this
     # batch's rows were just appended above), so events referencing songs
@@ -188,20 +166,10 @@ def run_elt_incremental(
 
     # users: max-version upsert via the persisted versioned form
     uv_path = os.path.join(out_dir, "_users_versioned")
-    new_v = _users_latest_versioned(events)
+    new_v = users_latest_versioned(events)
     old_v = _read_if_exists(uv_path)
     all_v = old_v.unionByName(new_v) if old_v is not None else new_v
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("_v_ts").desc(), F.col("_v_sid").desc()
-    )
-    latest = (
-        all_v.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-        .localCheckpoint(eager=True)
-    )
+    latest = latest_user_versions(all_v).localCheckpoint(eager=True)
     latest.write.mode("overwrite").parquet(uv_path)
     users_path = os.path.join(out_dir, "users")
     latest.drop("_v_ts", "_v_sid").write.mode("overwrite").parquet(users_path)

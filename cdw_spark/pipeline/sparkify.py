@@ -95,30 +95,41 @@ def build_users(events: DataFrame, faithful: bool = True) -> DataFrame:
 
     Faithful: DISTINCT over all five columns — a user appearing with both
     level='free' and 'paid' yields two rows despite the declared PK (K3).
-    Fixed: keep the latest level by event time via row_number.
+    Fixed: keep each user's latest row by ``(ts, sessionId)``.
     """
-    se = events.filter(F.col("page") == "NextSong")
-    base = se.select(
+    if faithful:
+        return _user_rows(events).drop("_v_ts", "_v_sid").distinct()
+    return users_latest_versioned(events).drop("_v_ts", "_v_sid")
+
+
+def _user_rows(events: DataFrame) -> DataFrame:
+    """NextSong events projected onto the users columns plus the ``(ts,
+    sessionId)`` version key as ``_v_ts``/``_v_sid``."""
+    return events.filter(F.col("page") == "NextSong").select(
         F.col("userId").alias("user_id"),
         F.col("firstName").alias("first_name"),
         F.col("lastName").alias("last_name"),
         F.col("gender").alias("gender"),
         F.col("level").alias("level"),
+        F.col("ts").alias("_v_ts"),
+        F.col("sessionId").alias("_v_sid"),
     )
-    if faithful:
-        return base.distinct()
-    w = Window.partitionBy("userId").orderBy(F.col("ts").desc(), F.col("sessionId").desc())
-    return (
-        se.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            F.col("userId").alias("user_id"),
-            F.col("firstName").alias("first_name"),
-            F.col("lastName").alias("last_name"),
-            F.col("gender").alias("gender"),
-            F.col("level").alias("level"),
-        )
-    )
+
+
+def latest_user_versions(users: DataFrame) -> DataFrame:
+    """One row per ``user_id``: the one with the highest ``(_v_ts,
+    _v_sid)`` version key. A NULL user_id is its own group."""
+    w = Window.partitionBy("user_id").orderBy(F.col("_v_ts").desc(), F.col("_v_sid").desc())
+    return users.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
+
+
+def users_latest_versioned(events: DataFrame) -> DataFrame:
+    """Per-user latest profile row by event time, WITH its version key.
+    Keeping the max version across any partition of the event history
+    reproduces the full-history answer, which is what makes the
+    incremental users upsert (``pipeline.elt.run_elt_incremental``) agree
+    with a full rebuild."""
+    return latest_user_versions(_user_rows(events))
 
 
 def build_songs(songs: DataFrame) -> DataFrame:

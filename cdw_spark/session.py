@@ -91,11 +91,6 @@ def get_spark(
         .config("spark.default.parallelism", str(cpus))
         # Arrow for any pandas_udf / toPandas path (the fast Python lane).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Python DataSource readers that implement pushFilters() (the
-        # jsonpaths source, sources/pyds.py) ERROR at plan time unless
-        # this is on — Spark treats an unpushable implementation as a
-        # misconfiguration, not a fallback.
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         # Broadcast threshold: dimension tables (diststyle all in the
         # reference, sql_queries.py:85,105,117) must broadcast.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -1,1 +1,1 @@
-"""Source connectors: bulk JSON (the reference's COPY paths) and Parquet."""
+"""Bulk JSON ingestion: the reference's two COPY paths (``json_loader``)."""

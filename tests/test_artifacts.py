@@ -169,3 +169,52 @@ def test_real_publish_failure_raises(spark, sf_dir, monkeypatch):
             serve_at_rest(spark, "fail_probe", fixture, "v1", "spec", build)
     finally:
         clear_family("fail_probe")
+
+
+def test_build_lock_dropped_after_publish(spark, sf_dir):
+    """Concurrent callers of one key build it once, and once the artifact
+    (or its backfilled summary) is published its per-key lock is gone: the
+    lock table holds only the builds in flight, not one lock per key ever
+    served."""
+    import sys
+    import threading
+
+    import cdw_spark.operators.artifacts as arts
+
+    fixture = os.path.join(sf_dir, "region.parquet")
+    clear_family("lock_probe")
+    n_threads = 2 * (os.cpu_count() or 4)
+    build_calls, counts = [], []
+    start = threading.Barrier(n_threads)
+
+    def build():
+        build_calls.append(1)
+        return spark.read.parquet(fixture).select("r_regionkey")
+
+    def serve():
+        start.wait(timeout=60)
+        counts.append(serve_at_rest(spark, "lock_probe", fixture, "v1", "spec", build).count())
+
+    old_interval = sys.getswitchinterval()
+    try:
+        sys.setswitchinterval(1e-5)
+        d = artifact_dir("lock_probe", fixture, "v1", "spec")
+        threads = [threading.Thread(target=serve) for _ in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+        assert not any(t.is_alive() for t in threads)
+        assert len(counts) == n_threads and len(set(counts)) == 1 and counts[0] > 0
+        assert build_calls == [1]
+        assert d not in arts._build_locks
+
+        # the summary backfill's lock goes the same way
+        summary = arts.serve_summary_at_rest(
+            spark, "lock_probe", fixture, "v1", "spec", build, lambda df: df.groupBy().count()
+        )
+        assert summary.first()[0] == counts[0]
+        assert os.path.join(d, "_summary") not in arts._build_locks
+    finally:
+        sys.setswitchinterval(old_interval)
+        clear_family("lock_probe")

@@ -215,3 +215,39 @@ def test_staging_events_positional_mapping(staging):
     assert types["length"] == "decimal(9,0)"
     assert types["ts"] == "bigint"
     assert types["userId"] == "int"
+
+
+def test_staging_events_coerces_bad_fields_like_copy(spark, tmp_path):
+    """COPY coerces on load: a value that does not fit its staging column
+    (an int overflow, a non-numeric id, an empty userId) becomes NULL in
+    that field only. The rest of the row keeps its values, in-range edge
+    values survive, and no row is dropped."""
+    import json
+    from decimal import Decimal
+
+    base = {"page": "NextSong", "level": "free", "ts": 1541903636796,
+            "sessionId": 7, "userId": "42", "length": 200.5}
+    rows = [
+        {"artist": "ts_overflow", "ts": 2**70},
+        {"artist": "sid_overflow", "sessionId": 2**40},
+        {"artist": "sid_text", "sessionId": "abc"},
+        {"artist": "uid_empty", "userId": ""},
+        {"artist": "edge", "ts": 2**63 - 1, "sessionId": -(2**31)},
+        {"artist": "normal"},
+    ]
+    path = tmp_path / "log.json"
+    path.write_text("".join(json.dumps({**base, **r}) + "\n" for r in rows))
+    got = {r["artist"]: r for r in load_staging_events(spark, str(path)).collect()}
+
+    assert sorted(got) == sorted(r["artist"] for r in rows)
+    bad = {"ts_overflow": "ts", "sid_overflow": "sessionId",
+           "sid_text": "sessionId", "uid_empty": "userId"}
+    expected = {"page": "NextSong", "level": "free", "ts": 1541903636796,
+                "sessionId": 7, "userId": 42, "length": Decimal(201)}
+    for artist, r in got.items():
+        want = dict(expected)
+        if artist in bad:
+            want[bad[artist]] = None
+        if artist == "edge":
+            want.update(ts=2**63 - 1, sessionId=-(2**31))
+        assert {k: r[k] for k in want} == want, artist
