@@ -9,4 +9,9 @@ Design rule: every streaming query has a batch twin in
 ``cdw_spark/suite/windows.py`` computing the same aggregation with the same
 column aliases, so finalized streaming output is differential-testable
 against the batch/DuckDB answer (tests/test_streaming.py).
+
+Every bounded replay runs through one lifecycle in ``source.py``:
+``run_available_now`` for memory-sink queries, ``replay_into`` for
+foreachBatch bodies over parquet sinks, and ``fold_state`` for per-batch
+state folds. Only ``source.py`` starts and awaits a stream.
 """

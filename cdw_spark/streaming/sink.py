@@ -21,12 +21,11 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.curate import merge_latest_state
-from .source import replay_scratch
+from .source import _drain, replay_scratch
 
 
 class VersionedParquetTable:
@@ -79,6 +78,8 @@ def upsert_stream_into_table(
     Each batch reduces to one row per key BEFORE the merge join (the batch
     is the only full-width relation; the target stays one-row-per-key), so
     per-batch cost is O(batch + |keys seen|), not O(stream so far).
+    The caller owns ``table_root``: it holds every published version
+    (time travel), so only the checkpoint is removed here.
     """
     spark = sdf.sparkSession
     root = table_root or replay_scratch("cdw_upsert_tbl_")
@@ -104,16 +105,9 @@ def upsert_stream_into_table(
         merged = merge_latest_state(target, batch, keys=keys, order_cols=order_cols)
         table.publish(merged.drop("op"))
 
-    q = (
-        sdf.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
     try:
-        q.awaitTermination()
+        _drain(spark, sdf.writeStream.foreachBatch(merge_batch), chk)
     finally:
-        q.stop()
         shutil.rmtree(chk, ignore_errors=True)
     final = table.read(spark)
     assert final is not None

@@ -1,29 +1,42 @@
-"""Streaming sources + bounded-run helpers.
+"""Streaming sources and the one bounded-replay lifecycle.
 
 The driver fixtures are static parquet, so the streaming source is Spark's
-file source replaying ``events`` as ordered micro-batches: the table is
-staged once into N time-range-split files and read with
+file source replaying a fixture table as ordered micro-batches: the table
+is staged once into N time-range-split files and read with
 ``maxFilesPerTrigger=1``, which makes event time advance monotonically
 across batches — watermarks progress exactly as they would on a live
 stream. On a real deployment the same DataFrame comes from
 ``spark.readStream.format("kafka")``; every operator downstream is
 source-agnostic.
 
-``run_available_now`` executes a bounded run (Trigger.AvailableNow) into a
-memory sink and returns the result as a batch DataFrame. Memory sinks are
-a test/driver device — the production sink is ``writeStream.format(
-"parquet")`` / kafka with checkpointing, same query graph.
+Every bounded replay (Trigger.AvailableNow) drains through ``_drain``, the
+only place a stream is started and awaited:
+
+- ``run_available_now`` runs a query into a memory sink and returns the
+  sink as a batch DataFrame;
+- ``replay_into`` runs a ``foreachBatch`` body against parquet sinks
+  seeded under one scratch root, returns one sink materialized off that
+  root, and removes the root on success and on failure;
+- ``fold_state`` is ``replay_into`` for a per-batch state fold: one
+  relation, ``state = step(state, batch)`` per micro-batch, one eager cut.
+
+Memory sinks and throwaway scratch roots serve bounded replays — the
+production sink is ``writeStream.format("parquet")`` / kafka with a
+durable checkpoint, same query graph.
 """
 
 from __future__ import annotations
 
+import contextlib
 import itertools
 import os
 import shutil
 import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 _qid = itertools.count()
 _STAGE_ROOT = os.path.join(tempfile.gettempdir(), "cdw_stream_src")
@@ -33,19 +46,19 @@ def replay_scratch(prefix: str) -> str:
     """mkdtemp for THROWAWAY replay scratch (checkpoints, WAL, per-batch
     parquet state), preferring RAM-backed /dev/shm when present.
 
-    A bounded memory-sink replay deletes this directory at the end of the
-    call — its durability guarantee is nil by design (production sinks
-    keep real checkpoints on durable storage; see run_available_now).
-    But the checkpoint path is fsync-heavy (offset WAL + commit log per
-    micro-batch + one state delta per store per batch), and on this
-    host's virtio disk those fsyncs stall unpredictably — measured
-    3-10x run-to-run swings on identical replays, the dominant noise
-    AND cost of the streaming suite. tmpfs makes them memory writes.
+    A bounded replay deletes this directory at the end of the call — its
+    durability guarantee is nil by design (production sinks keep real
+    checkpoints on durable storage). But the checkpoint path is
+    fsync-heavy (offset WAL + commit log per micro-batch + one state
+    delta per store per batch), and on a virtio disk those fsyncs stall
+    unpredictably — measured 3-10x run-to-run swings on identical
+    replays, the dominant noise AND cost of the streaming suite. tmpfs
+    makes them memory writes.
 
-    tmpfs is RAM-capped (ADVICE r12), so the choice is GATED: an env
-    override wins, and /dev/shm is used only while it has comfortable
-    free headroom (8 GiB — orders of magnitude above any bounded replay
-    here); otherwise fall back to the disk tempdir."""
+    tmpfs is RAM-capped, so the choice is GATED: an env override wins,
+    and /dev/shm is used only while it has comfortable free headroom
+    (8 GiB — orders of magnitude above any bounded replay here);
+    otherwise fall back to the disk tempdir."""
     base = os.environ.get("SPARK_GRAFT_REPLAY_SCRATCH")
     if base:
         os.makedirs(base, exist_ok=True)
@@ -61,32 +74,23 @@ def replay_scratch(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix)
 
 
-class replay_partition_cap:
-    """Context manager capping ``spark.sql.shuffle.partitions`` for one
-    bounded replay, restoring the caller's value on exit — the
-    run_available_now discipline exposed to the foreachBatch replays.
+@contextlib.contextmanager
+def replay_partition_cap(spark: SparkSession):
+    """Cap ``spark.sql.shuffle.partitions`` at 16 for one bounded replay,
+    restoring the caller's value on exit.
 
-    Every shuffle a foreachBatch body plans (windows, distincts, joins,
-    aggregates over per-batch state) allocates one task per shuffle
-    partition PER MICRO-BATCH; at fixture scale a 32-partition session
-    turns ~6 tiny shuffles x 4 batches into ~750 near-empty tasks of
-    pure scheduling overhead. On a real cluster the cap would be sized
-    to executor count — callers pass it via the ``cap`` argument."""
-
-    def __init__(self, spark, cap: int = 16):
-        self.spark = spark
-        self.cap = cap
-
-    def __enter__(self):
-        self.old = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set(
-            "spark.sql.shuffle.partitions", min(int(self.old), self.cap)
-        )
-        return self
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.old)
-        return False
+    The state store allocates one store (and one task, and for Python
+    stateful ops one Arrow round-trip) per shuffle partition PER
+    MICRO-BATCH, and so does every shuffle a foreachBatch body plans.
+    At fixture scale a 32-partition session turns ~6 tiny shuffles x 4
+    batches into ~750 near-empty tasks of pure scheduling overhead. On a
+    real cluster the cap would be sized to executor count."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", min(int(old), 16))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def stage_ordered_files(
@@ -128,92 +132,128 @@ def stage_ordered_files(
     return out
 
 
-def events_stream(
-    spark: SparkSession, sf_dir: str, n_files: int = 8, files_per_trigger: int = 1
-) -> DataFrame:
-    """``readStream`` over the staged events files, one file per micro-batch.
+def staged_stream(spark: SparkSession, path: str) -> DataFrame:
+    """``readStream`` over a staged directory, one file per micro-batch,
+    oldest mtime first.
 
     The file source needs an explicit schema (no inference mid-stream);
-    we take it from a batch read of the same staged directory.
+    it is taken from a batch read of the same directory.
     """
-    staged = stage_ordered_files(spark, sf_dir, "events", n_files)
-    schema = spark.read.parquet(staged).schema
     return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
+        spark.readStream.schema(spark.read.parquet(path).schema)
+        .option("maxFilesPerTrigger", 1)
         .option("latestFirst", "false")
-        .parquet(staged)
+        .parquet(path)
     )
 
 
 def table_stream(
-    spark: SparkSession, sf_dir: str, table: str, order_col: str,
-    n_files: int = 4, files_per_trigger: int = 1,
+    spark: SparkSession, sf_dir: str, table: str, order_col: str, n_files: int = 4
 ) -> DataFrame:
-    """``readStream`` over any staged fixture table (the events_stream
-    shape generalized: documents etc. order by their id column)."""
-    staged = stage_ordered_files(spark, sf_dir, table, n_files, order_col)
-    schema = spark.read.parquet(staged).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .option("latestFirst", "false")
-        .parquet(staged)
+    """Stream any fixture table in ``order_col`` order (documents etc.
+    order by their id column)."""
+    return staged_stream(
+        spark, stage_ordered_files(spark, sf_dir, table, n_files, order_col)
     )
 
 
-def run_available_now(sdf: DataFrame, name: str, output_mode: str) -> DataFrame:
-    """Run a bounded streaming query (AvailableNow) into a memory sink and
-    return the sink contents as a batch DataFrame.
+def events_stream(spark: SparkSession, sf_dir: str, n_files: int = 8) -> DataFrame:
+    """Stream ``events`` in event-time order."""
+    return table_stream(spark, sf_dir, "events", "ts", n_files)
 
-    AvailableNow drains all staged files respecting maxFilesPerTrigger,
-    runs trailing no-data batches so the final watermark flushes closed
-    windows in append mode, then stops — deterministic bounded replay.
-    """
+
+def _drain(spark: SparkSession, writer: DataStreamWriter, chk: str) -> None:
+    """Run ``writer`` as an AvailableNow query checkpointed at ``chk`` and
+    block until it has drained every staged file.
+
+    AvailableNow respects maxFilesPerTrigger and runs trailing no-data
+    batches, so the final watermark flushes closed windows in append mode
+    before the query stops — a deterministic bounded replay. The wait has
+    no timeout, so a replay still running is never read as a result; the
+    query is stopped on every exit, so a failed batch leaves none behind.
+    The shuffle cap spans the run because foreachBatch bodies plan their
+    shuffles on the caller's session."""
+    with replay_partition_cap(spark):
+        q = (
+            writer.option("checkpointLocation", chk)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()
+
+
+def run_available_now(sdf: DataFrame, name: str, output_mode: str) -> DataFrame:
+    """Run a bounded streaming query into a memory sink and return the
+    sink contents as a batch DataFrame."""
     spark = sdf.sparkSession
     qname = f"cdw_{name}_{next(_qid)}"
-    # The state store allocates one store (and one task, and for Python
-    # stateful ops one Arrow round-trip) per shuffle partition PER
-    # MICRO-BATCH. At fixture scale a default of 200 partitions x 8 batches
-    # is pure overhead — cap it for the bounded replay and restore after.
-    # On a real cluster the cap would instead be sized to executor count.
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", min(int(old_parts), 16))
     # Memory-sink runs are throwaway replays: the checkpoint must be fresh
     # per run, or the file source sees every staged file as already
     # committed and emits nothing. Production sinks do the opposite —
     # a stable checkpoint dir is exactly what gives exactly-once resume.
     chk = replay_scratch(f"cdw_chk_{qname}_")
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode(output_mode)
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
     try:
-        q.awaitTermination()
+        writer = sdf.writeStream.format("memory").queryName(qname).outputMode(output_mode)
+        _drain(spark, writer, chk)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
         # the memory sink holds the result; the checkpoint is throwaway
         shutil.rmtree(chk, ignore_errors=True)
     return spark.table(qname)
 
 
-def finish_replay(result: DataFrame, root: str) -> DataFrame:
-    """Materialize a bounded replay's result OFF its scratch root, then
-    remove the root (persisted state + checkpoint dirs).
+def replay_into(
+    sdf: DataFrame,
+    sinks: dict[str, DataFrame],
+    handle: Callable[[DataFrame, dict[str, str]], None],
+    result: str,
+) -> DataFrame:
+    """Replay ``sdf`` through ``handle(batch, dirs)`` and return the
+    ``result`` sink.
 
-    foreachBatch replays persist state as parquet under a mkdtemp root;
-    the returned DataFrame must not lazily reference those files after
-    cleanup, so it is localCheckpoint'ed (executor-block storage) first.
-    Production deployments keep the state/checkpoint dirs — exactly-once
-    resume depends on them; throwaway replays must not leak one scratch
-    directory per invocation (ADVICE r6)."""
-    out = result.localCheckpoint(eager=True)
-    shutil.rmtree(root, ignore_errors=True)
-    return out
+    ``sinks`` maps each parquet sink's name to an empty DataFrame seeding
+    its schema; ``dirs`` maps the same names to their paths under one
+    scratch root. The result is materialized (executor-block storage) so
+    it outlives the root, which is removed on success and on failure.
+    Production deployments keep sinks and checkpoint — exactly-once resume
+    depends on them; a throwaway replay must not leak a directory per call.
+    """
+    spark = sdf.sparkSession
+    root = replay_scratch("cdw_replay_")
+    try:
+        dirs = {name: os.path.join(root, name) for name in sinks}
+        for name, empty in sinks.items():
+            empty.write.mode("overwrite").parquet(dirs[name])
+        writer = sdf.writeStream.foreachBatch(lambda batch, _id: handle(batch, dirs))
+        _drain(spark, writer, os.path.join(root, "_checkpoint"))
+        return spark.read.parquet(dirs[result]).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def fold_state(
+    sdf: DataFrame,
+    seed: DataFrame,
+    step: Callable[[DataFrame, DataFrame], DataFrame],
+) -> DataFrame:
+    """Fold a stream into one state relation: per micro-batch,
+    ``state = step(state, batch)``; returns the final state.
+
+    ``seed`` is the empty state (its schema). The new state is cut once,
+    eagerly, before it overwrites the old one: the overwrite deletes the
+    files the old state is read from, so the merge must be materialized
+    first, and one cut of the merged relation is enough — the old state
+    is read exactly once, inside that cut."""
+    spark = sdf.sparkSession
+
+    def handle(batch: DataFrame, dirs: dict[str, str]) -> None:
+        old = spark.read.parquet(dirs["state"])
+        new = step(old, batch).localCheckpoint(eager=True)
+        new.write.mode("overwrite").parquet(dirs["state"])
+
+    return replay_into(sdf, {"state": seed}, handle, "state")
 
 
 def stage_exact_quarters(
@@ -235,7 +275,7 @@ def stage_exact_quarters(
     df = load_fixture(spark, sf_dir, table)
     n_rows = df.count()
     if not os.path.exists(done):
-        # Loud precondition (ADVICE r7): the quarter formula silently
+        # Loud precondition: the quarter formula silently
         # drops any row whose (id * n_files) div n_rows lands >= n_files,
         # which happens exactly when ids are not dense 0..n-1 (1-based or
         # sparse). Fail the replay setup instead of auditing a truncated

@@ -5,7 +5,7 @@ the Dataset API is unified) and produces the same aliases as its batch twin
 in cdw_spark/suite/windows.py, so the finalized streaming output is
 comparable against the DuckDB oracle of the batch query. Sums accumulate
 as exact DECIMAL; the final projection is DOUBLE (driver decimal
-canonicalization — VERDICT r1).
+canonicalization).
 
 Watermarks bound state: in complete/update mode Spark keeps every window's
 state; with ``with_watermark`` + append mode it drops state for windows

@@ -17,8 +17,8 @@ identical, 9515 rows at sf0.01):
   watermark (max event time - delay) -> oracle filters the batch answer by
   that same predicate;
 - the applyInPandasWithState sessionizer reproduces session_window append
-  semantics exactly, so it shares that query's full value oracle (round 5;
-  also differentially tested against the built-in stream in
+  semantics exactly, so it shares that query's full value oracle (also
+  differentially tested against the built-in stream in
   tests/test_streaming.py).
 """
 
@@ -141,7 +141,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     "timeouts, per-user state machine). Intentionally reproduces "
     "session_window append semantics exactly (streaming/stateful.py), so "
     "the gaps-and-islands SQL under the same final-watermark cutoff is a "
-    "full VALUE oracle (converted from rows-only, VERDICT r4 #5): "
+    "full VALUE oracle: "
     "session bounds, event counts, and 2dp session totals all hash-check. "
     "total_value accumulates double in event-time order in state; "
     "rounding to 2dp equals the DECIMAL-exact sum because inputs are "
@@ -195,10 +195,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "streaming-enrichment pattern; result equals the batch join+agg.",
 )
 def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     from ..catalog import load_fixture
-
     from ..plans.hints import broadcast_if_small
 
     # customer grows with SF (it is not a bounded dim), so the per-batch
@@ -211,13 +208,47 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             # exact decimal accumulation; DOUBLE final projection (driver
-            # decimal canonicalization — VERDICT r1)
+            # decimal canonicalization)
             F.round(F.sum(F.col("value").cast("decimal(18,2)")).cast("double"), 2).alias(
                 "total_value"
             ),
         )
     )
     return run_available_now(enriched, "static_join", "complete")
+
+
+def _signup_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """The signup stream joined to the purchase stream on user + [0, 1h]
+    event-time range, both sides watermarked at 2h — the graph the three
+    stream-stream join queries share, differing only in join type."""
+    signups = (
+        events_stream(spark, sf_dir, n_files=4)
+        .filter(F.col("event_type") == "signup")
+        .select(
+            F.col("event_id").alias("signup_id"),
+            "user_id",
+            F.col("ts").alias("signup_ts"),
+        )
+        .withWatermark("signup_ts", "2 hours")
+    )
+    purchases = (
+        events_stream(spark, sf_dir, n_files=4)
+        .filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id").alias("p_user_id"),
+            F.col("ts").alias("purchase_ts"),
+            F.col("value").alias("purchase_value"),
+        )
+        .withWatermark("purchase_ts", "2 hours")
+    )
+    return signups.join(
+        purchases,
+        (F.col("user_id") == F.col("p_user_id"))
+        & (F.col("purchase_ts") >= F.col("signup_ts"))
+        & (F.col("purchase_ts") <= F.col("signup_ts") + F.expr("INTERVAL 1 HOUR")),
+        how,
+    )
 
 
 @register(
@@ -240,35 +271,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "forever.",
 )
 def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    signups = (
-        events_stream(spark, sf_dir, n_files=4)
-        .filter(F.col("event_type") == "signup")
-        .select(
-            F.col("event_id").alias("signup_id"),
-            "user_id",
-            F.col("ts").alias("signup_ts"),
-        )
-        .withWatermark("signup_ts", "2 hours")
-    )
-    purchases = (
-        events_stream(spark, sf_dir, n_files=4)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    joined = signups.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("signup_ts"))
-        & (F.col("purchase_ts") <= F.col("signup_ts") + F.expr("INTERVAL 1 HOUR")),
-    ).select(
+    joined = _signup_purchase_join(spark, sf_dir, "inner").select(
         "signup_id", "purchase_id", "user_id",
         "signup_ts", "purchase_ts", "purchase_value",
     )
@@ -316,36 +319,7 @@ def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
     bounded state as the inner interval join (watermark + range); the
     null-padded tail past the final watermark is withheld by design —
     on a live stream those rows emit as the watermark advances."""
-    from pyspark.sql import functions as F
-
-    signups = (
-        events_stream(spark, sf_dir, n_files=4)
-        .filter(F.col("event_type") == "signup")
-        .select(
-            F.col("event_id").alias("signup_id"),
-            "user_id",
-            F.col("ts").alias("signup_ts"),
-        )
-        .withWatermark("signup_ts", "2 hours")
-    )
-    purchases = (
-        events_stream(spark, sf_dir, n_files=4)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    joined = signups.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("signup_ts"))
-        & (F.col("purchase_ts") <= F.col("signup_ts") + F.expr("INTERVAL 1 HOUR")),
-        "leftOuter",
-    ).select(
+    joined = _signup_purchase_join(spark, sf_dir, "leftOuter").select(
         "signup_id", "purchase_id", "user_id",
         "signup_ts", "purchase_ts", "purchase_value",
     )
@@ -374,20 +348,23 @@ def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
     "table format at 100 TB.",
 )
 def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
+    import shutil
 
     from ..streaming.sink import upsert_stream_into_table
 
     sdf = events_stream(spark, sf_dir, n_files=4)
-    final, _root = upsert_stream_into_table(
+    final, root = upsert_stream_into_table(
         sdf, keys=["user_id"], order_cols=["ts", "event_id"]
     )
-    return final.select(
+    # the versioned table is throwaway here: materialize off it, drop it
+    out = final.select(
         "user_id",
         F.col("event_id").alias("last_event_id"),
         F.col("event_type").alias("last_type"),
         F.col("value").alias("last_value"),
-    )
+    ).localCheckpoint(eager=True)
+    shutil.rmtree(root, ignore_errors=True)
+    return out
 
 
 @register(
@@ -438,36 +415,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     "state machine.",
 )
 def stream_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    signups = (
-        events_stream(spark, sf_dir, n_files=4)
-        .filter(F.col("event_type") == "signup")
-        .select(
-            F.col("event_id").alias("signup_id"),
-            "user_id",
-            F.col("ts").alias("signup_ts"),
-        )
-        .withWatermark("signup_ts", "2 hours")
-    )
-    purchases = (
-        events_stream(spark, sf_dir, n_files=4)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    joined = signups.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("signup_ts"))
-        & (F.col("purchase_ts") <= F.col("signup_ts") + F.expr("INTERVAL 1 HOUR")),
-        "fullOuter",
-    ).select(
+    joined = _signup_purchase_join(spark, sf_dir, "fullOuter").select(
         "signup_id",
         "purchase_id",
         F.coalesce(F.col("user_id"), F.col("p_user_id")).alias("user_id"),
@@ -524,8 +472,6 @@ def stream_ohlc_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "with DECIMAL-exact totals and a deterministic tie-break.",
 )
 def stream_top_spenders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     sdf = (
         events_stream(spark, sf_dir, n_files=4)
         .filter(F.col("event_type") == "purchase")
@@ -622,7 +568,8 @@ from .dedup import _JACCARD_SQL as _STREAM_JACCARD_SQL
     "the corpus and passes it back as old_sigs/new_sigs, so each batch "
     "is signatured exactly once, ever — per-batch signature work is "
     "O(|batch|), flat as the corpus grows (measured flat across 4 "
-    "batches in tests/test_streaming_ops.py). The per-batch pair sets "
+    "batches in tests/test_streaming.py::"
+    "test_near_dup_ingest_signature_work_stays_flat). The per-batch pair sets "
     "are provably disjoint and union to exactly the full-corpus LSH "
     "result (the parity theorem tested in tests/test_dedup.py) — which "
     "is why the batch twin's exact-Jaccard oracle applies verbatim to "
@@ -631,54 +578,33 @@ from .dedup import _JACCARD_SQL as _STREAM_JACCARD_SQL
     "transactional table format.",
 )
 def stream_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
-
     from ..operators import dedup as dedup_ops
-    from ..streaming.source import (
-        finish_replay, replay_partition_cap, replay_scratch, table_stream,
-    )
+    from ..streaming.source import replay_into, table_stream
 
-    root = replay_scratch("cdw_stream_neardup_")
-    corpus_dir = os.path.join(root, "corpus")
-    sigs_dir = os.path.join(root, "sigs")
-    pairs_dir = os.path.join(root, "pairs")
     empty_docs = spark.createDataFrame([], "doc_id long, text string")
-    # seed the sinks so every read below has a schema (the signature
-    # seed runs the Arrow pass over zero rows — schema only)
-    empty_docs.write.mode("overwrite").parquet(corpus_dir)
-    dedup_ops.minhash_signatures(empty_docs).write.mode("overwrite").parquet(sigs_dir)
-    spark.createDataFrame([], "id_a long, id_b long, jaccard double").write.mode(
-        "overwrite"
-    ).parquet(pairs_dir)
+    # the signature seed runs the Arrow pass over zero rows — schema only
+    sinks = {
+        "corpus": empty_docs,
+        "sigs": dedup_ops.minhash_signatures(empty_docs),
+        "pairs": spark.createDataFrame([], "id_a long, id_b long, jaccard double"),
+    }
 
-    def handle(batch, batch_id):
+    def handle(batch, dirs):
         b = batch.select("doc_id", "text").localCheckpoint(eager=True)
-        old = spark.read.parquet(corpus_dir)
-        old_sigs = spark.read.parquet(sigs_dir)
+        old = spark.read.parquet(dirs["corpus"])
+        old_sigs = spark.read.parquet(dirs["sigs"])
         # the ONLY signature pass in the batch: |batch| docs, checkpointed
         # so the index append below reuses it instead of re-running Arrow
         sig_b = dedup_ops.minhash_signatures(b).localCheckpoint(eager=True)
         pairs = dedup_ops.minhash_near_duplicates_incremental(
             old, b, threshold=0.6, old_sigs=old_sigs, new_sigs=sig_b
         )
-        pairs.write.mode("append").parquet(pairs_dir)
-        sig_b.write.mode("append").parquet(sigs_dir)
-        b.write.mode("append").parquet(corpus_dir)
+        pairs.write.mode("append").parquet(dirs["pairs"])
+        sig_b.write.mode("append").parquet(dirs["sigs"])
+        b.write.mode("append").parquet(dirs["corpus"])
 
     sdf = table_stream(spark, sf_dir, "documents", order_col="doc_id", n_files=4)
-    with replay_partition_cap(spark):
-        q = (
-            sdf.select("doc_id", F.col("text"))
-            .writeStream.foreachBatch(handle)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(240)
-    return finish_replay(spark.read.parquet(pairs_dir), root)
+    return replay_into(sdf.select("doc_id", "text"), sinks, handle, "pairs")
 
 
 from ..operators.similarity import SIG_WIDTH_HI as _SIG_HI
@@ -730,16 +656,13 @@ _SEMANTIC_INGEST_ORACLE = f"""
     "streamed union. The signature width is COUNT-DERIVED "
     "(adaptive_sig_width: smallest w with 2^w buckets keeping expected "
     "occupancy <= 16, clamped [8,16]) so candidate pair work grows "
-    "linearly with the corpus — the r5-carried 8x density finding "
-    "closed by banding, not hope; the oracle masks the max-width "
+    "linearly with the corpus (a fixed width would make it grow "
+    "quadratically); the oracle masks the max-width "
     "literal-plane signature to the same count-derived w. At 100 TB "
     "the same body targets a transactional table format and a raised "
     "width cap.",
 )
 def stream_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from ..operators.similarity import (
         adaptive_sig_width,
         _norm_sql,
@@ -748,16 +671,11 @@ def stream_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_signature,
     )
     from ..catalog import load_fixture
-    from ..streaming.source import (
-        finish_replay, replay_partition_cap, replay_scratch, table_stream,
-    )
+    from ..streaming.source import replay_into, table_stream
 
     dim = 64
     n_corpus = load_fixture(spark, sf_dir, "embeddings").count()
     w_bits = adaptive_sig_width(n_corpus)
-    root = replay_scratch("cdw_stream_semdedup_")
-    vec_dir = os.path.join(root, "vectors")
-    out_dir = os.path.join(root, "dups")
 
     def enrich(df: DataFrame) -> DataFrame:
         base = df.select("vec_id", to_double_array(F.col("embedding")).alias("v"))
@@ -765,15 +683,18 @@ def stream_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             "nrm", F.expr(_norm_sql("v", dim))
         )
 
-    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    enrich(empty).write.mode("overwrite").parquet(vec_dir)
-    spark.createDataFrame(
-        [], "dup_id long, keep_id long, cluster int, cosine double"
-    ).write.mode("overwrite").parquet(out_dir)
+    sinks = {
+        "vectors": enrich(
+            spark.createDataFrame([], "vec_id long, embedding array<double>")
+        ),
+        "dups": spark.createDataFrame(
+            [], "dup_id long, keep_id long, cluster int, cosine double"
+        ),
+    }
 
-    def handle(batch, batch_id):
+    def handle(batch, dirs):
         eb = enrich(batch.select("vec_id", "embedding")).localCheckpoint(eager=True)
-        old = spark.read.parquet(vec_dir)
+        old = spark.read.parquet(dirs["vectors"])
         allv = old.unionByName(eb)
         # slim candidate join on (id, cluster); vectors fetched post-match
         dup_ids = eb.select(
@@ -806,20 +727,11 @@ def stream_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         res.select("dup_id", "keep_id", "cluster", "cosine").write.mode(
             "append"
-        ).parquet(out_dir)
-        eb.write.mode("append").parquet(vec_dir)
+        ).parquet(dirs["dups"])
+        eb.write.mode("append").parquet(dirs["vectors"])
 
     sdf = table_stream(spark, sf_dir, "embeddings", order_col="vec_id", n_files=4)
-    with replay_partition_cap(spark):
-        q = (
-            sdf.select("vec_id", "embedding")
-            .writeStream.foreachBatch(handle)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(240)
-    return finish_replay(spark.read.parquet(out_dir), root)
+    return replay_into(sdf.select("vec_id", "embedding"), sinks, handle, "dups")
 
 
 from .search import _KMV_K as _KMV_STREAM_K
@@ -852,25 +764,12 @@ def stream_kmv_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     never grows past the synopsis bound. This is the sketch-state
     pattern that replaces unbounded dropDuplicates state for
     monitoring-grade cardinality at 100 TB/day ingest."""
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    from ..streaming.source import (
-        finish_replay, replay_partition_cap, replay_scratch, table_stream,
-    )
+    from ..streaming.source import fold_state, table_stream
 
-    root = replay_scratch("cdw_stream_kmv_")
-    syn_dir = os.path.join(root, "synopsis")
-    spark.createDataFrame([], "event_type string, user_id long, h double").write.mode(
-        "overwrite"
-    ).parquet(syn_dir)
-
-    def handle(batch, batch_id):
-        b = batch.select("event_type", "user_id").distinct()
-        bh = b.select(
+    def step(old, batch):
+        bh = batch.select("event_type", "user_id").distinct().select(
             "event_type",
             "user_id",
             (
@@ -879,28 +778,20 @@ def stream_kmv_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.lit(4294967296.0)
             ).alias("h"),
         )
-        old = spark.read.parquet(syn_dir).localCheckpoint(eager=True)
         merged = old.unionByName(bh).dropDuplicates(["event_type", "user_id"])
         w = Window.partitionBy("event_type").orderBy("h", "user_id")
-        pruned = (
+        return (
             merged.withColumn("rk", F.row_number().over(w))
             .filter(F.col("rk") <= _KMV_STREAM_K)
             .select("event_type", "user_id", "h")
-            .localCheckpoint(eager=True)
         )
-        pruned.write.mode("overwrite").parquet(syn_dir)
 
     sdf = table_stream(spark, sf_dir, "events", order_col="event_id", n_files=4)
-    with replay_partition_cap(spark):
-        q = (
-            sdf.select("event_type", "user_id")
-            .writeStream.foreachBatch(handle)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(240)
-    syn = finish_replay(spark.read.parquet(syn_dir), root)
+    syn = fold_state(
+        sdf.select("event_type", "user_id"),
+        spark.createDataFrame([], "event_type string, user_id long, h double"),
+        step,
+    )
     kept = syn.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("k_actual"), F.max("h").alias("h_k")
     )
@@ -958,46 +849,25 @@ def stream_drift_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge against the bounded contingency state; the statistic is a
     constant-size computation. This is the monitoring-grade drift check
     that replaces ad-hoc daily batch jobs at continuous ingest."""
-    import os
-    import tempfile
+    from ..streaming.source import fold_state, table_stream
 
-    from ..streaming.source import (
-        finish_replay, replay_partition_cap, replay_scratch, table_stream,
-    )
-
-    root = replay_scratch("cdw_stream_chi2_")
-    state_dir = os.path.join(root, "contingency")
-    spark.createDataFrame([], "event_type string, tod bigint, cnt bigint").write.mode(
-        "overwrite"
-    ).parquet(state_dir)
-
-    def handle(batch, batch_id):
+    def step(old, batch):
         b = batch.select(
             "event_type",
             F.expr("CAST(hour(ts) div 4 AS BIGINT)").alias("tod"),
         ).groupBy("event_type", "tod").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        old = spark.read.parquet(state_dir).localCheckpoint(eager=True)
-        merged = (
+        return (
             old.unionByName(b)
             .groupBy("event_type", "tod")
             .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-            .localCheckpoint(eager=True)
         )
-        merged.write.mode("overwrite").parquet(state_dir)
 
     sdf = table_stream(spark, sf_dir, "events", order_col="event_id", n_files=4)
-    with replay_partition_cap(spark):
-        q = (
-            sdf.select("event_type", "ts")
-            .writeStream.foreachBatch(handle)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(240)
-    o = finish_replay(spark.read.parquet(state_dir), root).withColumnRenamed(
-        "cnt", "obs"
-    )
+    o = fold_state(
+        sdf.select("event_type", "ts"),
+        spark.createDataFrame([], "event_type string, tod bigint, cnt bigint"),
+        step,
+    ).withColumnRenamed("cnt", "obs")
     rt = o.groupBy("event_type").agg(F.sum("obs").cast("bigint").alias("r"))
     ct = o.groupBy("tod").agg(F.sum("obs").cast("bigint").alias("c"))
     tot = o.agg(F.sum("obs").cast("bigint").alias("n"))
@@ -1100,52 +970,38 @@ def stream_bloom_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     state is capped at 512 rows regardless of stream length, and the
     exact key set exists only for the audit columns (a production door
     keeps just the filter)."""
-    import os
-    import tempfile
-
     from pyspark.sql.window import Window
 
     from ..operators.sketches import bloom_positions
-    from ..streaming.source import (
-        finish_replay, replay_partition_cap, replay_scratch,
-        stage_exact_quarters,
-    )
+    from ..streaming.source import replay_into, stage_exact_quarters, staged_stream
 
     staged, n_rows = stage_exact_quarters(spark, sf_dir, "documents", "doc_id", 4)
-    schema = spark.read.parquet(staged).schema
-
-    root = replay_scratch("cdw_stream_bloomdedup_")
-    state_dir = os.path.join(root, "door_state")
-    audit_dir = os.path.join(root, "audit")
-    # ONE door-state relation (r13, VERDICT candidate #1: fewer per-batch
-    # parquet round trips): the <=512-row Bloom position set and the
+    # ONE door-state relation: the <=512-row Bloom position set and the
     # exact key set ride the same parquet dir, discriminated by `kind`
     # (0 = bloom position in `pos`, 1 = seen key in `key`) — one read +
     # one checkpoint + one overwrite per batch instead of two of each.
-    # The door's semantics (prior-batch filter + exact audit) unchanged.
-    spark.createDataFrame([], "kind int, pos int, key long").write.mode(
-        "overwrite"
-    ).parquet(state_dir)
-    spark.createDataFrame(
-        [],
-        "batch_id int, n_rows long, n_dup_exact long, n_pass_bloom long,"
-        " n_false_positive long",
-    ).write.mode("overwrite").parquet(audit_dir)
+    sinks = {
+        "door_state": spark.createDataFrame([], "kind int, pos int, key long"),
+        "audit": spark.createDataFrame(
+            [],
+            "batch_id int, n_rows long, n_dup_exact long, n_pass_bloom long,"
+            " n_false_positive long",
+        ),
+    }
 
-    def handle(batch, batch_id):
+    def handle(batch, dirs):
         if batch.isEmpty():
             return
         # b feeds the window/join chain AND both state updates — one
         # materialization; everything downstream that is consumed once
         # (audit, new state relation) writes directly off it instead of
-        # paying its own blocking checkpoint job (r13: 10 -> 5 driver
-        # jobs per micro-batch).
+        # paying its own blocking checkpoint job.
         b = batch.select(
             "doc_id",
             (F.col("doc_id") % 300).alias("key"),
             F.expr(f"CAST(doc_id * 4 div {n_rows} AS INT)").alias("qb"),
         ).localCheckpoint(eager=True)
-        old_state = spark.read.parquet(state_dir).localCheckpoint(eager=True)
+        old_state = spark.read.parquet(dirs["door_state"]).localCheckpoint(eager=True)
         old_pos = old_state.filter(F.col("kind") == 0).select("pos")
         old_keys = old_state.filter(F.col("kind") == 1).select("key")
         # exact-dup flag: key seen in a prior batch OR earlier (by
@@ -1188,7 +1044,7 @@ def stream_bloom_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("pass").cast("bigint").alias("n_pass_bloom"),
             (F.sum("pass") - F.sum("is_dup")).cast("bigint").alias("n_false_positive"),
         )
-        audit.write.mode("append").parquet(audit_dir)
+        audit.write.mode("append").parquet(dirs["audit"])
         # state overwrite reads ONLY checkpointed inputs (old_state / b),
         # so writing directly is safe even though the overwrite clobbers
         # the files the old state came from.
@@ -1201,24 +1057,10 @@ def stream_bloom_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(1).alias("kind"), F.lit(None).cast("int").alias("pos"), F.col("key")
             )
         )
-        new_state.write.mode("overwrite").parquet(state_dir)
+        new_state.write.mode("overwrite").parquet(dirs["door_state"])
 
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(staged)
-    )
-    with replay_partition_cap(spark):
-        q = (
-            sdf.select("doc_id")
-            .writeStream.foreachBatch(handle)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(240)
-    return finish_replay(spark.read.parquet(audit_dir), root)
+    sdf = staged_stream(spark, staged).select("doc_id")
+    return replay_into(sdf, sinks, handle, "audit")
 
 
 @register(
@@ -1258,22 +1100,9 @@ def stream_freshness_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: per batch, one map-side-combined aggregate of the
     BATCH to (type, hour) rows, then a merge against the bounded state
     relation; the final projection runs on state only."""
-    import os
-    import tempfile
+    from ..streaming.source import fold_state, table_stream
 
-    from pyspark.sql import functions as F
-
-    from ..streaming.source import (
-        finish_replay, replay_partition_cap, replay_scratch, table_stream,
-    )
-
-    root = replay_scratch("cdw_stream_fresh_")
-    state_dir = os.path.join(root, "state")
-    spark.createDataFrame(
-        [], "event_type string, hb long, cnt long, tmax long"
-    ).write.mode("overwrite").parquet(state_dir)
-
-    def handle(batch, batch_id):
+    def step(old, batch):
         b = (
             batch.select(
                 "event_type", F.unix_micros(F.col("ts")).alias("us")
@@ -1284,29 +1113,21 @@ def stream_freshness_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.max("us").cast("bigint").alias("tmax"),
             )
         )
-        old = spark.read.parquet(state_dir).localCheckpoint(eager=True)
-        merged = (
+        return (
             old.unionByName(b)
             .groupBy("event_type", "hb")
             .agg(
                 F.sum("cnt").cast("bigint").alias("cnt"),
                 F.max("tmax").cast("bigint").alias("tmax"),
             )
-            .localCheckpoint(eager=True)
         )
-        merged.write.mode("overwrite").parquet(state_dir)
 
     sdf = table_stream(spark, sf_dir, "events", order_col="event_id", n_files=4)
-    with replay_partition_cap(spark):
-        q = (
-            sdf.select("event_type", "ts")
-            .writeStream.foreachBatch(handle)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(240)
-    st = finish_replay(spark.read.parquet(state_dir), root)
+    st = fold_state(
+        sdf.select("event_type", "ts"),
+        spark.createDataFrame([], "event_type string, hb long, cnt long, tmax long"),
+        step,
+    )
     g = st.agg(F.max("tmax").cast("bigint").alias("gmax"))
     return (
         st.crossJoin(F.broadcast(g))

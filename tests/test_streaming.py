@@ -12,6 +12,7 @@ the cross-implementation invariants the oracles can't express:
 
 from __future__ import annotations
 
+import pytest
 
 from cdw_spark.registry import load_all
 
@@ -529,3 +530,76 @@ def test_stream_kmv_matches_batch_sketch_and_bounds_state(spark, sf_dir):
     for t, row in streamed.items():
         assert row["k_actual"] <= _KMV_K
         assert row["kmv_est"] == batch[t]["kmv_est"], t
+
+
+_FOREACHBATCH_QUERIES = (
+    "stream_near_dup_ingest",
+    "stream_semantic_ingest",
+    "stream_kmv_cardinality",
+    "stream_drift_chi_square",
+    "stream_bloom_dedup_ingest",
+    "stream_freshness_monitor",
+    "stream_foreachbatch_upsert",
+)
+
+
+@pytest.mark.parametrize("name", _FOREACHBATCH_QUERIES)
+def test_foreachbatch_replay_leaves_no_scratch(spark, sf_dir, tmp_path, monkeypatch, name):
+    """A bounded foreachBatch replay keeps its sinks and checkpoint under
+    replay scratch only for the call: the returned frame is materialized
+    off them, and nothing is left behind once fn() returns."""
+    scratch = tmp_path / "replay"
+    monkeypatch.setenv("SPARK_GRAFT_REPLAY_SCRATCH", str(scratch))
+    rows = SPECS[name].fn(spark, sf_dir).collect()
+    assert rows
+    assert list(scratch.iterdir()) == []
+
+
+def test_replay_into_failure_cleans_up(spark, sf_dir, tmp_path, monkeypatch):
+    """A batch that raises fails the call loudly, and the failure path
+    still removes the scratch root, stops the query and restores the
+    caller's shuffle partitions."""
+    from cdw_spark.streaming.source import replay_into, table_stream
+
+    scratch = tmp_path / "replay"
+    monkeypatch.setenv("SPARK_GRAFT_REPLAY_SCRATCH", str(scratch))
+    seen: list[str] = []
+
+    def handle(batch, dirs):
+        seen.append(spark.conf.get("spark.sql.shuffle.partitions"))
+        if len(seen) == 2:
+            raise RuntimeError("injected failure in the second batch")
+        batch.write.mode("append").parquet(dirs["ids"])
+
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "37")
+    try:
+        sdf = table_stream(spark, sf_dir, "events", "event_id").select("event_id")
+        with pytest.raises(Exception, match="injected failure"):
+            replay_into(sdf, {"ids": spark.createDataFrame([], "event_id long")}, handle, "ids")
+        assert seen == ["16", "16"]  # the replay ran under the shuffle cap
+        assert list(scratch.iterdir()) == []
+        assert spark.streams.active == []
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "37"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prior)
+
+
+def test_replay_lifecycle_lives_only_in_source():
+    """Source-scan guard: streams are started and awaited in one place,
+    cdw_spark/streaming/source.py (``_drain``), so every bounded replay
+    gets the same no-timeout wait, stop-on-exit and shuffle cap. A
+    hand-rolled replay lifecycle anywhere else in the package fails here."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "cdw_spark"
+    pattern = re.compile(r"\.start\(\)|awaitTermination\(")
+    offenders = sorted(
+        f"{path.relative_to(pkg.parent)}:{i}"
+        for path in pkg.rglob("*.py")
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    )
+    assert offenders, "the guard must see the drain in streaming/source.py"
+    assert all(o.startswith("cdw_spark/streaming/source.py:") for o in offenders), offenders
