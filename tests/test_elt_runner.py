@@ -51,10 +51,10 @@ def test_elt_rerun_append_duplicates_k6(spark, data, tmp_path_factory):
 
 
 def test_elt_cli_end_to_end(data, tmp_path_factory, capsys):
-    """VERDICT r3 #6: the reference's two-command run story
-    (``python create_tables.py && python etl.py``) as one documented CLI —
-    ``python -m cdw_spark.elt`` must wire config -> session -> reset ->
-    staging loads -> the five star writes and report row counts."""
+    """The reference's two-command run story (``python create_tables.py
+    && python etl.py``) as one CLI: ``python -m cdw_spark.elt`` wires
+    config -> session -> reset -> staging loads -> the five star writes
+    and reports row counts."""
     from cdw_spark.elt import main
 
     log_path, song_path = data
@@ -192,10 +192,9 @@ def _event(ts, uid, artist, song, length):
 
 
 def test_incremental_elt_cross_batch_song_references(spark, tmp_path_factory):
-    """ADVICE r4 (high): an event arriving in batch B that references a
-    song ingested in batch A must still resolve song_id/artist_id — the
-    fact join must run against the ACCUMULATED staging_songs, not the
-    new batch's slice."""
+    """An event arriving in batch B that references a song ingested in
+    batch A still resolves song_id/artist_id: the fact join runs against
+    the ACCUMULATED staging_songs, not the new batch's slice."""
     from cdw_spark.pipeline.elt import run_elt, run_elt_incremental
 
     songs_a = [_song(1, "Artist A", "Alpha", 200.0), _song(2, "Artist B", "Beta", 250.0)]
@@ -237,9 +236,10 @@ def test_incremental_elt_cross_batch_song_references(spark, tmp_path_factory):
 
 
 def test_incremental_elt_fact_files_append_only(spark, tmp_path_factory):
-    """VERDICT r4 #7: the songplays fact is never rewritten — the parquet
-    file set after run 1 survives run 2 byte-identical (names + sizes),
-    run 2 only ADDS files."""
+    """No incremental batch rewrites the songplays fact or the
+    songs/artists/time dims: each table's parquet file set after run 1
+    survives run 2 byte-identical (names + sizes), run 2 only ADDS
+    files."""
     from cdw_spark.pipeline.elt import run_elt_incremental
 
     src_a = tmp_path_factory.mktemp("ap_a")
@@ -249,7 +249,7 @@ def test_incremental_elt_fact_files_append_only(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("ap_out"))
 
     p1 = run_elt_incremental(spark, log_a, song_a, out)
-    sp_dir = p1["songplays"]
+    tables = ("songplays", "songs", "artists", "time")
 
     def file_sigs(d):
         return {
@@ -258,19 +258,105 @@ def test_incremental_elt_fact_files_append_only(spark, tmp_path_factory):
             if f.endswith(".parquet")
         }
 
-    before = file_sigs(sp_dir)
+    before = {t: file_sigs(p1[t]) for t in tables}
     run_elt_incremental(spark, log_b, song_b, out)
-    after = file_sigs(sp_dir)
-    assert set(before) <= set(after)
-    for f, size in before.items():
-        assert after[f] == size, f"fact file rewritten: {f}"
-    assert len(after) > len(before)
+    after = {t: file_sigs(p1[t]) for t in tables}
+    for t in tables:
+        assert set(before[t]) <= set(after[t]), t
+        for f, size in before[t].items():
+            assert after[t][f] == size, f"{t} file rewritten: {f}"
+    assert len(after["songplays"]) > len(before["songplays"])
+
+
+def test_incremental_elt_null_artist_row_appended_once(spark, tmp_path_factory):
+    """A catalog row whose artist has NULL location, latitude and longitude,
+    sent in two batches, leaves ONE artists row: the dim append matches
+    existing rows null-safely (a plain ``==`` never matches NULL)."""
+    from cdw_spark.pipeline.elt import run_elt_incremental
+
+    song = dict(_song(5, "Artist N", "Nulls", 180.0), artist_location=None)
+    out = str(tmp_path_factory.mktemp("null_out"))
+    for i, ts in enumerate((1541200001000, 1541300001000)):
+        src = tmp_path_factory.mktemp(f"null_{i}")
+        log, songs = _write_batch(str(src), [song], [_event(ts, 1, "Artist N", "Nulls", 180.0)])
+        paths = run_elt_incremental(spark, log, songs, out)
+
+    artists = spark.read.parquet(paths["artists"]).collect()
+    assert len(artists) == 1, artists
+    assert (artists[0].location, artists[0].latitude, artists[0].longitude) == (None, None, None)
+    assert spark.read.parquet(paths["songs"]).count() == 1
+
+
+def _drain_listener_bus(spark):
+    """Wait until the status store has seen every finished job."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30000)
+
+
+def test_concurrently_waits_for_all_then_raises_first_failure(spark):
+    """``_concurrently`` re-raises a failed write only after every other
+    write has finished, so no Spark job of the call outlives it."""
+    import time
+
+    from cdw_spark.pipeline.elt import _concurrently
+
+    finished = []
+
+    def fails():
+        raise ValueError("write failed")
+
+    def slow():
+        time.sleep(0.5)
+        spark.range(50_000).selectExpr("sum(id)").collect()
+        finished.append(True)
+
+    with pytest.raises(ValueError, match="write failed"):
+        _concurrently(spark, fails, slow)
+    assert finished == [True]
+    _drain_listener_bus(spark)
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+
+
+def test_concurrent_elt_writes_keep_callers_job_group(spark, data, tmp_path_factory):
+    """Every job that ``run_elt`` and ``run_elt_incremental`` fire, on any
+    of their write threads, belongs to the caller's job group."""
+    from cdw_spark.pipeline.elt import run_elt_incremental
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    log_path, song_path = data
+    batches = [
+        generate(str(tmp_path_factory.mktemp(f"jg_src{seed}")), n_songs=10, n_events=100, seed=seed)
+        for seed in (31, 32)
+    ]
+    inc_out = str(tmp_path_factory.mktemp("jg_inc"))
+
+    def marker(group):
+        sc.setJobGroup(group, group)
+        sc.parallelize([1]).count()
+        _drain_listener_bus(spark)
+        return tracker.getJobIdsForGroup(group)
+
+    try:
+        lo = max(marker("elt-before"))
+        sc.setJobGroup("elt-g", "elt under test")
+        run_elt(spark, log_path, song_path, str(tmp_path_factory.mktemp("jg_full")),
+                faithful=False, mode="overwrite")
+        for log_b, song_b in batches:
+            run_elt_incremental(spark, log_b, song_b, inc_out)
+        hi = min(marker("elt-after"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+    fired = set(range(lo + 1, hi))
+    assert fired
+    assert fired == set(tracker.getJobIdsForGroup("elt-g"))
 
 
 def test_merge_distinct_raises_on_corrupt_dim(spark, tmp_path_factory):
-    """ADVICE r4 (medium): a REAL read failure on an existing dim table
-    must propagate, not silently overwrite the dim with one batch's
-    slice. Only a missing path means 'first batch'."""
+    """A REAL read failure on an existing dim table propagates instead
+    of silently overwriting the dim with one batch's slice. Only a
+    missing path means 'first batch'."""
     from cdw_spark.pipeline.elt import run_elt_incremental
 
     src_a = tmp_path_factory.mktemp("cr_a")
