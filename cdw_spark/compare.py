@@ -39,7 +39,7 @@ def open_oracle(sf_dir: str) -> duckdb.DuckDBPyConnection:
 def _canon_cell(v):
     """Driver-faithful value canonicalization.
 
-    VERDICT r8 #2 (mirror fidelity): the driver renders oracle values
+    Mirror fidelity: the driver renders oracle values
     through the pandas path, where a DuckDB HUGEINT (or NULL-bearing
     integer column) arrives as float64 and hashes as ``5.0`` — DIFFERENT
     from a Spark bigint ``5``. The old mirror unified int and

@@ -9,21 +9,19 @@ suite's index families. Each artifact is a parquet directory keyed by
   x (build version tag, bumped on intentional construction changes)
   x (a hash of the SEMANTIC SPEC text — the oracle CTE that defines the
      relation — so an upstream construction change that forgets the
-     version bump still mints a NEW key instead of serving stale data;
-     ADVICE r10 #2)
+     version bump still mints a NEW key instead of serving stale data)
 
 and lives under the Spark warehouse directory (``SPARK_GRAFT_WAREHOUSE``,
 the same root ``cdw_spark.session`` configures), grouped per fixture so
 orphaned keys from a regenerated fixture or a version bump are swept on
-the next build (VERDICT r10 #5 — artifacts used to accumulate in /tmp
-forever).
+the next build (so artifacts never accumulate without bound).
 
 Concurrency: builders write to a pid-suffixed tmp dir and publish with an
 atomic ``os.rename``. When the rename fails because another builder won,
 the winner's ``_SUCCESS`` marker is re-checked and the loser's tmp is
 discarded; any OTHER rename failure (permissions, cross-device move via
 an env redirection) re-raises instead of silently discarding the build
-and then failing later with a misleading path-not-found (ADVICE r10 #3).
+and then failing later with a misleading path-not-found.
 """
 
 from __future__ import annotations
@@ -89,8 +87,8 @@ def artifact_dir(family: str, fixture_path: str, version: str, spec_text: str) -
 def _tmp_is_abandoned(path: str, name: str) -> bool:
     """A builder tmp dir (``<key>.tmp<pid>``) is reclaimable when its
     owning pid is gone, or — when the suffix doesn't parse — when the
-    dir is older than an hour (ADVICE r11: crashed builders used to
-    leave tmp dirs that nothing outside bench cold runs ever swept)."""
+    dir is older than an hour (so a crashed builder's tmp dir is swept
+    by the next build, not only by a cold ``clear_all``)."""
     suffix = name.rsplit(".tmp", 1)[-1]
     if suffix.isdigit():
         pid = int(suffix)
@@ -143,7 +141,7 @@ def serve_at_rest(
     key (first caller materializes + sweeps orphans, everyone else scans
     the parquet).
 
-    ``summary`` (VERDICT r11 #3): an aggregate derived FROM the freshly
+    ``summary``: an aggregate derived FROM the freshly
     written parquet (never the in-memory build lineage, so its values
     stay artifact-derived) written to ``<dir>/_summary`` inside the same
     atomic publish — the shape row a ``*_materialize`` query serves in
@@ -184,7 +182,7 @@ def serve_summary_at_rest(
     build: Callable[[], DataFrame],
     summary: Callable[[DataFrame], DataFrame],
 ) -> DataFrame:
-    """Serve the artifact's published shape row (VERDICT r11 #3): an O(1)
+    """Serve the artifact's published shape row: an O(1)
     one-row parquet scan at steady state, while the values remain
     artifact-derived (computed from the published parquet at publish
     time — tests/test_artifact_summaries.py recounts the full relation
@@ -219,8 +217,8 @@ def serve_summary_at_rest(
 
 
 def clear_family(family: str) -> None:
-    """Drop every artifact of a family (bench cold-run discipline,
-    VERDICT r10 #2: run1 of the canonical pair records the cold build)."""
+    """Drop every artifact of a family (bench cold-run discipline: the
+    first run of a canonical pair records the cold build)."""
     shutil.rmtree(os.path.join(_store_base(), family), ignore_errors=True)
 
 
@@ -228,5 +226,5 @@ def clear_all() -> None:
     """Drop the entire index store — bench.py runs this before its timed
     loop in cold mode, so the one-time build cost of every *_materialize
     op is ON the timed record instead of inherited from whatever state
-    the host happens to hold (VERDICT r10 'What's wrong' #1)."""
+    the host happens to hold."""
     shutil.rmtree(_store_base(), ignore_errors=True)

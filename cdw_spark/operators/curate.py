@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.text import shingles
+from ..plans.lineage import cut
 
 # ---------------------------------------------------------------------------
 # Benchmark decontamination
@@ -582,13 +583,12 @@ def bpe_train_merges(
     Rows-only registry entry (iterative argmax is not one SQL query);
     differentially tested against a pure-Python BPE reference in
     tests/test_curate.py."""
-    words = (
+    words = cut(
         docs.select(F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("w"))
         .filter(F.col("w") != "")
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
         .withColumn("sym", F.array_join(F.split(F.col("w"), ""), " "))
-        .localCheckpoint(eager=True)
     )
     spark = docs.sparkSession
     merges = []
@@ -628,7 +628,7 @@ def bpe_train_merges(
             f"concat(slice(acc, 1, size(acc) - 1), array('{el + er}')), "
             "concat(acc, array(t)))), ' ')"
         )
-        words = words.withColumn("sym", F.expr(fold)).localCheckpoint(eager=True)
+        words = cut(words.withColumn("sym", F.expr(fold)))
     return spark.createDataFrame(
         merges, "rank int, left string, right string, merged string, pair_count bigint"
     )

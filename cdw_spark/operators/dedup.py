@@ -28,6 +28,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint_md5, shingles
+from ..plans.lineage import cut
+
+# Round cap of connected_components (see its docstring).
+CC_MAX_ROUNDS = 20
 
 # MinHash parameters. PRIME = 2^31 - 1 (Mersenne); products a*h stay below
 # 2^62, safe in long arithmetic under ANSI mode.
@@ -298,7 +302,7 @@ def simhash(
     is positive. The feature hash h is the first 15 hex chars of
     md5(shingle) as a 60-bit bigint — chosen over xxhash64 because both
     engines compute it bit-identically, which is what gives dedup_simhash
-    a full DuckDB value oracle (VERDICT r4 #5; the similarity_ann_lsh_wide
+    a full DuckDB value oracle (the similarity_ann_lsh_wide
     literal-planes treatment applied to bit sampling). Signature bits
     60-63 are therefore always 0; the 8x8-bit pigeonhole chunking is
     unaffected. One explode + one aggregation — same cost shape as
@@ -421,14 +425,10 @@ def cosine_near_duplicates(
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Connected components over a near-duplicate pair graph -> (doc_id,
-    component_id) where component_id = the smallest doc id reachable.
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """Connected components over a near-duplicate (id_a, id_b) pair graph
+    -> (doc_id, component_id) where component_id = the smallest doc id
+    reachable.
 
     This is what a dedup pipeline actually consumes: pair lists say "a~b",
     clusters say "keep one of {a,b,c,...}" — the canonical-keeper choice
@@ -439,74 +439,78 @@ def connected_components(
       label(v) <- min(label(v), min_{(v,u) in E} label(u))   # propagate
       label(v) <- label(label(v))                            # shortcut
     The shortcut step doubles how far a label has travelled each round, so
-    convergence is O(log diameter) — max_iter=20 covers diameters up to
-    ~2^20, and a graph that still hasn't converged raises instead of
-    silently returning split components (a chain longer than the round
-    budget would otherwise fracture into multiple labels).
-    Each round is two joins + one aggregate (shuffles on vertex id);
-    ``localCheckpoint`` truncates the lineage per round — without it the
-    plan doubles every iteration and planning time explodes long before
-    data does. Near-dup graphs have tiny diameters (dup clusters are
-    cliques-ish), so rounds ~ 2-3 in practice."""
+    convergence is O(log diameter) — ``CC_MAX_ROUNDS`` = 20 covers
+    diameters up to ~2^20, and a graph that still hasn't converged raises
+    instead of silently returning split components (a chain longer than
+    the round budget would otherwise fracture into multiple labels).
+    Each round is two joins + one aggregate (shuffles on vertex id) and a
+    ``count()`` of moved labels; the labels are cut each round — without
+    it the plan doubles every iteration and planning time explodes long
+    before data does. Near-dup graphs have tiny diameters (dup clusters
+    are cliques-ish), so rounds ~ 2-3 in practice. The symmetrized edge
+    relation is cached for the rounds and unpersisted on every exit,
+    including a failed round."""
     edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
         .distinct()
         .persist()
     )
-    labels = (
-        edges.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id"))
-    ).localCheckpoint()
-
-    changed = 0
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges["dst"] == labels["id"])
-            .groupBy("src")
-            .agg(F.min("label").alias("nb_min"))
+    try:
+        labels = cut(
+            edges.select(F.col("src").alias("id"))
+            .distinct()
+            .withColumn("label", F.col("id"))
         )
-        propagated = labels.join(
-            neighbor_min, labels["id"] == neighbor_min["src"], "left"
-        ).select(
-            "id",
-            F.least(F.col("label"), F.coalesce(F.col("nb_min"), F.col("label"))).alias(
-                "label"
-            ),
-        )
-        # Pointer jumping: adopt the label of one's current label vertex.
-        # Every label IS a vertex id, so the self-join always resolves.
-        new_labels = (
-            propagated.alias("a")
-            .join(
-                propagated.select(
-                    F.col("id").alias("_lid"), F.col("label").alias("_llabel")
+        for _ in range(CC_MAX_ROUNDS):
+            neighbor_min = (
+                edges.join(labels, edges["dst"] == labels["id"])
+                .groupBy("src")
+                .agg(F.min("label").alias("nb_min"))
+            )
+            propagated = labels.join(
+                neighbor_min, labels["id"] == neighbor_min["src"], "left"
+            ).select(
+                "id",
+                F.least(F.col("label"), F.coalesce(F.col("nb_min"), F.col("label"))).alias(
+                    "label"
                 ),
-                F.col("a.label") == F.col("_lid"),
-                "left",
             )
-            .select(
-                F.col("a.id").alias("id"),
-                F.least(
-                    F.col("a.label"), F.coalesce(F.col("_llabel"), F.col("a.label"))
-                ).alias("label"),
+            # Pointer jumping: adopt the label of one's current label vertex.
+            # Every label IS a vertex id, so the self-join always resolves.
+            new_labels = cut(
+                propagated.alias("a")
+                .join(
+                    propagated.select(
+                        F.col("id").alias("_lid"), F.col("label").alias("_llabel")
+                    ),
+                    F.col("a.label") == F.col("_lid"),
+                    "left",
+                )
+                .select(
+                    F.col("a.id").alias("id"),
+                    F.least(
+                        F.col("a.label"), F.coalesce(F.col("_llabel"), F.col("a.label"))
+                    ).alias("label"),
+                )
             )
-        ).localCheckpoint()
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    edges.unpersist()
-    if changed != 0:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still moving) — result would be split "
-            "components; raise max_iter"
-        )
+            changed = (
+                new_labels.alias("n")
+                .join(labels.alias("o"), "id")
+                .filter(F.col("n.label") != F.col("o.label"))
+                .count()
+            )
+            labels = new_labels
+            if changed == 0:
+                break
+        else:
+            raise RuntimeError(
+                f"connected_components did not converge in {CC_MAX_ROUNDS} rounds "
+                f"({changed} labels still moving) — result would be split "
+                "components"
+            )
+    finally:
+        edges.unpersist()
     return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("component_id"))
 
 
@@ -795,10 +799,10 @@ def ngram_jaccard_pairs_prefix(
     # table is reused instead of re-shingling. The verified pair set is
     # tiny (it IS the dedup output), so materialize it eagerly and drop
     # the cached shingle relation — otherwise every invocation leaks a
-    # cached table for the session's lifetime (ADVICE r5 #4)
-    out = jaccard_verify(
+    # cached table for the session's lifetime.
+    out = cut(jaccard_verify(
         cand, df, text_col, id_col, n,
         threshold=float(t_num) / float(t_den), shingle_tbl=sh,
-    ).localCheckpoint(eager=True)
+    ))
     sh.unpersist()
     return out

@@ -12,9 +12,11 @@ Scale shape (per iteration): one shuffle to join ranks onto edges by src
 list reuses its exchange), one shuffle for the groupBy(dst) contribution
 sum with map-side partial aggregation. Ranks and degrees are |V| rows —
 small relative to |E| — and N is a broadcast single-row aggregate, never a
-driver ``collect()``. Lineage is truncated with localCheckpoint each round
-(same discipline as operators/dedup.py connected_components) so long runs
-don't accrete a mega-plan.
+driver ``collect()``. The relations every round reads (edges, out-degrees,
+nodes) are cut once through ``plans.lineage.cut``; the rank plan then grows
+by one join per round, since each round reads the previous ranks once.
+``label_propagation``, ``kcore_peel`` and ``hits_scores`` also cut their
+per-round state.
 """
 
 from __future__ import annotations
@@ -22,18 +24,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.lineage import cut
+
+# HITS micro-unit grid: scores are integers in units of 1/HITS_SCALE.
+HITS_SCALE = 1_000_000
 
 def pagerank(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     iters: int = 3,
     damping: float = 0.85,
     teleport: float = 0.15,
-    checkpoint_every: int = 5,
     dedupe_edges: bool = True,
 ) -> DataFrame:
-    """Damped PageRank over distinct directed edges; returns (node, r).
+    """Damped PageRank over distinct directed (src, dst) edges; returns
+    (node, r).
 
     Arithmetic is ordered exactly as the oracle SQL writes it —
     ``teleport/n + d * coalesce(s, 0.0)`` with contributions ``r/outdeg`` —
@@ -46,33 +50,33 @@ def pagerank(
     # The edge list and node set are referenced by EVERY iteration; without
     # materialization Spark re-executes the upstream join (+distinct) once
     # per reference (~10x for 3 iterations — measured 5.7s vs 1.4s for the
-    # materialized adjacency at sf0.1). localCheckpoint truncates lineage
-    # and pins the result in executor storage — the Spark analog of
-    # materializing the adjacency list before a power iteration.
+    # materialized adjacency at sf0.1). The cut truncates lineage and
+    # pins the result — the Spark analog of materializing the adjacency
+    # list before a power iteration.
     # dedupe_edges=False runs the multigraph variant (parallel edges each
     # carry a contribution — "endorsement-frequency" weighting) and skips
     # the distinct shuffle entirely.
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    e = edges.select("src", "dst")
     if dedupe_edges:
         e = e.distinct()
-    e = e.localCheckpoint(eager=False)
-    outdeg = (
+    e = cut(e, eager=False)
+    outdeg = cut(
         e.groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).cast("double").alias("outdeg"))
-        .localCheckpoint(eager=False)
+        .agg(F.count(F.lit(1)).cast("double").alias("outdeg")),
+        eager=False,
     )
-    nodes = (
+    nodes = cut(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        eager=False,
     )
     n_row = nodes.agg(F.count(F.lit(1)).cast("double").alias("n"))
 
     ranks = nodes.crossJoin(F.broadcast(n_row)).select(
         "node", (F.lit(1.0) / F.col("n")).alias("r")
     )
-    for i in range(iters):
+    for _ in range(iters):
         # r/outdeg materializes on the |V|-row side BEFORE touching edges:
         # the edge join then broadcasts a tiny (node, w) relation (AQE
         # picks BHJ) and the only |E|-sized work is the map-side-combined
@@ -95,8 +99,6 @@ def pagerank(
                 ).alias("r"),
             )
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iters:
-            ranks = ranks.localCheckpoint(eager=False)
     return ranks
 
 
@@ -117,7 +119,7 @@ def label_propagation(edges: DataFrame, iters: int = 3) -> DataFrame:
     relation (bounded by distinct neighbor labels per node). Labels are
     checkpointed each round so lineage never accretes.
     """
-    e = edges.select("src", "dst").localCheckpoint(eager=False)
+    e = cut(edges.select("src", "dst"), eager=False)
     labels = e.select(F.col("src").alias("node")).distinct().withColumn(
         "label", F.col("node")
     )
@@ -130,11 +132,11 @@ def label_propagation(edges: DataFrame, iters: int = 3) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("c"))
         )
         w = Window.partitionBy("node").orderBy(F.col("c").desc(), F.col("label"))
-        labels = (
+        labels = cut(
             votes.withColumn("rk", F.row_number().over(w))
             .filter(F.col("rk") == 1)
-            .select("node", "label")
-            .localCheckpoint(eager=False)
+            .select("node", "label"),
+            eager=False,
         )
     return labels
 
@@ -155,36 +157,31 @@ def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
     and one semi-join of edges against surviving nodes on EACH endpoint
     — equi-joins only, the degree relation broadcasts while it fits.
     Edges are checkpointed per round so lineage stays flat."""
-    e = edges.select("src", "dst").localCheckpoint(eager=False)
+    e = cut(edges.select("src", "dst"), eager=False)
     for _ in range(rounds):
         deg = e.groupBy(F.col("src").alias("node")).agg(
             F.count(F.lit(1)).alias("deg")
         )
         keep = deg.filter(F.col("deg") >= k).select("node")
-        e = (
+        e = cut(
             e.join(keep.withColumnRenamed("node", "src"), "src", "left_semi")
             .join(keep.withColumnRenamed("node", "dst"), "dst", "left_semi")
-            .select("src", "dst")
-            .localCheckpoint(eager=False)
+            .select("src", "dst"),
+            eager=False,
         )
     return e.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
     )
 
 
-def hits_scores(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iters: int = 2,
-    scale: int = 1_000_000,
-) -> tuple[DataFrame, DataFrame]:
-    """HITS hubs/authorities (Kleinberg 1999) made associative-EXACT: "
-    scores live on an integer micro-unit grid (x1e6) and every
-    iteration max-normalizes by the exact half-away integer division
-    (2*v*scale + m) div (2*m) — no float enters the recurrence, so both
-    engines agree bit-for-bit at every step (the pagerank/kmeans
-    treatment applied to the two-sided eigenvector pair).
+def hits_scores(edges: DataFrame, iters: int = 2) -> tuple[DataFrame, DataFrame]:
+    """HITS hubs/authorities (Kleinberg 1999) over (src, dst) edges, made
+    associative-EXACT: scores live on an integer micro-unit grid
+    (``HITS_SCALE`` = 1e6) and every iteration max-normalizes by the exact
+    half-away integer division (2*v*scale + m) div (2*m) — no float
+    enters the recurrence, so both engines agree bit-for-bit at every
+    step (the pagerank/kmeans treatment applied to the two-sided
+    eigenvector pair).
 
     Returns (hubs, authorities): (node, h) over source nodes and
     (node, a) over destination nodes, both in micro-units.
@@ -192,25 +189,23 @@ def hits_scores(
     Scale shape: per iteration, one broadcast-size score join onto the
     checkpointed edge list and one map-side-combined groupBy per side,
     plus a 1-value max reduce. The normalization's 2*raw*scale product
-    runs in DECIMAL(38,0)/HUGEINT (r8 micro-unit audit: in int64 it
-    wrapped at node degree > 4.6e6 — a real hub at corpus scale); raw
-    itself stays int64 to ~9e12 edge-contributions per node, stated
-    here as the remaining bound."""
+    runs in DECIMAL(38,0)/HUGEINT (in int64 it wraps at node degree
+    > 4.6e6 — a real hub at corpus scale); raw itself stays int64 to
+    ~9e12 edge-contributions per node, stated here as the remaining
+    bound."""
     if iters < 1:
         raise ValueError(f"hits_scores needs iters >= 1, got {iters}")
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).localCheckpoint(
-        eager=True
-    )
+    e = cut(edges.select("src", "dst"))
     if e.isEmpty():
         raise ValueError(
             "hits_scores needs a non-empty edge set (max-normalization is "
             "undefined on zero edges)"
         )
-    h = (
+    h = cut(
         e.select(F.col("src").alias("node"))
         .distinct()
-        .withColumn("h", F.lit(scale).cast("bigint"))
-        .localCheckpoint(eager=False)
+        .withColumn("h", F.lit(HITS_SCALE).cast("bigint")),
+        eager=False,
     )
     a = None
     for _ in range(iters):
@@ -220,18 +215,18 @@ def hits_scores(
             .agg(F.sum("h").cast("bigint").alias("raw"))
         )
         am = ar.agg(F.max("raw").alias("m"))
-        a = (
+        a = cut(
             ar.crossJoin(F.broadcast(am))
             .select(
                 "dst",
                 F.expr(
-                    f"(2 * CAST(raw AS DECIMAL(38,0)) * {scale} + m)"
+                    f"(2 * CAST(raw AS DECIMAL(38,0)) * {HITS_SCALE} + m)"
                     f" div (2 * CAST(m AS DECIMAL(38,0)))"
                 )
                 .cast("bigint")
                 .alias("a"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
         hr = (
             e.join(a, "dst")
@@ -239,17 +234,17 @@ def hits_scores(
             .agg(F.sum("a").cast("bigint").alias("raw"))
         )
         hm = hr.agg(F.max("raw").alias("m"))
-        h = (
+        h = cut(
             hr.crossJoin(F.broadcast(hm))
             .select(
                 F.col("src").alias("node"),
                 F.expr(
-                    f"(2 * CAST(raw AS DECIMAL(38,0)) * {scale} + m)"
+                    f"(2 * CAST(raw AS DECIMAL(38,0)) * {HITS_SCALE} + m)"
                     f" div (2 * CAST(m AS DECIMAL(38,0)))"
                 )
                 .cast("bigint")
                 .alias("h"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
     return h, a.withColumnRenamed("dst", "node")

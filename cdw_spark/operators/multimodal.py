@@ -34,6 +34,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..plans.lineage import cut
+
 FEATURE_DIM = 8
 
 
@@ -455,7 +457,7 @@ def spread_ids(df: DataFrame, *cols: str) -> DataFrame:
     multimodal_image_near_dup ran 9.1 s single-task at sf0.1 while 31
     cores idled). The exchange moves only the named slim columns (an
     8-byte id by default — never blobs). GATED like rebalance_scan
-    (ADVICE r12): at 100 TB the scan already yields thousands of splits,
+    because at 100 TB the scan already yields thousands of splits,
     and an unconditional repartition(defaultParallelism) would COALESCE
     them to exactly one task wave — capping scheduling granularity and
     straggler recovery for the most expensive per-row pass in the suite.
@@ -584,9 +586,9 @@ def synth_video(doc_id: int, n_frames: int = 8) -> bytes:
             raster[d % len(raster)] = (raster[d % len(raster)] + 7) % 256
         return ppm_encode(16, 16, bytes(raster))
 
-    cut = n_frames // 2
-    frames = [frame(f"{doc_id}:a", t, True) for t in range(cut)]
-    frames += [frame(f"{doc_id}:b", t, False) for t in range(n_frames - cut)]
+    n_a = n_frames // 2
+    frames = [frame(f"{doc_id}:a", t, True) for t in range(n_a)]
+    frames += [frame(f"{doc_id}:b", t, False) for t in range(n_frames - n_a)]
     return pvv_encode(frames)
 
 
@@ -795,12 +797,12 @@ def _hamming_chunk_pairs(
     4, so candidates come from an EQUALITY self-join on (chunk_idx,
     chunk_value) — only (id, hash) rows shuffle at any corpus size.
 
-    The hash relation is localCheckpoint'ed before the self-join: both
-    join sides would otherwise re-evaluate the upstream decode+hash pass
-    (an Arrow mapInPandas over every image) — the checkpoint pins the
+    The hash relation is cut before the self-join: both join sides
+    would otherwise re-evaluate the upstream decode+hash pass (an Arrow
+    mapInPandas over every image) — the cut pins the
     ~16-bytes/row relation so the corpus is decoded exactly once
     (guide §8: decide on the lightweight proxy, decode heavy bytes once)."""
-    hashes = hashes.localCheckpoint(eager=True)
+    hashes = cut(hashes)
     chunks = hashes.select(
         id_col,
         hash_col,

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.vectors import cosine, dot, to_double_array
+from ..plans.lineage import cut
 
 N_PLANES = 8
 
@@ -92,8 +93,8 @@ def hamming_ball_masks(n_planes: int, radius: int) -> list[int]:
     return masks
 
 
-# Width schedule knee (VERDICT r10 #4): below the knee the rule is the
-# r9 flat-FULL-occupancy schedule w = ceil(log2 n) + 7; past it (w would
+# Width schedule knee: below the knee the rule is the
+# flat-FULL-occupancy schedule w = ceil(log2 n) + 7; past it (w would
 # exceed KNEE_W, i.e. n > 2^17 rows) the width grows 2 BITS PER CORPUS
 # DOUBLING instead of 1, which pins PER-BAND occupancy of the two-band
 # multi-index at its knee value (2^5 rows/band-bucket): band bits = w/2
@@ -906,7 +907,7 @@ def mmr_rerank(
     per-probe window argmax plus a (remaining x selected) pairwise join
     bounded by pool * steps per probe — tiny relations whatever the
     corpus size, all lazily composed (no driver collect). The candidate
-    pool is localCheckpoint'ed once so the loop doesn't re-execute the
+    pool is cut once so the loop doesn't re-execute the
     corpus scan per step."""
     dim = len(corpus.select(vec_col).first()[0])
     # Candidate generation keeps the RAW cosine as rel: pre-rounding rel to
@@ -926,7 +927,7 @@ def mmr_rerank(
     # zip_with/aggregate cosine cost ~2 s alone over |corpus| x |probes|
     # rows at sf0.1; the unrolled chain keeps DuckDB fold parity and stays
     # in whole-stage codegen.
-    cands = (
+    cands = cut(
         c.crossJoin(F.broadcast(p))
         .filter(F.col("cand_id") != F.col("probe_id"))
         .withColumn(
@@ -942,8 +943,8 @@ def mmr_rerank(
         # UP into the corpus scan/scoring (measured 1.3x slower overall);
         # the exchange keeps the scan parallel and only the tiny pool
         # funnels.
-        .repartition(1)
-        .localCheckpoint(eager=False)
+        .repartition(1),
+        eager=False,
     )
 
     w = Window.partitionBy("probe_id").orderBy(F.col("score").desc(), F.col("cand_id"))
@@ -985,7 +986,7 @@ def mmr_rerank(
         # subtrees — measured ~4.5 s of pure driver analysis at steps=4).
         # eager=False: the plan is truncated immediately, the tiny
         # (|probes| * t)-row RDD materializes once under the final action.
-        selected = selected.unionAll(pick).localCheckpoint(eager=False)
+        selected = cut(selected.unionAll(pick), eager=False)
     return selected.select(
         "probe_id", F.col("step").cast("int").alias("step"), "cand_id",
         F.col("score").alias("mmr_score"),
@@ -1145,11 +1146,10 @@ def pca_power_top_component(
                 for j in range(dim)
             ]
         )
-        ydf = (
+        ydf = cut(
             joined.select(F.posexplode(prods).alias("pos", "p"))
             .groupBy("pos")
             .agg(F.sum("p").alias("y"))
-            .localCheckpoint(eager=True)
         )
         mxdf = ydf.agg(F.max(F.abs(F.col("y").cast("double"))).alias("mx"))
         xdf = (
@@ -1785,10 +1785,9 @@ def ivfpq_topk(
     # unrolled argmin folds both blew whole-stage codegen past the JVM's
     # 64 KB method limit when fused downstream AND recompiled per call
     # because the centroid literals differ per training run.
-    assigned = (
+    assigned = cut(
         _int_assign_stats_arrow(q, cents, dim, "rows")
         .select(F.col("_id").alias("cand_id"), F.col("qv").alias("cqv"), "cid")
-        .localCheckpoint(eager=True)
     )
     pq_ = probes.select(F.col(id_col).alias("probe_id"), quant.alias("qv"))
     for c_idx, c in enumerate(cents):

@@ -30,6 +30,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..plans.lineage import cut
+
 
 def _log_grid_cell(vd: Column) -> Column:
     """FIXED log-grid cell id over a DOUBLE column — a pure monotone
@@ -90,7 +92,7 @@ def banded_exact_median(
     )
     # The cell id is a function of the value alone, so no per-group
     # bounds are joined back onto the data (downstream of a
-    # localCheckpoint Catalyst's size estimate defaults to "huge", and
+    # lineage cut Catalyst's size estimate defaults to "huge", and
     # such a join degrades to a full sort-merge join of the data).
     jc = src.withColumn("_ck", _log_grid_cell(F.col("_vd"))).drop("_vd")
     cells = jc.groupBy(*key_cols, "_ck").agg(F.count(F.lit(1)).alias("_cc"))
@@ -142,7 +144,7 @@ def banded_exact_median(
 def bucket_by_value(df: DataFrame, value_col: str) -> DataFrame:
     """Level 1 of the two-level prefix-sum: ``df`` plus a ``_bk`` column
     holding the value's ``_log_grid_cell`` (ties always share a bucket,
-    and (bucket, value) order is value order), localCheckpoint'ed.
+    and (bucket, value) order is value order), behind a lazy lineage cut.
     Exposed separately so the skew tests can measure within-bucket row
     counts directly.
 
@@ -159,7 +161,7 @@ def bucket_by_value(df: DataFrame, value_col: str) -> DataFrame:
     # plan is truncated at once, and the RDD still computes exactly once
     # (block-level locking) under the caller's action, without a
     # blocking driver job per call.
-    return j.localCheckpoint(eager=False)
+    return cut(j, eager=False)
 
 
 def two_level_cumsum(

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.util import inheritable_thread_target
 
 from ..plans.layout import REFERENCE_LAYOUTS, write_table
+from ..plans.lineage import cut
 from ..sources.json_loader import load_staging_events, load_staging_songs
 from .sparkify import (
     build_artists,
@@ -192,7 +193,7 @@ def run_elt_incremental(
         old_v = _read_if_exists(uv_path)
         all_v = old_v.unionByName(new_v) if old_v is not None else new_v
         # cut the lineage: the overwrites below replace the files it reads
-        latest = latest_user_versions(all_v).localCheckpoint(eager=True)
+        latest = cut(latest_user_versions(all_v))
         latest.write.mode("overwrite").parquet(uv_path)
         latest.drop("_v_ts", "_v_sid").write.mode("overwrite").parquet(paths["users"])
 

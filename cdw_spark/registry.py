@@ -62,52 +62,38 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
 
 
 # Grading-exposure order. The driver checks a fixed-size PREFIX of the
-# registry (the first 50 entries of queries() insertion order), so ordering
-# decides which operators get a CORRECTNESS row. Driver evidence accumulates
-# ACROSS rounds: round 2 graded a 50-query cross-section of every family
-# (all green, CORRECTNESS_r02.json); this round keeps ten of those as
-# regression anchors (the flagship plus one per family) and rotates the
-# other forty slots to queries that have never had a driver row — the
-# remaining TPC-H shapes, the subquery/set-op/SCD/skew relational tail, the
-# batch time-window twins, and the tokenize/chunk/pack assembly ops.
-# Everything not listed keeps its registration order after the window and
-# stays covered by tests/test_oracle_contract.py's local differential sweep.
-# r12 window (this round): VERDICT r11 #1 EXACTLY — ten family anchors,
-# then ALL 12 entries of the queue authored at the r11 close (round-11
-# additions in wave order, dedup_components_materialize first), then 28
-# coldest re-grades oldest-grade-first (alphabetical tiebreak within a
-# round): the 6 remaining r2-graded rows (5 TPC-H shapes +
-# window_range_frame) and the 22 alphabetically-first r3-graded rows
-# (chunk_documents .. set_ops_all). After r11 cleared the never-graded
-# backlog, the queue is the only never-graded oracled set; this window
-# clears it again AND starts refreshing the oldest evidence (r2/r3
-# grades are now 9-10 rounds stale).
-# Cumulative evidence entering r12: 374 unique queries graded, 372
-# green at latest grading. The 2 non-green are the r1 relics
-# agg_approx_distinct/agg_approx_quantiles: their CORRECTNESS_r01 rows
-# read err="no_oracle" — the driver records row counts but can never
-# hash-match an oracle-less entry, so re-grading them cannot turn them
-# green (VERDICT r10 ledger note, documented here instead of burning 2
-# slots). Their exact twins (agg_distinct_exact, agg_percentile_exact)
-# are oracled and driver-green.
+# registry (the first 50 entries of queries() insertion order), so this
+# order decides which operators get a driver CORRECTNESS row; everything
+# after the window keeps its registration order and stays covered by
+# tests/test_oracle_contract.py's local differential sweep. The window:
 #
-# The 4 rows-only (agg_approx_top_k, text_compression_ratio,
-# similarity_ann_pq, multimodal_audio_spectral — each irreducibly
-# engine-specific with a measured reason) never burn window slots.
-# r13+ policy: keep the ten anchors, spend the forty slots on (a) the
-# len(_NEXT_WINDOW_QUEUE) queued additions below (round-12 additions in
-# wave order; the meta-test derives the count from the tuple, never
-# from this prose), then (b) coldest re-grades oldest-grade-first
-# (next up: the remaining r3 cohort from skew_salted_agg onward).
+# - 10 family anchors, one per operator family (flagship star join, time,
+#   multimodal, TPC-H, windows, streaming, text, similarity, dedup,
+#   curation): already driver-green, kept as regression anchors.
+# - 12 queries that had never been graded (the whole rotation queue when
+#   the window was written, dedup_components_materialize first): new
+#   evidence goes to the least proven queries.
+# - 28 re-grades of the stalest driver rows, oldest grade first with an
+#   alphabetical tiebreak: 5 TPC-H shapes and window_range_frame, then
+#   chunk_documents .. set_ops_all.
+#
+# Never in the window: agg_approx_distinct/agg_approx_quantiles have no
+# oracle, so the driver cannot hash-match them (their exact twins
+# agg_distinct_exact/agg_percentile_exact are oracled and green), and the
+# 4 rows-only queries (agg_approx_top_k, text_compression_ratio,
+# similarity_ann_pq, multimodal_audio_spectral) are engine-specific with a
+# measured reason. The next window keeps the anchors and spends the other
+# forty slots on _NEXT_WINDOW_QUEUE first, then on the stalest re-grades
+# (skew_salted_agg onward).
 _WINDOW_ROUND = 12  # the round this window was authored FOR — meta-tests
 # treat CORRECTNESS records from rounds >= this as the window's own
-# grade, not prior evidence (VERDICT r4 #3's self-invalidation fix).
+# grade, not prior evidence (a query must not count as proven by the
+# grade of the window that exposes it).
 _DRIVER_WINDOW: tuple[str, ...] = (
     # --- anchors: one representative per family, all driver-green ---
     "star_fact_join",        # reference §2 relational core (flagship)
     "time_dim",              # reference §2 time/EXTRACT family
-    "multimodal_blob_meta",  # multimodal family (anchor slot yielded by
-    # agg_pricing_summary — see the window comment above)
+    "multimodal_blob_meta",  # multimodal family
     "tpch_q6_revenue_forecast",  # TPC-H shapes
     "window_rank_topk",      # window functions
     "stream_tumbling_agg",   # structured streaming
@@ -115,8 +101,7 @@ _DRIVER_WINDOW: tuple[str, ...] = (
     "similarity_ann_lsh",    # similarity / ANN
     "dedup_minhash_lsh",     # deduplication
     "curation_pipeline",     # curation / dataset ops
-    # --- rotated in (r12a): the 12 round-11 additions, wave order
-    # (the entire queue authored at the r11 close) ---
+    # --- never graded before this window: 12 additions, wave order ---
     "dedup_components_materialize",
     "agg_mcnemar_paired",
     "window_stochastic_oscillator",
@@ -129,16 +114,15 @@ _DRIVER_WINDOW: tuple[str, ...] = (
     "sample_poisson_bootstrap",
     "agg_jarque_bera",
     "text_simpson_diversity",
-    # --- cold re-grades (r12b): the 28 oldest driver rows,
-    # oldest-grade-first, alphabetical tiebreak within a round.
-    # First the 6 remaining r2-graded rows... ---
+    # --- re-grades: the 28 oldest driver rows, oldest grade first,
+    # alphabetical tiebreak. First the 6 oldest... ---
     "tpch_q10_returned_items",
     "tpch_q13_order_distribution",
     "tpch_q14_promo_share",
     "tpch_q18_large_orders",
     "tpch_q19_discounted_revenue",
     "window_range_frame",
-    # --- ...then the 22 alphabetically-first r3-graded rows ---
+    # --- ...then the 22 alphabetically-first of the next-oldest ---
     "chunk_documents",
     "correlated_subquery",
     "date_funcs",
@@ -164,90 +148,87 @@ _DRIVER_WINDOW: tuple[str, ...] = (
 )
 
 
-# Queries registered AFTER the r12 window was authored — the r13 rotation
-# queue (newest, least proven, so they go first next round). The
+# Queries registered after the window was authored, in wave order: the
+# next window's first candidates (newest, least proven). The
 # completeness meta-test accepts queue membership in place of a window
-# slot, so a new oracled query must either rotate in NOW or be queued
-# HERE — silence is no longer possible. The r12 window absorbed the
-# entire r11-close queue (all 12 entries), so this queue starts empty
-# and accumulates round-12 additions in wave order as they land.
+# slot, so a new oracled query must either rotate in now or be queued
+# here.
 _NEXT_WINDOW_QUEUE: tuple[str, ...] = (
-    # round-12 first wave: at-rest 8-word block-occurrence artifact
-    # (VERDICT r11 #4 — the profile showed the block stage is 62-74%
-    # of both block-audit consumers)
+    # at-rest 8-word block-occurrence artifact (the block stage was
+    # 62-74% of both block-audit consumers)
     "text_blocks_materialize",
-    # round-12 second wave: blocked rank test, lag-1 serial-correlation
+    # blocked rank test, lag-1 serial-correlation
     # diagnostic, rank-based changepoint localizer
     "agg_friedman_test",
     "timeseries_durbin_watson",
     "timeseries_pettitt_changepoint",
-    # round-12 third wave: volume-flow confirmation, time-since-extreme
+    # volume-flow confirmation, time-since-extreme
     # trend gauge, recommendation popularity-bias audit
     "window_obv",
     "window_aroon",
     "recs_item_novelty",
-    # round-12 fourth wave: transport-cost distribution distance,
+    # transport-cost distribution distance,
     # week-over-week binless drift profile, OCR/mojibake scorer
     "agg_wasserstein_1d",
     "events_weekly_ks_drift",
     "text_ocr_garbage_score",
-    # round-12 fifth wave: ordered-alternative rank trend, aggregate-
+    # ordered-alternative rank trend, aggregate-
     # diversity (exposure concentration) audit
     "agg_page_trend_test",
     "recs_gini_diversity",
-    # round-12 sixth wave: confounder-removed dependence, lead/lag
+    # confounder-removed dependence, lead/lag
     # cross-correlation scan
     "agg_partial_correlation",
     "timeseries_cross_correlation",
-    # round-12 seventh wave: nonparametric two-sample expansion —
+    # nonparametric two-sample expansion —
     # median-split chi-square, squared-ranks scale test, body-weighted
     # distribution distance, ordinal dominance effect size
     "agg_mood_median",
     "agg_conover_squared_ranks",
     "agg_cvm_two_sample",
     "agg_cliffs_delta",
-    # round-12 eighth wave: frequency-domain and complexity reads of
+    # frequency-domain and complexity reads of
     # the daily series — integer-quantized DFT periodogram entropy,
     # Richman-Moorman sample entropy, KPSS level-stationarity gate
     "timeseries_spectral_entropy",
     "timeseries_sample_entropy",
     "timeseries_kpss",
-    # round-12 ninth wave: randomness/trend triage on the daily series
+    # randomness/trend triage on the daily series
     # — calendar-split sign trend, oscillation count, rank von Neumann
     "timeseries_cox_stuart",
     "timeseries_turning_points",
     "timeseries_bartels_rank",
-    # round-12 tenth wave: stylometric/lexical-diversity text layer —
+    # stylometric/lexical-diversity text layer —
     # Yule's K spectrum constant, MSTTR-50, Burrows' delta pairs
     "text_yule_k",
     "text_msttr",
     "text_burrows_delta",
-    # round-12 eleventh wave: volume-anchored technicals on the shared
+    # volume-anchored technicals on the shared
     # 6h bars — anchored VWAP deviation, Chaikin money flow, Ichimoku
     "window_vwap_deviation",
     "window_chaikin_money_flow",
     "window_ichimoku",
-    # round-12 twelfth wave: entry-bias audit, inequality direction,
+    # entry-bias audit, inequality direction,
     # variance-reduced experimentation
     "dq_last_digit_heaping",
     "agg_lorenz_asymmetry",
     "ab_test_cuped",
-    # round-12 thirteenth wave: embedding-space geometry audits over
+    # embedding-space geometry audits over
     # the at-rest kNN artifact + the raw coordinate matrix
     "embedding_twonn_intrinsic_dim",
     "graph_neighbor_jaccard",
     "embedding_coordinate_kurtosis",
-    # round-12 fourteenth wave: robust octile kurtosis, Markov memory-
+    # robust octile kurtosis, Markov memory-
     # order test, timestamp-heaping bot audit
     "agg_moors_kurtosis",
     "events_markov_order_test",
     "dq_timestamp_heaping",
-    # round-12 fifteenth wave: rank-identity GMD scale estimator,
+    # rank-identity GMD scale estimator,
     # floor-trader pivot ladder, quartile coefficient of dispersion
     "agg_gini_mean_difference",
     "window_pivot_points",
     "agg_quartile_dispersion",
-    # round-12 sixteenth wave: Robin Hood share, Hill diversity
+    # Robin Hood share, Hill diversity
     # ladder in heads, daily capacity envelope
     "agg_hoover_index",
     "agg_effective_cardinality",

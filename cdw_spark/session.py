@@ -107,6 +107,9 @@ def get_spark(
             "spark.sql.streaming.stateStore.maintenanceInterval",
             os.environ.get("SPARK_GRAFT_STATE_MAINTENANCE", "600s"),
         )
+        # Durable lineage cuts (plans.lineage.cut with a checkpoint dir
+        # set) write files; delete them once their RDD is collected.
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/cdw_warehouse"))
     )

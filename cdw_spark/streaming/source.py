@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
+from ..plans.lineage import cut
+
 _qid = itertools.count()
 _STAGE_ROOT = os.path.join(tempfile.gettempdir(), "cdw_stream_src")
 
@@ -228,7 +230,7 @@ def replay_into(
             empty.write.mode("overwrite").parquet(dirs[name])
         writer = sdf.writeStream.foreachBatch(lambda batch, _id: handle(batch, dirs))
         _drain(spark, writer, os.path.join(root, "_checkpoint"))
-        return spark.read.parquet(dirs[result]).localCheckpoint(eager=True)
+        return cut(spark.read.parquet(dirs[result]))
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -250,7 +252,7 @@ def fold_state(
 
     def handle(batch: DataFrame, dirs: dict[str, str]) -> None:
         old = spark.read.parquet(dirs["state"])
-        new = step(old, batch).localCheckpoint(eager=True)
+        new = cut(step(old, batch))
         new.write.mode("overwrite").parquet(dirs["state"])
 
     return replay_into(sdf, {"state": seed}, handle, "state")

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_fixture
+from ..plans.lineage import cut
 from ..registry import register
 
 DEC = "decimal(18,2)"
@@ -62,7 +63,7 @@ def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the FINAL projection is DOUBLE — the driver's canonicalization
             # renders DuckDB DECIMAL/HUGEINT through a float path, so any
             # decimal-typed output column hash-mismatches even when values
-            # are identical (VERDICT r1).
+            # are identical.
             F.round(F.sum(qty).cast("double"), 2).alias("sum_qty"),
             F.round(F.sum(price).cast("double"), 2).alias("sum_base_price"),
             F.round(F.sum(price * disc).cast("double"), 2).alias("sum_disc_price"),
@@ -100,8 +101,8 @@ def join_agg_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("c_mktsegment").alias("segment"))
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            # order on the exact decimal sum; project DOUBLE (driver decimal
-            # canonicalization — VERDICT r1)
+            # order on the exact decimal sum; project DOUBLE (the driver
+            # canonicalizes decimals through a float path)
             F.sum(F.col("o_totalprice").cast(DEC)).alias("_revenue_exact"),
         )
         .orderBy(F.col("_revenue_exact").desc(), F.col("segment"))
@@ -147,7 +148,7 @@ def multi_join_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("n_name").alias("nation"))
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            # exact decimal sum, DOUBLE final projection (VERDICT r1)
+            # exact decimal sum, DOUBLE final projection
             F.round(F.sum(F.col("o_totalprice").cast(DEC)).cast("double"), 2).alias(
                 "revenue"
             ),
@@ -1016,7 +1017,7 @@ def events_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("int")
             .alias("wk_offset"),
         )
-        # operand-cast-before-sum (ADVICE r10 #4): summing the micro-
+        # operand-cast-before-sum: summing the micro-
         # quantized q in LongType would silently wrap past ~9.2e18 where
         # the oracle's HUGEINT stays exact; decimal(20,0) operands make
         # the Spark sum exact at any cell size.
@@ -1073,8 +1074,8 @@ def events_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     "their union, and the direct whole-corpus sketch, each next to the "
     "exact NDV. The point is the MERGE property that makes 100 TB NDV "
     "cheap: partial sketches from each partition/day union without "
-    "rescanning. VALUE-ORACLED via the sketch's exact regime (VERDICT r4 "
-    "#5): the fixture vocabulary (~31 terms at every SF) keeps every "
+    "rescanning. VALUE-ORACLED via the sketch's exact regime: "
+    "the fixture vocabulary (~31 terms at every SF) keeps every "
     "lgK=12 sketch — and their union — in DataSketches' LIST mode, where "
     "the estimate IS the exact NDV, so est==exact SQL hash-checks the "
     "whole sketch->union->estimate path; the general-regime error bound "
@@ -1688,7 +1689,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_fixture(spark, sf_dir, "orders")
     # one fact scan: the corpus max date is the max of the per-customer
     # maxes, so it comes from the checkpointed customer aggregate
-    cust = (
+    cust = cut(
         o.groupBy("o_custkey")
         .agg(
             F.max("o_orderdate").alias("last_order"),
@@ -1697,7 +1698,6 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2
             ).alias("monetary"),
         )
-        .localCheckpoint(eager=True)
     )
     mx = cust.agg(F.max("last_order").alias("mxd"))
     agg = (
@@ -2236,7 +2236,7 @@ def timeseries_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         "flag", F.col("day").alias("da"), F.col("rev").alias("ra")
     ).repartition(32)
     b = daily.select("flag", F.col("day").alias("db"), F.col("rev").alias("rb"))
-    slopes = (
+    slopes = cut(
         a.join(F.broadcast(b), "flag")
         .filter(F.col("da") < F.col("db"))
         # try_divide, not /: under ANSI mode Catalyst may reorder a
@@ -2249,10 +2249,10 @@ def timeseries_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.try_divide(
                 F.col("rb") - F.col("ra"), F.datediff("db", "da").cast("double")
             ).alias("slope"),
-        )
+        ),
         # the cell-count pass and the band pass both consume this
         # |days|^2-row relation; materialize it once.
-        .localCheckpoint(eager=False)
+        eager=False,
     )
     from ..operators.stats import banded_exact_median
 
@@ -2518,7 +2518,7 @@ def agg_median_exact_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per-source sketches — NO rescan of either source. This is how "
     "100 TB corpus-overlap matrices are built: one sketch pass per "
     "source, then O(pairs) driver-free sketch merges. VALUE-ORACLED via "
-    "the sketch's exact regime (VERDICT r4 #5, same argument as "
+    "the sketch's exact regime (same argument as "
     "agg_hll_mergeable): at fixture vocabulary sizes every per-source "
     "and pairwise-union lgK=12 sketch sits in LIST mode where estimates "
     "are exact, so the exact-intersection SQL hash-checks the "
@@ -2801,7 +2801,7 @@ def agg_skew_kurtosis(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n").cast("bigint").alias("n"),
         F.round("mu", 6).alias("mean_qty"),
         F.round("m2", 6).alias("var_pop"),
-        # NULLIF guard (ADVICE r5 #2): a constant-valued group has m2=0 —
+        # NULLIF guard: a constant-valued group has m2=0 —
         # Spark x/0.0 is NULL but DuckDB is inf/NaN; NULL on both engines
         F.round(
             F.col("m3") / F.nullif(F.sqrt("m2") * F.col("m2"), F.lit(0.0)), 6
@@ -3102,7 +3102,7 @@ def agg_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     "double op sequence per engine in the |groups|-row projection.",
 )
 def agg_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale shape (VERDICT r7 'What's wrong' #3 paid): NO per-group
+    """Scale shape: NO per-group
     window over the fact relation. Rows collapse to JOINT distinct cells
     (flag, quantity, price, count) in one map-side-combined shuffle —
     every rank-moment sum is a cell-count-weighted sum over that reduced
@@ -3122,14 +3122,13 @@ def agg_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_fixture(spark, sf_dir, "lineitem")
     # checkpoint: the joint-cell relation feeds both marginals AND the
     # final weighted moment sums — one fact shuffle, not three
-    joint = (
+    joint = cut(
         li.groupBy(
             F.col("l_returnflag").alias("flag"),
             F.col("l_quantity").alias("x"),
             F.col("l_extendedprice").alias("y"),
         )
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
     )
     # quantity marginal: bounded domain -> plain per-flag cum window
     dq = joint.groupBy("flag", "x").agg(F.sum("c").alias("cx"))
@@ -3153,9 +3152,9 @@ def agg_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
         broadcast_if_small(dp), ["flag", "y"]
     )
     # every data-scaled operand at (19,0) — cell counts exact to ~1e19
-    # duplicates per joint cell (ADVICE r8) and doubled ranks exact to
-    # 2n <= 1e19 (VERDICT r9 #3 retired the last (10,0) rank casts; the
-    # triple product caps at Spark's decimal(38,0) either way)
+    # duplicates per joint cell and doubled ranks exact to 2n <= 1e19
+    # (no (10,0) rank casts; the triple product caps at Spark's
+    # decimal(38,0) either way)
     cd = F.col("c").cast("decimal(19,0)")
     dx = F.col("rx2").cast("decimal(19,0)")
     dy = F.col("ry2").cast("decimal(19,0)")
@@ -3262,7 +3261,6 @@ def timeseries_autocorr_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (20,0)x(18,0): 38 is DuckDB's physical multiply width — q is a
     # micro-quantized VALUE (|q| <= 1e6 * max|value|), so the 1e18
     # operand cap holds for value domains to 1e12, not a row-count bound
-    # (VERDICT r9 #3's repo-wide (10,0) sweep)
     d20 = F.col("q").cast("decimal(20,0)")
     s = q.groupBy("user_id").agg(
         F.max("n").cast("bigint").alias("n"),
@@ -3673,12 +3671,10 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     k = states.count()
     scale = 1_000_000
-    pi = states.withColumn("v", F.lit(scale // k).cast("bigint")).localCheckpoint(
-        eager=True
-    )
-    tcr = tc.join(rs, "src").localCheckpoint(eager=True)
+    pi = cut(states.withColumn("v", F.lit(scale // k).cast("bigint")))
+    tcr = cut(tc.join(rs, "src"))
     for _ in range(3):
-        pi = (
+        pi = cut(
             tcr.join(pi.withColumnRenamed("s", "src"), "src")
             .groupBy(F.col("dst").alias("s"))
             .agg(
@@ -3688,7 +3684,6 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("bigint")
                 .alias("v")
             )
-            .localCheckpoint(eager=True)
         )
     return pi.select(
         F.col("s").alias("event_type"),
@@ -4771,7 +4766,7 @@ def events_retention_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n0")
     )
     mx = p.agg(F.max("wk").alias("max_wk"))
-    act = (
+    act = cut(
         p.join(cohort, "user_id")
         .groupBy(
             "cohort_wk",
@@ -4780,7 +4775,6 @@ def events_retention_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("off"),
         )
         .agg(F.count_distinct("user_id").cast("bigint").alias("n_active"))
-        .localCheckpoint(eager=True)
     )
     offs = act.filter(F.col("off") >= 1).select("off").distinct()
     elig = (
@@ -4996,7 +4990,7 @@ def timeseries_mase_seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFram
         F.sum(F.when(F.col("l7").isNotNull(), 1).otherwise(0))
         .cast("bigint")
         .alias("n7"),
-        # operand-cast-before-sum (ADVICE r10 #4): |q - lag| is int64-safe
+        # operand-cast-before-sum: |q - lag| is int64-safe
         # per row, but the per-user SUM could wrap past ~9.2e18 where the
         # oracle's HUGEINT stays exact — sum decimal(20,0) operands.
         F.sum(
@@ -5294,10 +5288,10 @@ def survival_concordance_cindex(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("gmax") - F.col("t1") > 86400, 1).otherwise(0).alias("ev"),
         "s",
     )
-    cells = lab.groupBy("dur", "s").agg(
+    cells = cut(lab.groupBy("dur", "s").agg(
         F.count(F.lit(1)).cast("bigint").alias("c_all"),
         F.sum("ev").cast("bigint").alias("c_ev"),
-    ).localCheckpoint(eager=True)
+    ))
     e = (
         cells.filter(F.col("c_ev") > 0)
         .select(
@@ -5735,7 +5729,7 @@ def timeseries_ewma_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bounded (~3.6e16 at the fixture's value range). The series filter "
     "is on the QUANTIZED value (q > 0, i.e. value >= 5e-7): a sub-micro "
     "first purchase would give peak = 0 and divide by zero — Spark "
-    "NULLs, DuckDB errors (ADVICE r8) — so it is excluded identically "
+    "NULLs, DuckDB errors — so it is excluded identically "
     "in both engines instead of guarded asymmetrically.",
 )
 def window_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6146,7 +6140,7 @@ def agg_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = _KT_K
     li = load_fixture(spark, sf_dir, "lineitem")
     q = F.col("l_quantity").cast("int")
-    piv = (
+    piv = cut(
         li.groupBy(
             F.col("l_returnflag").alias("flag"),
             F.col("l_extendedprice").cast("decimal(18,2)").alias("p"),
@@ -6156,7 +6150,7 @@ def agg_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.when(q == j, 1).otherwise(0)).cast("bigint").alias(f"c{j}")
                 for j in range(1, k + 1)
             ],
-            # domain guard (ADVICE r8): a quantity outside the pivoted
+            # domain guard: a quantity outside the pivoted
             # 1..k domain contributes to NO c_j and would silently vanish
             # from n and every pair count IN BOTH ENGINES (oracle parity
             # hides the undercount). Count the strays per cell...
@@ -6164,7 +6158,6 @@ def agg_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("c_oob"),
         )
-        .localCheckpoint(eager=True)
     )
     # ...and fail loudly on any (one bounded 1-row sync over the already
     # checkpointed |cells|-row relation — the stage_exact_quarters rule:
@@ -6338,11 +6331,11 @@ def agg_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_fixture(spark, sf_dir, "lineitem")
     cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("bigint")
-    po = li.groupBy("l_orderkey").agg(
+    po = cut(li.groupBy("l_orderkey").agg(
         F.sum(
             F.when(F.col("l_linenumber") % 2 == 1, cents).otherwise(-cents)
         ).alias("d")
-    ).localCheckpoint(eager=True)
+    ))
     nz = po.filter(F.col("d") != 0).select(
         F.abs(F.col("d")).alias("ad"),
         F.when(F.col("d") > 0, 1).otherwise(0).alias("pos"),
@@ -6454,13 +6447,12 @@ def agg_jensen_shannon(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("event_type").alias("t"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("cq"))
     )
-    m = (
+    m = cut(
         p.join(q, "t", "full_outer")
         .select(
             F.coalesce("cp", F.lit(0)).alias("cp"),
             F.coalesce("cq", F.lit(0)).alias("cq"),
         )
-        .localCheckpoint(eager=True)
     )
     tot = m.agg(
         F.sum("cp").cast("bigint").alias("np"),
@@ -6722,10 +6714,9 @@ def agg_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     cuts the shared lineage); everything after is |types| + |users|
     sized with 1-row broadcast joins — no window, no sort."""
     ev = load_fixture(spark, sf_dir, "events")
-    ux = (
+    ux = cut(
         ev.groupBy("user_id", F.col("event_type").alias("t"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-        .localCheckpoint(eager=True)
     )
     ut = ux.groupBy("user_id").agg(F.sum("x").cast("bigint").alias("tx"))
     nn = ut.agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n"))
@@ -7096,7 +7087,7 @@ def agg_stump_split_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("tot_p").cast("decimal(38,0)").alias("np"),
     )
     tot = cum.agg(F.max("n").alias("n"), F.max("np").alias("np"))
-    scored = (
+    scored = cut(
         cum.filter(F.expr("cumn < n"))
         .selectExpr(
             "v",
@@ -7106,7 +7097,6 @@ def agg_stump_split_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
             " * ((n - cumn) - (np - cump)) * 1000000 + (n - cumn))"
             " div (2 * CAST(n - cumn AS DECIMAL(38,0))) AS score_micro",
         )
-        .localCheckpoint(eager=True)
     )
     best = scored.agg(F.min("score_micro").alias("bs"))
     pick = (
@@ -7242,7 +7232,7 @@ def timeseries_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("rn")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    blk = blk.select(
+    blk = cut(blk.select(
         "user_id",
         "s",
         "b",
@@ -7251,14 +7241,14 @@ def timeseries_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(
             Window.partitionBy("user_id", "s", "b").orderBy("rn")
         ).alias("i"),
-    ).localCheckpoint(eager=True)
-    btot = blk.groupBy("user_id", "s", "b").agg(
+    ))
+    btot = cut(blk.groupBy("user_id", "s", "b").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt"),
         F.sum("q").cast("decimal(38,0)").alias("sb"),
         F.sum(F.col("q").cast("decimal(19,0)") * F.col("q").cast("decimal(19,0)"))
         .cast("decimal(38,0)")
         .alias("qb"),
-    ).localCheckpoint(eager=True)
+    ))
     dev = (
         blk.join(btot, ["user_id", "s", "b"])
         .filter(F.col("cnt") == F.col("s"))
@@ -7359,9 +7349,9 @@ def events_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(Window.partitionBy("user_id").orderBy("ts", "event_id"))
         .alias("nxt"),
     ).filter(F.col("nxt").isNotNull())
-    pair = seq.groupBy("cur", "nxt").agg(
+    pair = cut(seq.groupBy("cur", "nxt").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
-    ).localCheckpoint(eager=True)
+    ))
     marg = pair.groupBy("cur").agg(F.sum("c").cast("bigint").alias("nc"))
     hrow = (
         pair.join(F.broadcast(marg), "cur")
@@ -7462,10 +7452,9 @@ def agg_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.stats import value_ranks
 
     o = load_fixture(spark, sf_dir, "orders")
-    cells = (
+    cells = cut(
         o.groupBy(F.col("o_totalprice").alias("v"), F.col("o_orderpriority").alias("g"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .localCheckpoint(eager=True)
     )
     ranked = value_ranks(cells, [], "v", {"cv": F.col("c")})
     grp = (
@@ -7834,7 +7823,7 @@ def agg_levene_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(dd_micro <= 1e6 so each square <= 1e12 — ~1e26 rows before "
     "overflow), and the only doubles are the final per-user "
     "sqrt/divide. Sub-micro first purchases are excluded identically "
-    "in both engines (the q > 0 filter, ADVICE r8 discipline).",
+    "in both engines (the q > 0 filter).",
 )
 def window_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: one per-user ordered window for the running peak
@@ -8085,7 +8074,7 @@ def timeseries_acf_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # NULLIF on den (both engines): a zero-variance series gives den=0 —
     # DuckDB's IEEE double division would emit inf/nan where Spark NULLs,
-    # the exact degenerate parity break the k-group tests fixed (ADVICE r9)
+    # the degenerate parity break the k-group tests pin
     return sums.selectExpr(
         f"stack({_ACF_LAGS}, {stack}) AS (lag, n_pairs, numd)", "den"
     ).selectExpr(
@@ -8476,7 +8465,7 @@ def events_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join with catalog-bounded fan-out, a |types|^2-row aggregate,
     broadcast size joins."""
     e = load_fixture(spark, sf_dir, "events")
-    u = e.select("event_type", "user_id").distinct().localCheckpoint(eager=True)
+    u = cut(e.select("event_type", "user_id").distinct())
     sz = u.groupBy("event_type").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     a = u.select(F.col("event_type").alias("type_a"), "user_id")
     b = u.select(F.col("event_type").alias("type_b"), "user_id")
@@ -8566,7 +8555,7 @@ def window_atr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("unix_micros(ts) div 21600000000").alias("hb"),
     )
     # close via an encoded single wide-integer key (ts, event_id) — the
-    # curation.py keeper-key discipline (ADVICE r9): max_by on ts alone
+    # curation.py keeper-key discipline: max_by on ts alone
     # relies on per-user ts uniqueness; ties would make the close
     # nondeterministic and silently break cross-engine parity. epoch_us
     # (< 8e15 for centuries) * 1e18 + event_id stays exact in
@@ -8991,9 +8980,9 @@ def recs_markov_next_event(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(Window.partitionBy("user_id").orderBy("ts", "event_id"))
         .alias("nxt"),
     ).filter(F.col("nxt").isNotNull())
-    pair = seq.groupBy("cur", "nxt").agg(
+    pair = cut(seq.groupBy("cur", "nxt").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
-    ).localCheckpoint(eager=True)
+    ))
     wk = Window.partitionBy("cur").orderBy(F.col("c").desc(), "nxt")
     pred = (
         pair.withColumn("rk", F.row_number().over(wk))
@@ -9372,11 +9361,10 @@ def window_stochastic_oscillator(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: one distinct (user, type) shuffle feeding a per-user
     rollup and one conditional-count reduce; a 1-row cross join."""
-    pres = (
+    pres = cut(
         load_fixture(spark, sf_dir, "events")
         .select("user_id", "event_type")
         .distinct()
-        .localCheckpoint(eager=True)
     )
     r = pres.groupBy("user_id").agg(F.count(F.lit(1)).cast("bigint").alias("ri"))
     cj = pres.agg(
@@ -9641,7 +9629,7 @@ def agg_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("s4"),
         )
     )
-    # ADVICE r11: past the documented ~10^6-row bound the dev^4 DECIMAL
+    # Past the documented ~10^6-row bound the dev^4 DECIMAL
     # sum overflows to NULL under non-ANSI Spark while the HUGEINT
     # oracle stays exact — fail loudly exactly when that happened
     # instead of emitting a silent NULL-moment row.
@@ -9747,16 +9735,15 @@ def agg_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5)).cast(
         "bigint"
     )
-    cell = (
+    cell = cut(
         e.select("user_id", "event_type", qv.alias("qv"))
         .groupBy("user_id", "event_type")
         .agg(F.sum("qv").cast("bigint").alias("v"))
-        .localCheckpoint(eager=True)
     )
     blocks = cell.groupBy("user_id").agg(F.count(F.lit(1)).alias("kc")).filter(
         F.col("kc") == 5
     ).select("user_id")
-    c = cell.join(blocks, "user_id").localCheckpoint(eager=True)
+    c = cut(cell.join(blocks, "user_id"))
     rk = c.select(
         "event_type",
         (
@@ -9955,11 +9942,10 @@ def timeseries_pettitt_changepoint(spark: SparkSession, sf_dir: str) -> DataFram
     q = F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5)).cast(
         "bigint"
     )
-    d = (
+    d = cut(
         e.select(F.date_trunc("day", F.col("ts")).alias("day"), q.alias("q"))
         .groupBy("day")
         .agg(F.sum("q").cast("bigint").alias("x"))
-        .localCheckpoint(eager=True)
     )
     vals = d.groupBy("x").agg(F.count(F.lit(1)).cast("bigint").alias("cv"))
     wv = Window.orderBy("x").rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -9971,7 +9957,7 @@ def timeseries_pettitt_changepoint(spark: SparkSession, sf_dir: str) -> DataFram
     )
     nn = d.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     wd = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    u = (
+    u = cut(
         d.join(ranked, "x")
         .crossJoin(F.broadcast(nn))
         .select(
@@ -9982,7 +9968,6 @@ def timeseries_pettitt_changepoint(spark: SparkSession, sf_dir: str) -> DataFram
                 * (F.col("n") + F.lit(1)).cast("decimal(38,0)")
             ).alias("ut"),
         )
-        .localCheckpoint(eager=True)
     )
     k = u.agg(F.max(F.abs(F.col("ut"))).cast("bigint").alias("kstat"))
     cp = (
@@ -10509,13 +10494,12 @@ def agg_page_trend_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     o = load_fixture(spark, sf_dir, "orders")
-    cell = (
+    cell = cut(
         o.groupBy(
             F.col("o_custkey").alias("cust"),
             F.substring("o_orderpriority", 1, 1).cast("int").alias("j"),
         )
         .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("v"))
-        .localCheckpoint(eager=True)
     )
     blocks = (
         cell.groupBy("cust")
@@ -10730,7 +10714,7 @@ def timeseries_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the |days|-row relation and a 7-row rollup — day cardinality is
     calendar-bounded at any corpus scale."""
     e = load_fixture(spark, sf_dir, "events")
-    d = (
+    d = cut(
         e.select(
             F.expr("unix_micros(ts) div 86400000000").alias("dd"),
             "event_type",
@@ -10744,7 +10728,6 @@ def timeseries_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("er"),
         )
-        .localCheckpoint(eager=True)
     )
     lags = d.sparkSession.range(-3, 4).select(F.col("id").alias("lag"))
     a = d.select("dd", F.col("px").alias("x")).crossJoin(F.broadcast(lags))
@@ -10844,11 +10827,11 @@ def agg_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         {"c": F.lit(1), "ch": F.when(F.col("hi"), 1).otherwise(0)},
     )
     tot = ranked.agg(F.max("tot_c").alias("nn"), F.max("tot_ch").alias("n1"))
-    cut = ranked.filter(F.col("cum_c") >= F.expr("(tot_c + 1) div 2")).agg(
+    cutoff = ranked.filter(F.col("cum_c") >= F.expr("(tot_c + 1) div 2")).agg(
         F.min("v").alias("cutv")
     )
     ab = (
-        ranked.crossJoin(F.broadcast(cut))
+        ranked.crossJoin(F.broadcast(cutoff))
         .filter(F.col("v") > F.col("cutv"))
         .agg(
             F.coalesce(F.sum("ch"), F.lit(0)).cast("bigint").alias("a"),
@@ -10856,7 +10839,7 @@ def agg_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        tot.crossJoin(F.broadcast(cut))
+        tot.crossJoin(F.broadcast(cutoff))
         .crossJoin(F.broadcast(ab))
         .selectExpr(
             "nn AS n_orders",
@@ -11334,11 +11317,10 @@ def timeseries_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_fixture(spark, sf_dir, "events").filter(
         F.col("event_type") == "purchase"
     )
-    d = (
+    d = cut(
         e.select(F.expr("unix_micros(ts) div 86400000000").alias("dd"))
         .groupBy("dd")
         .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-        .localCheckpoint(eager=True)
     )
     idx = d.select(
         (F.row_number().over(Window.orderBy("dd")) - F.lit(1))
@@ -11374,7 +11356,7 @@ def timeseries_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("decimal(38,0)")
         .alias("i2")
     )
-    spec = spec.localCheckpoint(eager=True)
+    spec = cut(spec)
     tot = spec.agg(F.sum("i2").cast("decimal(38,0)").alias("p"))
     ent = spec.crossJoin(F.broadcast(tot)).agg(
         F.sum(
@@ -11485,11 +11467,10 @@ def timeseries_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5)).cast(
         "bigint"
     )
-    d = (
+    d = cut(
         e.select(F.expr("unix_micros(ts) div 86400000000").alias("dd"), q.alias("q"))
         .groupBy("dd")
         .agg(F.sum("q").cast("bigint").alias("x"))
-        .localCheckpoint(eager=True)
     )
     m = d.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -11635,11 +11616,10 @@ def timeseries_kpss(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5)).cast(
         "bigint"
     )
-    d = (
+    d = cut(
         e.select(F.expr("unix_micros(ts) div 86400000000").alias("dd"), q.alias("q"))
         .groupBy("dd")
         .agg(F.sum("q").cast("bigint").alias("x"))
-        .localCheckpoint(eager=True)
     )
     m = d.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -11658,7 +11638,7 @@ def timeseries_kpss(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("ev"),
         "l",
     )
-    ev = ev.localCheckpoint(eager=True)
+    ev = cut(ev)
     wp = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     ss = (
         ev.select(F.sum("ev").over(wp).cast("decimal(38,0)").alias("sp"))
@@ -11775,11 +11755,10 @@ def timeseries_cox_stuart(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5)).cast(
         "bigint"
     )
-    d = (
+    d = cut(
         e.select(F.expr("unix_micros(ts) div 86400000000").alias("dd"), q.alias("q"))
         .groupBy("dd")
         .agg(F.sum("q").cast("bigint").alias("x"))
-        .localCheckpoint(eager=True)
     )
     idx = d.select(
         F.row_number().over(Window.orderBy("dd")).alias("t"), "x"
@@ -11862,11 +11841,10 @@ def timeseries_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5)).cast(
         "bigint"
     )
-    d = (
+    d = cut(
         e.select(F.expr("unix_micros(ts) div 86400000000").alias("dd"), q.alias("q"))
         .groupBy("dd")
         .agg(F.sum("q").cast("bigint").alias("x"))
-        .localCheckpoint(eager=True)
     )
     wd = Window.orderBy("dd")
     w = d.select(
@@ -11966,11 +11944,10 @@ def timeseries_bartels_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5)).cast(
         "bigint"
     )
-    d = (
+    d = cut(
         e.select(F.expr("unix_micros(ts) div 86400000000").alias("dd"), q.alias("q"))
         .groupBy("dd")
         .agg(F.sum("q").cast("bigint").alias("x"))
-        .localCheckpoint(eager=True)
     )
     vals = d.groupBy(F.col("x").alias("v")).agg(
         F.count(F.lit(1)).cast("bigint").alias("cv")
@@ -12456,7 +12433,7 @@ def dq_last_digit_heaping(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("dig")
     )
     c = d.groupBy("dig").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    c = c.localCheckpoint(eager=True)
+    c = cut(c)
     s = c.agg(
         F.sum("c").cast("bigint").alias("n"),
         F.sum(F.expr("CAST(c AS DECIMAL(19,0)) * c"))
@@ -12549,7 +12526,7 @@ def agg_lorenz_asymmetry(spark: SparkSession, sf_dir: str) -> DataFrame:
     only shuffle), then three 1-row broadcast reduces driven by exact
     integer mean-crossing predicates."""
     o = load_fixture(spark, sf_dir, "orders")
-    cust = (
+    cust = cut(
         o.select(
             "o_custkey",
             F.floor(
@@ -12560,7 +12537,6 @@ def agg_lorenz_asymmetry(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("o_custkey")
         .agg(F.sum("xc").cast("bigint").alias("x"))
-        .localCheckpoint(eager=True)
     )
     tot = cust.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -12944,24 +12920,22 @@ def events_markov_order_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_fixture(spark, sf_dir, "events")
     wo = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = e.select(
+    seq = cut(e.select(
         F.col("event_type").alias("c1"),
         F.lead("event_type", 1).over(wo).alias("c2"),
         F.lead("event_type", 2).over(wo).alias("c3"),
-    ).localCheckpoint(eager=True)
-    bi = (
+    ))
+    bi = cut(
         seq.filter(F.col("c2").isNotNull())
         .groupBy("c1", "c2")
         .agg(F.count(F.lit(1)).cast("bigint").alias("nb"))
-        .localCheckpoint(eager=True)
     )
     bim = bi.groupBy("c1").agg(F.sum("nb").cast("bigint").alias("n1"))
     nb2 = bi.agg(F.sum("nb").cast("bigint").alias("n2"))
-    tri = (
+    tri = cut(
         seq.filter(F.col("c3").isNotNull())
         .groupBy("c1", "c2", "c3")
         .agg(F.count(F.lit(1)).cast("bigint").alias("nt"))
-        .localCheckpoint(eager=True)
     )
     trim = tri.groupBy("c1", "c2").agg(F.sum("nt").cast("bigint").alias("n12"))
     nb3 = tri.agg(F.sum("nt").cast("bigint").alias("n3"))
@@ -13059,7 +13033,7 @@ def dq_timestamp_heaping(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("(unix_micros(ts) div 60000000) % 60").alias("minute")
     )
     c = d.groupBy("minute").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    c = c.localCheckpoint(eager=True)
+    c = cut(c)
     s = c.agg(
         F.sum("c").cast("bigint").alias("n"),
         F.sum(F.expr("CAST(c AS DECIMAL(19,0)) * c"))
@@ -13372,7 +13346,7 @@ def agg_hoover_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: one per-customer groupBy over the fact scan, one
     broadcast totals join, one 1-row absolute-deviation reduce."""
     o = load_fixture(spark, sf_dir, "orders")
-    cust = (
+    cust = cut(
         o.select(
             "o_custkey",
             F.floor(
@@ -13383,7 +13357,6 @@ def agg_hoover_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("o_custkey")
         .agg(F.sum("xc").cast("bigint").alias("x"))
-        .localCheckpoint(eager=True)
     )
     tot = cust.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -13452,7 +13425,7 @@ def agg_effective_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: one per-customer groupBy over the fact scan, one
     broadcast totals join, two 1-row reduces."""
     o = load_fixture(spark, sf_dir, "orders")
-    cust = (
+    cust = cut(
         o.select(
             "o_custkey",
             F.floor(
@@ -13463,7 +13436,6 @@ def agg_effective_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("o_custkey")
         .agg(F.sum("xc").cast("bigint").alias("x"))
-        .localCheckpoint(eager=True)
     )
     tot = cust.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -13534,11 +13506,10 @@ def events_daily_load_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: one day-grain count (the only fact shuffle), two
     1-row reduces over the calendar-bounded day relation."""
     e = load_fixture(spark, sf_dir, "events")
-    d = (
+    d = cut(
         e.select(F.expr("unix_micros(ts) div 86400000000").alias("dd"))
         .groupBy("dd")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .localCheckpoint(eager=True)
     )
     tot = d.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),

@@ -27,6 +27,7 @@ from ..operators.curate import (
     repetition_profile,
     tokenize_to_vocab_ids,
 )
+from ..plans.lineage import cut
 from ..registry import register
 
 # Word 4-gram shingles in DuckDB, mirroring functions.text.shingles(n=4)
@@ -1173,12 +1174,12 @@ def quality_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 def incremental_join_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_fixture(spark, sf_dir, "orders")
     li = load_fixture(spark, sf_dir, "lineitem")
-    cut = F.lit("1998-01-01").cast("timestamp")
-    a_old, a_new = orders.filter(F.col("o_orderdate") < cut), orders.filter(
-        F.col("o_orderdate") >= cut
+    cutoff = F.lit("1998-01-01").cast("timestamp")
+    a_old, a_new = orders.filter(F.col("o_orderdate") < cutoff), orders.filter(
+        F.col("o_orderdate") >= cutoff
     )
-    b_old, b_new = li.filter(F.col("l_shipdate") < cut), li.filter(
-        F.col("l_shipdate") >= cut
+    b_old, b_new = li.filter(F.col("l_shipdate") < cutoff), li.filter(
+        F.col("l_shipdate") >= cutoff
     )
 
     def partial(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -1316,7 +1317,7 @@ def _bpe_rounds_sql(n_merges: int = 5) -> str:
     1-row LEFT JOIN ON TRUE — so a round with NO learnable pair (p{t}
     empty, where the Spark trainer ``break``s) carries w{t-1} forward
     unchanged instead of collapsing every downstream CTE to zero rows
-    (ADVICE r5 #1). The suffix test is right()-equality, not LIKE, so
+    The suffix test is right()-equality, not LIKE, so
     tokens containing %/_ cannot act as wildcards."""
     parts = ["""
     WITH w0 AS (
@@ -2690,10 +2691,10 @@ def sample_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     embarrassingly parallel."""
     e = load_fixture(spark, sf_dir, "embeddings")
     k, dim = 8, 64
-    q = e.select(
+    q = cut(e.select(
         F.col("vec_id").alias("_id"),
         F.expr("transform(embedding, x -> cast(round(x * 16) as int))").alias("qv"),
-    ).localCheckpoint(eager=True)
+    ))
     seed_rows = q.filter(F.col("_id") == 0).select("_id", "qv").collect()
     if not seed_rows:
         raise ValueError(
@@ -3113,10 +3114,9 @@ def basket_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint: the distinct basket relation feeds the order count,
     # the part margins, and BOTH sides of the pair self-join — one fact
     # shuffle, not four
-    b = (
+    b = cut(
         li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n = b.agg(F.countDistinct("ok").cast("bigint").alias("n"))
     pc = b.groupBy("pk").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
@@ -3162,7 +3162,7 @@ def basket_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ca").alias("n_a"),
             F.col("cb").alias("n_b"),
             (
-                # DECIMAL(38,0)/HUGEINT numerator like lift's (ADVICE r8):
+                # DECIMAL(38,0)/HUGEINT numerator like lift's:
                 # 2*cab*1e6 wraps int64 silently past cab ~ 4.6e12
                 F.expr(
                     "CAST((2 * CAST(cab AS DECIMAL(38,0)) * 1000000 + ca)"
@@ -3391,9 +3391,9 @@ def mix_waterfill_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     d = load_fixture(spark, sf_dir, "documents")
-    caps = d.groupBy("source").agg(
+    caps = cut(d.groupBy("source").agg(
         F.sum("n_chars").cast("bigint").alias("cap")
-    ).localCheckpoint(eager=True)
+    ))
     tot = caps.agg(
         F.count(F.lit(1)).cast("bigint").alias("m"),
         F.sum("cap").cast("bigint").alias("w"),
@@ -3409,12 +3409,12 @@ def mix_waterfill_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0),
         ).alias("pfx0"),
     )
-    capped = r.crossJoin(F.broadcast(tot)).withColumn(
+    capped = cut(r.crossJoin(F.broadcast(tot)).withColumn(
         "is_capped",
         F.when(
             F.expr("cap * (m - k + 1) + pfx0 <= b"), 1
         ).otherwise(0),
-    ).localCheckpoint(eager=True)
+    ))
     kstar = capped.agg(
         F.coalesce(F.sum("is_capped"), F.lit(0)).cast("bigint").alias("ks"),
         F.coalesce(F.sum(F.when(F.col("is_capped") == 1, F.col("cap"))), F.lit(0))
@@ -3575,7 +3575,7 @@ def sample_horvitz_thompson(spark: SparkSession, sf_dir: str) -> DataFrame:
     count y rides the same scan that the exact truth needs anyway."""
     from ..operators.stats import two_level_cumsum
 
-    d = (
+    d = cut(
         load_fixture(spark, sf_dir, "documents")
         .selectExpr(
             "doc_id",
@@ -3583,7 +3583,6 @@ def sample_horvitz_thompson(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(size(regexp_extract_all(lower(text), '[a-z0-9]+', 0))"
             " AS BIGINT) AS y",
         )
-        .localCheckpoint(eager=True)
     )
     c = two_level_cumsum(d, [], "doc_id", [], {"cumw": "wt"})
     tot = d.agg(
@@ -3659,7 +3658,7 @@ def sample_horvitz_thompson(spark: SparkSession, sf_dir: str) -> DataFrame:
     "doubles from identical op sequences, but ln is not required to be "
     "correctly rounded (JVM Math.log vs libm can differ by ulps), so "
     "BOTH engines rank by the 9dp-ROUNDED priority — the grading "
-    "precision — with a doc_id tie-break (the tfidf idiom; ADVICE r10).",
+    "precision — with a doc_id tie-break (the tfidf idiom).",
 )
 def sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: one stateless projection (exact integer LCG + two
@@ -3808,10 +3807,9 @@ def dq_volume_anomaly_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.stats import value_ranks
 
     e = load_fixture(spark, sf_dir, "events")
-    d = e.groupBy(
-        F.date_trunc("day", F.col("ts")).cast("date").alias("day")
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("n_events")).localCheckpoint(
-        eager=True
+    d = cut(
+        e.groupBy(F.date_trunc("day", F.col("ts")).cast("date").alias("day"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
     )
 
     def lower_median(vals, col):
@@ -3962,7 +3960,7 @@ def dq_uniqueness_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             prof(
                 e,
                 "events.user_id+ts",
-                # ADVICE r11: F.concat (NULL-propagating) matches the
+                # F.concat (NULL-propagating) matches the
                 # oracle's `||`; concat_ws would SKIP a NULL component
                 # and still count the row as a distinct key.
                 F.concat(

@@ -154,8 +154,8 @@ def _simhash_oracle_sql(max_hamming: int = 7, n_bits: int = 60) -> str:
     "pigeonhole chunks (complete for hamming<=7). Feature hash is a "
     "60-bit md5 prefix both engines compute bit-identically, so the "
     "WHOLE pipeline — shingles, per-bit sums, sign packing, the pair "
-    "set, the exact hamming values — carries a DuckDB value oracle "
-    "(converted from rows-only per VERDICT r4 #5); also cross-validated "
+    "set, the exact hamming values — carries a DuckDB value oracle; "
+    "also cross-validated "
     "against exact Jaccard in tests/test_dedup.py.",
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -205,11 +205,11 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_near_duplicates(load_fixture(spark, sf_dir, "documents"), threshold=0.75)
 
 
-# --- at-rest near-dup component artifact (VERDICT r10 #3: the r10
-# kNN/recs at-rest treatment applied to the Jaccard pair-graph family).
+# --- at-rest near-dup component artifact (the kNN/recs at-rest
+# treatment applied to the Jaccard pair-graph family).
 # Five registered queries consume the SAME component relation
 # (dedup_components, dedup_canonical_keepers, dedup_cluster_size_profile,
-# sample_split_leakage_safe, sample_negative_pairs); before r11 each
+# sample_split_leakage_safe, sample_negative_pairs); without it each
 # re-executed the shingle pair join + pointer-jumping components per run
 # (~80% of dedup_cluster_size_profile's 4.9-6.2 s). The component
 # relation is written once per fixture, keyed by documents.parquet
@@ -247,7 +247,7 @@ def _components_artifact_dir(sf_dir: str) -> str:
 
 
 def _components_shape_summary(comp: DataFrame) -> DataFrame:
-    """Shape-row builder for the component artifact (VERDICT r11 #3):
+    """Shape-row builder for the component artifact:
     counts + content-sensitive label checksums computed from the
     published parquet at publish time, served as an O(1) one-row scan
     by dedup_components_materialize. Columns and types mirror the
@@ -305,8 +305,8 @@ def _components_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_COMPONENTS_SPEC,
     doc="Near-duplicate CLUSTERS: connected components over the exact "
     "0.6-Jaccard pair graph via iterative min-label propagation "
-    "(driver-coordinated rounds, lineage truncated per round with "
-    "localCheckpoint — operators/dedup.py connected_components). The "
+    "(driver-coordinated rounds, lineage cut per round — "
+    "operators/dedup.py connected_components). The "
     "cluster view is what canonical-keeper selection consumes; pairs "
     "alone can't make a keep/drop decision transitive. Served from the "
     "at-rest component artifact (r11), so a driver grade of this query "
@@ -347,7 +347,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     "report its shape — the dedup family's index-build op, the "
     "component analogue of graph_knn_materialize: the returned counts "
     "and label checksums are computed FROM the published parquet AT "
-    "PUBLISH (VERDICT r11 #3 — steady-state serves are an O(1) "
+    "PUBLISH (steady-state serves are an O(1) "
     "one-row scan; tests/test_artifact_summaries.py recounts the full "
     "artifact and asserts agreement), so the driver's hash-match "
     "against the recursive-CTE closure proves the materialized "
@@ -359,8 +359,7 @@ def dedup_components_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: the shingle pair join + pointer-jumping components
     run at most once per fixture (first caller materializes, everyone
     else scans); steady-state serves are a one-row scan of the
-    published shape summary (VERDICT r11 #3;
-    tests/test_artifact_summaries.py recounts the full artifact and
+    published shape summary (tests/test_artifact_summaries.py recounts the full artifact and
     asserts agreement)."""
     import os
 
@@ -718,9 +717,9 @@ def dedup_cluster_size_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the at-rest component artifact (built once per fixture — the
     pre-artifact build was ~80% of this query's cost); everything here
     is a |components|-row groupBy, a histogram over distinct sizes, and
-    a 1-row total broadcast. The artifact scan replaces the former
-    localCheckpoint (a parquet re-scan is cheaper than a checkpoint
-    materialization for a relation this small)."""
+    a 1-row total broadcast. The artifact scan replaces a lineage cut
+    (a parquet re-scan is cheaper than a checkpoint materialization for
+    a relation this small)."""
     from pyspark.sql import functions as F
 
     docs = load_fixture(spark, sf_dir, "documents")

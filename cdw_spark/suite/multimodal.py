@@ -53,7 +53,7 @@ def multimodal_blob_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(decode stubbed deterministically — no codecs in container). The "
     "8-float feature vector projects as an md5 digest of its exact byte "
     "values (f_i*255 is integral by construction — the tokenize_vocab_ids "
-    "digest pattern, VERDICT r4 #5), alongside the engine-neutral "
+    "digest pattern), alongside the engine-neutral "
     "byte_len/sha256, so the whole mapInPandas batch path is value-"
     "oracled; the raw-array surface stays available via "
     "operators.multimodal.extract_features and the per-value scalar twin "
@@ -231,7 +231,7 @@ def multimodal_audio_rms(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Planted twin images (doc_id % 50 == 1 perturbs its predecessor's "
     "raster by one byte) give a known ground truth asserted with a "
     "pure-Python brute-force reference in tests/test_multimodal.py. "
-    "Fully VALUE-ORACLED (converted from rows-only, VERDICT r4 #5): the "
+    "Fully VALUE-ORACLED: the "
     "fixture rasters are md5-stream bytes, so the oracle restates synth "
     "-> P6 decode -> integer luma -> 2x2 box sums -> threshold bits -> "
     "packed 64-bit hash -> all-pairs hamming ENTIRELY in integer SQL "
@@ -299,8 +299,7 @@ def multimodal_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "PyAV), 8-bin luma histogram per frame, cut where consecutive "
     "frames' L1 histogram distance exceeds 0.5 — the first-pass shot "
     "segmenter video-training pipelines run before per-shot frame "
-    "sampling. VALUE-ORACLED (converted from rows-only, VERDICT r4 #5, "
-    "the image aHash treatment): clip frames are md5-stream rasters "
+    "sampling. VALUE-ORACLED (the image aHash treatment): clip frames are md5-stream rasters "
     "with a luminance bias and per-frame drift, so the oracle restates "
     "synth -> demux -> decode -> integer luma -> 8-bin histogram -> "
     "consecutive-frame L1 in exact integer SQL; the query projects the "
@@ -418,8 +417,8 @@ def _phash_oracle_sql(max_hamming: int = 3) -> str:
     "low-frequency block thresholded at its integer median, then the "
     "pigeonhole 4x16-bit chunk equi-join shared with the aHash plan. "
     "Sturdier than aHash (low-frequency structure, not per-cell "
-    "brightness). VALUE-ORACLED (converted from rows-only, VERDICT r4 "
-    "#5): the fixed-point integer DCT makes the whole transform exact, "
+    "brightness). VALUE-ORACLED: the fixed-point integer DCT makes "
+    "the whole transform exact, "
     "so the oracle restates raster synthesis, both basis matmuls (256 "
     "literal coefficients), the block median, bit packing, and the pair "
     "set in integer SQL; planted one-byte twin rasters and scalar/batch "

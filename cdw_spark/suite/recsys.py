@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_fixture
+from ..plans.lineage import cut
 from ..registry import register
 
 BASKET_CAP = 32
@@ -73,8 +74,7 @@ def copurchase_edges(li: DataFrame) -> DataFrame:
 
 # The semantic spec of the at-rest list relation (also the
 # recs_item_cooccurrence oracle). Its text is folded into the artifact
-# content key, so editing the spec automatically mints a new artifact
-# (ADVICE r10 #2).
+# content key, so editing the spec automatically mints a new artifact.
 _RECS_LISTS_SPEC = f"""
     WITH b AS (
         SELECT DISTINCT l_orderkey AS ok, l_partkey AS item FROM lineitem
@@ -156,11 +156,10 @@ def _build_item_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # transform (sorted ascending, so ia < ib by construction — exactly
     # the rows the join's ia < ib filter kept). Checkpointed: the basket
     # relation feeds both the pair explode and the item-frequency pass.
-    baskets = (
+    baskets = cut(
         b.groupBy("ok")
         .agg(F.sort_array(F.collect_list("item")).alias("items"))
         .filter(F.size("items") <= BASKET_CAP)
-        .localCheckpoint(eager=True)
     )
     cnt = baskets.select(F.explode("items").alias("item")).groupBy("item").agg(
         F.count(F.lit(1)).alias("c")
@@ -311,10 +310,9 @@ def recs_catalog_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     li = load_fixture(spark, sf_dir, "lineitem")
     catalog = li.select(F.col("l_partkey").alias("item")).distinct()
-    xv = (
+    xv = cut(
         catalog.join(expos, "item", "left")
         .select("item", F.coalesce("x", F.lit(0)).alias("x"))
-        .localCheckpoint(eager=True)
     )
     cum = value_ranks(xv, [], "x", {"c": F.lit(1)})
     tot = xv.agg(
@@ -437,7 +435,7 @@ def recs_basket_holdout_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("bs") <= BASKET_CAP) & (F.col("bs") >= 2))
         .select("ok")
     )
-    bk = b.join(kept, "ok", "left_semi").localCheckpoint(eager=True)
+    bk = cut(b.join(kept, "ok", "left_semi"))
     hold = bk.groupBy("ok").agg(F.max("item").alias("h"))
     ctx = bk.join(hold, "ok").filter(F.col("item") != F.col("h"))
     hits = (
@@ -461,7 +459,7 @@ def recs_basket_holdout_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # generalized: r10 measured the build at a 2.54x/8x constant re-executed
 # by each of the three recsys consumers). Keyed by lineitem identity +
 # version + a hash of _RECS_LISTS_SPEC; storage, orphan GC and race
-# handling live in operators/artifacts.py (VERDICT r10 #5). -------------
+# handling live in operators/artifacts.py. ------------------------------
 _RECS_BUILD_VERSION = "v2"  # bump when the cooccurrence construction changes
 
 
@@ -564,8 +562,8 @@ def _recs_lists_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Build (or reuse) the at-rest top-3 co-occurrence list artifact "
     "and report its shape — the recsys family's index-build op, the "
     "basket analogue of graph_knn_materialize: the returned counts "
-    "are computed FROM the published parquet AT PUBLISH (VERDICT r11 "
-    "#3 — steady-state serves are an O(1) one-row scan; tests/"
+    "are computed FROM the published parquet AT PUBLISH ("
+    "steady-state serves are an O(1) one-row scan; tests/"
     "test_artifact_summaries.py recounts the full artifact and "
     "asserts agreement), so the driver hash-match against "
     "the plain cooccurrence CTE proves the materialized lists (not "
@@ -577,7 +575,7 @@ def _recs_lists_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def recs_lists_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: the basket self-join runs at most once per fixture;
     steady-state serves are a one-row scan of the published shape
-    summary (VERDICT r11 #3; tests/test_artifact_summaries.py recounts
+    summary (tests/test_artifact_summaries.py recounts
     the full artifact and asserts agreement)."""
     import os
 
@@ -651,7 +649,7 @@ def recs_popularity_baseline_eval(spark: SparkSession, sf_dir: str) -> DataFrame
         .filter((F.col("bs") <= BASKET_CAP) & (F.col("bs") >= 2))
         .select("ok")
     )
-    bk = b.join(kept, "ok", "left_semi").localCheckpoint(eager=True)
+    bk = cut(b.join(kept, "ok", "left_semi"))
     cnt = bk.groupBy("item").agg(F.count(F.lit(1)).alias("c"))
     wp = Window.orderBy(F.col("c").desc(), F.col("item"))
     pop = (
@@ -753,7 +751,7 @@ def recs_item_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = li.select(
         F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("item")
     ).distinct()
-    kept = (
+    kept = cut(
         b.groupBy("ok")
         .agg(F.count(F.lit(1)).alias("bs"))
         .filter(F.col("bs") <= BASKET_CAP)
@@ -761,7 +759,6 @@ def recs_item_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         # two consumers below (the semi-join and the basket count);
         # truncating here also lets the (ok, item) exchange feeding the
         # groupBy be reused for the semi-join probe
-        .localCheckpoint(eager=True)
     )
     cnt = (
         b.join(kept, "ok", "left_semi")

@@ -101,7 +101,7 @@ def star_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             dim["supp_id"],
             # DECIMAL(9,0) stays the JOIN key type (quirk K4); the output
             # column is BIGINT on both engines — decimal-typed outputs break
-            # the driver's hash canonicalization (VERDICT r1).
+            # the driver's hash canonicalization.
             dim["qty"].cast("bigint").alias("qty"),
         )
         .distinct()

@@ -19,6 +19,7 @@ from ..catalog import load_fixture
 from ..operators.graph import pagerank
 from ..operators.search import bm25_search, inverted_index, tfidf_top_terms, tokenize
 from ..operators.sketches import CMS_DEPTH, CMS_WIDTH, cms_build, cms_estimate
+from ..plans.lineage import cut
 from ..registry import register
 
 _TOK = "SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term FROM documents"
@@ -1139,12 +1140,12 @@ def eval_retrieval_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
             "term"
         ),
     ).filter(F.col("term").isin(terms))
-    cand = tok.groupBy("term", "doc_id").agg(
+    cand = cut(tok.groupBy("term", "doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("tf"),
         F.max(F.when(F.col("lang") == "en", 1).otherwise(0))
         .cast("bigint")
         .alias("rel"),
-    ).localCheckpoint(eager=True)
+    ))
     best = (
         cand.filter(F.col("rel") == 1)
         .groupBy("term")

@@ -22,6 +22,7 @@ from ..operators.similarity import (
     random_projection_oracle_sql,
     signature_oracle_sql,
 )
+from ..plans.lineage import cut
 from ..registry import register
 
 _COS = (
@@ -328,7 +329,7 @@ def similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # query over the kNN graph (triangles, k-hop reach) hash-checks the
 # SAME graph.
 #
-# Signature width is COUNT-DERIVED on both sides (VERDICT r3 #4): the
+# Signature width is COUNT-DERIVED on both sides: the
 # oracle states the full 24-plane literal signature and masks it to
 # w = clamp(ceil(log2(count))+7, 8, 24) bits computed from the corpus in
 # SQL; because _planes() extends the same seeded sequence, the masked
@@ -386,7 +387,7 @@ def _knn_directed_top3(emb: DataFrame, w_bits: int | None = None) -> DataFrame:
     amortized over the whole graph build.
 
     Candidate generation is the BANDED multi-index decomposition
-    (VERDICT r4 #4, Norouzi et al. multi-index hashing): the w-bit
+    (Norouzi et al. multi-index hashing): the w-bit
     signature splits into two bands (low ceil(w/2), high floor(w/2)
     bits); a pair at hamming d <= r must have <= r//2 differing bits in
     SOME band (pigeonhole: min(d1,d2) <= floor(r/2)), so each probe
@@ -488,7 +489,7 @@ def _knn_directed_top3(emb: DataFrame, w_bits: int | None = None) -> DataFrame:
     vb = base.select(
         F.col("vec_id").alias("b"), F.col("v").alias("cv"), F.col("nrm").alias("cn")
     )
-    scored = (
+    scored = cut(
         cand.join(va, "a")
         .join(vb, "b")
         .select(
@@ -497,10 +498,10 @@ def _knn_directed_top3(emb: DataFrame, w_bits: int | None = None) -> DataFrame:
             (F.expr(_pair_dot_sql("pv", "cv", _DIM)) / (F.col("pn") * F.col("cn"))).alias(
                 "cos"
             ),
-        )
-        # lazy localCheckpoint: both union branches below read the
+        ),
+        # lazy cut: both union branches below read the
         # materialized pair scores instead of re-executing the joins
-        .localCheckpoint(eager=False)
+        eager=False,
     )
     sym = scored.unionAll(
         scored.select(F.col("b").alias("a"), F.col("a").alias("b"), "cos")
@@ -522,21 +523,21 @@ def _knn_undirected_edges(emb: DataFrame) -> DataFrame:
     ).distinct()
 
 
-# --- at-rest kNN graph artifact (VERDICT r9 #2) -------------------------
+# --- at-rest kNN graph artifact ----------------------------------------
 # Eight graph/audit queries consume the SAME degree-bounded 3-NN edge
-# relation; before r10 each re-executed the banded-MIH signature build
+# relation; without it each re-executed the banded-MIH signature build
 # (~2.5 s x 8 per suite run at sf0.1). At 100 TB nobody rebuilds an ANN
 # graph per query — the repo's IVF index (written partitionBy(cid) with a
 # pruning plan test) is the precedent. The DIRECTED top-3 relation is
 # written once per fixture to parquet keyed by the embeddings file's
 # identity (path, size, mtime), a construction-version tag AND a hash of
-# _KNN_EDGES_CTE itself (ADVICE r10 #2: an upstream construction change
+# _KNN_EDGES_CTE itself (so an upstream construction change
 # that forgets the version bump still mints a new key); every family
 # query then starts from a plain parquet scan. Oracles are unchanged —
 # _KNN_EDGES_CTE remains the semantic spec, and the graph_knn_materialize
 # query hash-checks the ARTIFACT's content against that CTE so staleness
 # or drift is driver-visible. Storage + orphan GC + race handling live in
-# operators/artifacts.py (warehouse-relative, VERDICT r10 #5).
+# operators/artifacts.py (warehouse-relative).
 _KNN_BUILD_VERSION = "v1"  # bump when _knn_directed_top3 changes shape
 
 
@@ -554,7 +555,7 @@ def _knn_artifact_dir(sf_dir: str) -> str:
 
 
 def _knn_shape_summary(spark: SparkSession, sf_dir: str):
-    """Shape-row builder for the kNN artifact (VERDICT r11 #3): computed
+    """Shape-row builder for the kNN artifact: computed
     from the published edge parquet at publish time, served as an O(1)
     one-row scan by graph_knn_materialize. Columns and types mirror the
     materialize oracle exactly."""
@@ -628,8 +629,8 @@ def _knn_undirected_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corrupt artifact fails the gate. Nodes count distinct vec_id; "
     "directed edges are per-node top-3 (<= 3|V| rows); undirected "
     "folds to distinct a < b. The shape row is computed from the "
-    "published parquet AT PUBLISH and served as an O(1) one-row scan "
-    "(VERDICT r11 #3); tests/test_artifact_summaries.py recounts the "
+    "published parquet AT PUBLISH and served as an O(1) one-row scan; "
+    "tests/test_artifact_summaries.py recounts the "
     "full artifact and asserts agreement.",
 )
 def graph_knn_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -730,12 +731,11 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_fixture(spark, sf_dir, "embeddings")
     edges = _knn_undirected_at_rest(spark, sf_dir)
     # adj feeds three consumers (deg, both sides of the 2-hop join, reach
-    # union); localCheckpoint keeps the symmetrized relation resident so
+    # union); the cut keeps the symmetrized relation resident so
     # the consumers share one scan of the at-rest artifact.
-    adj = (
+    adj = cut(
         edges.select(F.col("a").alias("n"), F.col("b").alias("m"))
         .unionAll(edges.select(F.col("b").alias("n"), F.col("a").alias("m")))
-        .localCheckpoint(eager=True)
     )
     j1 = adj.select(F.col("n"), F.col("m").alias("mid"))
     j2 = adj.select(F.col("n").alias("mid"), F.col("m"))
@@ -914,7 +914,7 @@ def similarity_ann_pq_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.expr("transform(embedding, x -> cast(round(x * 16) as double))").alias("qv"),
     )
-    # Identity grid derived from the DATA range (ADVICE r4): a fixed
+    # Identity grid derived from the DATA range: a fixed
     # [-16, 15] grid silently encodes lossily the moment a coordinate
     # quantizes outside it, voiding the "provably exact" ADC==L2 claim.
     # One 1-row driver sync (global min/max of the quantized grid) keeps
@@ -1090,7 +1090,7 @@ def embedding_class_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # within-scatter identity: sum_i (q_i*n - s)^2 = n^2*sum(q^2) - n*s^2
     # per dim — derivable from the SAME aggregate, no fact-sized join and
     # no second pass over the exploded relation. Bound (SCALE.md
-    # micro-unit rule, VERDICT r9 #3 sweep): the casts below are at
+    # micro-unit rule): the casts below are at
     # DuckDB's 38-digit physical multiply max (10+10+18 / 10+14+14), so
     # they CANNOT widen; with |q| <= ~1e6 (unit coords) the binding
     # constraint is sq2 <= 1e18 -> ~1e6 rows per label (then s <= 1e14
@@ -1133,8 +1133,8 @@ def embedding_class_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     wa = w.select(F.col("label").alias("la"), F.col("wnum").alias("wnum_a"))
     wb = w.select(F.col("label").alias("lb"), F.col("wnum").alias("wnum_b"))
     # denominators square n_a*n_b — as int64 that silently wraps past
-    # ~55k rows/label under Spark's non-ANSI overflow while DuckDB errors
-    # (ADVICE r5 #3); promote to double FIRST (exact while n_a*n_b < 2^53,
+    # ~55k rows/label under Spark's non-ANSI overflow while DuckDB
+    # errors; promote to double FIRST (exact while n_a*n_b < 2^53,
     # identical op sequence on both engines)
     nab = F.col("n_a").cast("double") * F.col("n_b").cast("double")
     between = F.col("bnum").cast("double") / (nab * nab) / F.lit(1000000000000.0)
@@ -1261,11 +1261,10 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     e3 = edges.select(F.col("a").alias("_a"), F.col("b").alias("_c"))
     # tri feeds the 3-way credit union — checkpoint so the two-hop +
     # closing joins run once, not once per union branch
-    tri = (
+    tri = cut(
         e1.join(e2, "b")
         .join(e3, (F.col("a") == F.col("_a")) & (F.col("c") == F.col("_c")))
         .select("a", "b", "c")
-        .localCheckpoint(eager=True)
     )
     tn = (
         tri.select(F.col("a").alias("n"))
@@ -1366,7 +1365,7 @@ def embedding_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("probe_id"), F.col("qv").alias("pv")
     )
-    pairs = (
+    pairs = cut(
         F.broadcast(p)
         .join(e.withColumnRenamed("vec_id", "cand_id"), F.col("cand_id") != F.col("probe_id"))
         .select(
@@ -1374,8 +1373,8 @@ def embedding_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cand_id",
             F.expr(_sql_sq_l2("pv", "qv", 64)).alias("d_full"),
             F.expr(_sql_sq_l2("pv", "qv", 16)).alias("d_pfx"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
     wf = Window.partitionBy("probe_id").orderBy(F.col("d_full").asc(), "cand_id")
     wp = Window.partitionBy("probe_id").orderBy(F.col("d_pfx").asc(), "cand_id")
@@ -1806,16 +1805,14 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     adj = edges.select(F.col("a").alias("n"), F.col("b").alias("m")).unionAll(
         edges.select(F.col("b").alias("n"), F.col("a").alias("m"))
     )
-    d1 = adj.select(F.col("n").alias("src"), F.col("m").alias("dst")).distinct(
-    ).localCheckpoint(eager=True)
+    d1 = cut(adj.select(F.col("n").alias("src"), F.col("m").alias("dst")).distinct())
     a2 = adj.select(F.col("n").alias("dst"), F.col("m").alias("nxt"))
-    d2 = (
+    d2 = cut(
         d1.join(a2, "dst")
         .filter(F.col("nxt") != F.col("src"))
         .select("src", F.col("nxt").alias("dst"))
         .distinct()
         .join(d1, ["src", "dst"], "left_anti")
-        .localCheckpoint(eager=True)
     )
     d3 = (
         d2.join(a2, "dst")
@@ -1943,7 +1940,7 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     deg = adj.groupBy("n").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
     ks = spark_.createDataFrame([(4,), (6,)], "k int")
-    club = ks.join(deg, deg.d > ks.k).select("k", "n").localCheckpoint(eager=True)
+    club = cut(ks.join(deg, deg.d > ks.k).select("k", "n"))
     c1 = club.select(F.col("k"), F.col("n").alias("a"))
     c2 = club.select(F.col("k"), F.col("n").alias("b"))
     within = (
@@ -2030,7 +2027,7 @@ def embedding_norm_outlier_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.stats import value_ranks
 
     e = load_fixture(spark, sf_dir, "embeddings")
-    norms = (
+    norms = cut(
         e.select("vec_id", F.posexplode("embedding").alias("pos", "v"))
         .select(
             "vec_id",
@@ -2040,7 +2037,6 @@ def embedding_norm_outlier_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("vec_id")
         .agg(F.sum(F.col("qv") * F.col("qv")).cast("bigint").alias("norm2"))
-        .localCheckpoint(eager=True)
     )
     tot = norms.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     med = (
@@ -2252,7 +2248,7 @@ def graph_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     adj = edges.select(
         F.col("a").alias("x"), F.col("b").alias("y")
     ).unionAll(edges.select(F.col("b").alias("x"), F.col("a").alias("y")))
-    adj = adj.localCheckpoint(eager=True)
+    adj = cut(adj)
     deg = adj.groupBy("x").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
     xa = adj.select(F.col("x").alias("a"), F.col("y").alias("w"))
     xb = adj.select(F.col("x").alias("b"), F.col("y").alias("w"))

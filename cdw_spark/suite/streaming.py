@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.lineage import cut
 from ..registry import register
 from ..streaming.source import events_stream, run_available_now
 from ..streaming.stateful import sessionize
@@ -357,12 +358,12 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         sdf, keys=["user_id"], order_cols=["ts", "event_id"]
     )
     # the versioned table is throwaway here: materialize off it, drop it
-    out = final.select(
+    out = cut(final.select(
         "user_id",
         F.col("event_id").alias("last_event_id"),
         F.col("event_type").alias("last_type"),
         F.col("value").alias("last_value"),
-    ).localCheckpoint(eager=True)
+    ))
     shutil.rmtree(root, ignore_errors=True)
     return out
 
@@ -590,12 +591,12 @@ def stream_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
 
     def handle(batch, dirs):
-        b = batch.select("doc_id", "text").localCheckpoint(eager=True)
+        b = cut(batch.select("doc_id", "text"))
         old = spark.read.parquet(dirs["corpus"])
         old_sigs = spark.read.parquet(dirs["sigs"])
         # the ONLY signature pass in the batch: |batch| docs, checkpointed
         # so the index append below reuses it instead of re-running Arrow
-        sig_b = dedup_ops.minhash_signatures(b).localCheckpoint(eager=True)
+        sig_b = cut(dedup_ops.minhash_signatures(b))
         pairs = dedup_ops.minhash_near_duplicates_incremental(
             old, b, threshold=0.6, old_sigs=old_sigs, new_sigs=sig_b
         )
@@ -693,7 +694,7 @@ def stream_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
 
     def handle(batch, dirs):
-        eb = enrich(batch.select("vec_id", "embedding")).localCheckpoint(eager=True)
+        eb = cut(enrich(batch.select("vec_id", "embedding")))
         old = spark.read.parquet(dirs["vectors"])
         allv = old.unionByName(eb)
         # slim candidate join on (id, cluster); vectors fetched post-match
@@ -996,12 +997,12 @@ def stream_bloom_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialization; everything downstream that is consumed once
         # (audit, new state relation) writes directly off it instead of
         # paying its own blocking checkpoint job.
-        b = batch.select(
+        b = cut(batch.select(
             "doc_id",
             (F.col("doc_id") % 300).alias("key"),
             F.expr(f"CAST(doc_id * 4 div {n_rows} AS INT)").alias("qb"),
-        ).localCheckpoint(eager=True)
-        old_state = spark.read.parquet(dirs["door_state"]).localCheckpoint(eager=True)
+        ))
+        old_state = cut(spark.read.parquet(dirs["door_state"]))
         old_pos = old_state.filter(F.col("kind") == 0).select("pos")
         old_keys = old_state.filter(F.col("kind") == 1).select("key")
         # exact-dup flag: key seen in a prior batch OR earlier (by

@@ -22,6 +22,7 @@ from ..functions.text import (
     token_count,
     words,
 )
+from ..plans.lineage import cut
 from ..registry import register
 
 
@@ -1264,7 +1265,7 @@ def eval_binary_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(
                 "CAST((2 * (r1x2 - n1 * (n1 + 1)) * 1000000 + 2 * n1 * n0)"
                 # nullif: a corpus with zero positives or zero negatives
-                # yields NULL, not an opaque division error (ADVICE r7)
+                # yields NULL, not an opaque division error
                 " div nullif(4 * n1 * n0, 0) AS BIGINT)"
             ).cast("double")
             / F.lit(1000000.0)
@@ -2456,9 +2457,9 @@ def text_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("pair"),
     )
-    pc = pg.groupBy("source", "pair").agg(
+    pc = cut(pg.groupBy("source", "pair").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
-    ).localCheckpoint(eager=True)
+    ))
     mc = pc.groupBy("source", F.expr("substr(pair, 1, 1)").alias("c1")).agg(
         F.sum("c").cast("bigint").alias("c")
     )
@@ -2595,10 +2596,10 @@ def _spark_blocks(docs: DataFrame) -> DataFrame:
     )
 
 
-# --- at-rest per-source block-occurrence artifact (VERDICT r11 #4: the
-# r10/r11 at-rest treatment applied to the 8-word block family). The
-# r12 profile at sf0.1: the block cut + (source, block) aggregate is
-# 1.02 s of text_source_boilerplate_share's 1.38 s (74%) and of
+# --- at-rest per-source block-occurrence artifact (the at-rest
+# treatment applied to the 8-word block family). Profiled at sf0.1: the
+# block cut + (source, block) aggregate is 1.02 s of
+# text_source_boilerplate_share's 1.38 s (74%) and of
 # text_cross_source_contamination's 1.64 s (62%) — the stage DOMINATES
 # both consumers, the situation the kNN/recs/component artifacts were
 # built for. (dedup_ngram_prefix_filter was profiled too and stays
@@ -2928,7 +2929,7 @@ def text_source_style_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = (
         rebalance_scan(load_fixture(spark, sf_dir, "documents"))
         .select("source", F.lower(F.trim(F.col("text"))).alias("s"))
-        # ADVICE r11: F.sequence(1, len-1) DESCENDS when len(s) <= 1
+        # F.sequence(1, len-1) DESCENDS when len(s) <= 1
         # ([1,0] / [1,0,-1]) and would emit spurious bigram rows while
         # the oracle's range(1, len(s)) is empty — guard both engines
         # identically (the text_entropy_rate discipline).
@@ -2943,7 +2944,7 @@ def text_source_style_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cq is the source-marginal of cp: summing the combined cells costs a
     # |cells|-row pass instead of re-running the 5M-row explode a second
     # time (cp feeds it through a lazy checkpoint cut)
-    cp = cp.localCheckpoint(eager=False)
+    cp = cut(cp, eager=False)
     cq = cp.groupBy("g").agg(F.sum("cp").cast("bigint").alias("cq"))
     np_ = cp.groupBy("source").agg(F.sum("cp").cast("bigint").alias("np"))
     nq = cq.agg(F.sum("cq").cast("bigint").alias("nq"))
@@ -3415,7 +3416,7 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt = tok.groupBy("source", "w").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )
-    cnt = cnt.localCheckpoint(eager=True)
+    cnt = cut(cnt)
     ntot = cnt.groupBy("source").agg(F.sum("c").cast("bigint").alias("nt"))
     top = (
         cnt.groupBy("w")
@@ -3439,7 +3440,7 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
             " div (2 * CAST(nt AS DECIMAL(19,0))) AS BIGINT)"
         ).alias("f"),
     )
-    fm = fm.localCheckpoint(eager=True)
+    fm = cut(fm)
     ws = fm.groupBy("w").agg(
         F.count(F.lit(1)).cast("bigint").alias("s"),
         F.sum("f").cast("decimal(38,0)").alias("sf"),

@@ -90,8 +90,8 @@ def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.select(
         "event_id",
         "user_id",
-        # exact decimal prefix sums; DOUBLE final projection (driver decimal
-        # canonicalization — VERDICT r1)
+        # exact decimal prefix sums; DOUBLE final projection (the driver
+        # canonicalizes decimals through a float path)
         F.round(F.sum(F.col("value").cast(DEC)).over(w).cast("double"), 2).alias(
             "running_value"
         ),
@@ -1067,7 +1067,7 @@ def window_rolling_ols_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     "decimal subtraction), squares and the sum stay DECIMAL-exact and "
     "order-independent; doubles appear only in the final per-user "
     "projection with one identical op sequence per engine. Residual "
-    "risk (ADVICE r7): a 1-ulp JVM Math.log vs libm divergence landing "
+    "risk: a 1-ulp JVM Math.log vs libm divergence landing "
     "exactly on a 9th-decimal rounding boundary could still flip the "
     "rounded term — accepted, since no such flip has surfaced across "
     "the sf0.01/sf0.1 sweeps, and narrowing the displayed precision "

@@ -111,8 +111,8 @@ def test_connected_components_empty_graph(spark):
 
 
 def test_connected_components_long_chain_pointer_jumping(spark):
-    """A 60-edge path graph exceeds the old per-round propagation budget
-    (max_iter=20 rounds moved a label one hop each); pointer jumping
+    """A 60-edge path graph exceeds the per-round propagation budget
+    (CC_MAX_ROUNDS=20 rounds moving a label one hop each); pointer jumping
     shortcuts label reach exponentially, so the chain converges to a
     single component well inside the bound instead of silently splitting."""
     from cdw_spark.operators.dedup import connected_components
@@ -122,6 +122,50 @@ def test_connected_components_long_chain_pointer_jumping(spark):
     got = {r.doc_id: r.component_id for r in connected_components(pairs).collect()}
     assert set(got.values()) == {0}
     assert len(got) == 61
+
+
+def test_connected_components_raises_rather_than_split(spark, monkeypatch):
+    """Non-convergence contract: a graph still moving labels after the
+    round cap raises instead of returning split components. One round
+    of propagate + pointer jumping leaves a 6-node chain in four labels."""
+    from cdw_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 1)
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 6)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        dedup.connected_components(pairs)
+
+
+def _cache_entries(spark) -> int:
+    """Entries in the session's CacheManager (every persisted plan)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    return field.get(cm).size()
+
+
+def test_connected_components_unpersists_edges_on_failure(spark):
+    """The cached edge relation is released on every exit: a pair row
+    that raises inside the first cut must not leave it cached for the
+    rest of the session."""
+    from pyspark.sql import functions as F
+
+    from cdw_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4)], "id_a long, id_b long"
+    ).withColumn(
+        "id_b",
+        F.when(F.col("id_a") == 2, F.raise_error(F.lit("cc-boom"))).otherwise(
+            F.col("id_b")
+        ),
+    )
+    before = _cache_entries(spark)
+    with pytest.raises(Exception, match="cc-boom"):
+        connected_components(pairs)
+    assert _cache_entries(spark) <= before
 
 
 def test_paragraph_dedup_removes_cross_doc_blocks(spark):

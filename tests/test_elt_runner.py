@@ -116,6 +116,10 @@ def test_incremental_elt_equals_full_rebuild(spark, tmp_path_factory):
     modulo its synthetic surrogate id. This is the reference pipeline
     run continuously — dims upsert, facts append, nothing rewrites the
     fact table."""
+    assert_incremental_equals_full_rebuild(spark, tmp_path_factory)
+
+
+def assert_incremental_equals_full_rebuild(spark, tmp_path_factory) -> None:
     import shutil
 
     from cdw_spark.pipeline.elt import run_elt, run_elt_incremental
