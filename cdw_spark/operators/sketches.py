@@ -20,7 +20,7 @@ partitioning — and expressible in ANSI SQL for the DuckDB oracle
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -149,3 +149,37 @@ def bloom_prefilter(
         F.count(F.lit(1)).alias("c")
     )
     return hits.filter(F.col("c") == k).select("key")
+
+
+def bloom_bits(key: Column, m: int = BLOOM_BITS, k: int = BLOOM_HASHES) -> list[Column]:
+    """The ``k`` filter positions of ``key`` as ``k`` columns of one row:
+    the ``bloom_positions`` hash family, unexploded."""
+    kstr = key.cast("string")
+    return [bucket_col(F.lit(j), kstr, m) for j in range(k)]
+
+
+def bloom_word_aggs(bits: Sequence[str], m: int = BLOOM_BITS) -> list[Column]:
+    """The filter as ``m // 64`` ``bit_or`` aggregates over the position
+    columns ``bits``: word ``i`` has bit ``b`` set iff some row has
+    position ``64 * i + b``. Words merge by OR, so partial filters (per
+    batch, per partition) combine in any order on the driver."""
+
+    def word(i: int) -> str:
+        return " | ".join(
+            f"CASE WHEN {p} div 64 = {i} THEN shiftleft(1L, {p} % 64) ELSE 0L END"
+            for p in bits
+        )
+
+    return [F.expr(f"bit_or({word(i)})").alias(f"bloom_w{i}") for i in range(m // 64)]
+
+
+def bloom_test(words: Sequence[int], bits: Sequence[str]) -> Column:
+    """True iff every position column in ``bits`` is set in the filter
+    ``words`` (signed 64-bit ints, as ``bloom_word_aggs`` returns them).
+    The words enter the plan as a literal array, so the test needs no
+    join; the test is one parsed expression, cheap to rebuild per batch."""
+    arr = "array(" + ", ".join(f"{w}L" for w in words) + ")"
+    return F.expr(" AND ".join(
+        f"(shiftright(element_at({arr}, CAST({p} div 64 AS INT) + 1), {p} % 64) & 1) = 1"
+        for p in bits
+    ))

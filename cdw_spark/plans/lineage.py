@@ -14,9 +14,12 @@ depends on the deployment, not on the caller:
   ``checkpoint``: the rows are written under that dir and survive executor
   loss and dynamic de-allocation. ``get_spark`` sets
   ``spark.cleaner.referenceTracking.cleanCheckpoints`` so the files go
-  once the cut's RDD is collected. An eager durable cut writes as it
-  computes, in one job. A lazy one writes in a second job after the first
-  action that reads it, and that job computes its input again.
+  once the cut's RDD is collected. A durable cut is always eager: it
+  writes as it computes, in one job. A lazy ``checkpoint`` would write in
+  a second job after the first action that reads it, and that job would
+  compute its input again, so ``eager=False`` only applies to local cuts.
+  No lazy call site relies on deferred evaluation: each cuts a pure
+  function of inputs that do not change before its first action.
 """
 
 from __future__ import annotations
@@ -28,7 +31,8 @@ def cut(df: DataFrame, eager: bool = True) -> DataFrame:
     """``df`` with its lineage truncated: a plan over the materialized rows.
 
     ``eager=True`` materializes now (one job); ``eager=False`` when the
-    first action on the result runs."""
+    first action on the result runs, for a local cut. A durable cut
+    materializes now either way."""
     if df.sparkSession.sparkContext.getCheckpointDir() is None:
         return df.localCheckpoint(eager)
-    return df.checkpoint(eager)
+    return df.checkpoint(eager=True)

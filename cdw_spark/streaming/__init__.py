@@ -11,7 +11,9 @@ column aliases, so finalized streaming output is differential-testable
 against the batch/DuckDB answer (tests/test_streaming.py).
 
 Every bounded replay runs through one lifecycle in ``source.py``:
-``run_available_now`` for memory-sink queries, ``replay_into`` for
-foreachBatch bodies over parquet sinks, and ``fold_state`` for per-batch
-state folds. Only ``source.py`` starts and awaits a stream.
+``run_available_now`` for memory-sink queries, ``replay`` for
+foreachBatch bodies that keep their own state (the bloom door, the
+versioned upsert table), ``replay_into`` for bodies over parquet sinks,
+and ``fold_state`` for per-batch state folds. Only ``source.py`` starts
+and awaits a stream.
 """

@@ -20,12 +20,11 @@ unchanged.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.curate import merge_latest_state
-from .source import _drain, replay_scratch
+from .source import replay, replay_scratch
 
 
 class VersionedParquetTable:
@@ -84,7 +83,6 @@ def upsert_stream_into_table(
     spark = sdf.sparkSession
     root = table_root or replay_scratch("cdw_upsert_tbl_")
     table = VersionedParquetTable(root)
-    chk = replay_scratch("cdw_upsert_chk_")
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
         target = table.read(batch.sparkSession)
@@ -105,10 +103,7 @@ def upsert_stream_into_table(
         merged = merge_latest_state(target, batch, keys=keys, order_cols=order_cols)
         table.publish(merged.drop("op"))
 
-    try:
-        _drain(spark, sdf.writeStream.foreachBatch(merge_batch), chk)
-    finally:
-        shutil.rmtree(chk, ignore_errors=True)
+    replay(sdf, merge_batch)
     final = table.read(spark)
     assert final is not None
     return final, root

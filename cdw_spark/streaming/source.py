@@ -14,9 +14,12 @@ only place a stream is started and awaited:
 
 - ``run_available_now`` runs a query into a memory sink and returns the
   sink as a batch DataFrame;
-- ``replay_into`` runs a ``foreachBatch`` body against parquet sinks
-  seeded under one scratch root, returns one sink materialized off that
-  root, and removes the root on success and on failure;
+- ``replay`` runs a ``foreachBatch`` body ``handle(batch, batch_id)``
+  under a throwaway checkpoint and writes nothing else: the body keeps
+  its own state (driver variables, cut relations, its own tables);
+- ``replay_into`` is ``replay`` against parquet sinks seeded under one
+  scratch root: it returns one sink materialized off that root and
+  removes the root on success and on failure;
 - ``fold_state`` is ``replay_into`` for a per-batch state fold: one
   relation, ``state = step(state, batch)`` per micro-batch, one eager cut.
 
@@ -206,6 +209,22 @@ def run_available_now(sdf: DataFrame, name: str, output_mode: str) -> DataFrame:
     return spark.table(qname)
 
 
+def replay(sdf: DataFrame, handle: Callable[[DataFrame, int], None]) -> None:
+    """Replay ``sdf`` through the foreachBatch body ``handle(batch,
+    batch_id)``.
+
+    The checkpoint is throwaway scratch, removed on success and on
+    failure; the body keeps whatever state it needs (driver variables, cut
+    relations, tables it writes). Production deployments keep the
+    checkpoint — exactly-once resume depends on it, and ``batch_id`` is
+    what makes a re-delivered batch idempotent."""
+    chk = replay_scratch("cdw_replay_chk_")
+    try:
+        _drain(sdf.sparkSession, sdf.writeStream.foreachBatch(handle), chk)
+    finally:
+        shutil.rmtree(chk, ignore_errors=True)
+
+
 def replay_into(
     sdf: DataFrame,
     sinks: dict[str, DataFrame],
@@ -228,8 +247,7 @@ def replay_into(
         dirs = {name: os.path.join(root, name) for name in sinks}
         for name, empty in sinks.items():
             empty.write.mode("overwrite").parquet(dirs[name])
-        writer = sdf.writeStream.foreachBatch(lambda batch, _id: handle(batch, dirs))
-        _drain(spark, writer, os.path.join(root, "_checkpoint"))
+        replay(sdf, lambda batch, _id: handle(batch, dirs))
         return cut(spark.read.parquet(dirs[result]))
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -267,50 +285,53 @@ def stage_exact_quarters(
     the file membership is a pure function of (id, n_rows), so per-batch
     streaming audits can be restated in SQL oracles. Returns (dir,
     n_rows); staged once per (sf_dir, table, n_files), mtime-ordered so
-    the file source replays quarters in id order."""
+    the file source replays quarters in id order. ``_STAGED`` stores
+    n_rows, so a staged table is served without a Spark job."""
     from ..catalog import load_fixture
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     key = f"{sf_dir.strip('/').replace('/', '_')}__{table}__q{n_files}"
     out = os.path.join(_STAGE_ROOT, key)
     done = os.path.join(out, "_STAGED")
+    if os.path.exists(done):
+        with open(done) as f:
+            return out, int(f.read())
     df = load_fixture(spark, sf_dir, table)
     n_rows = df.count()
-    if not os.path.exists(done):
-        # Loud precondition: the quarter formula silently
-        # drops any row whose (id * n_files) div n_rows lands >= n_files,
-        # which happens exactly when ids are not dense 0..n-1 (1-based or
-        # sparse). Fail the replay setup instead of auditing a truncated
-        # stream.
-        lohi = df.agg(
-            F.min(F.col(id_col).cast("bigint")).alias("lo"),
-            F.max(F.col(id_col).cast("bigint")).alias("hi"),
-        ).collect()[0]
-        if lohi["lo"] != 0 or lohi["hi"] != n_rows - 1:
-            raise ValueError(
-                f"stage_exact_quarters needs dense 0..n-1 ids in "
-                f"{table}.{id_col}: got min={lohi['lo']} max={lohi['hi']} "
-                f"for n_rows={n_rows}"
-            )
-        base = 1_700_000_000
-        for q in range(n_files):
-            part = df.filter(
-                F.expr(f"CAST({id_col} * {n_files} div {n_rows} AS BIGINT) = {q}")
-            )
-            pdir = os.path.join(out, f"q{q}")
-            part.coalesce(1).write.mode("overwrite").parquet(pdir)
-            src = next(
-                p for p in os.listdir(pdir)
-                if p.startswith("part-") and p.endswith(".parquet")
-            )
-            os.replace(
-                os.path.join(pdir, src), os.path.join(out, f"quarter-{q}.parquet")
-            )
-            shutil.rmtree(pdir, ignore_errors=True)
-            os.utime(
-                os.path.join(out, f"quarter-{q}.parquet"),
-                (base + q * 60, base + q * 60),
-            )
-        with open(done, "w") as f:
-            f.write(str(n_rows))
+    # Loud precondition: the quarter formula silently
+    # drops any row whose (id * n_files) div n_rows lands >= n_files,
+    # which happens exactly when ids are not dense 0..n-1 (1-based or
+    # sparse). Fail the replay setup instead of auditing a truncated
+    # stream.
+    lohi = df.agg(
+        F.min(F.col(id_col).cast("bigint")).alias("lo"),
+        F.max(F.col(id_col).cast("bigint")).alias("hi"),
+    ).collect()[0]
+    if lohi["lo"] != 0 or lohi["hi"] != n_rows - 1:
+        raise ValueError(
+            f"stage_exact_quarters needs dense 0..n-1 ids in "
+            f"{table}.{id_col}: got min={lohi['lo']} max={lohi['hi']} "
+            f"for n_rows={n_rows}"
+        )
+    base = 1_700_000_000
+    for q in range(n_files):
+        part = df.filter(
+            F.expr(f"CAST({id_col} * {n_files} div {n_rows} AS BIGINT) = {q}")
+        )
+        pdir = os.path.join(out, f"q{q}")
+        part.coalesce(1).write.mode("overwrite").parquet(pdir)
+        src = next(
+            p for p in os.listdir(pdir)
+            if p.startswith("part-") and p.endswith(".parquet")
+        )
+        os.replace(
+            os.path.join(pdir, src), os.path.join(out, f"quarter-{q}.parquet")
+        )
+        shutil.rmtree(pdir, ignore_errors=True)
+        os.utime(
+            os.path.join(out, f"quarter-{q}.parquet"),
+            (base + q * 60, base + q * 60),
+        )
+    with open(done, "w") as f:
+        f.write(str(n_rows))
     return out, n_rows

@@ -850,6 +850,37 @@ def test_bloom_prefilter_has_no_false_negatives(spark, build, probe):
 
 @settings(max_examples=10, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(
+    st.lists(st.integers(-(10**6), 10**6), max_size=40, unique=True),
+    st.lists(st.integers(-(10**6), 10**6), min_size=1, max_size=40, unique=True),
+    st.sampled_from([64, 128, 512]),
+)
+def test_bloom_words_pass_the_prefilter_keys(spark, build, probe, m):
+    """The driver-held word filter (``bloom_word_aggs`` + ``bloom_test``)
+    passes exactly the keys ``bloom_prefilter`` passes against the
+    position relation of the same build keys: one hash, two forms."""
+    from cdw_spark.operators.sketches import (
+        bloom_bits,
+        bloom_positions,
+        bloom_prefilter,
+        bloom_test,
+        bloom_word_aggs,
+    )
+
+    def with_bits(keys):
+        df = spark.createDataFrame([(k,) for k in keys], "key long")
+        return df.select("key", *[p.alias(f"p{j}") for j, p in enumerate(bloom_bits(F.col("key"), m))])
+
+    bits = ["p0", "p1", "p2", "p3"]
+    words = [w or 0 for w in with_bits(build).agg(*bloom_word_aggs(bits, m)).first()]
+    p = with_bits(probe)
+    got = {r["key"] for r in p.filter(bloom_test(words, bits)).collect()}
+    b = spark.createDataFrame([(k,) for k in build], "key long")
+    want = {r["key"] for r in bloom_prefilter(p, "key", bloom_positions(b, "key", m=m), m=m).collect()}
+    assert got == want
+
+
+@settings(max_examples=10, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(
     st.lists(
         st.tuples(st.integers(1, 3), st.integers(1, 500), st.integers(1, 20)),
         min_size=1,

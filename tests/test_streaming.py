@@ -603,3 +603,81 @@ def test_replay_lifecycle_lives_only_in_source():
     )
     assert offenders, "the guard must see the drain in streaming/source.py"
     assert all(o.startswith("cdw_spark/streaming/source.py:") for o in offenders), offenders
+
+
+def _jobs_fired(spark, call):
+    """Run ``call()`` under its own job group and return (its result, the
+    number of Spark jobs it fired). Job ids are sequential, so every job
+    between two marker jobs belongs to the call, including the jobs its
+    streams run under their own run-id groups."""
+    sc = spark.sparkContext
+
+    def marker(group):
+        sc.setJobGroup(group, group)
+        sc.parallelize([1]).count()
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
+        return sc.statusTracker().getJobIdsForGroup(group)
+
+    try:
+        lo = max(marker("call-before"))
+        sc.setJobGroup("call", "call under test")
+        out = call()
+        hi = min(marker("call-after"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, hi - lo - 1
+
+
+def test_staged_quarters_served_without_a_job(spark, sf_dir):
+    """Once staged, ``stage_exact_quarters`` returns the stored row count:
+    no fixture read, no count."""
+    from cdw_spark.streaming.source import stage_exact_quarters
+
+    first = stage_exact_quarters(spark, sf_dir, "documents", "doc_id", 4)
+    again, jobs = _jobs_fired(
+        spark, lambda: stage_exact_quarters(spark, sf_dir, "documents", "doc_id", 4)
+    )
+    assert again == first
+    assert jobs == 0
+
+
+@pytest.mark.parametrize("n", [4, 250, 1201])
+def test_bloom_door_edge_inputs_match_oracle(spark, tmp_path_factory, n):
+    """One row per batch (n=4), no duplicate keys (n=250 < 300 keys) and
+    duplicates across batches (n=1201), each against the DuckDB oracle."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cdw_spark.compare import compare_frames
+
+    sf = tmp_path_factory.mktemp(f"bloom_docs_{n}")
+    pq.write_table(pa.table({"doc_id": pa.array(range(n), pa.int64())}), sf / "documents.parquet")
+    spec = SPECS["stream_bloom_dedup_ingest"]
+    res = compare_frames(spec.name, spec.fn(spark, str(sf)), spec.oracle, str(sf))
+    assert res.ok, str(res)
+
+
+def test_bloom_door_job_budget(spark, sf_dir, monkeypatch):
+    """Per micro-batch the door runs one aggregate action and one cut of
+    the key set, so a four-batch call stays within 40 jobs (the
+    parquet-state door fired 73)."""
+    from cdw_spark.streaming.source import stage_exact_quarters
+
+    stage_exact_quarters(spark, sf_dir, "documents", "doc_id", 4)
+    calls = {"collect": 0, "localCheckpoint": 0}
+    cls = type(spark.range(1))
+    for name in calls:
+        original = getattr(cls, name)
+
+        def counted(df, *args, _name=name, _original=original, **kwargs):
+            calls[_name] += 1
+            return _original(df, *args, **kwargs)
+
+        monkeypatch.setattr(cls, name, counted)
+    df, jobs = _jobs_fired(
+        spark, lambda: SPECS["stream_bloom_dedup_ingest"].fn(spark, sf_dir)
+    )
+    assert jobs <= 40
+    assert calls == {"collect": 4, "localCheckpoint": 4}
+    assert df.count() == 4
