@@ -11,9 +11,11 @@ column aliases, so finalized streaming output is differential-testable
 against the batch/DuckDB answer (tests/test_streaming.py).
 
 Every bounded replay runs through one lifecycle in ``source.py``:
-``run_available_now`` for memory-sink queries, ``replay`` for
-foreachBatch bodies that keep their own state (the bloom door, the
-versioned upsert table), ``replay_into`` for bodies over parquet sinks,
-and ``fold_state`` for per-batch state folds. Only ``source.py`` starts
-and awaits a stream.
+``run_available_now`` for memory-sink queries (streaming aggregates keep
+their state in Spark's state store: the chi-square and freshness
+monitors), ``replay`` for foreachBatch bodies that keep their own state
+(the bloom door, the KMV synopsis as one cut per batch, the versioned
+upsert table) and ``replay_into`` for bodies whose state grows with the
+data and lives in parquet sinks (the near-dup and semantic door
+indexes). Only ``source.py`` starts and awaits a stream.
 """

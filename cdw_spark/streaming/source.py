@@ -13,15 +13,18 @@ Every bounded replay (Trigger.AvailableNow) drains through ``_drain``, the
 only place a stream is started and awaited:
 
 - ``run_available_now`` runs a query into a memory sink and returns the
-  sink as a batch DataFrame;
+  sink as a batch DataFrame; a streaming aggregate keeps its state in
+  Spark's state store under the replay's checkpoint;
 - ``replay`` runs a ``foreachBatch`` body ``handle(batch, batch_id)``
   under a throwaway checkpoint and writes nothing else: the body keeps
   its own state (driver variables, cut relations, its own tables);
 - ``replay_into`` is ``replay`` against parquet sinks seeded under one
   scratch root: it returns one sink materialized off that root and
-  removes the root on success and on failure;
-- ``fold_state`` is ``replay_into`` for a per-batch state fold: one
-  relation, ``state = step(state, batch)`` per micro-batch, one eager cut.
+  removes the root on success and on failure.
+
+A staged directory carries its file-stream schema in ``_SCHEMA.json``
+beside the ``_STAGED`` marker, so opening a staged stream fires no Spark
+job (the file source ignores ``_``-prefixed files).
 
 Memory sinks and throwaway scratch roots serve bounded replays — the
 production sink is ``writeStream.format("parquet")`` / kafka with a
@@ -32,6 +35,7 @@ from __future__ import annotations
 
 import contextlib
 import itertools
+import json
 import os
 import shutil
 import tempfile
@@ -40,11 +44,27 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.types import StructType
 
 from ..plans.lineage import cut
 
 _qid = itertools.count()
 _STAGE_ROOT = os.path.join(tempfile.gettempdir(), "cdw_stream_src")
+_SCHEMA = "_SCHEMA.json"
+
+
+def _is_staged(out: str) -> bool:
+    """A directory is staged once both its marker and its stored schema
+    exist; either missing means stage again."""
+    return all(os.path.exists(os.path.join(out, f)) for f in ("_STAGED", _SCHEMA))
+
+
+def _store_schema(spark: SparkSession, out: str) -> None:
+    """Store the batch-read schema of the files just staged in ``out``:
+    the schema ``staged_stream`` opens the stream with, taken once here
+    instead of by an inference job per stream."""
+    with open(os.path.join(out, _SCHEMA), "w") as f:
+        f.write(spark.read.parquet(out).schema.json())
 
 
 def replay_scratch(prefix: str) -> str:
@@ -120,8 +140,7 @@ def stage_ordered_files(
     if order_col != "ts":
         key += f"__{order_col}"
     out = os.path.join(_STAGE_ROOT, key)
-    done = os.path.join(out, "_STAGED")
-    if not os.path.exists(done):
+    if not _is_staged(out):
         # load_fixture normalizes the fixture's TIMESTAMP(NANOS) to
         # microsecond TimestampType, so the staged files stream cleanly.
         df = load_fixture(spark, sf_dir, table)
@@ -132,7 +151,8 @@ def stage_ordered_files(
         base = 1_700_000_000
         for i, p in enumerate(parts):
             os.utime(os.path.join(out, p), (base + i * 60, base + i * 60))
-        with open(done, "w") as f:
+        _store_schema(spark, out)
+        with open(os.path.join(out, "_STAGED"), "w") as f:
             f.write("\n".join(parts))
     return out
 
@@ -142,10 +162,12 @@ def staged_stream(spark: SparkSession, path: str) -> DataFrame:
     oldest mtime first.
 
     The file source needs an explicit schema (no inference mid-stream);
-    it is taken from a batch read of the same directory.
+    it is the one stored at staging time, so opening fires no job.
     """
+    with open(os.path.join(path, _SCHEMA)) as f:
+        schema = StructType.fromJson(json.load(f))
     return (
-        spark.readStream.schema(spark.read.parquet(path).schema)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .option("latestFirst", "false")
         .parquet(path)
@@ -192,7 +214,13 @@ def _drain(spark: SparkSession, writer: DataStreamWriter, chk: str) -> None:
 
 def run_available_now(sdf: DataFrame, name: str, output_mode: str) -> DataFrame:
     """Run a bounded streaming query into a memory sink and return the
-    sink contents as a batch DataFrame."""
+    sink contents as a batch DataFrame.
+
+    The result reads the sink's ``MemoryPlan``, which Spark does not
+    deduplicate: a plan that reads the result twice (a self-join, a
+    ``crossJoin`` with its own aggregate) fails analysis with "Failure when
+    resolving conflicting references in Join". Cut the result first
+    (``plans.lineage.cut``) when it is read more than once."""
     spark = sdf.sparkSession
     qname = f"cdw_{name}_{next(_qid)}"
     # Memory-sink runs are throwaway replays: the checkpoint must be fresh
@@ -253,29 +281,6 @@ def replay_into(
         shutil.rmtree(root, ignore_errors=True)
 
 
-def fold_state(
-    sdf: DataFrame,
-    seed: DataFrame,
-    step: Callable[[DataFrame, DataFrame], DataFrame],
-) -> DataFrame:
-    """Fold a stream into one state relation: per micro-batch,
-    ``state = step(state, batch)``; returns the final state.
-
-    ``seed`` is the empty state (its schema). The new state is cut once,
-    eagerly, before it overwrites the old one: the overwrite deletes the
-    files the old state is read from, so the merge must be materialized
-    first, and one cut of the merged relation is enough — the old state
-    is read exactly once, inside that cut."""
-    spark = sdf.sparkSession
-
-    def handle(batch: DataFrame, dirs: dict[str, str]) -> None:
-        old = spark.read.parquet(dirs["state"])
-        new = cut(step(old, batch))
-        new.write.mode("overwrite").parquet(dirs["state"])
-
-    return replay_into(sdf, {"state": seed}, handle, "state")
-
-
 def stage_exact_quarters(
     spark: SparkSession, sf_dir: str, table: str, id_col: str, n_files: int = 4
 ) -> tuple[str, int]:
@@ -293,7 +298,7 @@ def stage_exact_quarters(
     key = f"{sf_dir.strip('/').replace('/', '_')}__{table}__q{n_files}"
     out = os.path.join(_STAGE_ROOT, key)
     done = os.path.join(out, "_STAGED")
-    if os.path.exists(done):
+    if _is_staged(out):
         with open(done) as f:
             return out, int(f.read())
     df = load_fixture(spark, sf_dir, table)
@@ -332,6 +337,7 @@ def stage_exact_quarters(
             os.path.join(out, f"quarter-{q}.parquet"),
             (base + q * 60, base + q * 60),
         )
+    _store_schema(spark, out)
     with open(done, "w") as f:
         f.write(str(n_rows))
     return out, n_rows

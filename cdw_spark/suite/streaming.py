@@ -750,24 +750,25 @@ from .search import _KMV_KEPT_SQL as _KMV_STREAM_KEPT_SQL
     FROM kept
     """,
     doc="Distinct-user cardinality maintained AT THE INGESTION DOOR as a "
-    "KMV synopsis: the foreachBatch sink keeps only the k=64 smallest "
-    "(hash, user) rows per event type — <= k*|types| rows of state "
-    "TOTAL, vs the O(distinct users) state exact streaming distinct "
-    "needs. Keep-k-smallest-distinct is a commutative, idempotent "
-    "merge, so the streamed synopsis equals the batch sketch exactly "
-    "regardless of batch boundaries — the batch twin "
+    "KMV synopsis: the replay holds the k=64 smallest (hash, user) rows "
+    "per event type as one cut relation, re-cut per micro-batch — <= "
+    "k*|types| rows of state TOTAL, vs the O(distinct users) state exact "
+    "streaming distinct needs. Keep-k-smallest-distinct is a "
+    "commutative, idempotent merge, so the streamed synopsis equals the "
+    "batch sketch exactly regardless of batch boundaries (and a "
+    "re-delivered batch changes nothing) — the batch twin "
     "(sketch_kmv_distinct's SQL, minus the exact-count column the "
     "synopsis by design cannot produce) applies verbatim.",
 )
 def stream_kmv_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: per batch, one distinct + per-type window over the
-    BATCH only, then a merge against <= k*|types| persisted rows; state
-    never grows past the synopsis bound. This is the sketch-state
-    pattern that replaces unbounded dropDuplicates state for
+    BATCH only, then a merge against the <= k*|types| synopsis rows and
+    one cut; state never grows past the synopsis bound. This is the
+    sketch-state pattern that replaces unbounded dropDuplicates state for
     monitoring-grade cardinality at 100 TB/day ingest."""
     from pyspark.sql.window import Window
 
-    from ..streaming.source import fold_state, table_stream
+    from ..streaming.source import replay, table_stream
 
     def step(old, batch):
         bh = batch.select("event_type", "user_id").distinct().select(
@@ -787,12 +788,14 @@ def stream_kmv_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("event_type", "user_id", "h")
         )
 
+    syn = spark.createDataFrame([], "event_type string, user_id long, h double")
+
+    def handle(batch: DataFrame, _batch_id: int) -> None:
+        nonlocal syn
+        syn = cut(step(syn, batch))
+
     sdf = table_stream(spark, sf_dir, "events", order_col="event_id", n_files=4)
-    syn = fold_state(
-        sdf.select("event_type", "user_id"),
-        spark.createDataFrame([], "event_type string, user_id long, h double"),
-        step,
-    )
+    replay(sdf.select("event_type", "user_id"), handle)
     kept = syn.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("k_actual"), F.max("h").alias("h_k")
     )
@@ -835,40 +838,30 @@ def stream_kmv_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(CAST(SUM(CAST(term AS DECIMAL(18,9))) AS DOUBLE), 6) AS chi2
     FROM cells
     """,
-    doc="Independence drift monitored AT THE INGESTION DOOR: the "
-    "foreachBatch sink maintains the (event_type x time-of-day-bucket) "
-    "contingency table incrementally — additive count merges keep "
-    "state at |types|x|buckets| rows regardless of stream length — and "
-    "the chi-square statistic is computed over the accumulated table "
-    "after the bounded replay. Count addition is commutative and the "
-    "replay is exactly-once (availableNow), so the streamed table "
-    "equals the batch table and the batch chi-square SQL (the "
-    "agg_chi_square_independence float discipline) applies verbatim.",
+    doc="Independence drift monitored AT THE INGESTION DOOR: a streaming "
+    "count by (event_type x time-of-day bucket) keeps the contingency "
+    "table in Spark's state store — |types|x|buckets| rows regardless "
+    "of stream length — and the chi-square statistic is computed over "
+    "the complete-mode result after the bounded replay. Count addition "
+    "is commutative and the replay is exactly-once (availableNow), so "
+    "the streamed table equals the batch table and the batch chi-square "
+    "SQL (the agg_chi_square_independence float discipline) applies "
+    "verbatim.",
 )
 def stream_drift_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale shape: per batch, one groupBy over the BATCH only, then a
-    merge against the bounded contingency state; the statistic is a
-    constant-size computation. This is the monitoring-grade drift check
-    that replaces ad-hoc daily batch jobs at continuous ingest."""
-    from ..streaming.source import fold_state, table_stream
-
-    def step(old, batch):
-        b = batch.select(
-            "event_type",
-            F.expr("CAST(hour(ts) div 4 AS BIGINT)").alias("tod"),
-        ).groupBy("event_type", "tod").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        return (
-            old.unionByName(b)
-            .groupBy("event_type", "tod")
-            .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-        )
+    """Scale shape: one streaming aggregate whose state store holds the
+    bounded contingency table; the statistic is a constant-size
+    computation over the one cut of the sink. This is the
+    monitoring-grade drift check that replaces ad-hoc daily batch jobs
+    at continuous ingest."""
+    from ..streaming.source import table_stream
 
     sdf = table_stream(spark, sf_dir, "events", order_col="event_id", n_files=4)
-    o = fold_state(
-        sdf.select("event_type", "ts"),
-        spark.createDataFrame([], "event_type string, tod bigint, cnt bigint"),
-        step,
-    ).withColumnRenamed("cnt", "obs")
+    counts = sdf.groupBy(
+        "event_type", F.expr("CAST(hour(ts) div 4 AS BIGINT)").alias("tod")
+    ).agg(F.count(F.lit(1)).cast("bigint").alias("obs"))
+    # the sink is read by three aggregates and the joins below: cut once
+    o = cut(run_available_now(counts, "drift_chi_square", "complete"))
     rt = o.groupBy("event_type").agg(F.sum("obs").cast("bigint").alias("r"))
     ct = o.groupBy("tod").agg(F.sum("obs").cast("bigint").alias("c"))
     tot = o.agg(F.sum("obs").cast("bigint").alias("n"))
@@ -1079,10 +1072,10 @@ def stream_bloom_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM b, g
     GROUP BY event_type, g.gmax
     """,
-    doc="Per-source freshness maintained AT THE INGESTION DOOR: the "
-    "foreachBatch sink keeps one row per (event type, hour bucket) "
-    "with an additive count and a max-merged high-water mark — both "
-    "commutative idempotent-mergeable, so the streamed state equals "
+    doc="Per-source freshness maintained AT THE INGESTION DOOR: a "
+    "streaming aggregate keeps one row per (event type, hour bucket) "
+    "in Spark's state store, with an additive count and a max-merged "
+    "high-water mark — both commutative, so the streamed state equals "
     "the batch table exactly regardless of batch boundaries, and "
     "state is bounded by |types| x |hours of history| (a catalog, "
     "not data-sized). The monitor answers dq_freshness_lag's "
@@ -1093,37 +1086,22 @@ def stream_bloom_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "approximate).",
 )
 def stream_freshness_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale shape: per batch, one map-side-combined aggregate of the
-    BATCH to (type, hour) rows, then a merge against the bounded state
-    relation; the final projection runs on state only."""
-    from ..streaming.source import fold_state, table_stream
-
-    def step(old, batch):
-        b = (
-            batch.select(
-                "event_type", F.unix_micros(F.col("ts")).alias("us")
-            )
-            .groupBy("event_type", F.expr("us div 3600000000").alias("hb"))
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("cnt"),
-                F.max("us").cast("bigint").alias("tmax"),
-            )
-        )
-        return (
-            old.unionByName(b)
-            .groupBy("event_type", "hb")
-            .agg(
-                F.sum("cnt").cast("bigint").alias("cnt"),
-                F.max("tmax").cast("bigint").alias("tmax"),
-            )
-        )
+    """Scale shape: one streaming aggregate to (type, hour) rows whose
+    state store holds the bounded state; the final projection runs on
+    the one cut of the sink only."""
+    from ..streaming.source import table_stream
 
     sdf = table_stream(spark, sf_dir, "events", order_col="event_id", n_files=4)
-    st = fold_state(
-        sdf.select("event_type", "ts"),
-        spark.createDataFrame([], "event_type string, hb long, cnt long, tmax long"),
-        step,
+    hourly = (
+        sdf.select("event_type", F.unix_micros(F.col("ts")).alias("us"))
+        .groupBy("event_type", F.expr("us div 3600000000").alias("hb"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("cnt"),
+            F.max("us").cast("bigint").alias("tmax"),
+        )
     )
+    # the crossJoin below reads the sink twice: cut once
+    st = cut(run_available_now(hourly, "freshness_monitor", "complete"))
     g = st.agg(F.max("tmax").cast("bigint").alias("gmax"))
     return (
         st.crossJoin(F.broadcast(g))

@@ -100,6 +100,7 @@ DURABLE_QUERIES = [
     "timeseries_kpss",
     "stream_drift_chi_square",
     "stream_bloom_dedup_ingest",
+    "stream_kmv_cardinality",
 ]
 
 

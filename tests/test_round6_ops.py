@@ -601,16 +601,16 @@ def test_ndcg_matches_python(spark, sf_dir):
 
 
 def test_round6_time_ops_non_utc_session_parity(spark, sf_dir):
-    """The round-6 operators that cast or order by event timestamps
-    (rolling OLS casts ts -> date; ACF / Mann-Kendall / Markov order by
-    ts; the drift monitor buckets hour(ts)) must still match their
-    oracles under a NON-UTC session timezone — load_fixture pins the
-    session to UTC at read time, and this is the probe that fails if a
-    new query ever reads timestamps outside that path (the round-5
-    sessionizer lesson). stream_drift_chi_square is included (ADVICE
-    r6): its hour(ts) bucketing runs inside foreachBatch over STAGED
-    files, where the UTC pin comes from stage_ordered_files — which
-    this probe exercises on the staging cache-hit path."""
+    """The operators that cast or order by event timestamps (rolling OLS
+    casts ts -> date; ACF / Mann-Kendall / Markov order by ts; the drift
+    monitor buckets hour(ts)) must still match their oracles under a
+    NON-UTC session timezone — load_fixture pins the session to UTC at
+    read time, and this is the probe that fails if a new query ever
+    reads timestamps outside that path, as the stateful sessionizer
+    once did. stream_drift_chi_square is included: its
+    hour(ts) bucketing runs in a streaming aggregate over STAGED files,
+    where the UTC pin comes from stage_ordered_files — which this probe
+    exercises on the staging cache-hit path."""
     from cdw_spark.compare import compare_frames
 
     s2 = spark.newSession()

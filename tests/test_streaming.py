@@ -153,13 +153,13 @@ def test_late_rows_beyond_watermark_are_dropped(spark, tmp_path_factory):
 
 
 def test_interval_join_state_stays_watermark_bounded(spark, sf_dir, tmp_path_factory):
-    """VERDICT r2 #8: stream_stream_interval_join's docstring claims state
-    retention is bounded by watermark + range condition — proven here from
-    the runtime state-store metrics, not the plan. Across an 8-file ordered
-    replay the per-batch numRowsTotal must hover around the watermark
-    horizon (evictions keeping pace with insertions), never accumulating
-    toward the cumulative input size — the difference between O(horizon)
-    and O(stream) state at 100 TB. Same join graph as
+    """stream_stream_interval_join keeps its state bounded by watermark +
+    range condition — proven here from the runtime state-store metrics,
+    not the plan. Across an 8-file ordered replay the per-batch
+    numRowsTotal must hover around the watermark horizon (evictions
+    keeping pace with insertions), never accumulating toward the
+    cumulative input size — the difference between O(horizon) and
+    O(stream) state at 100 TB. Same join graph as
     cdw_spark/suite/streaming.py::stream_stream_interval_join, inlined for
     access to the query handle."""
     import time as _time
@@ -422,13 +422,12 @@ def test_versioned_table_time_travel(spark, sf_dir):
 
 
 def test_near_dup_ingest_signature_work_stays_flat(spark, sf_dir, monkeypatch):
-    """VERDICT r4 #2: the ingestion-door near-dup sink must pass its
-    persisted signature index as old_sigs/new_sigs so per-batch signature
-    work is O(|batch|) — each document is signatured exactly ONCE over
-    the stream's whole life, not once per subsequent batch. Instruments
-    minhash_signatures to count input rows per call across the 4
-    micro-batches, then checks pair-set parity against the one-shot
-    batch operator."""
+    """The ingestion-door near-dup sink passes its persisted signature
+    index as old_sigs/new_sigs so per-batch signature work is O(|batch|) —
+    each document is signatured exactly ONCE over the stream's whole life,
+    not once per subsequent batch. Instruments minhash_signatures to count
+    input rows per call across the 4 micro-batches, then checks pair-set
+    parity against the one-shot batch operator."""
     from cdw_spark.catalog import load_fixture
     from cdw_spark.operators import dedup as dedup_ops
     from cdw_spark.operators.dedup import minhash_near_duplicates
@@ -488,13 +487,13 @@ def test_semantic_ingest_matches_batch_semdedup(spark, sf_dir):
 
 
 def test_sessionizer_non_utc_session_parity(spark, sf_dir):
-    """Regression guard for the round-5 TZ bug: under a NON-UTC session
-    timezone the stateful sessionizer must still match its oracle. Arrow
-    interop hands pandas SESSION-LOCAL wall times while the state-store
-    watermark is epoch UTC; the operator therefore does all state math on
-    unix_micros longs — this test is what fails if anyone reintroduces
-    wall-clock arithmetic on the Python side (it emitted 34 phantom
-    sessions at sf0.01 under America/New_York before the fix)."""
+    """Under a NON-UTC session timezone the stateful sessionizer still
+    matches its oracle. Arrow interop hands pandas SESSION-LOCAL wall
+    times while the state-store watermark is epoch UTC; the operator
+    therefore does all state math on unix_micros longs — this test is what
+    fails if anyone reintroduces wall-clock arithmetic on the Python side
+    (it emitted 34 phantom sessions at sf0.01 under America/New_York
+    before the fix)."""
     from cdw_spark.compare import compare_frames
 
     s2 = spark.newSession()
@@ -532,7 +531,7 @@ def test_stream_kmv_matches_batch_sketch_and_bounds_state(spark, sf_dir):
         assert row["kmv_est"] == batch[t]["kmv_est"], t
 
 
-_FOREACHBATCH_QUERIES = (
+_REPLAY_QUERIES = (
     "stream_near_dup_ingest",
     "stream_semantic_ingest",
     "stream_kmv_cardinality",
@@ -543,11 +542,12 @@ _FOREACHBATCH_QUERIES = (
 )
 
 
-@pytest.mark.parametrize("name", _FOREACHBATCH_QUERIES)
+@pytest.mark.parametrize("name", _REPLAY_QUERIES)
 def test_foreachbatch_replay_leaves_no_scratch(spark, sf_dir, tmp_path, monkeypatch, name):
-    """A bounded foreachBatch replay keeps its sinks and checkpoint under
-    replay scratch only for the call: the returned frame is materialized
-    off them, and nothing is left behind once fn() returns."""
+    """A bounded replay (foreachBatch or memory sink) keeps its sinks and
+    checkpoint under replay scratch only for the call: the returned frame
+    is materialized off them, and nothing is left behind once fn()
+    returns."""
     scratch = tmp_path / "replay"
     monkeypatch.setenv("SPARK_GRAFT_REPLAY_SCRATCH", str(scratch))
     rows = SPECS[name].fn(spark, sf_dir).collect()
@@ -609,7 +609,9 @@ def _jobs_fired(spark, call):
     """Run ``call()`` under its own job group and return (its result, the
     number of Spark jobs it fired). Job ids are sequential, so every job
     between two marker jobs belongs to the call, including the jobs its
-    streams run under their own run-id groups."""
+    streams run under their own run-id groups. A marker group keeps the
+    jobs of every earlier call too, so each bound is that group's latest
+    job."""
     sc = spark.sparkContext
 
     def marker(group):
@@ -622,7 +624,7 @@ def _jobs_fired(spark, call):
         lo = max(marker("call-before"))
         sc.setJobGroup("call", "call under test")
         out = call()
-        hi = min(marker("call-after"))
+        hi = max(marker("call-after"))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -640,6 +642,84 @@ def test_staged_quarters_served_without_a_job(spark, sf_dir):
     )
     assert again == first
     assert jobs == 0
+
+
+def test_staged_stream_opens_without_a_job(spark, sf_dir):
+    """A staged directory carries its schema, so opening a stream on it
+    fires no Spark job (an inference job per call before), and the stored
+    schema is the batch-read schema of the staged files."""
+    from cdw_spark.streaming.source import stage_ordered_files, staged_stream, table_stream
+
+    path = stage_ordered_files(spark, sf_dir, "events", 4, "event_id")
+    opened, jobs = _jobs_fired(
+        spark, lambda: table_stream(spark, sf_dir, "events", "event_id")
+    )
+    assert jobs == 0
+    sdf, jobs = _jobs_fired(spark, lambda: staged_stream(spark, path))
+    assert jobs == 0
+    assert sdf.schema == opened.schema == spark.read.parquet(path).schema
+
+
+def test_stateful_aggregate_resumes_from_checkpoint(spark, sf_dir, tmp_path):
+    """A complete-mode streaming aggregate stopped after two files and
+    restarted on the same checkpoint, once two more files have landed,
+    ends with the same rows as one uninterrupted replay over all four:
+    the state store carries the counts and maxima across the restart.
+    The first two files are gone by the restart, so only the restored
+    state can account for them."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from cdw_spark.streaming.source import _drain, stage_ordered_files, staged_stream
+
+    staged = stage_ordered_files(spark, sf_dir, "events", 4, "event_id")
+    with open(f"{staged}/_STAGED") as f:
+        parts = f.read().split("\n")
+    assert len(parts) == 4
+    src = tmp_path / "src"
+    src.mkdir()
+    shutil.copy2(f"{staged}/_SCHEMA.json", src)
+
+    def drain(path, chk, name):
+        agg = (
+            staged_stream(spark, str(path))
+            .groupBy("event_type")
+            .agg(F.count(F.lit(1)).alias("n"), F.max("event_id").alias("last_id"))
+        )
+        writer = agg.writeStream.format("memory").queryName(name).outputMode("complete")
+        _drain(spark, writer, str(chk))
+        return sorted(tuple(r) for r in spark.table(name).collect())
+
+    for p in parts[:2]:
+        shutil.copy2(f"{staged}/{p}", src)  # copy2 keeps the staged mtimes
+    first = drain(src, tmp_path / "chk", "cdw_resume_first")
+    for p in parts[:2]:
+        (src / p).unlink()
+    for p in parts[2:]:
+        shutil.copy2(f"{staged}/{p}", src)  # later mtimes: read after a restart
+    resumed = drain(src, tmp_path / "chk", "cdw_resume_second")
+    whole = drain(staged, tmp_path / "chk_whole", "cdw_resume_whole")
+    assert resumed == whole
+    assert first != whole  # the first run saw only half of the stream
+
+
+# Jobs per call of the state-store aggregates and the replay-held KMV
+# synopsis, staging warm (the parquet-state fold fired 24 / 24 / 28).
+_STATE_JOB_BUDGETS = {
+    "stream_drift_chi_square": 8,
+    "stream_freshness_monitor": 8,
+    "stream_kmv_cardinality": 20,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_STATE_JOB_BUDGETS))
+def test_stream_state_job_budget(spark, sf_dir, name):
+    spec = SPECS[name]
+    spec.fn(spark, sf_dir)  # stage the replayed files outside the count
+    df, jobs = _jobs_fired(spark, lambda: spec.fn(spark, sf_dir))
+    assert 0 < jobs <= _STATE_JOB_BUDGETS[name], jobs
+    assert df.count() > 0
 
 
 @pytest.mark.parametrize("n", [4, 250, 1201])
