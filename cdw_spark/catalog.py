@@ -14,6 +14,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions.numeric import micro
+from .plans.lineage import cut
 from .schemas import ALL_TABLES
 
 # Driver-generated fixture tables (/root/testdata/sf*/..., TESTDATA.md).
@@ -61,6 +63,26 @@ def load_fixture(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if dtype == "timestamp_ntz":
             df = df.withColumn(col, F.col(col).cast("timestamp"))
     return df
+
+
+def purchase_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``events`` fixture's purchases, carrying ``q``: the purchase
+    value in integer micro-units (``functions.numeric.micro``), the form
+    every exact purchase statistic sums and compares."""
+    events = load_fixture(spark, sf_dir, "events")
+    return events.filter(F.col("event_type") == "purchase").withColumn("q", micro(F.col("value")))
+
+
+def daily_purchase_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The daily purchase series ``(dd, x)``: ``dd`` is the UTC day number
+    (``unix_micros(ts) div 86400000000``) and ``x`` the day's exact BIGINT
+    sum of ``q``. Cut, because the series tests read it several times."""
+    return cut(
+        purchase_events(spark, sf_dir)
+        .select(F.expr("unix_micros(ts) div 86400000000").alias("dd"), "q")
+        .groupBy("dd")
+        .agg(F.sum("q").cast("bigint").alias("x"))
+    )
 
 
 def register_fixtures(

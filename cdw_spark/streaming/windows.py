@@ -1,8 +1,8 @@
 """Event-time windowed aggregations — one code path for batch and stream.
 
 Each transform takes an ``events``-shaped DataFrame (batch OR streaming —
-the Dataset API is unified) and produces the same aliases as its batch twin
-in cdw_spark/suite/windows.py, so the finalized streaming output is
+the Dataset API is unified). The batch queries in cdw_spark/suite/windows.py
+are these transforms over the fixture, so the finalized streaming output is
 comparable against the DuckDB oracle of the batch query. Sums accumulate
 as exact DECIMAL; the final projection is DOUBLE (driver decimal
 canonicalization).

@@ -18,7 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_fixture
+from ..catalog import daily_purchase_totals, load_fixture, purchase_events
+from ..functions.numeric import micro
 from ..plans.lineage import cut
 from ..registry import register
 
@@ -927,8 +928,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = (
-        load_fixture(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
+        purchase_events(spark, sf_dir)
         .select("user_id", F.date_trunc("week", F.col("ts")).cast("date").alias("wk"))
     )
     cohort = p.groupBy("user_id").agg(F.min("wk").alias("cohort_wk"))
@@ -997,13 +997,11 @@ def events_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     cohort sizes broadcast."""
     from pyspark.sql.window import Window
 
-    e = load_fixture(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
+    e = purchase_events(spark, sf_dir)
     p = e.select(
         "user_id",
         F.date_trunc("week", F.col("ts")).cast("date").alias("wk"),
-        F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("q"),
+        "q",
     )
     cohort = p.groupBy("user_id").agg(F.min("wk").alias("cohort_wk"))
     cs = cohort.groupBy("cohort_wk").agg(
@@ -3247,9 +3245,7 @@ def timeseries_autocorr_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     e = load_fixture(spark, sf_dir, "events")
-    qcol = F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5)).cast(
-        "bigint"
-    )
+    qcol = micro(F.col("value"))
     wo = Window.partitionBy("user_id").orderBy("ts", "event_id")
     q = e.select(
         "user_id",
@@ -3346,9 +3342,7 @@ def timeseries_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     e = load_fixture(spark, sf_dir, "events")
-    qcol = F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5)).cast(
-        "bigint"
-    )
+    qcol = micro(F.col("value"))
     wo = Window.partitionBy("user_id").orderBy("ts", "event_id")
     r = e.select(
         "user_id",
@@ -3957,9 +3951,7 @@ def agg_benjamini_hochberg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sample_ab_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: one map-side-combined scan to three exact moments,
     one 1-row projection — no shuffle beyond the single-row reduce."""
-    ev = load_fixture(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
+    ev = purchase_events(spark, sf_dir)
     dec = F.col("value").cast("decimal(18,2)")
     s = ev.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -4757,7 +4749,7 @@ def events_retention_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: the cohort_retention shuffles plus a
     calendar-bounded offsets x cohorts eligibility join (weeks^2 cells
     at most), 9dp-decimal OLS moments, a 1-row reduce."""
-    e = load_fixture(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
+    e = purchase_events(spark, sf_dir)
     p = e.select(
         "user_id", F.date_trunc("week", F.col("ts")).cast("date").alias("wk")
     )
@@ -4867,12 +4859,10 @@ def window_donchian_breakout(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup."""
     from pyspark.sql.window import Window
 
-    e = load_fixture(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
+    e = purchase_events(spark, sf_dir)
     p = e.select(
         "user_id",
-        F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("q"),
+        "q",
         F.expr("unix_micros(ts) div 21600000000").alias("hb"),
     )
     bars = p.groupBy("user_id", "hb").agg(
@@ -4970,14 +4960,12 @@ def timeseries_mase_seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFram
     once; output is |users| rows."""
     from pyspark.sql.window import Window
 
-    e = load_fixture(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
+    e = purchase_events(spark, sf_dir)
     p = e.select(
         "user_id",
         "ts",
         "event_id",
-        F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("q"),
+        "q",
     )
     wo = Window.partitionBy("user_id").orderBy("ts", "event_id")
     w = p.select(
@@ -5378,9 +5366,7 @@ def timeseries_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.window import Window
 
-    ev = load_fixture(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
+    ev = purchase_events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy(F.unix_micros("ts"), "event_id")
     s = (
         ev.select(
@@ -5656,13 +5642,8 @@ def timeseries_ewma_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded (micro values to ~3.6e16)."""
     from pyspark.sql.window import Window
 
-    e = load_fixture(spark, sf_dir, "events").filter(
-        (F.col("event_type") == "purchase") & (F.col("value") > 0)
-    )
-    qcol = F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5)).cast(
-        "bigint"
-    )
-    base = e.select("user_id", "event_id", qcol.alias("q"), "ts")
+    e = purchase_events(spark, sf_dir).filter(F.col("value") > 0)
+    base = e.select("user_id", "event_id", "q", "ts")
     wo = Window.partitionBy("user_id").orderBy("ts", "event_id")
     lagged = base.select(
         "user_id",
@@ -5738,12 +5719,9 @@ def window_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break — no join, no global sort."""
     from pyspark.sql.window import Window
 
-    e = load_fixture(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
-    qcol = F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5)).cast(
-        "bigint"
-    )
+    e = purchase_events(spark, sf_dir)
     wo = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    p = e.select("user_id", "event_id", qcol.alias("q"), "ts").filter(
+    p = e.select("user_id", "event_id", "q", "ts").filter(
         F.col("q") > 0
     ).select(
         "user_id",
@@ -5820,13 +5798,8 @@ def timeseries_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: two chained map-side-combined aggregates
     ((user, dow) then user) plus one per-user quadratic-moment
     aggregate joined on user — no window, no global sort."""
-    e = load_fixture(spark, sf_dir, "events").filter(
-        (F.col("event_type") == "purchase") & (F.col("value") > 0)
-    )
-    qcol = F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5)).cast(
-        "bigint"
-    )
-    q = e.select("user_id", F.dayofweek("ts").alias("dow"), qcol.alias("q"))
+    e = purchase_events(spark, sf_dir).filter(F.col("value") > 0)
+    q = e.select("user_id", F.dayofweek("ts").alias("dow"), "q")
     d = q.groupBy("user_id", "dow").agg(
         F.count(F.lit(1)).cast("bigint").alias("nd"),
         F.sum(F.col("q").cast("decimal(38,0)")).alias("sd"),
@@ -6621,18 +6594,13 @@ def agg_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass; the cells relation is at most 6 rows per user."""
     from pyspark.sql.window import Window
 
-    ev = load_fixture(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
-    qcol = F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5)).cast(
-        "bigint"
-    )
+    ev = purchase_events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     s = ev.select(
         "user_id",
-        qcol.alias("q0"),
-        F.lead(qcol, 1).over(w).alias("q1"),
-        F.lead(qcol, 2).over(w).alias("q2"),
+        F.col("q").alias("q0"),
+        F.lead("q", 1).over(w).alias("q1"),
+        F.lead("q", 2).over(w).alias("q2"),
     ).filter(F.col("q2").isNotNull())
     pat = s.select(
         "user_id",
@@ -7212,15 +7180,10 @@ def timeseries_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration."""
     from pyspark.sql.window import Window
 
-    ev = load_fixture(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
-    qcol = F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5)).cast(
-        "bigint"
-    )
+    ev = purchase_events(spark, sf_dir)
     seq = ev.select(
         "user_id",
-        qcol.alias("q"),
+        "q",
         F.row_number()
         .over(Window.partitionBy("user_id").orderBy("ts", "event_id"))
         .alias("rn"),
@@ -7831,13 +7794,10 @@ def window_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user aggregate — no join, no global sort."""
     from pyspark.sql.window import Window
 
-    e = load_fixture(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
-    qcol = F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5)).cast(
-        "bigint"
-    )
+    e = purchase_events(spark, sf_dir)
     wo = Window.partitionBy("user_id").orderBy("ts", "event_id")
     r = (
-        e.select("user_id", "event_id", qcol.alias("q"), "ts")
+        e.select("user_id", "event_id", "q", "ts")
         .filter(F.col("q") > 0)
         .select(
             "user_id",
@@ -8025,14 +7985,12 @@ def timeseries_acf_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     beyond 1-row broadcasts, no global sort."""
     from pyspark.sql.window import Window
 
-    e = load_fixture(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
+    e = purchase_events(spark, sf_dir)
     p = e.select(
         "user_id",
         "ts",
         "event_id",
-        F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("q"),
+        "q",
     )
     mm = p.agg(
         F.expr(
@@ -8183,14 +8141,12 @@ def timeseries_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     pooled sums by user range and merge."""
     from pyspark.sql.window import Window
 
-    e = load_fixture(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
+    e = purchase_events(spark, sf_dir)
     p = e.select(
         "user_id",
         "ts",
         "event_id",
-        F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("q"),
+        "q",
     )
     mm = p.agg(
         F.expr(
@@ -8295,14 +8251,12 @@ def window_sortino_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — no join, no global sort."""
     from pyspark.sql.window import Window
 
-    e = load_fixture(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
+    e = purchase_events(spark, sf_dir)
     p = e.select(
         "user_id",
         "ts",
         "event_id",
-        F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("q"),
+        "q",
     )
     wo = Window.partitionBy("user_id").orderBy("ts", "event_id")
     r = p.select(
@@ -8544,14 +8498,12 @@ def window_atr(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduced), one per-user aggregate — the fact table shuffles once."""
     from pyspark.sql.window import Window
 
-    e = load_fixture(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
+    e = purchase_events(spark, sf_dir)
     p = e.select(
         "user_id",
         "ts",
         "event_id",
-        F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("q"),
+        "q",
         F.expr("unix_micros(ts) div 21600000000").alias("hb"),
     )
     # close via an encoded single wide-integer key (ts, event_id) — the
@@ -8647,12 +8599,10 @@ def window_parkinson_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
     bars, a per-bar projection, one per-user aggregate — the fact table
     shuffles once and no window function at all (unlike ATR's lag, the
     Parkinson estimator is bar-local)."""
-    e = load_fixture(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
+    e = purchase_events(spark, sf_dir)
     p = e.select(
         "user_id",
-        F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("q"),
+        "q",
         F.expr("unix_micros(ts) div 21600000000").alias("hb"),
     )
     bars = p.groupBy("user_id", "hb").agg(
@@ -8733,14 +8683,12 @@ def timeseries_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined 1-row reduce — no join, no global sort."""
     from pyspark.sql.window import Window
 
-    e = load_fixture(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
+    e = purchase_events(spark, sf_dir)
     p = e.select(
         "user_id",
         "ts",
         "event_id",
-        F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("q"),
+        "q",
     )
     wo = Window.partitionBy("user_id").orderBy("ts", "event_id")
     r = p.select(
@@ -8850,15 +8798,13 @@ def agg_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, one 1-row reduce."""
     from pyspark.sql.window import Window
 
-    e = load_fixture(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
+    e = purchase_events(spark, sf_dir)
     wo = Window.partitionBy("user_id").orderBy("ts", "event_id")
     p = e.select(
         "user_id",
         "ts",
         "event_id",
-        F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("q"),
+        "q",
     )
     r = p.select(
         "user_id", "ts", "event_id", (F.col("q") - F.lag("q").over(wo)).alias("ret")
@@ -9257,13 +9203,11 @@ def window_stochastic_oscillator(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup."""
     from pyspark.sql.window import Window
 
-    e = load_fixture(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
+    e = purchase_events(spark, sf_dir)
     p = e.select(
         "user_id",
         "ts",
-        F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("q"),
+        "q",
         F.expr("unix_micros(ts) div 21600000000").alias("hb"),
     )
     bars = p.groupBy("user_id", "hb").agg(
@@ -9592,11 +9536,9 @@ def agg_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: one filtered projection, a 1-row mean reduce
     broadcast into one central-moment reduce — two passes, no shuffle
     beyond the aggregates (the textbook-exact two-pass moment plan)."""
-    e = load_fixture(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
+    e = purchase_events(spark, sf_dir)
     p = e.select(
-        F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("q")
+        "q"
     )
     m = p.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -9732,9 +9674,7 @@ def agg_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     e = load_fixture(spark, sf_dir, "events")
-    qv = F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5)).cast(
-        "bigint"
-    )
+    qv = micro(F.col("value"))
     cell = cut(
         e.select("user_id", "event_type", qv.alias("qv"))
         .groupBy("user_id", "event_type")
@@ -9835,16 +9775,11 @@ def timeseries_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     is map-side."""
     from pyspark.sql.window import Window
 
-    e = load_fixture(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
-    q = F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5)).cast(
-        "bigint"
-    )
+    e = purchase_events(spark, sf_dir)
     o = e.select(
         "user_id",
-        q.alias("q"),
-        F.lag(q).over(Window.partitionBy("user_id").orderBy("ts", "event_id")).alias(
+        "q",
+        F.lag("q").over(Window.partitionBy("user_id").orderBy("ts", "event_id")).alias(
             "pq"
         ),
     )
@@ -9936,14 +9871,9 @@ def timeseries_pettitt_changepoint(spark: SparkSession, sf_dir: str) -> DataFram
     timeseries ops."""
     from pyspark.sql.window import Window
 
-    e = load_fixture(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
-    q = F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5)).cast(
-        "bigint"
-    )
+    e = purchase_events(spark, sf_dir)
     d = cut(
-        e.select(F.date_trunc("day", F.col("ts")).alias("day"), q.alias("q"))
+        e.select(F.date_trunc("day", F.col("ts")).alias("day"), "q")
         .groupBy("day")
         .agg(F.sum("q").cast("bigint").alias("x"))
     )
@@ -10044,13 +9974,11 @@ def window_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user rollup."""
     from pyspark.sql.window import Window
 
-    e = load_fixture(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
+    e = purchase_events(spark, sf_dir)
     p = e.select(
         "user_id",
         "ts",
-        F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("q"),
+        "q",
         F.expr("unix_micros(ts) div 21600000000").alias("hb"),
     )
     bars = p.groupBy("user_id", "hb").agg(
@@ -10160,12 +10088,10 @@ def window_aroon(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordered window with a bounded 4-row frame, one per-user rollup."""
     from pyspark.sql.window import Window
 
-    e = load_fixture(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
+    e = purchase_events(spark, sf_dir)
     p = e.select(
         "user_id",
-        F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("q"),
+        "q",
         F.expr("unix_micros(ts) div 21600000000").alias("hb"),
     )
     bars = p.groupBy("user_id", "hb").agg(
@@ -10285,9 +10211,7 @@ def agg_wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_fixture(spark, sf_dir, "events").filter(
         F.col("event_type").isin("purchase", "click")
     )
-    x = F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5)).cast(
-        "bigint"
-    )
+    x = micro(F.col("value"))
     cum = value_ranks(
         e.select("event_type", x.alias("x")),
         [],
@@ -10398,9 +10322,7 @@ def events_weekly_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     |pairs|-row rollup."""
     from ..operators.stats import value_ranks
 
-    e = load_fixture(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
+    e = purchase_events(spark, sf_dir)
     base = e.select(
         F.expr("unix_micros(ts) div 604800000000").alias("wk"), F.col("value").alias("v")
     )
@@ -11314,9 +11236,7 @@ def timeseries_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded at any corpus scale) and two bounded reduces."""
     from pyspark.sql.window import Window
 
-    e = load_fixture(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
+    e = purchase_events(spark, sf_dir)
     d = cut(
         e.select(F.expr("unix_micros(ts) div 86400000000").alias("dd"))
         .groupBy("dd")
@@ -11461,17 +11381,7 @@ def timeseries_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus scale — 90 days is 4k pairs) and a 1-row reduce."""
     from pyspark.sql.window import Window
 
-    e = load_fixture(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
-    q = F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5)).cast(
-        "bigint"
-    )
-    d = cut(
-        e.select(F.expr("unix_micros(ts) div 86400000000").alias("dd"), q.alias("q"))
-        .groupBy("dd")
-        .agg(F.sum("q").cast("bigint").alias("x"))
-    )
+    d = daily_purchase_totals(spark, sf_dir)
     m = d.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("x").cast("decimal(38,0)").alias("s1"),
@@ -11610,17 +11520,7 @@ def timeseries_kpss(spark: SparkSession, sf_dir: str) -> DataFrame:
     and three 1-row reduces."""
     from pyspark.sql.window import Window
 
-    e = load_fixture(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
-    q = F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5)).cast(
-        "bigint"
-    )
-    d = cut(
-        e.select(F.expr("unix_micros(ts) div 86400000000").alias("dd"), q.alias("q"))
-        .groupBy("dd")
-        .agg(F.sum("q").cast("bigint").alias("x"))
-    )
+    d = daily_purchase_totals(spark, sf_dir)
     m = d.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("x").cast("decimal(38,0)").alias("s1"),
@@ -11749,17 +11649,7 @@ def timeseries_cox_stuart(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded), one 1-row reduce."""
     from pyspark.sql.window import Window
 
-    e = load_fixture(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
-    q = F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5)).cast(
-        "bigint"
-    )
-    d = cut(
-        e.select(F.expr("unix_micros(ts) div 86400000000").alias("dd"), q.alias("q"))
-        .groupBy("dd")
-        .agg(F.sum("q").cast("bigint").alias("x"))
-    )
+    d = daily_purchase_totals(spark, sf_dir)
     idx = d.select(
         F.row_number().over(Window.orderBy("dd")).alias("t"), "x"
     )
@@ -11835,17 +11725,7 @@ def timeseries_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag/lead window over the |days|-row relation, one 1-row reduce."""
     from pyspark.sql.window import Window
 
-    e = load_fixture(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
-    q = F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5)).cast(
-        "bigint"
-    )
-    d = cut(
-        e.select(F.expr("unix_micros(ts) div 86400000000").alias("dd"), q.alias("q"))
-        .groupBy("dd")
-        .agg(F.sum("q").cast("bigint").alias("x"))
-    )
+    d = daily_purchase_totals(spark, sf_dir)
     wd = Window.orderBy("dd")
     w = d.select(
         "x",
@@ -11938,17 +11818,7 @@ def timeseries_bartels_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     |days|-row relation (calendar-bounded), one 1-row reduce."""
     from pyspark.sql.window import Window
 
-    e = load_fixture(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
-    q = F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5)).cast(
-        "bigint"
-    )
-    d = cut(
-        e.select(F.expr("unix_micros(ts) div 86400000000").alias("dd"), q.alias("q"))
-        .groupBy("dd")
-        .agg(F.sum("q").cast("bigint").alias("x"))
-    )
+    d = daily_purchase_totals(spark, sf_dir)
     vals = d.groupBy(F.col("x").alias("v")).agg(
         F.count(F.lit(1)).cast("bigint").alias("cv")
     )
@@ -12060,15 +11930,11 @@ def window_vwap_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup — no joins beyond the per-user last-bar self-pair."""
     from pyspark.sql.window import Window
 
-    e = load_fixture(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
+    e = purchase_events(spark, sf_dir)
     p = e.select(
         "user_id",
         "ts",
-        F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("q"),
+        "q",
         F.expr("unix_micros(ts) div 21600000000").alias("hb"),
     )
     bars = p.groupBy("user_id", "hb").agg(
@@ -12197,15 +12063,11 @@ def window_chaikin_money_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup."""
     from pyspark.sql.window import Window
 
-    e = load_fixture(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
+    e = purchase_events(spark, sf_dir)
     p = e.select(
         "user_id",
         "ts",
-        F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("q"),
+        "q",
         F.expr("unix_micros(ts) div 21600000000").alias("hb"),
     )
     bars = p.groupBy("user_id", "hb").agg(
@@ -12327,15 +12189,11 @@ def window_ichimoku(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition (one sort), one per-user rollup."""
     from pyspark.sql.window import Window
 
-    e = load_fixture(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
+    e = purchase_events(spark, sf_dir)
     p = e.select(
         "user_id",
         "ts",
-        F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("q"),
+        "q",
         F.expr("unix_micros(ts) div 21600000000").alias("hb"),
     )
     bars = p.groupBy("user_id", "hb").agg(
@@ -12662,9 +12520,7 @@ def ab_test_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: one 1-row span reduce broadcast into the per-user
     groupBy (the only fact shuffle), then one map-side-combined
     9-sum moment reduce."""
-    ev = load_fixture(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
+    ev = purchase_events(spark, sf_dir)
     span = ev.agg(
         F.expr(
             "(MIN(unix_micros(ts) div 86400000000)"
@@ -13205,15 +13061,11 @@ def agg_gini_mean_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
 def window_pivot_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: the bar aggregate (one fact shuffle), one per-user
     arg_max rollup — constant-size output per user."""
-    e = load_fixture(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
+    e = purchase_events(spark, sf_dir)
     p = e.select(
         "user_id",
         "ts",
-        F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("q"),
+        "q",
         F.expr("unix_micros(ts) div 21600000000").alias("hb"),
     )
     bars = p.groupBy("user_id", "hb").agg(

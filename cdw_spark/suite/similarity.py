@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_fixture
+from ..functions.numeric import micro
 from ..operators.similarity import (
     brute_force_topk,
     lsh_pairs_topn,
@@ -1079,8 +1080,7 @@ def embedding_class_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         "vec_id",
         (F.col("pos") + 1).alias("dim"),
-        F.floor(F.col("v").cast("double") * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
+        micro(F.col("v"))
         .alias("q"),
     )
     nn = e.groupBy("label").agg(F.count(F.lit(1)).alias("n"))
@@ -1561,7 +1561,7 @@ def embedding_whitening_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", to_double_array(F.col("embedding")).alias("v")
     )
     dims = e.select("vec_id", F.posexplode("v").alias("dim", "x"))
-    q = F.floor(F.col("x") * F.lit(1000000.0) + F.lit(0.5)).cast("decimal(19,0)")
+    q = micro(F.col("x")).cast("decimal(19,0)")
     st = dims.groupBy("dim").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(q).cast("decimal(38,0)").alias("sq"),
@@ -2031,8 +2031,7 @@ def embedding_norm_outlier_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select("vec_id", F.posexplode("embedding").alias("pos", "v"))
         .select(
             "vec_id",
-            F.floor(F.col("v").cast("double") * F.lit(1000000.0) + F.lit(0.5))
-            .cast("bigint")
+            micro(F.col("v"))
             .alias("qv"),
         )
         .groupBy("vec_id")

@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_fixture
+from ..functions.numeric import micro
 from ..functions.text import (
     LANG_MARKERS,
     STOPWORDS,
@@ -1637,9 +1638,7 @@ def eval_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_fixture(spark, sf_dir, "documents")
     q = d.select(
         (F.col("lang") == "en").cast("int").alias("y"),
-        F.floor(quality_score(F.col("text")) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("q"),
+        micro(quality_score(F.col("text"))).alias("q"),
     )
     b = q.groupBy(
         F.least(F.expr("q div 100000"), F.lit(9)).cast("int").alias("bin")

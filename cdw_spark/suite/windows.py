@@ -2,10 +2,10 @@
 §7.2 M4/M5).
 
 Absent from the reference (no ``OVER (`` anywhere) but table stakes for the
-engine. The tumbling/sliding/session time windows here are the *batch*
-expressions of the same logic the streaming module (cdw_spark/streaming/)
-runs incrementally — identical semantics, one code path tested against the
-DuckDB oracle, then reused over readStream.
+engine. The tumbling/sliding/session time windows and the OHLC resample
+here call the transforms of ``cdw_spark/streaming/windows.py`` on the batch
+fixture: the streaming queries run the same code incrementally, so one code
+path is tested against the DuckDB oracle and reused over readStream.
 
 Determinism rule for oracles: every window ordering carries a unique
 tie-breaker column (event_id / order key) so both engines produce the same
@@ -18,8 +18,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import load_fixture
+from ..catalog import load_fixture, purchase_events
+from ..functions.numeric import micro
 from ..registry import register
+from ..streaming.windows import ohlc_agg, session_agg, sliding_agg, tumbling_agg
 
 DEC = "decimal(18,2)"
 
@@ -140,24 +142,11 @@ def window_lag_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     "streaming query in cdw_spark/streaming/).",
 )
 def tumbling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``F.window`` tumbling aggregation. Same plan shape as a grouped agg:
-    partial aggregation per window before the shuffle. The streaming twin
-    adds a watermark; values are identical on finalized windows."""
-    ev = load_fixture(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast(DEC)).cast("double"), 2).alias("total_value"),
-        )
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
+    """``F.window`` tumbling aggregation, ``streaming.windows.tumbling_agg``
+    over the batch fixture. Same plan shape as a grouped agg: partial
+    aggregation per window before the shuffle. The streaming query adds a
+    watermark; values are identical on finalized windows."""
+    return tumbling_agg(load_fixture(spark, sf_dir, "events"))
 
 
 @register(
@@ -186,23 +175,11 @@ def tumbling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "overlapping windows.",
 )
 def sliding_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``F.window(size=1h, slide=30m)`` — Spark expands each row into
-    size/slide window assignments (an explode, not a self-join), then
-    aggregates; the oracle mirrors that expansion with a UNION ALL."""
-    ev = load_fixture(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("win"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast(DEC)).cast("double"), 2).alias("total_value"),
-        )
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            "n_events",
-            "total_value",
-        )
-    )
+    """``F.window(size=1h, slide=30m)``, ``streaming.windows.sliding_agg``
+    over the batch fixture — Spark expands each row into size/slide window
+    assignments (an explode, not a self-join), then aggregates; the oracle
+    mirrors that expansion with a UNION ALL."""
+    return sliding_agg(load_fixture(spark, sf_dir, "events"))
 
 
 @register(
@@ -239,27 +216,14 @@ def sliding_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "oracle, native session_window in Spark.",
 )
 def session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``F.session_window(ts, '30 minutes')``: Spark merges events whose
-    [ts, ts+gap) windows overlap; an event exactly at prev+gap starts a new
-    session (half-open interval), which the oracle's ``>=`` reproduces.
-    Scale: one shuffle on user_id, sort within partition, linear merge —
-    same cost profile as the oracle's window formulation but fused natively.
+    """``F.session_window(ts, '30 minutes')``, ``streaming.windows.session_agg``
+    over the batch fixture: Spark merges events whose [ts, ts+gap) windows
+    overlap; an event exactly at prev+gap starts a new session (half-open
+    interval), which the oracle's ``>=`` reproduces. Scale: one shuffle on
+    user_id, sort within partition, linear merge — same cost profile as the
+    oracle's window formulation but fused natively.
     """
-    ev = load_fixture(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.session_window("ts", "30 minutes").alias("win"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast(DEC)).cast("double"), 2).alias("total_value"),
-        )
-        .select(
-            "user_id",
-            F.col("win.start").alias("session_start"),
-            F.col("win.end").alias("session_end"),
-            "n_events",
-            "total_value",
-        )
-    )
+    return session_agg(load_fixture(spark, sf_dir, "events"))
 
 
 @register(
@@ -420,8 +384,7 @@ def window_first_last_nth(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def timeseries_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = (
-        load_fixture(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
+        purchase_events(spark, sf_dir)
         .select("user_id", F.to_date("ts").alias("day"))
     )
     daily = ev.groupBy("user_id", "day").agg(F.count(F.lit(1)).alias("n"))
@@ -476,7 +439,7 @@ def timeseries_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sequence length.",
 )
 def timeseries_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_fixture(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
+    ev = purchase_events(spark, sf_dir)
     seq = ev.select(
         "user_id",
         "event_id",
@@ -550,19 +513,8 @@ def window_cume_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the rounded value).",
 )
 def timeseries_resample_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = (
-        load_fixture(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .select("user_id", "ts", F.round("value", 6).alias("value"))
-    )
-    bucket = F.window("ts", "6 hours").start.alias("bucket")
-    return ev.groupBy("user_id", bucket).agg(
-        F.min_by("value", "ts").alias("open"),
-        F.max("value").alias("high"),
-        F.min("value").alias("low"),
-        F.max_by("value", "ts").alias("close"),
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-    )
+    """``streaming.windows.ohlc_agg`` over the batch fixture."""
+    return ohlc_agg(load_fixture(spark, sf_dir, "events"))
 
 
 @register(
@@ -596,10 +548,7 @@ def timeseries_resample_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     "literals. Ordered by event_id (unique) so the fold order is total.",
 )
 def timeseries_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = (
-        load_fixture(spark, sf_dir, "events")
-        .filter((F.col("event_type") == "purchase") & F.col("value").isNotNull())
-    )
+    ev = purchase_events(spark, sf_dir).filter(F.col("value").isNotNull())
     w = (
         Window.partitionBy("user_id")
         .orderBy("event_id")
@@ -734,8 +683,7 @@ def timeseries_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFram
     from pyspark.sql.window import Window
 
     ev = (
-        load_fixture(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
+        purchase_events(spark, sf_dir)
         .select("user_id", F.to_date("ts").alias("day"))
     )
     daily = ev.groupBy("user_id", "day").agg(
@@ -805,7 +753,7 @@ def timeseries_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFram
     "sums engine-identical at any partition order.",
 )
 def timeseries_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_fixture(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
+    ev = purchase_events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     dec = F.col("value").cast("decimal(18,2)")
     seq = ev.select("user_id", "ts", "event_id", F.sum(dec).over(w).alias("bal"))
@@ -984,8 +932,7 @@ def window_rolling_ols_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.sum(
-                F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5))
-                .cast("bigint")
+                micro(F.col("value"))
             )
             .cast("bigint")
             .alias("q")
@@ -1027,12 +974,12 @@ def window_rolling_ols_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     # micro-units ((2a+b) div 2b, sign-split for negatives) — Spark's
     # round(double, 6) rounds the shortest decimal repr and flipped a
     # 6-dp boundary row at sf0.1 (the quality_linear_score lesson)
-    micro = F.when(
+    slope = F.when(
         F.col("num") >= 0,
         F.expr("(2 * num + den) div (2 * den)"),
     ).otherwise(-F.expr("(2 * (-num) + den) div (2 * den)"))
     return d.select(
-        "user_id", "day", (micro.cast("double") / F.lit(1000000.0)).alias("slope_per_day")
+        "user_id", "day", (slope.cast("double") / F.lit(1000000.0)).alias("slope_per_day")
     )
 
 
@@ -1077,10 +1024,7 @@ def timeseries_realized_volatility(spark: SparkSession, sf_dir: str) -> DataFram
     """Scale shape: one per-user window sort for the lag, one map-side-
     combining per-user aggregate — the standard sessionized-sequence
     budget; no global sort."""
-    ev = (
-        load_fixture(spark, sf_dir, "events")
-        .filter((F.col("event_type") == "purchase") & (F.col("value") > 0))
-    )
+    ev = purchase_events(spark, sf_dir).filter(F.col("value") > 0)
     seq = ev.select(
         "user_id",
         F.col("value").cast("double").alias("v"),
@@ -1155,9 +1099,7 @@ def timeseries_hampel_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     count frames; the 7-element arrays are constant-size per row — no
     per-group full sort, no global pass. At 100 TB the window is the
     same per-user sessionized sort every sequence op here pays."""
-    ev = load_fixture(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
+    ev = purchase_events(spark, sf_dir)
     seq = ev.select(
         "user_id",
         "event_id",
@@ -1248,9 +1190,7 @@ def timeseries_hampel_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def window_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: one per-user window sort shared by all three frames
     — the standard sequence budget, no global pass."""
-    ev = load_fixture(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
+    ev = purchase_events(spark, sf_dir)
     seq = ev.select(
         "user_id",
         "event_id",
@@ -1335,16 +1275,11 @@ def window_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: one per-user window sort shared by the lag and the
     two trailing frames — the standard sequence budget, no global
     pass."""
-    ev = load_fixture(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
-    qcol = F.floor(F.col("value").cast("double") * F.lit(1000000.0) + F.lit(0.5)).cast(
-        "bigint"
-    )
+    ev = purchase_events(spark, sf_dir)
     seq = ev.select(
         "user_id",
         "event_id",
-        qcol.alias("q"),
+        "q",
         F.row_number()
         .over(Window.partitionBy("user_id").orderBy("ts", "event_id"))
         .alias("rn"),
