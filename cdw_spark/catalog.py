@@ -1,10 +1,11 @@
-"""Catalog management: register / create / drop / reset tables.
+"""Fixture catalog: the one read path for the driver's parquet fixture
+tables (TESTDATA.md), the event series derived from them that many queries
+share, and registration of the fixtures as temp views so the whole engine is
+queryable through ``spark.sql``.
 
-Mirrors /root/reference/create_tables.py (DROP IF EXISTS x7 then CREATE IF
-NOT EXISTS x7 — a full idempotent reset, create_tables.py:6-27,40-41) on the
-Spark session catalog, plus registration of the driver's parquet fixture
-tables (TESTDATA.md) as temp views so the whole engine is queryable through
-``spark.sql``.
+The reference's create_tables.py reset (DROP IF EXISTS x7, then CREATE x7)
+has no catalog counterpart here: the ELT writes parquet at paths, so its
+reset is the ``overwrite`` mode of each write (``cdw_spark.elt``).
 """
 
 from __future__ import annotations
@@ -16,7 +17,6 @@ from pyspark.sql import functions as F
 
 from .functions.numeric import micro
 from .plans.lineage import cut
-from .schemas import ALL_TABLES
 
 # Driver-generated fixture tables (/root/testdata/sf*/..., TESTDATA.md).
 FIXTURE_TABLES = (
@@ -95,28 +95,3 @@ def register_fixtures(
         df.createOrReplaceTempView(name)
         out[name] = df
     return out
-
-
-# --- reference DDL lifecycle (create_tables.py equivalents) ---------------
-
-
-def drop_tables(spark: SparkSession, names: tuple[str, ...] | None = None) -> None:
-    """DROP TABLE IF EXISTS for each table — create_tables.py:6-15."""
-    for name in names or tuple(ALL_TABLES):
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-
-
-def create_tables(spark: SparkSession, names: tuple[str, ...] | None = None) -> None:
-    """CREATE TABLE IF NOT EXISTS with the reference schemas
-    (sql_queries.py:24-118) as managed parquet tables."""
-    for name in names or tuple(ALL_TABLES):
-        schema = ALL_TABLES[name]
-        cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
-        spark.sql(f"CREATE TABLE IF NOT EXISTS {name} ({cols}) USING parquet")
-
-
-def reset(spark: SparkSession) -> None:
-    """Full reset: drop-then-create, idempotent — the create_tables.py main
-    (create_tables.py:30-43)."""
-    drop_tables(spark)
-    create_tables(spark)

@@ -4,11 +4,14 @@ as one module:
 
     python -m cdw_spark.elt --log-path DIR --song-path DIR --out DIR
 
-does config -> session -> catalog reset (create_tables.py:30-43) ->
-staging loads (etl.py:6-15) -> the five star-table transforms + writes
-(etl.py:17-27, insert order sql_queries.py:227). ``--skip-reset`` runs
-only the etl.py half; ``--fixed`` switches the documented quirk set
-(NULL songplay_id, weekday bug, ...) to the corrected variants.
+does config -> session -> staging loads (etl.py:6-15) -> the five
+star-table transforms + writes (etl.py:17-27, insert order
+sql_queries.py:227). By default each of the seven tables is reset: its
+write overwrites, which is the reference's DROP, CREATE, then INSERT
+(create_tables.py:30-43 before etl.py), so a rerun leaves one copy.
+``--skip-reset`` runs only the etl.py half: every write appends, and a
+rerun duplicates rows (quirk K6). ``--fixed`` switches the documented
+quirk set (NULL songplay_id, weekday bug, ...) to the corrected variants.
 
 Config file support mirrors the reference's dwh.cfg (configparser ini):
 an optional ``--config FILE`` with a ``[DATA]`` section supplying
@@ -48,13 +51,8 @@ def _parse_args(argv: list[str] | None) -> argparse.Namespace:
     ap.add_argument(
         "--skip-reset",
         action="store_true",
-        help="skip the create_tables.py half (drop+create of catalog tables)",
-    )
-    ap.add_argument(
-        "--mode",
-        default="append",
-        choices=("append", "overwrite"),
-        help="write mode; the reference INSERTs append (quirk K6)",
+        help="skip the create_tables.py half: append to the tables under --out "
+        "instead of replacing them (the reference's rerun, quirk K6)",
     )
     return ap.parse_args(argv)
 
@@ -77,7 +75,6 @@ def main(argv: list[str] | None = None) -> int:
         print(f"missing {', '.join(missing)} (flag or [DATA] config key)", file=sys.stderr)
         return 2
 
-    from .catalog import reset
     from .pipeline.elt import run_elt, run_elt_incremental
     from .session import get_spark
 
@@ -85,11 +82,9 @@ def main(argv: list[str] | None = None) -> int:
     if args.incremental:
         paths = run_elt_incremental(spark, log_path, song_path, out_dir)
     else:
-        if not args.skip_reset:
-            reset(spark)
         paths = run_elt(
             spark, log_path, song_path, out_dir,
-            faithful=not args.fixed, mode=args.mode,
+            faithful=not args.fixed, mode="append" if args.skip_reset else "overwrite",
         )
     for name, path in paths.items():
         n = spark.read.parquet(path).count()

@@ -7,9 +7,9 @@ staging writes, concurrently -> five DataFrame transforms -> the five
 layout-aware parquet writes, concurrently. INSERTs append (quirk K6) unless
 ``mode='overwrite'``.
 
-A full reset (create_tables.py) is ``cdw_spark.catalog.reset``; this module
-assumes tables may or may not exist, exactly like the reference assumes
-create_tables.py ran first.
+A full reset (create_tables.py) is ``mode='overwrite'``: each write
+replaces its table, the reference's DROP, CREATE, then INSERT. The tables
+may or may not exist beforehand.
 """
 
 from __future__ import annotations

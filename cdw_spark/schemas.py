@@ -1,11 +1,11 @@
-"""Explicit StructTypes for every table the reference declares.
+"""Explicit StructTypes for the staging tables the reference declares and
+for the raw Sparkify JSON they are loaded from.
 
-Source of truth: /root/reference/sql_queries.py:24-118 (CREATE TABLE DDL).
+Source of truth: /root/reference/sql_queries.py:24-62 (CREATE TABLE DDL).
 Type mapping per SURVEY.md §1.3:
-  BIGINT -> LongType, INTEGER -> IntegerType, SMALLINT -> ShortType,
-  VARCHAR -> StringType, DECIMAL(9) -> DecimalType(9,0) (scale 0 — the
-  rounding is load-bearing for the fact join, quirk K4),
-  TIMESTAMP -> TimestampType (session TZ pinned to UTC).
+  BIGINT -> LongType, INTEGER -> IntegerType, VARCHAR -> StringType,
+  DECIMAL(9) -> DecimalType(9,0) (scale 0 — the rounding is load-bearing
+  for the fact join, quirk K4).
 
 Redshift PRIMARY KEY / SORTKEY / DISTKEY are planner/layout hints, not
 constraints (never enforced); they map to physical layout (plans/layout.py),
@@ -18,11 +18,9 @@ from pyspark.sql.types import (
     DecimalType,
     IntegerType,
     LongType,
-    ShortType,
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 DEC9 = DecimalType(9, 0)
@@ -116,83 +114,3 @@ RAW_SONG_JSON = StructType(
         _f("year", LongType()),
     ]
 )
-
-# --- analytics layer (star schema) ---------------------------------------
-
-# /root/reference/sql_queries.py:64-76. songplay_id is declared PK but never
-# populated by the reference insert (quirk K1); we populate it (fixed mode)
-# or leave NULL (faithful mode) — see pipeline/sparkify.py.
-SONGPLAYS = StructType(
-    [
-        _f("songplay_id", LongType()),
-        _f("start_time", TimestampType(), nullable=False),
-        _f("user_id", StringType(), nullable=False),  # int->varchar implicit cast, quirk K7
-        _f("level", StringType(), nullable=False),
-        _f("song_id", StringType(), nullable=False),
-        _f("artist_id", StringType(), nullable=False),
-        _f("session_id", StringType(), nullable=False),  # quirk K7
-        _f("location", StringType()),
-        _f("user_agent", StringType()),
-    ]
-)
-
-# /root/reference/sql_queries.py:78-86
-USERS = StructType(
-    [
-        _f("user_id", IntegerType()),
-        _f("first_name", StringType()),
-        _f("last_name", StringType()),
-        _f("gender", StringType()),
-        _f("level", StringType()),
-    ]
-)
-
-# /root/reference/sql_queries.py:88-96
-SONGS = StructType(
-    [
-        _f("song_id", StringType()),
-        _f("title", StringType(), nullable=False),
-        _f("artist_id", StringType(), nullable=False),
-        _f("year", IntegerType(), nullable=False),
-        _f("duration", DEC9, nullable=False),
-    ]
-)
-
-# /root/reference/sql_queries.py:98-106
-ARTISTS = StructType(
-    [
-        _f("artist_id", StringType()),
-        _f("name", StringType()),
-        _f("location", StringType()),
-        _f("latitude", DEC9),
-        _f("longitude", DEC9),
-    ]
-)
-
-# /root/reference/sql_queries.py:108-118
-TIME = StructType(
-    [
-        _f("start_time", TimestampType()),
-        _f("hour", ShortType()),
-        _f("day", ShortType()),
-        _f("week", ShortType()),
-        _f("month", ShortType()),
-        _f("year", ShortType()),
-        _f("weekday", ShortType()),
-    ]
-)
-
-STAR_SCHEMA: dict[str, StructType] = {
-    "songplays": SONGPLAYS,
-    "users": USERS,
-    "songs": SONGS,
-    "artists": ARTISTS,
-    "time": TIME,
-}
-
-STAGING_SCHEMA: dict[str, StructType] = {
-    "staging_events": STAGING_EVENTS,
-    "staging_songs": STAGING_SONGS,
-}
-
-ALL_TABLES: dict[str, StructType] = {**STAGING_SCHEMA, **STAR_SCHEMA}

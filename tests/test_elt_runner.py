@@ -59,10 +59,7 @@ def test_elt_cli_end_to_end(data, tmp_path_factory, capsys):
 
     log_path, song_path = data
     out = str(tmp_path_factory.mktemp("cli_out"))
-    rc = main([
-        "--log-path", log_path, "--song-path", song_path,
-        "--out", out, "--mode", "overwrite",
-    ])
+    rc = main(["--log-path", log_path, "--song-path", song_path, "--out", out])
     assert rc == 0
     printed = capsys.readouterr().out
     for table in ("songplays", "users", "songs", "artists", "time"):
@@ -70,6 +67,26 @@ def test_elt_cli_end_to_end(data, tmp_path_factory, capsys):
 
     # missing required inputs -> usage error, not a traceback
     assert main(["--log-path", log_path]) == 2
+
+
+def test_elt_cli_rerun_resets_tables(data, tmp_path_factory, spark):
+    """A default CLI run resets before it loads, like ``python
+    create_tables.py && python etl.py``: run twice over the same input,
+    every table holds one copy, not two. ``--skip-reset`` keeps the
+    reference's append rerun (quirk K6)."""
+    from cdw_spark.elt import main
+
+    log_path, song_path = data
+    out = str(tmp_path_factory.mktemp("cli_rerun"))
+    args = ["--log-path", log_path, "--song-path", song_path, "--out", out]
+    assert main(args) == 0
+    users = spark.read.parquet(os.path.join(out, "users")).count()
+    assert main(args) == 0
+    assert spark.read.parquet(os.path.join(out, "staging_events")).count() == 800
+    assert spark.read.parquet(os.path.join(out, "users")).count() == users
+    assert main([*args, "--skip-reset"]) == 0
+    assert spark.read.parquet(os.path.join(out, "staging_events")).count() == 1600
+    assert spark.read.parquet(os.path.join(out, "users")).count() == 2 * users
 
 
 def test_elt_cli_config_file(data, tmp_path_factory, capsys):
@@ -83,7 +100,7 @@ def test_elt_cli_config_file(data, tmp_path_factory, capsys):
     cfg.write_text(
         f"[DATA]\nLOG_DATA='{log_path}'\nSONG_DATA='{song_path}'\nOUT_DIR={out}\n"
     )
-    rc = main(["--config", str(cfg), "--mode", "overwrite", "--skip-reset"])
+    rc = main(["--config", str(cfg), "--skip-reset"])
     assert rc == 0
     assert "songplays:" in capsys.readouterr().out
 
