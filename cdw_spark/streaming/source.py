@@ -220,7 +220,11 @@ def run_available_now(sdf: DataFrame, name: str, output_mode: str) -> DataFrame:
     deduplicate: a plan that reads the result twice (a self-join, a
     ``crossJoin`` with its own aggregate) fails analysis with "Failure when
     resolving conflicting references in Join". Cut the result first
-    (``plans.lineage.cut``) when it is read more than once."""
+    (``plans.lineage.cut``) when it is read more than once.
+
+    The sink's temp view is dropped before returning: the frame holds the
+    sink itself, so the rows live as long as the frame does, not for the
+    rest of the session."""
     spark = sdf.sparkSession
     qname = f"cdw_{name}_{next(_qid)}"
     # Memory-sink runs are throwaway replays: the checkpoint must be fresh
@@ -234,7 +238,9 @@ def run_available_now(sdf: DataFrame, name: str, output_mode: str) -> DataFrame:
     finally:
         # the memory sink holds the result; the checkpoint is throwaway
         shutil.rmtree(chk, ignore_errors=True)
-    return spark.table(qname)
+    result = spark.table(qname)
+    spark.catalog.dropTempView(qname)
+    return result
 
 
 def replay(sdf: DataFrame, handle: Callable[[DataFrame, int], None]) -> None:

@@ -555,6 +555,26 @@ def test_foreachbatch_replay_leaves_no_scratch(spark, sf_dir, tmp_path, monkeypa
     assert list(scratch.iterdir()) == []
 
 
+def test_memory_sink_leaves_no_temp_view(spark, sf_dir):
+    """``run_available_now`` drops its sink's temp view before returning,
+    so a session that runs many replays holds no sink rows beyond the
+    frames it keeps; each returned frame still reads its rows."""
+    from pyspark.sql import functions as F
+
+    from cdw_spark.catalog import load_fixture
+    from cdw_spark.streaming.source import events_stream, run_available_now
+
+    def counts():
+        sdf = events_stream(spark, sf_dir, n_files=4).groupBy("event_type").count()
+        return run_available_now(sdf, "view_probe", "complete")
+
+    first, second = counts(), counts()
+    assert not [t.name for t in spark.catalog.listTables() if t.name.startswith("cdw_")]
+    a, b = first.collect(), second.collect()
+    assert a and sorted(a) == sorted(b)
+    assert first.agg(F.sum("count")).first()[0] == load_fixture(spark, sf_dir, "events").count()
+
+
 def test_replay_into_failure_cleans_up(spark, sf_dir, tmp_path, monkeypatch):
     """A batch that raises fails the call loudly, and the failure path
     still removes the scratch root, stops the query and restores the
