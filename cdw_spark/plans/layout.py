@@ -7,7 +7,6 @@
 | SORTKEY col            | sortWithinPartitions(col) -> parquet row-group    |
 |                        | min/max stats -> scan-time range pruning          |
 | diststyle all          | broadcast() at join time (small dims)             |
-| STATUPDATE ON          | ANALYZE TABLE ... COMPUTE STATISTICS (CBO)        |
 
 At 100 TB the write layout is the difference between a co-located join and
 a full shuffle: writing fact tables bucketed/partitioned by their join key
@@ -41,7 +40,7 @@ REFERENCE_LAYOUTS: dict[str, TableLayout] = {
 }
 
 
-def apply_layout(df: DataFrame, layout: TableLayout, num_partitions: int | None = None) -> DataFrame:
+def apply_layout(df: DataFrame, layout: TableLayout) -> DataFrame:
     """Arrange a DataFrame per its declared layout before writing.
 
     distkey -> hash repartition (co-location); sortkey ->
@@ -52,45 +51,19 @@ def apply_layout(df: DataFrame, layout: TableLayout, num_partitions: int | None 
     if layout.replicate:
         out = out.coalesce(1)
     elif layout.distkey:
-        out = (
-            out.repartition(num_partitions, layout.distkey)
-            if num_partitions
-            else out.repartition(layout.distkey)
-        )
+        out = out.repartition(layout.distkey)
     if layout.sortkey:
         out = out.sortWithinPartitions(layout.sortkey)
     return out
 
 
-def write_table(
-    df: DataFrame,
-    name: str,
-    layout: TableLayout | None = None,
-    mode: str = "append",
-    path: str | None = None,
-) -> None:
-    """Write a table with its physical layout.
+def write_table(df: DataFrame, name: str, layout: TableLayout, mode: str, path: str) -> None:
+    """Write table ``name`` as parquet at ``path``, arranged by its layout.
 
     ``mode='append'`` mirrors the reference's INSERT semantics (quirk K6:
-    rerunning etl.py without a reset duplicates rows — faithful by default);
-    pass ``overwrite`` for the idempotent variant."""
-    layout = layout or REFERENCE_LAYOUTS.get(name) or TableLayout()
-    arranged = apply_layout(df, layout)
-    writer = arranged.write.mode(mode)
-    if path is not None:
-        writer.parquet(path)
-    else:
-        writer.saveAsTable(name)
-
-
-def analyze_table(spark: SparkSession, name: str, columns: list[str] | None = None) -> None:
-    """S7 STATUPDATE ON analogue (sql_queries.py:126,134): refresh CBO
-    statistics after load. AQE provides runtime stats regardless; this
-    feeds the static planner (join reordering, broadcast decisions)."""
-    if columns:
-        spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS FOR COLUMNS {', '.join(columns)}")
-    else:
-        spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS")
+    rerunning etl.py without a reset duplicates rows); ``overwrite`` is the
+    reset-then-insert variant."""
+    apply_layout(df, layout).write.mode(mode).parquet(path)
 
 
 def zorder_key(cols: list, bits: int = 10):
@@ -113,31 +86,6 @@ def zorder_key(cols: list, bits: int = 10):
             bit = F.shiftright(col.cast("long"), i).bitwiseAND(F.lit(1))
             z = z + (bit * F.lit(1 << (i * k + j))).cast("long")
     return z
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 10,
-    num_files: int = 8,
-    mode: str = "overwrite",
-) -> None:
-    """Write parquet clustered by the Z-order key of ``cols``:
-    repartitionByRange on the key splits the curve into contiguous chunks
-    (one per file), sortWithinPartitions orders row groups inside. Each
-    file then covers a small bounding box in every dimension, so scans
-    filtering on ANY of ``cols`` skip most files via footer min/max —
-    verified in tests/test_curate.py by reading the written footers."""
-    z = zorder_key(cols, bits).alias("_z")
-    (
-        df.withColumn("_z", z)
-        .repartitionByRange(num_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode(mode)
-        .parquet(path)
-    )
 
 
 def write_bucketed(
@@ -180,30 +128,3 @@ def ensure_clean_table_location(spark: SparkSession, name: str) -> None:
         loc = os.path.join(urlparse(warehouse).path or warehouse, name.lower())
         if os.path.isdir(loc):
             shutil.rmtree(loc, ignore_errors=True)
-
-
-def compact_files(
-    spark: SparkSession,
-    path: str,
-    target_rows_per_file: int,
-    out_path: str,
-) -> int:
-    """Small-file compaction (the OPTIMIZE half of Delta/Iceberg table
-    maintenance): rewrite a parquet directory into ceil(rows/target)
-    right-sized files. Small files are the chronic failure mode of
-    streaming/incremental sinks — every downstream scan pays a task and a
-    footer read per file, and at 100 TB a 10x file-count inflation is a
-    10x scheduler tax.
-
-    Row-count-based sizing here because the fixtures are tiny; the
-    production knob is bytes (spark.sql.files.maxPartitionBytes on read,
-    target file size on write) with the same repartition shape. Returns
-    the output file count. Content equality and file-count reduction are
-    asserted in tests/test_plans.py."""
-    df = spark.read.parquet(path)
-    n_rows = df.count()
-    n_files = max(1, -(-n_rows // target_rows_per_file))
-    df.repartition(n_files).write.mode("overwrite").parquet(out_path)
-    import os
-
-    return len([f for f in os.listdir(out_path) if f.endswith(".parquet")])

@@ -94,65 +94,6 @@ def test_decontaminate_sound_and_complete(spark, sf_dir):
         assert (did not in survivors) == contaminated, did
 
 
-def test_zorder_write_skips_more_files_than_single_sort(spark, sf_dir, tmp_path):
-    """The claim behind layout_zorder: range-partitioning on the Morton key
-    gives every file a tight min/max box on BOTH dimensions. Writing the
-    same rows sorted by partkey alone leaves each file spanning the full
-    suppkey range, so a suppkey band predicate prunes nothing; the
-    z-ordered layout must prune strictly more files (parquet footer
-    min/max, exactly what Spark's scan-level skipping reads)."""
-    import pyarrow.parquet as pq
-
-    from cdw_spark.plans.layout import write_zordered
-
-    # Two balanced 8-bit dimensions (z-order pays off when the interleaved
-    # widths are comparable; the raw fixture's suppkey spans 4 bits vs
-    # partkey's 8+, so at 16 files the curve never splits a suppkey bit).
-    li = (
-        load_fixture(spark, sf_dir, "lineitem")
-        .select(
-            (F.col("l_orderkey") % 256).alias("a"),
-            (F.col("l_partkey") % 256).alias("b"),
-        )
-    )
-    zdir, sdir = str(tmp_path / "zorder"), str(tmp_path / "sorted")
-    write_zordered(li, zdir, ["a", "b"], bits=8, num_files=16)
-    li.repartitionByRange(16, "a").sortWithinPartitions("a").write.mode(
-        "overwrite"
-    ).parquet(sdir)
-
-    def b_ranges(d):
-        import os
-
-        out = []
-        for f in os.listdir(d):
-            if not f.endswith(".parquet"):
-                continue
-            md = pq.read_metadata(os.path.join(d, f))
-            mins, maxs = [], []
-            for rg in range(md.num_row_groups):
-                col = next(
-                    md.row_group(rg).column(i)
-                    for i in range(md.num_columns)
-                    if md.row_group(rg).column(i).path_in_schema == "b"
-                )
-                mins.append(col.statistics.min)
-                maxs.append(col.statistics.max)
-            out.append((min(mins), max(maxs)))
-        return out
-
-    z_ranges, s_ranges = b_ranges(zdir), b_ranges(sdir)
-    lo, hi = min(m for m, _ in s_ranges), max(m for _, m in s_ranges)
-    band_lo, band_hi = lo, lo + (hi - lo) // 8  # narrow band on the 2nd dim
-
-    def pruned(ranges):
-        return sum(1 for mn, mx in ranges if mx < band_lo or mn > band_hi)
-
-    # a-sorted files each span the full b range (0 pruned); z-ordered files
-    # carry tight b boxes, so most fall outside the band.
-    assert pruned(z_ranges) > max(2, pruned(s_ranges)), (z_ranges, s_ranges)
-
-
 def test_pii_counts_match_injection(spark, sf_dir):
     """The synthetic corpus has no organic PII, so counts equal the
     injected amounts exactly: m=0 -> 1 email, m=1 -> 1 ip, m=2 -> 2

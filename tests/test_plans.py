@@ -81,23 +81,6 @@ def test_broadcast_small_dims(spark, sf_dir):
     assert "BroadcastHashJoin" in _plan(df)
 
 
-def test_analyze_table_records_stats(spark, sf_dir):
-    """S7 (STATUPDATE ON analog): ANALYZE TABLE must land row/size stats in
-    the catalog so the CBO sees them (SURVEY.md §2.1 S7, §4)."""
-    from cdw_spark.catalog import load_fixture
-    from cdw_spark.plans.layout import analyze_table, ensure_clean_table_location
-
-    ensure_clean_table_location(spark, "stats_probe")
-    load_fixture(spark, sf_dir, "region").write.mode("overwrite").saveAsTable(
-        "stats_probe"
-    )
-    analyze_table(spark, "stats_probe")
-    detail = spark.sql("DESCRIBE TABLE EXTENDED stats_probe").collect()
-    stats = [r for r in detail if r.col_name == "Statistics"]
-    assert stats and "rows" in stats[0].data_type, detail
-    spark.sql("DROP TABLE stats_probe")
-
-
 def test_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path_factory):
     """Partition-layout discipline: a column-partitioned parquet table must
     show PartitionFilters (not a data filter) for an equality predicate on
@@ -360,26 +343,6 @@ def test_aqe_skew_join_splits_hot_partitions(spark, sf_dir):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def test_compact_files_reduces_count_and_preserves_content(spark, tmp_path):
-    import os
-
-    from pyspark.sql import functions as F
-
-    from cdw_spark.plans.layout import compact_files
-
-    src = str(tmp_path / "fragmented")
-    # simulate a streaming sink's fragmentation: 64 files for 1000 rows
-    spark.range(1000).withColumn("v", F.col("id") * 2).repartition(64).write.parquet(src)
-    assert len([f for f in os.listdir(src) if f.endswith(".parquet")]) == 64
-
-    out = str(tmp_path / "compacted")
-    n = compact_files(spark, src, target_rows_per_file=500, out_path=out)
-    assert n == 2
-    a = spark.read.parquet(src).orderBy("id").collect()
-    b = spark.read.parquet(out).orderBy("id").collect()
-    assert a == b
 
 
 def test_phrase_search_prefilters_scan_before_explode(spark, sf_dir):
