@@ -612,6 +612,14 @@ def _knn_undirected_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
 
 
+def _knn_adjacency(edges: DataFrame) -> DataFrame:
+    """The symmetric adjacency ``(n, m)`` of undirected ``(a, b)`` edges:
+    each edge in both directions, ``a→b ∪ b→a``."""
+    return edges.select(F.col("a").alias("n"), F.col("b").alias("m")).unionAll(
+        edges.select(F.col("b").alias("n"), F.col("a").alias("m"))
+    )
+
+
 @register(
     "graph_knn_materialize",
     oracle=_KNN_EDGES_CTE
@@ -734,10 +742,7 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     # adj feeds three consumers (deg, both sides of the 2-hop join, reach
     # union); the cut keeps the symmetrized relation resident so
     # the consumers share one scan of the at-rest artifact.
-    adj = cut(
-        edges.select(F.col("a").alias("n"), F.col("b").alias("m"))
-        .unionAll(edges.select(F.col("b").alias("n"), F.col("a").alias("m")))
-    )
+    adj = cut(_knn_adjacency(edges))
     j1 = adj.select(F.col("n"), F.col("m").alias("mid"))
     j2 = adj.select(F.col("n").alias("mid"), F.col("m"))
     hop2 = j1.join(j2, "mid").filter(F.col("m") != F.col("n")).select("n", "m")
@@ -797,9 +802,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     global sort), ordered by ROUND(score, 9) with (a, b) tie-breaks —
     engine-independent."""
     edges = _knn_undirected_at_rest(spark, sf_dir)
-    adj = edges.select(F.col("a").alias("n"), F.col("b").alias("m")).unionAll(
-        edges.select(F.col("b").alias("n"), F.col("a").alias("m"))
-    )
+    adj = _knn_adjacency(edges)
     deg = adj.groupBy("n").agg(F.count(F.lit(1)).alias("d"))
     j1 = adj.select(F.col("n").alias("a"), F.col("m").alias("mid"))
     j2 = adj.select(F.col("n").alias("mid"), F.col("m").alias("b"))
@@ -1252,9 +1255,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     at-rest edge artifact."""
     emb = load_fixture(spark, sf_dir, "embeddings")
     edges = _knn_undirected_at_rest(spark, sf_dir)
-    adj = edges.select(F.col("a").alias("n"), F.col("b").alias("m")).unionAll(
-        edges.select(F.col("b").alias("n"), F.col("a").alias("m"))
-    )
+    adj = _knn_adjacency(edges)
     deg = adj.groupBy("n").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
     e1 = edges
     e2 = edges.select(F.col("a").alias("b"), F.col("b").alias("c"))
@@ -1638,9 +1639,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, anti-join against edges, TakeOrderedAndProject top-20 —
     no window, no global sort."""
     edges = _knn_undirected_at_rest(spark, sf_dir)
-    adj = edges.select(F.col("a").alias("n"), F.col("b").alias("m")).unionAll(
-        edges.select(F.col("b").alias("n"), F.col("a").alias("m"))
-    )
+    adj = _knn_adjacency(edges)
     deg = adj.groupBy("n").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
     j1 = adj.select(F.col("n").alias("a"), F.col("m").alias("mid"))
     j2 = adj.select(F.col("n").alias("mid"), F.col("m").alias("b"))
@@ -1714,10 +1713,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: degree-bounded edge relation (|V|*k rows), one
     degree aggregate, two broadcast degree joins, a single 1-row
     reduce — no window, no global sort, nothing quadratic."""
-    edges = _knn_undirected_at_rest(spark, sf_dir)
-    adj = edges.select(F.col("a").alias("n"), F.col("b").alias("m")).unionAll(
-        edges.select(F.col("b").alias("n"), F.col("a").alias("m"))
-    )
+    adj = _knn_adjacency(_knn_undirected_at_rest(spark, sf_dir))
     deg = adj.groupBy("n").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
     dn = deg.select(F.col("n"), F.col("d").alias("dj"))
     dm = deg.select(F.col("n").alias("m"), F.col("d").alias("dk"))
@@ -1801,10 +1797,7 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: frontier joins are degree-bounded (|V|*k^d rows at
     hop d, k~6 undirected), each deduplicated and anti-joined against
     nearer hops before expanding — top-20 via TakeOrderedAndProject."""
-    edges = _knn_undirected_at_rest(spark, sf_dir)
-    adj = edges.select(F.col("a").alias("n"), F.col("b").alias("m")).unionAll(
-        edges.select(F.col("b").alias("n"), F.col("a").alias("m"))
-    )
+    adj = _knn_adjacency(_knn_undirected_at_rest(spark, sf_dir))
     d1 = cut(adj.select(F.col("n").alias("src"), F.col("m").alias("dst")).distinct())
     a2 = adj.select(F.col("n").alias("dst"), F.col("m").alias("nxt"))
     d2 = cut(
@@ -1935,9 +1928,7 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 2-row reduce."""
     spark_ = spark
     edges = _knn_undirected_at_rest(spark, sf_dir)
-    adj = edges.select(F.col("a").alias("n"), F.col("b").alias("m")).unionAll(
-        edges.select(F.col("b").alias("n"), F.col("a").alias("m"))
-    )
+    adj = _knn_adjacency(edges)
     deg = adj.groupBy("n").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
     ks = spark_.createDataFrame([(4,), (6,)], "k int")
     club = cut(ks.join(deg, deg.d > ks.k).select("k", "n"))
