@@ -1,6 +1,6 @@
-"""Fixture catalog: the one read path for the driver's parquet fixture
-tables (TESTDATA.md), the event series derived from them that many queries
-share, and registration of the fixtures as temp views so the whole engine is
+"""Fixture catalog: the one read path for the parquet fixture tables
+(TESTDATA.md), the event series derived from them that many queries share,
+and registration of the fixtures as temp views so the whole engine is
 queryable through ``spark.sql``.
 
 The reference's create_tables.py reset (DROP IF EXISTS x7, then CREATE x7)

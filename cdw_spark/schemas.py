@@ -1,7 +1,7 @@
 """Explicit StructTypes for the staging tables the reference declares and
 for the raw Sparkify JSON they are loaded from.
 
-Source of truth: /root/reference/sql_queries.py:24-62 (CREATE TABLE DDL).
+Source of truth: the reference's sql_queries.py:24-62 (CREATE TABLE DDL).
 Type mapping per SURVEY.md §1.3:
   BIGINT -> LongType, INTEGER -> IntegerType, VARCHAR -> StringType,
   DECIMAL(9) -> DecimalType(9,0) (scale 0 — the rounding is load-bearing

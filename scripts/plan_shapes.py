@@ -3,7 +3,8 @@
 
 For every registered batch query at sf0.001 it counts the operators of
 ``cdw_spark.plans.shape.SHAPE_NODES`` in the AQE initial plan
-(``plans.shape.plan_shapes``), on a session built like the test suite's. ``tests/test_plan_hygiene.py``
+(``plans.shape.plan_shapes``), on the test suite's fixture directory and a
+session built like the suite's. ``tests/test_plan_hygiene.py``
 checks the registry against the record; rerun this when a change moves a
 shape on purpose, and review the diff.
 
@@ -23,12 +24,15 @@ sys.path.insert(0, REPO)
 from cdw_spark.plans.shape import plan_shapes  # noqa: E402
 from cdw_spark.registry import load_all  # noqa: E402
 from cdw_spark.session import get_spark  # noqa: E402
+from tests.conftest import SF_DIR  # noqa: E402
 
-SF_DIR = "/root/testdata/sf0.001"
 RECORD = os.path.join(REPO, "plans", "shapes_sf0.001.json")
 
 
 def main() -> int:
+    if os.path.basename(os.path.normpath(SF_DIR)) != "sf0.001":
+        print(f"the record is for sf0.001, not {SF_DIR}", file=sys.stderr)
+        return 2
     spark = get_spark(app_name="cdw_plan_shapes", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     specs = {n: s for n, s in load_all().items() if not n.startswith("stream_")}
