@@ -14,6 +14,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .functions.numeric import micro
 from .plans.lineage import cut
@@ -34,6 +35,34 @@ FIXTURE_TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# Parquet schemas inferred by this process, keyed on the file's identity
+# (abspath, size, mtime_ns), so a rewritten file is inferred again.
+_SCHEMAS: dict[tuple[str, int, int], StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema inferred once per file.
+    Inference reads the footer in a Spark job, one per read; a read with a
+    known schema fires none. Paths the local filesystem cannot stat (e.g.
+    ``s3a://``) are inferred on every read."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    key = (os.path.abspath(path), st.st_size, st.st_mtime_ns)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
+
+
+def forget_schemas() -> None:
+    """Drop every inferred fixture schema, so the next read of each file
+    infers again (``operators.artifacts.clear_all`` calls this)."""
+    _SCHEMAS.clear()
+
 
 def load_fixture(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table. Parquet scan: column pruning + predicate
@@ -46,7 +75,11 @@ def load_fixture(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (Spark 4 infers TIMESTAMP_NTZ, which functions like ``unix_millis``
     reject). Both are normalized to session-UTC TimestampType: under a UTC
     session the NTZ→LTZ cast is wall-clock-identical, which is exactly how
-    DuckDB reads the same parquet (naive timestamp), so oracles agree."""
+    DuckDB reads the same parquet (naive timestamp), so oracles agree.
+
+    The parquet schema is inferred on the first read of a file in this
+    process and passed explicitly after that (``_read_parquet``); the
+    normalization runs on top of either."""
     # Engine semantic (SURVEY.md §4): all timestamp arithmetic is UTC — the
     # reference's `TIMESTAMP 'epoch' + …` is UTC arithmetic. Pin the session
     # TZ here so results are correct even on a caller-built session.
@@ -54,11 +87,11 @@ def load_fixture(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     else:
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
     for col, dtype in df.dtypes:
         if dtype == "timestamp_ntz":
             df = df.withColumn(col, F.col(col).cast("timestamp"))

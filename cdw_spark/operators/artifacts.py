@@ -34,6 +34,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..catalog import forget_schemas
+
 # In-process builder serialization: the pid-suffixed tmp + atomic-rename
 # protocol is safe across PROCESSES, but two driver THREADS share a pid and
 # would write the same tmp dir concurrently (observed: FileNotFoundException
@@ -223,8 +225,10 @@ def clear_family(family: str) -> None:
 
 
 def clear_all() -> None:
-    """Drop the entire index store — bench.py runs this before its timed
-    loop in cold mode, so the one-time build cost of every *_materialize
-    op is ON the timed record instead of inherited from whatever state
-    the host happens to hold."""
+    """Drop the entire index store and the inferred fixture schemas —
+    bench.py runs this before its timed loop in cold mode, so the one-time
+    build cost of every *_materialize op (and each fixture's first schema
+    inference) is ON the timed record instead of inherited from whatever
+    state the host happens to hold."""
     shutil.rmtree(_store_base(), ignore_errors=True)
+    forget_schemas()
