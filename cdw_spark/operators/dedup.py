@@ -228,13 +228,13 @@ def minhash_near_duplicates(
     built ONLY for documents that appear in some candidate pair — for a
     mostly-unique corpus that is a tiny fraction (banding emits ~|true
     pairs| candidates), so verify cost scales with the duplicate rate,
-    not the corpus size. Persisted because it feeds both join sides.
-    MEMORY_AND_DISK: at 100 TB the candidate shingle table spills rather
-    than OOMing."""
-    from pyspark import StorageLevel
-
+    not the corpus size. The candidate pairs and the candidate shingle
+    table each feed two branches, so each is a lazy lineage cut, computed
+    once by the first action that reads it; a cut's blocks spill to disk,
+    so at 100 TB the shingle table spills rather than OOMing, and nothing
+    stays in the session's cache after the call."""
     sig = minhash_signatures(df, text_col, id_col, n)
-    cands = lsh_candidate_pairs(sig, id_col).persist(StorageLevel.MEMORY_AND_DISK)
+    cands = cut(lsh_candidate_pairs(sig, id_col), eager=False)
     cand_ids = (
         cands.select(F.col("id_a").alias(id_col))
         .union(cands.select(F.col("id_b").alias(id_col)))
@@ -245,9 +245,7 @@ def minhash_near_duplicates(
     # broadcast could exceed the 8 GB limit on a dup-heavy 100 TB corpus;
     # AQE still picks a broadcast build when the realized set is small.
     cand_docs = df.join(cand_ids, on=id_col, how="semi")
-    sh = _shingle_table(cand_docs, text_col, id_col, n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    sh = cut(_shingle_table(cand_docs, text_col, id_col, n), eager=False)
     return jaccard_verify(cands, cand_docs, text_col, id_col, n, threshold, shingle_tbl=sh)
 
 
@@ -755,8 +753,7 @@ def ngram_jaccard_pairs_prefix(
 
     # the shingle relation feeds FOUR consumers (doc counts, df counts,
     # the ranked prefix, and both exact-verify sides); persist so the
-    # Arrow shingling pass runs once, not once per reference (the
-    # minhash_near_duplicates precedent above)
+    # Arrow shingling pass runs once, not once per reference
     sh = _shingle_table(df, text_col, id_col, n).persist(
         StorageLevel.MEMORY_AND_DISK
     )

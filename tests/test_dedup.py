@@ -39,6 +39,21 @@ def test_minhash_jaccard_values_match_exact(docs):
     assert mh == ex  # verification recomputes exact jaccard -> identical
 
 
+def test_minhash_lsh_leaves_session_cache_empty(spark, sf_dir):
+    """``dedup_minhash_lsh`` still matches its oracle and leaves nothing in
+    the session's cache manager: its shared relations are lineage cuts,
+    not persisted Datasets that later queries would read in place of
+    their own plans."""
+    from cdw_spark.compare import compare_frames
+    from cdw_spark.registry import load_all
+
+    spec = load_all()["dedup_minhash_lsh"]
+    spark.catalog.clearCache()
+    res = compare_frames(spec.name, spec.fn(spark, sf_dir), spec.oracle, sf_dir)
+    assert res.ok, str(res)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_simhash_finds_near_dups(docs):
     """SimHash hamming<=3 pairs should substantially overlap the exact
     near-dup set (different similarity measure -> not equality, but the
