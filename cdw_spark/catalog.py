@@ -1,7 +1,14 @@
 """Fixture catalog: the one read path for the parquet fixture tables
-(TESTDATA.md), the event series derived from them that many queries share,
-and registration of the fixtures as temp views so the whole engine is
+(TESTDATA.md) and for the parquet the package writes itself, the event
+series derived from the fixtures that many queries share, and
+registration of the fixtures as temp views so the whole engine is
 queryable through ``spark.sql``.
+
+Every parquet read goes through ``read_parquet`` with a schema this
+process already knows, so it fires no Spark job. A fixture's schema is
+inferred on its first read; a table the package writes with
+``write_parquet`` (artifacts, replay sinks, the incremental ELT's tables)
+keeps the schema it was written with and is never inferred.
 
 The reference's create_tables.py reset (DROP IF EXISTS x7, then CREATE x7)
 has no catalog counterpart here: the ELT writes parquet at paths, so its
@@ -14,7 +21,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from .functions.numeric import micro
 from .plans.lineage import cut
@@ -35,33 +42,86 @@ FIXTURE_TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Parquet schemas inferred by this process, keyed on the file's identity
-# (abspath, size, mtime_ns), so a rewritten file is inferred again.
-_SCHEMAS: dict[tuple[str, int, int], StructType] = {}
+# Parquet schemas known to this process, per absolute path, each stamped
+# with the (size, mtime_ns) of the file or directory it was taken from: a
+# fixture's as inferred on its first read, a package-written table's as
+# written. A path whose stamp has moved since (rewritten by anything but
+# ``write_parquet``) is inferred again.
+_SCHEMAS: dict[str, tuple[tuple[int, int], StructType]] = {}
 
 
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` with the schema inferred once per file.
-    Inference reads the footer in a Spark job, one per read; a read with a
-    known schema fires none. Paths the local filesystem cannot stat (e.g.
-    ``s3a://``) are inferred on every read."""
+def _stamped(path: str) -> tuple[str, tuple[int, int]] | None:
+    """``(abspath, (size, mtime_ns))`` of a local file or directory, or
+    None for a path the local filesystem cannot stat (missing, or e.g.
+    ``s3a://``)."""
     try:
         st = os.stat(path)
     except OSError:
+        return None
+    return os.path.abspath(path), (st.st_size, st.st_mtime_ns)
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every field, array element and map value nullable: the
+    form a parquet read gives any schema, inferred or passed."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t.fields]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def remember_schema(path: str, schema: StructType) -> StructType:
+    """Record ``schema`` as the schema of the parquet at ``path`` as it
+    stands now (call it right after the write, or after the write's
+    directory was renamed into place). Returns it as a read gives it."""
+    read_form = _nullable(schema)
+    stamped = _stamped(path)
+    if stamped is not None:
+        _SCHEMAS[stamped[0]] = (stamped[1], read_form)
+    return read_form
+
+
+def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+    """``df.write.mode(mode).parquet(path)``, remembering the written
+    schema for ``read_parquet``. Appends keep the table's schema."""
+    df.write.mode(mode).parquet(path)
+    remember_schema(path, df.schema)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with a known schema where there is one.
+    Inference reads a footer in a Spark job, one per read; a read with a
+    known schema fires none. A path not written by ``write_parquet`` is
+    inferred once per stamp; one the local filesystem cannot stat is
+    inferred on every read (so a missing path raises ``PATH_NOT_FOUND``
+    as ``spark.read.parquet`` does)."""
+    stamped = _stamped(path)
+    if stamped is None:
         return spark.read.parquet(path)
-    key = (os.path.abspath(path), st.st_size, st.st_mtime_ns)
-    schema = _SCHEMAS.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        _SCHEMAS[key] = df.schema
-        return df
-    return spark.read.schema(schema).parquet(path)
+    key, stamp = stamped
+    known = _SCHEMAS.get(key)
+    if known is not None and known[0] == stamp:
+        return spark.read.schema(known[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (stamp, df.schema)
+    return df
 
 
-def forget_schemas() -> None:
-    """Drop every inferred fixture schema, so the next read of each file
-    infers again (``operators.artifacts.clear_all`` calls this)."""
-    _SCHEMAS.clear()
+def forget_schemas(root: str | None = None) -> None:
+    """Drop the known schemas, or only those of paths under ``root``, so
+    the next read of each path infers again
+    (``operators.artifacts.clear_all`` drops them all)."""
+    if root is None:
+        _SCHEMAS.clear()
+        return
+    prefix = os.path.join(os.path.abspath(root), "")
+    for key in [k for k in list(_SCHEMAS) if os.path.join(k, "").startswith(prefix)]:
+        _SCHEMAS.pop(key, None)
 
 
 def load_fixture(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -78,7 +138,7 @@ def load_fixture(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     DuckDB reads the same parquet (naive timestamp), so oracles agree.
 
     The parquet schema is inferred on the first read of a file in this
-    process and passed explicitly after that (``_read_parquet``); the
+    process and passed explicitly after that (``read_parquet``); the
     normalization runs on top of either."""
     # Engine semantic (SURVEY.md §4): all timestamp arithmetic is UTC — the
     # reference's `TIMESTAMP 'epoch' + …` is UTC arithmetic. Pin the session
@@ -87,11 +147,11 @@ def load_fixture(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = _read_parquet(spark, path)
+        df = read_parquet(spark, path)
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     else:
-        df = _read_parquet(spark, path)
+        df = read_parquet(spark, path)
     for col, dtype in df.dtypes:
         if dtype == "timestamp_ntz":
             df = df.withColumn(col, F.col(col).cast("timestamp"))

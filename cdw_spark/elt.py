@@ -75,6 +75,7 @@ def main(argv: list[str] | None = None) -> int:
         print(f"missing {', '.join(missing)} (flag or [DATA] config key)", file=sys.stderr)
         return 2
 
+    from .catalog import read_parquet
     from .pipeline.elt import run_elt, run_elt_incremental
     from .session import get_spark
 
@@ -87,7 +88,7 @@ def main(argv: list[str] | None = None) -> int:
             faithful=not args.fixed, mode="append" if args.skip_reset else "overwrite",
         )
     for name, path in paths.items():
-        n = spark.read.parquet(path).count()
+        n = read_parquet(spark, path).count()
         print(f"{name}: {n} rows -> {path}")
     return 0
 

@@ -22,6 +22,12 @@ the winner's ``_SUCCESS`` marker is re-checked and the loser's tmp is
 discarded; any OTHER rename failure (permissions, cross-device move via
 an env redirection) re-raises instead of silently discarding the build
 and then failing later with a misleading path-not-found.
+
+Schemas: every read of an artifact passes a schema this process knows
+(``catalog.read_parquet``), so none fires an inference job. A build
+remembers the schema it wrote, under the published path once the rename
+lands, and so does its summary; an artifact published by another process
+is inferred on this process's first read.
 """
 
 from __future__ import annotations
@@ -34,7 +40,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..catalog import forget_schemas
+from ..catalog import forget_schemas, read_parquet, remember_schema, write_parquet
 
 # In-process builder serialization: the pid-suffixed tmp + atomic-rename
 # protocol is safe across PROCESSES, but two driver THREADS share a pid and
@@ -157,11 +163,11 @@ def serve_at_rest(
                 base = os.path.dirname(d)
                 os.makedirs(base, exist_ok=True)
                 tmp = f"{d}.tmp{os.getpid()}"
-                build().write.mode("overwrite").parquet(tmp)
+                built = build()
+                write_parquet(built, tmp)
                 if summary is not None:
-                    summary(spark.read.parquet(tmp)).coalesce(1).write.mode(
-                        "overwrite"
-                    ).parquet(os.path.join(tmp, "_summary"))
+                    summ = summary(read_parquet(spark, tmp)).coalesce(1)
+                    write_parquet(summ, os.path.join(tmp, "_summary"))
                 try:
                     os.rename(tmp, d)
                 except OSError:
@@ -170,9 +176,13 @@ def serve_at_rest(
                         # not the lost-race case — surface the real failure
                         # instead of a later misleading path-not-found
                         raise
+                else:
+                    remember_schema(d, built.schema)
+                    if summary is not None:
+                        remember_schema(os.path.join(d, "_summary"), summ.schema)
                 _sweep_orphans(base, os.path.basename(d))
         _drop_key_lock(d)
-    return spark.read.parquet(d)
+    return read_parquet(spark, d)
 
 
 def serve_summary_at_rest(
@@ -205,17 +215,18 @@ def serve_summary_at_rest(
                     if name.startswith("_summary.tmp") and _tmp_is_abandoned(p, name):
                         shutil.rmtree(p, ignore_errors=True)
                 tmp = f"{sdir}.tmp{os.getpid()}"
-                summary(spark.read.parquet(d)).coalesce(1).write.mode(
-                    "overwrite"
-                ).parquet(tmp)
+                summ = summary(read_parquet(spark, d)).coalesce(1)
+                write_parquet(summ, tmp)
                 try:
                     os.rename(tmp, sdir)
                 except OSError:
                     shutil.rmtree(tmp, ignore_errors=True)
                     if not os.path.exists(os.path.join(sdir, "_SUCCESS")):
                         raise
+                else:
+                    remember_schema(sdir, summ.schema)
         _drop_key_lock(sdir)
-    return spark.read.parquet(sdir)
+    return read_parquet(spark, sdir)
 
 
 def clear_family(family: str) -> None:
@@ -225,7 +236,7 @@ def clear_family(family: str) -> None:
 
 
 def clear_all() -> None:
-    """Drop the entire index store and the inferred fixture schemas —
+    """Drop the entire index store and every known parquet schema —
     bench.py runs this before its timed loop in cold mode, so the one-time
     build cost of every *_materialize op (and each fixture's first schema
     inference) is ON the timed record instead of inherited from whatever

@@ -17,6 +17,7 @@ from pyspark.sql.window import Window
 
 from ..functions.text import shingles
 from ..plans.lineage import cut
+from ..plans.local import local_frame
 
 # ---------------------------------------------------------------------------
 # Benchmark decontamination
@@ -629,8 +630,8 @@ def bpe_train_merges(
             "concat(acc, array(t)))), ' ')"
         )
         words = cut(words.withColumn("sym", F.expr(fold)))
-    return spark.createDataFrame(
-        merges, "rank int, left string, right string, merged string, pair_count bigint"
+    return local_frame(
+        spark, merges, "rank int, left string, right string, merged string, pair_count bigint"
     )
 
 

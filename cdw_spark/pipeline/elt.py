@@ -10,6 +10,11 @@ layout-aware parquet writes, concurrently. INSERTs append (quirk K6) unless
 A full reset (create_tables.py) is ``mode='overwrite'``: each write
 replaces its table, the reference's DROP, CREATE, then INSERT. The tables
 may or may not exist beforehand.
+
+Every table is written through ``catalog.write_parquet`` (the layout
+writes too), which remembers the written schema, so every read back of a
+table this process wrote (``catalog.read_parquet``) fires no inference
+job, like the reference's DDL, which fixes each schema before COPY.
 """
 
 from __future__ import annotations
@@ -19,9 +24,11 @@ from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from functools import partial
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.util import inheritable_thread_target
 
+from ..catalog import read_parquet, write_parquet
 from ..plans.layout import REFERENCE_LAYOUTS, write_table
 from ..plans.lineage import cut
 from ..sources.json_loader import load_staging_events, load_staging_songs
@@ -39,6 +46,20 @@ from .sparkify import (
 # staging, so the writes run concurrently; the order only fixes the order
 # of the returned paths.
 INSERT_ORDER = ("songplays", "users", "songs", "artists", "time")
+
+
+def _read_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
+    """Read a parquet table that may not exist yet. ONLY a missing path
+    returns None — a real read error (corruption, permissions) propagates,
+    because falling back to "pretend it's the first batch" would overwrite
+    previously merged data with one batch's slice (a silent destructive
+    reset)."""
+    try:
+        return read_parquet(spark, path)
+    except AnalysisException as e:
+        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
+            return None
+        raise
 
 
 def _concurrently(spark: SparkSession, *writes: Callable[[], None]) -> None:
@@ -93,8 +114,8 @@ def run_elt(
     # tables, not the raw JSON — and at scale re-reading columnar staging
     # beats re-parsing JSON five times. The schema is the one just
     # written, so the read needs no inference job.
-    events = spark.read.schema(staging["staging_events"].schema).parquet(paths["staging_events"])
-    songs = spark.read.schema(staging["staging_songs"].schema).parquet(paths["staging_songs"])
+    events = read_parquet(spark, paths["staging_events"])
+    songs = read_parquet(spark, paths["staging_songs"])
 
     star = transform_all(events, songs, faithful=faithful)
     star_paths = {name: os.path.join(out_dir, name) for name in INSERT_ORDER}
@@ -152,21 +173,6 @@ def run_elt_incremental(
     synthetic surrogate and is not compared across runs
     (monotonically_increasing_id is partition-dependent, K1's fixed
     variant)."""
-    from pyspark.errors import AnalysisException
-
-    def _read_if_exists(path: str) -> DataFrame | None:
-        """Read a parquet table that may not exist yet. ONLY a missing
-        path returns None — a real read error (corruption, permissions)
-        propagates, because falling back to "pretend it's the first
-        batch" would overwrite previously merged data with one batch's
-        slice (a silent destructive reset)."""
-        try:
-            return spark.read.parquet(path)
-        except AnalysisException as e:
-            if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-                return None
-            raise
-
     staging, paths = load_staging(spark, log_path, song_path, out_dir, "append")
     paths |= {name: os.path.join(out_dir, name) for name in INSERT_ORDER}
     events = staging["staging_events"]
@@ -178,32 +184,32 @@ def run_elt_incremental(
     # ones. The new-batch slice alone is still used for the song/artist
     # dim merges (the anti-join append makes that equivalent and cheaper).
     songs_new = staging["staging_songs"]
-    songs_all = spark.read.schema(songs_new.schema).parquet(paths["staging_songs"])
+    songs_all = read_parquet(spark, paths["staging_songs"])
 
     def _append_songplays() -> None:
         # fact: append-only, joined against the full accumulated catalog
-        build_songplays(events, songs_all, faithful=False).write.mode("append").parquet(
-            paths["songplays"]
+        write_parquet(
+            build_songplays(events, songs_all, faithful=False), paths["songplays"], "append"
         )
 
     def _upsert_users() -> None:
         # max-version upsert via the persisted versioned form
         uv_path = os.path.join(out_dir, "_users_versioned")
         new_v = users_latest_versioned(events)
-        old_v = _read_if_exists(uv_path)
+        old_v = _read_if_exists(spark, uv_path)
         all_v = old_v.unionByName(new_v) if old_v is not None else new_v
         # cut the lineage: the overwrites below replace the files it reads
         latest = cut(latest_user_versions(all_v))
-        latest.write.mode("overwrite").parquet(uv_path)
-        latest.drop("_v_ts", "_v_sid").write.mode("overwrite").parquet(paths["users"])
+        write_parquet(latest, uv_path)
+        write_parquet(latest.drop("_v_ts", "_v_sid"), paths["users"])
 
     def _append_new_distinct(new_df: DataFrame, name: str) -> None:
         rows = new_df.distinct()
-        old = _read_if_exists(paths[name])
+        old = _read_if_exists(spark, paths[name])
         if old is not None:
             same = [rows[c].eqNullSafe(old[c]) for c in rows.columns]
             rows = rows.join(old, on=same, how="left_anti")
-        rows.write.mode("append").parquet(paths[name])
+        write_parquet(rows, paths[name], "append")
 
     _concurrently(
         spark,

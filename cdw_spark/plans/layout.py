@@ -20,6 +20,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..catalog import write_parquet
+
 
 # Layouts declared by the reference DDL (file:line in sql_queries.py).
 @dataclass(frozen=True)
@@ -62,8 +64,10 @@ def write_table(df: DataFrame, name: str, layout: TableLayout, mode: str, path: 
 
     ``mode='append'`` mirrors the reference's INSERT semantics (quirk K6:
     rerunning etl.py without a reset duplicates rows); ``overwrite`` is the
-    reset-then-insert variant."""
-    apply_layout(df, layout).write.mode(mode).parquet(path)
+    reset-then-insert variant. The write remembers its schema
+    (``catalog.write_parquet``), so reading the table back fires no
+    inference job."""
+    write_parquet(apply_layout(df, layout), path, mode)
 
 
 def zorder_key(cols: list, bits: int = 10):

@@ -23,13 +23,17 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..catalog import read_parquet, write_parquet
 from ..operators.curate import merge_latest_state
 from .source import replay, replay_scratch
 
 
 class VersionedParquetTable:
     """Tiny copy-on-write versioned table: _v<N> directories plus a
-    _LATEST pointer file written last (atomic publish on POSIX rename)."""
+    _LATEST pointer file written last (atomic publish on POSIX rename).
+    A version this process published is read with the schema it was
+    written with (``catalog.write_parquet``), so reading it fires no
+    inference job."""
 
     def __init__(self, root: str):
         self.root = root
@@ -52,12 +56,12 @@ class VersionedParquetTable:
         path = os.path.join(self.root, f"_v{v}")
         if not os.path.isdir(path):
             raise ValueError(f"version {v} does not exist under {self.root}")
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
 
     def publish(self, df: DataFrame) -> int:
         v = self.latest_version() + 1
         path = os.path.join(self.root, f"_v{v}")
-        df.write.mode("overwrite").parquet(path)
+        write_parquet(df, path)
         tmp = os.path.join(self.root, "_LATEST.tmp")
         with open(tmp, "w") as f:
             f.write(str(v))

@@ -22,9 +22,12 @@ only place a stream is started and awaited:
   scratch root: it returns one sink materialized off that root and
   removes the root on success and on failure.
 
-A staged directory carries its file-stream schema in ``_SCHEMA.json``
-beside the ``_STAGED`` marker, so opening a staged stream fires no Spark
-job (the file source ignores ``_``-prefixed files).
+Where each read's schema comes from, so that none fires an inference job:
+a staged directory carries its file-stream schema in ``_SCHEMA.json``
+beside the ``_STAGED`` marker (the file source ignores ``_``-prefixed
+files), taken from the frame the staging wrote; a replay sink is written
+and read through ``catalog.write_parquet`` / ``read_parquet``, so its
+per-batch reads and the result read use the schema it was seeded with.
 
 Memory sinks and throwaway scratch roots serve bounded replays — the
 production sink is ``writeStream.format("parquet")`` / kafka with a
@@ -46,6 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import StructType
 
+from ..catalog import forget_schemas, load_fixture, read_parquet, remember_schema, write_parquet
 from ..plans.lineage import cut
 
 _qid = itertools.count()
@@ -59,12 +63,13 @@ def _is_staged(out: str) -> bool:
     return all(os.path.exists(os.path.join(out, f)) for f in ("_STAGED", _SCHEMA))
 
 
-def _store_schema(spark: SparkSession, out: str) -> None:
-    """Store the batch-read schema of the files just staged in ``out``:
-    the schema ``staged_stream`` opens the stream with, taken once here
-    instead of by an inference job per stream."""
+def _store_schema(out: str, written: StructType) -> None:
+    """Store the schema of the files just staged in ``out``, taken from
+    ``written``, the schema of the frame they were written from, in the
+    form a read gives it: the schema ``staged_stream`` opens the stream
+    with, kept here instead of inferred by a job per stream."""
     with open(os.path.join(out, _SCHEMA), "w") as f:
-        f.write(spark.read.parquet(out).schema.json())
+        f.write(remember_schema(out, written).json())
 
 
 def replay_scratch(prefix: str) -> str:
@@ -129,8 +134,6 @@ def stage_ordered_files(
     earliest rows; file mtimes are then stamped in that order because the
     file stream source processes oldest-mtime-first (latestFirst=false).
     """
-    from ..catalog import load_fixture
-
     # Engine semantic (SURVEY.md §4): timestamp arithmetic is UTC.
     # load_fixture pins the session TZ, but only runs on a staging cache
     # MISS — pin unconditionally so a caller-built non-UTC session gets
@@ -151,7 +154,7 @@ def stage_ordered_files(
         base = 1_700_000_000
         for i, p in enumerate(parts):
             os.utime(os.path.join(out, p), (base + i * 60, base + i * 60))
-        _store_schema(spark, out)
+        _store_schema(out, df.schema)
         with open(os.path.join(out, "_STAGED"), "w") as f:
             f.write("\n".join(parts))
     return out
@@ -270,8 +273,12 @@ def replay_into(
 
     ``sinks`` maps each parquet sink's name to an empty DataFrame seeding
     its schema; ``dirs`` maps the same names to their paths under one
-    scratch root. The result is materialized (executor-block storage) so
-    it outlives the root, which is removed on success and on failure.
+    scratch root. Seeds are written with ``catalog.write_parquet`` and the
+    result is read with ``catalog.read_parquet``; a body that appends with
+    the one and reads with the other reads each sink with its written
+    schema, with no inference job. The result is materialized (executor-block storage) so it outlives the
+    root, which is removed, with its remembered schemas, on success and on
+    failure.
     Production deployments keep sinks and checkpoint — exactly-once resume
     depends on them; a throwaway replay must not leak a directory per call.
     """
@@ -280,11 +287,12 @@ def replay_into(
     try:
         dirs = {name: os.path.join(root, name) for name in sinks}
         for name, empty in sinks.items():
-            empty.write.mode("overwrite").parquet(dirs[name])
+            write_parquet(empty, dirs[name])
         replay(sdf, lambda batch, _id: handle(batch, dirs))
-        return cut(spark.read.parquet(dirs[result]))
+        return cut(read_parquet(spark, dirs[result]))
     finally:
         shutil.rmtree(root, ignore_errors=True)
+        forget_schemas(root)
 
 
 def stage_exact_quarters(
@@ -298,8 +306,6 @@ def stage_exact_quarters(
     n_rows); staged once per (sf_dir, table, n_files), mtime-ordered so
     the file source replays quarters in id order. ``_STAGED`` stores
     n_rows, so a staged table is served without a Spark job."""
-    from ..catalog import load_fixture
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     key = f"{sf_dir.strip('/').replace('/', '_')}__{table}__q{n_files}"
     out = os.path.join(_STAGE_ROOT, key)
@@ -343,7 +349,7 @@ def stage_exact_quarters(
             os.path.join(out, f"quarter-{q}.parquet"),
             (base + q * 60, base + q * 60),
         )
-    _store_schema(spark, out)
+    _store_schema(out, df.schema)
     with open(done, "w") as f:
         f.write(str(n_rows))
     return out, n_rows

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from ..catalog import daily_purchase_totals, load_fixture, purchase_events
 from ..functions.numeric import micro
 from ..plans.lineage import cut
+from ..plans.local import local_frame
 from ..registry import register
 
 DEC = "decimal(18,2)"
@@ -4055,13 +4056,9 @@ def profile_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     counted = binned.groupBy("bin", "st").agg(F.count(F.lit(1)).alias("n"))
     grid = (
-        load_fixture(spark, sf_dir, "orders")
-        .sparkSession.range(10)
+        spark.range(10)
         .select(F.col("id").alias("bin"))
-        .crossJoin(
-            load_fixture(spark, sf_dir, "orders")
-            .sparkSession.createDataFrame([("F",), ("O",)], "st string")
-        )
+        .crossJoin(local_frame(spark, [("F",), ("O",)], "st string"))
     )
     cnt = grid.join(counted, ["bin", "st"], "left").select(
         "bin", "st", F.coalesce("n", F.lit(0)).cast("bigint").alias("n")
@@ -7188,7 +7185,7 @@ def timeseries_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(Window.partitionBy("user_id").orderBy("ts", "event_id"))
         .alias("rn"),
     )
-    sc = seq.sparkSession.createDataFrame([(4,), (8,), (16,)], "s int")
+    sc = local_frame(spark, [(4,), (8,), (16,)], "s int")
     blk = seq.crossJoin(F.broadcast(sc)).withColumn("b", F.expr("(rn - 1) div s"))
     wb = (
         Window.partitionBy("user_id", "s", "b")

@@ -28,6 +28,7 @@ from ..operators.curate import (
     tokenize_to_vocab_ids,
 )
 from ..plans.lineage import cut
+from ..plans.local import local_frame
 from ..registry import register
 
 # Word 4-gram shingles in DuckDB, mirroring functions.text.shingles(n=4)
@@ -2762,7 +2763,7 @@ def sample_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
         pick = sorted(winners, key=lambda w: (-w["dmin"], w["_id"]))[0]
         selected.append((int(pick["_id"]), [int(v) for v in pick["qv"]]))
         out.append((r, int(pick["_id"]), int(pick["dmin"])))
-    return spark.createDataFrame(out, "sel_rank int, vec_id bigint, dmin bigint")
+    return local_frame(spark, out, "sel_rank int, vec_id bigint, dmin bigint")
 
 
 @register(

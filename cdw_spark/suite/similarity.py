@@ -24,6 +24,7 @@ from ..operators.similarity import (
     signature_oracle_sql,
 )
 from ..plans.lineage import cut
+from ..plans.local import local_frame
 from ..registry import register
 
 _COS = (
@@ -440,7 +441,7 @@ def _knn_directed_top3(emb: DataFrame, w_bits: int | None = None) -> DataFrame:
     band_masks = [(0, m) for m in hamming_ball_masks(b1, r1)] + [
         (1, m) for m in hamming_ball_masks(b2, r2)
     ]
-    masks_df = spark.createDataFrame(band_masks, "band int, mask long")
+    masks_df = local_frame(spark, band_masks, "band int, mask long")
     band_key = F.when(
         F.col("band") == 0, F.col("psig").bitwiseAND(F.lit(low))
     ).otherwise(F.shiftright("psig", b1))
@@ -1926,11 +1927,10 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: the shared degree-bounded graph build, one degree
     aggregate, broadcast club membership joined to the edge relation,
     a 2-row reduce."""
-    spark_ = spark
     edges = _knn_undirected_at_rest(spark, sf_dir)
     adj = _knn_adjacency(edges)
     deg = adj.groupBy("n").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    ks = spark_.createDataFrame([(4,), (6,)], "k int")
+    ks = local_frame(spark, [(4,), (6,)], "k int")
     club = cut(ks.join(deg, deg.d > ks.k).select("k", "n"))
     c1 = club.select(F.col("k"), F.col("n").alias("a"))
     c2 = club.select(F.col("k"), F.col("n").alias("b"))

@@ -27,7 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import read_parquet, write_parquet
 from ..plans.lineage import cut
+from ..plans.local import local_frame
 from ..registry import register
 from ..streaming.source import events_stream, run_available_now
 from ..streaming.stateful import sessionize
@@ -582,27 +584,27 @@ def stream_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import dedup as dedup_ops
     from ..streaming.source import replay_into, table_stream
 
-    empty_docs = spark.createDataFrame([], "doc_id long, text string")
+    empty_docs = local_frame(spark, [], "doc_id long, text string")
     # the signature seed runs the Arrow pass over zero rows — schema only
     sinks = {
         "corpus": empty_docs,
         "sigs": dedup_ops.minhash_signatures(empty_docs),
-        "pairs": spark.createDataFrame([], "id_a long, id_b long, jaccard double"),
+        "pairs": local_frame(spark, [], "id_a long, id_b long, jaccard double"),
     }
 
     def handle(batch, dirs):
         b = cut(batch.select("doc_id", "text"))
-        old = spark.read.parquet(dirs["corpus"])
-        old_sigs = spark.read.parquet(dirs["sigs"])
+        old = read_parquet(spark, dirs["corpus"])
+        old_sigs = read_parquet(spark, dirs["sigs"])
         # the ONLY signature pass in the batch: |batch| docs, checkpointed
         # so the index append below reuses it instead of re-running Arrow
         sig_b = cut(dedup_ops.minhash_signatures(b))
         pairs = dedup_ops.minhash_near_duplicates_incremental(
             old, b, threshold=0.6, old_sigs=old_sigs, new_sigs=sig_b
         )
-        pairs.write.mode("append").parquet(dirs["pairs"])
-        sig_b.write.mode("append").parquet(dirs["sigs"])
-        b.write.mode("append").parquet(dirs["corpus"])
+        write_parquet(pairs, dirs["pairs"], "append")
+        write_parquet(sig_b, dirs["sigs"], "append")
+        write_parquet(b, dirs["corpus"], "append")
 
     sdf = table_stream(spark, sf_dir, "documents", order_col="doc_id", n_files=4)
     return replay_into(sdf.select("doc_id", "text"), sinks, handle, "pairs")
@@ -686,16 +688,16 @@ def stream_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sinks = {
         "vectors": enrich(
-            spark.createDataFrame([], "vec_id long, embedding array<double>")
+            local_frame(spark, [], "vec_id long, embedding array<double>")
         ),
-        "dups": spark.createDataFrame(
-            [], "dup_id long, keep_id long, cluster int, cosine double"
+        "dups": local_frame(
+            spark, [], "dup_id long, keep_id long, cluster int, cosine double"
         ),
     }
 
     def handle(batch, dirs):
         eb = cut(enrich(batch.select("vec_id", "embedding")))
-        old = spark.read.parquet(dirs["vectors"])
+        old = read_parquet(spark, dirs["vectors"])
         allv = old.unionByName(eb)
         # slim candidate join on (id, cluster); vectors fetched post-match
         dup_ids = eb.select(
@@ -726,10 +728,10 @@ def stream_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("cluster").cast("int").alias("cluster"),
             F.round(F.min_by("cos", "keep_id"), 6).alias("cosine"),
         )
-        res.select("dup_id", "keep_id", "cluster", "cosine").write.mode(
-            "append"
-        ).parquet(dirs["dups"])
-        eb.write.mode("append").parquet(dirs["vectors"])
+        write_parquet(
+            res.select("dup_id", "keep_id", "cluster", "cosine"), dirs["dups"], "append"
+        )
+        write_parquet(eb, dirs["vectors"], "append")
 
     sdf = table_stream(spark, sf_dir, "embeddings", order_col="vec_id", n_files=4)
     return replay_into(sdf.select("vec_id", "embedding"), sinks, handle, "dups")
@@ -788,7 +790,7 @@ def stream_kmv_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("event_type", "user_id", "h")
         )
 
-    syn = spark.createDataFrame([], "event_type string, user_id long, h double")
+    syn = local_frame(spark, [], "event_type string, user_id long, h double")
 
     def handle(batch: DataFrame, _batch_id: int) -> None:
         nonlocal syn
@@ -990,7 +992,7 @@ def stream_bloom_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     staged, n_rows = stage_exact_quarters(spark, sf_dir, "documents", "doc_id", 4)
     words = [0] * (BLOOM_BITS // 64)  # the filter over the batches so far
-    keys = spark.createDataFrame([], "key long")  # exact key set, audit only
+    keys = local_frame(spark, [], "key long")  # exact key set, audit only
     audit: dict[int, list[tuple]] = {}  # micro-batch id -> its audit rows
 
     # Every column but the filter literal is built once, here: each
@@ -1045,7 +1047,8 @@ def stream_bloom_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         audit[batch_id] = [tuple(r[:5]) for r in rows]
 
     replay(staged_stream(spark, staged).select("doc_id"), handle)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [r for i in sorted(audit) for r in audit[i]],
         "batch_id int, n_rows long, n_dup_exact long, n_pass_bloom long,"
         " n_false_positive long",

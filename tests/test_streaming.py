@@ -760,8 +760,9 @@ def test_bloom_door_edge_inputs_match_oracle(spark, tmp_path_factory, n):
 
 def test_bloom_door_job_budget(spark, sf_dir, monkeypatch):
     """Per micro-batch the door runs one aggregate action and one cut of
-    the key set, so a four-batch call stays within 40 jobs (the
-    parquet-state door fired 73)."""
+    the key set, so a four-batch call stays within 23 jobs (the
+    parquet-state door fired 73; with its key-set seed and audit result
+    built by ``createDataFrame(list)``, 27)."""
     from cdw_spark.streaming.source import stage_exact_quarters
 
     stage_exact_quarters(spark, sf_dir, "documents", "doc_id", 4)
@@ -778,6 +779,34 @@ def test_bloom_door_job_budget(spark, sf_dir, monkeypatch):
     df, jobs = _jobs_fired(
         spark, lambda: SPECS["stream_bloom_dedup_ingest"].fn(spark, sf_dir)
     )
-    assert jobs <= 40
+    assert jobs <= 23
     assert calls == {"collect": 4, "localCheckpoint": 4}
     assert df.count() == 4
+
+
+def test_bloom_first_batch_runs_no_more_tasks_than_the_next(spark, sf_dir):
+    """Batch 0 joins its rows against the empty key-set seed. As a
+    ``LocalRelation`` the seed's statistics say it is empty, so the join is
+    pruned and batch 0 runs no more tasks than batch 1, which joins
+    against a real key set (seeded by ``createDataFrame(list)``, batch 0
+    shuffled the join and ran 21 tasks against 14). Tasks are counted per
+    micro-batch from the ``batch = N`` line Spark puts in the description
+    of every job a micro-batch runs."""
+    from cdw_spark.streaming.source import stage_exact_quarters
+
+    stage_exact_quarters(spark, sf_dir, "documents", "doc_id", 4)
+    _jobs_fired(spark, lambda: SPECS["stream_bloom_dedup_ingest"].fn(spark, sf_dir))
+    sc = spark.sparkContext
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    lo = max(tracker.getJobIdsForGroup("call-before"))
+    hi = max(tracker.getJobIdsForGroup("call-after"))
+    tasks: dict[int, int] = {}
+    for j in range(lo + 1, hi):
+        job = store.job(j)
+        desc = job.description()
+        for line in desc.get().splitlines() if desc.isDefined() else []:
+            if line.startswith("batch = "):
+                b = int(line.removeprefix("batch = "))
+                tasks[b] = tasks.get(b, 0) + job.numTasks()
+    assert sorted(tasks) == [0, 1, 2, 3]
+    assert tasks[0] <= tasks[1]
