@@ -61,29 +61,28 @@ def _stamped(path: str) -> tuple[str, tuple[int, int]] | None:
     return os.path.abspath(path), (st.st_size, st.st_mtime_ns)
 
 
-def _nullable(t: DataType) -> DataType:
-    """``t`` with every field, array element and map value nullable: the
-    form a parquet read gives any schema, inferred or passed."""
-    if isinstance(t, StructType):
+def read_back_schema(written: DataType) -> DataType:
+    """The schema a parquet read gives files written with ``written``:
+    every field, array element and map value nullable, whether the read
+    infers the schema or is passed it."""
+    if isinstance(written, StructType):
         return StructType(
-            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t.fields]
+            [StructField(f.name, read_back_schema(f.dataType), True, f.metadata) for f in written]
         )
-    if isinstance(t, ArrayType):
-        return ArrayType(_nullable(t.elementType), True)
-    if isinstance(t, MapType):
-        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
-    return t
+    if isinstance(written, ArrayType):
+        return ArrayType(read_back_schema(written.elementType), True)
+    if isinstance(written, MapType):
+        return MapType(read_back_schema(written.keyType), read_back_schema(written.valueType), True)
+    return written
 
 
-def remember_schema(path: str, schema: StructType) -> StructType:
+def remember_schema(path: str, schema: StructType) -> None:
     """Record ``schema`` as the schema of the parquet at ``path`` as it
     stands now (call it right after the write, or after the write's
-    directory was renamed into place). Returns it as a read gives it."""
-    read_form = _nullable(schema)
+    directory was renamed into place)."""
     stamped = _stamped(path)
     if stamped is not None:
-        _SCHEMAS[stamped[0]] = (stamped[1], read_form)
-    return read_form
+        _SCHEMAS[stamped[0]] = (stamped[1], read_back_schema(schema))
 
 
 def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:

@@ -49,7 +49,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import StructType
 
-from ..catalog import forget_schemas, load_fixture, read_parquet, remember_schema, write_parquet
+from ..catalog import (
+    forget_schemas,
+    load_fixture,
+    read_back_schema,
+    read_parquet,
+    write_parquet,
+)
 from ..plans.lineage import cut
 
 _qid = itertools.count()
@@ -69,7 +75,7 @@ def _store_schema(out: str, written: StructType) -> None:
     form a read gives it: the schema ``staged_stream`` opens the stream
     with, kept here instead of inferred by a job per stream."""
     with open(os.path.join(out, _SCHEMA), "w") as f:
-        f.write(remember_schema(out, written).json())
+        f.write(read_back_schema(written).json())
 
 
 def replay_scratch(prefix: str) -> str:
@@ -276,10 +282,9 @@ def replay_into(
     scratch root. Seeds are written with ``catalog.write_parquet`` and the
     result is read with ``catalog.read_parquet``; a body that appends with
     the one and reads with the other reads each sink with its written
-    schema, with no inference job. The result is materialized (executor-block storage) so it outlives the
-    root, which is removed, with its remembered schemas, on success and on
-    failure.
-    Production deployments keep sinks and checkpoint — exactly-once resume
+    schema, with no inference job. The result is materialized
+    (executor-block storage) so it outlives the root, which is removed,
+    with its remembered schemas, on success and on failure. Production deployments keep sinks and checkpoint — exactly-once resume
     depends on them; a throwaway replay must not leak a directory per call.
     """
     spark = sdf.sparkSession

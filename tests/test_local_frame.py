@@ -14,11 +14,12 @@ from pyspark.sql.types import StructType
 from cdw_spark.plans.local import local_frame
 
 SCHEMA = "id long, name string, price decimal(12,2), ts timestamp, v array<double>"
+D, T = decimal.Decimal, datetime.datetime
 ROWS = [
-    (1, "a", decimal.Decimal("12.50"), datetime.datetime(2024, 1, 2, 3, 4, 5, 678901), [1.0, 2.5]),
+    (1, "a", D("12.50"), T(2024, 1, 2, 3, 4, 5, 678901), [1.0, 2.5]),
     (2, None, None, None, None),
-    (None, "c", decimal.Decimal("-0.01"), datetime.datetime(1999, 12, 31, 23, 59, 59), [None, -1.0]),
-    (4, "", decimal.Decimal("0.00"), datetime.datetime(2024, 6, 30), []),
+    (None, "c", D("-0.01"), T(1999, 12, 31, 23, 59, 59), [None, -1.0]),
+    (4, "", D("0.00"), T(2024, 6, 30), []),
 ]
 
 

@@ -785,13 +785,13 @@ def test_bloom_door_job_budget(spark, sf_dir, monkeypatch):
 
 
 def test_bloom_first_batch_runs_no_more_tasks_than_the_next(spark, sf_dir):
-    """Batch 0 joins its rows against the empty key-set seed. As a
-    ``LocalRelation`` the seed's statistics say it is empty, so the join is
+    """Batch 0 joins its rows against the empty key-set seed. The seed is
+    a ``LocalRelation`` whose statistics say it is empty, so the join is
     pruned and batch 0 runs no more tasks than batch 1, which joins
-    against a real key set (seeded by ``createDataFrame(list)``, batch 0
-    shuffled the join and ran 21 tasks against 14). Tasks are counted per
-    micro-batch from the ``batch = N`` line Spark puts in the description
-    of every job a micro-batch runs."""
+    against a real key set; a ``LogicalRDD`` seed has no statistics, and
+    its join is shuffled. Tasks are counted per micro-batch from the
+    ``batch = N`` line Spark puts in the description of every job a
+    micro-batch runs."""
     from cdw_spark.streaming.source import stage_exact_quarters
 
     stage_exact_quarters(spark, sf_dir, "documents", "doc_id", 4)
