@@ -1,5 +1,9 @@
 """At-rest index artifact store — the shared lifecycle for materialized
-index relations (kNN edge graph, co-occurrence lists, dedup components).
+index relations. Four families use it: kNN edges (``suite/similarity.py``),
+co-occurrence lists (``suite/recsys.py``), near-dup components
+(``suite/dedup.py``) and per-source text blocks (``suite/text.py``). Each
+declares itself once as an ``AtRestIndex`` and every consumer serves it
+through that declaration.
 
 A 100 TB deployment builds its indexes at ingest and serves every query
 from the materialized relation; this module is that discipline for the
@@ -16,12 +20,14 @@ the same root ``cdw_spark.session`` configures), grouped per fixture so
 orphaned keys from a regenerated fixture or a version bump are swept on
 the next build (so artifacts never accumulate without bound).
 
-Concurrency: builders write to a pid-suffixed tmp dir and publish with an
-atomic ``os.rename``. When the rename fails because another builder won,
-the winner's ``_SUCCESS`` marker is re-checked and the loser's tmp is
-discarded; any OTHER rename failure (permissions, cross-device move via
-an env redirection) re-raises instead of silently discarding the build
-and then failing later with a misleading path-not-found.
+Concurrency: builders (of an artifact, or of a summary backfilled into
+one) write to a pid-suffixed tmp dir and publish with an atomic
+``os.rename`` (``_publish``). When the rename fails because another
+builder won, the winner's ``_SUCCESS`` marker is re-checked and the
+loser's tmp is discarded; any OTHER rename failure (permissions,
+cross-device move via an env redirection) re-raises instead of silently
+discarding the build and then failing later with a misleading
+path-not-found.
 
 Schemas: every read of an artifact passes a schema this process knows
 (``catalog.read_parquet``), so none fires an inference job. A build
@@ -37,8 +43,10 @@ import os
 import shutil
 import threading
 from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..catalog import forget_schemas, read_parquet, remember_schema, write_parquet
 
@@ -136,6 +144,45 @@ def _sweep_orphans(fixture_base: str, keep_key: str) -> None:
         shutil.rmtree(path, ignore_errors=True)
 
 
+def _publish(
+    spark: SparkSession,
+    d: str,
+    write: Callable[[str], dict[str, StructType]],
+    sweep: Callable[[], None],
+) -> DataFrame:
+    """The one publish protocol, for an artifact and for a summary
+    backfill: publish ``d`` at most once and return its parquet scan.
+
+    Under ``d``'s lock the ``_SUCCESS`` marker is re-checked, ``write(tmp)``
+    fills a pid-suffixed tmp dir and returns the schema of each relation it
+    wrote (keyed by its path under the dir, ``""`` for the dir itself), and
+    an atomic rename publishes it. A failed rename is a lost race when the
+    winner's marker now exists (the tmp is discarded and the winner
+    served); any other rename failure re-raises. A won rename remembers the
+    written schemas under the published path. ``sweep()`` then reclaims
+    stale siblings, and the lock is dropped."""
+    marker = os.path.join(d, "_SUCCESS")
+    if not os.path.exists(marker):
+        with _key_lock(d):
+            if not os.path.exists(marker):
+                tmp = f"{d}.tmp{os.getpid()}"
+                schemas = write(tmp)
+                try:
+                    os.rename(tmp, d)
+                except OSError:
+                    shutil.rmtree(tmp, ignore_errors=True)
+                    if not os.path.exists(marker):
+                        # not the lost-race case — surface the real failure
+                        # instead of a later misleading path-not-found
+                        raise
+                else:
+                    for sub, schema in schemas.items():
+                        remember_schema(os.path.join(d, sub), schema)
+                sweep()
+        _drop_key_lock(d)
+    return read_parquet(spark, d)
+
+
 def serve_at_rest(
     spark: SparkSession,
     family: str,
@@ -156,33 +203,19 @@ def serve_at_rest(
     O(1) instead of recounting the full relation per call. The leading
     underscore hides it from the artifact's own parquet scan."""
     d = artifact_dir(family, fixture_path, version, spec_text)
-    marker = os.path.join(d, "_SUCCESS")
-    if not os.path.exists(marker):
-        with _key_lock(d):
-            if not os.path.exists(marker):
-                base = os.path.dirname(d)
-                os.makedirs(base, exist_ok=True)
-                tmp = f"{d}.tmp{os.getpid()}"
-                built = build()
-                write_parquet(built, tmp)
-                if summary is not None:
-                    summ = summary(read_parquet(spark, tmp)).coalesce(1)
-                    write_parquet(summ, os.path.join(tmp, "_summary"))
-                try:
-                    os.rename(tmp, d)
-                except OSError:
-                    shutil.rmtree(tmp, ignore_errors=True)
-                    if not os.path.exists(marker):
-                        # not the lost-race case — surface the real failure
-                        # instead of a later misleading path-not-found
-                        raise
-                else:
-                    remember_schema(d, built.schema)
-                    if summary is not None:
-                        remember_schema(os.path.join(d, "_summary"), summ.schema)
-                _sweep_orphans(base, os.path.basename(d))
-        _drop_key_lock(d)
-    return read_parquet(spark, d)
+
+    def write(tmp: str) -> dict[str, StructType]:
+        built = build()
+        write_parquet(built, tmp)
+        if summary is None:
+            return {"": built.schema}
+        summ = summary(read_parquet(spark, tmp)).coalesce(1)
+        write_parquet(summ, os.path.join(tmp, "_summary"))
+        return {"": built.schema, "_summary": summ.schema}
+
+    return _publish(
+        spark, d, write, lambda: _sweep_orphans(os.path.dirname(d), os.path.basename(d))
+    )
 
 
 def serve_summary_at_rest(
@@ -201,32 +234,69 @@ def serve_summary_at_rest(
     and asserts agreement, keeping the driver's hash gate meaningful).
 
     Artifacts published before summaries existed are backfilled in place
-    (computed from the published parquet, atomic rename, lost race →
-    serve the winner) — adding a summary must never rebuild a 100 TB
-    index."""
+    through the same publish protocol (computed from the published
+    parquet; a dead backfiller's ``_summary.tmp<pid>`` is reclaimed) —
+    adding a summary must never rebuild a 100 TB index."""
     serve_at_rest(spark, family, fixture_path, version, spec_text, build, summary)
     d = artifact_dir(family, fixture_path, version, spec_text)
-    sdir = os.path.join(d, "_summary")
-    if not os.path.exists(os.path.join(sdir, "_SUCCESS")):
-        with _key_lock(sdir):
-            if not os.path.exists(os.path.join(sdir, "_SUCCESS")):
-                for name in os.listdir(d):
-                    p = os.path.join(d, name)
-                    if name.startswith("_summary.tmp") and _tmp_is_abandoned(p, name):
-                        shutil.rmtree(p, ignore_errors=True)
-                tmp = f"{sdir}.tmp{os.getpid()}"
-                summ = summary(read_parquet(spark, d)).coalesce(1)
-                write_parquet(summ, tmp)
-                try:
-                    os.rename(tmp, sdir)
-                except OSError:
-                    shutil.rmtree(tmp, ignore_errors=True)
-                    if not os.path.exists(os.path.join(sdir, "_SUCCESS")):
-                        raise
-                else:
-                    remember_schema(sdir, summ.schema)
-        _drop_key_lock(sdir)
-    return read_parquet(spark, sdir)
+
+    def write(tmp: str) -> dict[str, StructType]:
+        summ = summary(read_parquet(spark, d)).coalesce(1)
+        write_parquet(summ, tmp)
+        return {"": summ.schema}
+
+    def sweep() -> None:
+        for name in os.listdir(d):
+            p = os.path.join(d, name)
+            if name.startswith("_summary.tmp") and _tmp_is_abandoned(p, name):
+                shutil.rmtree(p, ignore_errors=True)
+
+    return _publish(spark, os.path.join(d, "_summary"), write, sweep)
+
+
+@dataclass(frozen=True)
+class AtRestIndex:
+    """One index family, declared once by the suite module that owns it.
+
+    ``family`` names its store directory, ``fixture`` is the table whose
+    file identity keys it, ``version`` and ``spec`` are the build version
+    tag and the semantic-spec text folded into the content key.
+    ``build(spark, sf_dir)`` computes the relation; ``summary(spark,
+    sf_dir, artifact)`` computes the shape row its ``*_materialize`` query
+    serves, from the published parquet. The serves call ``serve_at_rest``
+    and ``serve_summary_at_rest`` through this module's globals at call
+    time, so a wrapper installed on those names sees every serve."""
+
+    family: str
+    fixture: str
+    version: str
+    spec: str
+    build: Callable[[SparkSession, str], DataFrame]
+    summary: Callable[[SparkSession, str, DataFrame], DataFrame]
+
+    def _key(self, sf_dir: str) -> tuple[str, str, str, str]:
+        fixture_path = os.path.join(sf_dir, f"{self.fixture}.parquet")
+        return self.family, fixture_path, self.version, self.spec
+
+    def _args(self, spark: SparkSession, sf_dir: str) -> tuple:
+        return (
+            spark,
+            *self._key(sf_dir),
+            lambda: self.build(spark, sf_dir),
+            lambda artifact: self.summary(spark, sf_dir, artifact),
+        )
+
+    def dir(self, sf_dir: str) -> str:
+        """The content-keyed artifact directory for ``sf_dir``'s fixture."""
+        return artifact_dir(*self._key(sf_dir))
+
+    def serve(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        """The artifact relation, built and published on first use."""
+        return serve_at_rest(*self._args(spark, sf_dir))
+
+    def serve_summary(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        """The artifact's one-row shape summary (backfilled if missing)."""
+        return serve_summary_at_rest(*self._args(spark, sf_dir))
 
 
 def clear_family(family: str) -> None:

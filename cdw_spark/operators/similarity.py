@@ -133,14 +133,15 @@ def derived_n_planes(n_rows: int, lo: int = 8, hi: int = 62, extra_bits: int = 7
 
 
 def verification_radius(w_bits: int) -> int:
-    """The verification-radius schedule beside the width knee (VERDICT
-    r11 #5): hamming radius 3 at and below KNEE_W, +1 per 4 width bits
-    past it. Rationale: each added bit gives a planted near-dup pair one
-    more chance to flip (per-bit flip p = theta/pi), so the fixed r=3
-    floor decays with width (measured 0.94 at w=24 -> 0.88 at w=30,
-    BENCHNOTES r11); growing r with w restores it — radius 4 at w=28
+    """The verification-radius schedule beside the width knee: hamming
+    radius 3 at and below KNEE_W, +1 per 4 width bits past it, so the
+    closed-form recall floor stays pinned as signatures widen.
+    Rationale: each added bit gives a planted near-dup pair one more
+    chance to flip (per-bit flip p = theta/pi), so the fixed r=3 floor
+    decays with width (measured 0.94 at w=24 -> 0.88 at w=30,
+    BENCHNOTES.md); growing r with w restores it — radius 4 at w=28
     lifts the theta=0.2 closed-form floor from 0.941 to 0.970 (SCALE.md,
-    re-measured on the 64x corpus in r12). The banded multi-index join
+    re-measured on the 64x corpus). The banded multi-index join
     generalizes with it: band sub-radii r//2 and r - r//2 - 1 keep the
     pigeonhole exact (see _knn_directed_top3). Cost: band-candidate
     growth is the sub-ball polynomial C(w/2, r//2), a step only every 4
@@ -425,8 +426,9 @@ def ivf_topk(
     closest lists, replacing the full scan with ~(nprobe/nlist) of it.
 
     Output schema matches ``brute_force_topk`` (its recall oracle in
-    tests/test_similarity.py). At 100 TB: write the corpus partitioned by
-    ``cid`` so a probe's candidate read is partition-pruned at the source."""
+    tests/test_similarity.py). Lists here are a join key over one corpus
+    scan; at 100 TB the corpus would be stored partitioned by ``cid`` so a
+    probe's candidate read is pruned at the source (no such layout ships)."""
     cents = ivf_train(corpus, nlist=nlist, iters=iters, id_col=id_col, vec_col=vec_col)
     dim = len(cents[0][1])
 
@@ -475,43 +477,6 @@ def ivf_topk(
         )
         .filter(F.col("rank") <= k)
     )
-
-def ivf_write_index(
-    corpus: DataFrame,
-    path: str,
-    nlist: int = 16,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[tuple[int, list[float]]]:
-    """Materialize the IVF at-rest layout: assign every corpus row to its
-    coarse centroid and write the corpus ``partitionBy("cid")`` — one
-    directory per inverted list. A probe then reads ONLY its nprobe list
-    directories (``ivf_probe_read``), so the candidate scan is pruned at
-    the source by partition filters instead of filtered post-scan: at
-    100 TB the probe I/O is ~(nprobe/nlist) of the corpus bytes, proven
-    by the PartitionFilters assertion in tests/test_plans.py.
-
-    Returns the trained centroids — the reader needs them to map a probe
-    vector to its cids (they are the index metadata, nlist x dim floats)."""
-    from ..functions.text_arrow import centroid_topn_arrow
-
-    cents = ivf_train(corpus, nlist=nlist, iters=iters, id_col=id_col, vec_col=vec_col)
-    assign = centroid_topn_arrow(corpus, cents, 1, id_col=id_col, vec_col=vec_col).select(
-        F.col(id_col), "cid"
-    )
-    corpus.join(assign, on=id_col).write.partitionBy("cid").mode("overwrite").parquet(path)
-    return cents
-
-
-def ivf_probe_read(
-    spark, path: str, cids: list[int], vec_col: str = "embedding"
-) -> DataFrame:
-    """Read back ONLY the inverted lists in ``cids`` from an
-    ``ivf_write_index`` layout. The equality/isin predicate on the
-    partition column becomes a PartitionFilter — directory pruning, no
-    data read outside the probed lists."""
-    return spark.read.parquet(path).filter(F.col("cid").isin([int(c) for c in cids]))
 
 
 def similar_pairs_topn(

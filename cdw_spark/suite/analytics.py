@@ -3827,7 +3827,7 @@ _BH_P_SQL = (
     "false alarm uncorrected). Rank machinery is the exact "
     "agg_mann_whitney_u integers per group; the normal tail converts "
     "to p via the A&S 7.1.26 erfc polynomial in ONE identical double "
-    "sequence per engine, rounded to 9 dp DECIMAL (residual ADVICE-r7 "
+    "sequence per engine, rounded to 9 dp DECIMAL (residual "
     "risk: a 1-ulp exp/libm divergence exactly on the 9th-decimal "
     "rounding boundary could flip p9 — accepted, none observed across "
     "sweeps); the BH step-up comparison p_(i) <= i*alpha/m then runs "
@@ -4029,7 +4029,7 @@ def sample_ab_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     "float edge can disagree), empty bins enter via a generated grid "
     "with Laplace +1 smoothing on both sides, and each (p-q)*ln(p/q) "
     "term is rounded to 9 dp DECIMAL before the order-independent "
-    "sum (the mutual-information float discipline; residual ADVICE-r7 "
+    "sum (the mutual-information float discipline; residual "
     "risk: a 1-ulp ln() divergence exactly on the 9th-decimal "
     "rounding boundary could flip a term — accepted, none observed "
     "across sweeps).",
@@ -5126,7 +5126,7 @@ def events_dow_hour_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     "survival_nelson_aalen labeling (active-span durations, censor = "
     "still active within a day of the corpus horizon): S(t) = "
     "prod_{t_i <= t} (1 - d_i/n_i) — the estimator people actually "
-    "plot, beside N-A's cumulative hazard (ADVICE lineage: exp(-H) "
+    "plot, beside N-A's cumulative hazard (exp(-H) only "
     "approximates S; KM is exact). The product is carried in LOG "
     "space with each per-duration ln((n-d)/n) rounded to 9dp and "
     "accumulated as EXACT DECIMAL over the span-bounded duration "

@@ -71,12 +71,12 @@ def dedup_canonical_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Components (iterative, tiny) join the quality projection (single
     scan); one aggregate picks keepers — cluster count is small, so
     everything after the pair graph is dimension-sized."""
-    from .dedup import _components_at_rest
+    from .dedup import DEDUP_COMPONENTS
 
     d = load_fixture(spark, sf_dir, "documents")
-    # r11: components come from the at-rest artifact (built once per
+    # components come from the at-rest artifact (built once per
     # fixture) instead of re-executing the pair join per query
-    comp = _components_at_rest(spark, sf_dir)
+    comp = DEDUP_COMPONENTS.serve(spark, sf_dir)
     qual = d.select("doc_id", quality_score(F.col("text")).alias("q"))
     # round AFTER scaling: round(q,6)*1e6 can land at x.99999... where
     # Spark's cast truncates but DuckDB's rounds — scaling first makes the

@@ -267,12 +267,12 @@ _LEAK_COMPONENT_SQL = """edges AS (
     "jaccard>=0.6 pair crosses splits.",
 )
 def sample_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import _components_at_rest
+    from .dedup import DEDUP_COMPONENTS
 
     docs = load_fixture(spark, sf_dir, "documents")
-    # r11: components come from the at-rest artifact (built once per
+    # components come from the at-rest artifact (built once per
     # fixture) instead of re-executing the pair join per query
-    comp = _components_at_rest(spark, sf_dir)
+    comp = DEDUP_COMPONENTS.serve(spark, sf_dir)
     rooted = docs.select("doc_id").join(comp, "doc_id", "left").select(
         "doc_id",
         F.coalesce(F.col("component_id"), F.col("doc_id")).alias("root"),
@@ -2100,12 +2100,12 @@ def sample_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup pair graph. Everything shuffles on integers, never bodies."""
     from pyspark.sql.window import Window
 
-    from .dedup import _components_at_rest
+    from .dedup import DEDUP_COMPONENTS
 
     docs = load_fixture(spark, sf_dir, "documents")
-    # r11: components come from the at-rest artifact (built once per
+    # components come from the at-rest artifact (built once per
     # fixture) instead of re-executing the pair join per query
-    comp = _components_at_rest(spark, sf_dir)
+    comp = DEDUP_COMPONENTS.serve(spark, sf_dir)
     rooted = docs.select("doc_id").join(comp, "doc_id", "left").select(
         "doc_id",
         F.coalesce(F.col("component_id"), F.col("doc_id")).alias("root"),

@@ -14,7 +14,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import load_fixture
+from ..operators.artifacts import AtRestIndex
 from ..operators.dedup import (
+    connected_components,
     cosine_near_duplicates,
     exact_dedup,
     minhash_near_duplicates,
@@ -230,28 +232,13 @@ _COMPONENTS_SPEC = f"""
     SELECT src AS doc_id, LEAST(src, MIN(dst)) AS component_id
     FROM reach GROUP BY src
     """
-_COMPONENTS_BUILD_VERSION = "v1"  # bump when the components construction changes
 
 
-def _components_artifact_dir(sf_dir: str) -> str:
-    import os
-
-    from ..operators.artifacts import artifact_dir
-
-    return artifact_dir(
-        "dedup_components",
-        os.path.join(sf_dir, "documents.parquet"),
-        _COMPONENTS_BUILD_VERSION,
-        _COMPONENTS_SPEC,
-    )
-
-
-def _components_shape_summary(comp: DataFrame) -> DataFrame:
-    """Shape-row builder for the component artifact:
-    counts + content-sensitive label checksums computed from the
-    published parquet at publish time, served as an O(1) one-row scan
-    by dedup_components_materialize. Columns and types mirror the
-    materialize oracle exactly."""
+def _components_shape_summary(spark: SparkSession, sf_dir: str, comp: DataFrame) -> DataFrame:
+    """Shape row of the component artifact: counts + content-sensitive
+    label checksums computed from the published parquet at publish time,
+    served as an O(1) one-row scan by dedup_components_materialize.
+    Columns and types mirror the materialize oracle exactly."""
     from pyspark.sql import functions as F
 
     sizes = comp.groupBy("component_id").agg(F.count(F.lit(1)).alias("cs"))
@@ -277,27 +264,19 @@ def _components_shape_summary(comp: DataFrame) -> DataFrame:
     )
 
 
-def _components_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup component relation (doc_id, component_id) served from the
-    at-rest parquet artifact, building once per fixture — exactly
-    connected_components(ngram_jaccard_pairs(documents)) at the default
-    0.6 threshold (see operators/artifacts.py for the lifecycle)."""
-    import os
-
-    from ..operators.artifacts import serve_at_rest
-    from ..operators.dedup import connected_components
-
-    return serve_at_rest(
-        spark,
-        "dedup_components",
-        os.path.join(sf_dir, "documents.parquet"),
-        _COMPONENTS_BUILD_VERSION,
-        _COMPONENTS_SPEC,
-        lambda: connected_components(
-            ngram_jaccard_pairs(load_fixture(spark, sf_dir, "documents"))
-        ),
-        summary=_components_shape_summary,
-    )
+# Near-dup component relation (doc_id, component_id): exactly
+# connected_components(ngram_jaccard_pairs(documents)) at the default 0.6
+# threshold.
+DEDUP_COMPONENTS = AtRestIndex(
+    family="dedup_components",
+    fixture="documents",
+    version="v1",  # bump when the components construction changes
+    spec=_COMPONENTS_SPEC,
+    build=lambda spark, sf_dir: connected_components(
+        ngram_jaccard_pairs(load_fixture(spark, sf_dir, "documents"))
+    ),
+    summary=_components_shape_summary,
+)
 
 
 @register(
@@ -309,12 +288,12 @@ def _components_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "operators/dedup.py connected_components). The "
     "cluster view is what canonical-keeper selection consumes; pairs "
     "alone can't make a keep/drop decision transitive. Served from the "
-    "at-rest component artifact (r11), so a driver grade of this query "
+    "at-rest component artifact, so a driver grade of this query "
     "hash-checks the FULL materialized relation against the oracle: "
     "DuckDB recursive-CTE transitive closure over the same pair set.",
 )
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _components_at_rest(spark, sf_dir)
+    return DEDUP_COMPONENTS.serve(spark, sf_dir)
 
 
 @register(
@@ -361,22 +340,7 @@ def dedup_components_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     else scans); steady-state serves are a one-row scan of the
     published shape summary (tests/test_artifact_summaries.py recounts the full artifact and
     asserts agreement)."""
-    import os
-
-    from ..operators.artifacts import serve_summary_at_rest
-    from ..operators.dedup import connected_components
-
-    return serve_summary_at_rest(
-        spark,
-        "dedup_components",
-        os.path.join(sf_dir, "documents.parquet"),
-        _COMPONENTS_BUILD_VERSION,
-        _COMPONENTS_SPEC,
-        lambda: connected_components(
-            ngram_jaccard_pairs(load_fixture(spark, sf_dir, "documents"))
-        ),
-        _components_shape_summary,
-    )
+    return DEDUP_COMPONENTS.serve_summary(spark, sf_dir)
 
 
 @register(
@@ -713,7 +677,7 @@ def dedup_split_doc_boundary(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the same pair set.",
 )
 def dedup_cluster_size_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale shape (r11): the pair graph + min-label components come from
+    """Scale shape: the pair graph + min-label components come from
     the at-rest component artifact (built once per fixture — the
     pre-artifact build was ~80% of this query's cost); everything here
     is a |components|-row groupBy, a histogram over distinct sizes, and
@@ -723,7 +687,7 @@ def dedup_cluster_size_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     docs = load_fixture(spark, sf_dir, "documents")
-    comp = _components_at_rest(spark, sf_dir)
+    comp = DEDUP_COMPONENTS.serve(spark, sf_dir)
     sizes = comp.groupBy("component_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("cluster_size")
     )

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_fixture
+from ..operators.artifacts import AtRestIndex
 from ..plans.lineage import cut
 from ..registry import register
 
@@ -128,19 +129,19 @@ _RECS_LISTS_SPEC = f"""
     "symmetrized by a swap-union.",
 )
 def recs_item_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale shape (r10): one parquet scan of the at-rest list artifact
-    (_recs_lists_at_rest below — built once per fixture); the build
-    plan lives in _build_item_cooccurrence."""
-    return _recs_lists_at_rest(spark, sf_dir)
+    """Scale shape: one parquet scan of the at-rest list artifact
+    (RECS_LISTS below — built once per fixture); the build plan lives in
+    _build_item_cooccurrence."""
+    return RECS_LISTS.serve(spark, sf_dir)
 
 
 def _build_item_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The actual cooccurrence BUILD (one run per fixture, writes the
     at-rest artifact). Scale shape: ONE shuffle of the distinct
     (order,item) relation to per-order sorted item arrays; the i<j pair
-    fanout is an in-codegen array transform over each basket (r13 —
-    replacing the (ok)-keyed semi join + self-join, which shuffled the
-    basket relation three more times). The size cap bounds pair fanout
+    fanout is an in-codegen array transform over each basket (an
+    (ok)-keyed semi join + self-join would shuffle the basket relation
+    three more times). The size cap bounds pair fanout
     at cap^2 per order. Item-frequency joins ride AQE broadcasts
     (|items| rows).
     Ranking is a per-item window over <= |items| * avg_neighbors rows;
@@ -148,9 +149,9 @@ def _build_item_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection engine-independent (the tfidf idiom)."""
     li = load_fixture(spark, sf_dir, "lineitem")
     b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("item")).distinct()
-    # Basket ARRAYS instead of a (ok)-keyed self-join (guide §3: the
-    # former shape shuffled the basket relation three more times — the
-    # size-cap semi join plus both self-join sides; r13). One groupBy
+    # Basket ARRAYS instead of a (ok)-keyed self-join (that shape
+    # shuffles the basket relation three more times — the size-cap semi
+    # join plus both self-join sides). One groupBy
     # collapses each order to its sorted distinct-item array, the cap is
     # a size() filter, and the i<j pair fanout is an in-codegen array
     # transform (sorted ascending, so ia < ib by construction — exactly
@@ -456,31 +457,15 @@ def recs_basket_holdout_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- at-rest co-occurrence list artifact (the kNN-artifact treatment,
-# generalized: r10 measured the build at a 2.54x/8x constant re-executed
-# by each of the three recsys consumers). Keyed by lineitem identity +
-# version + a hash of _RECS_LISTS_SPEC; storage, orphan GC and race
-# handling live in operators/artifacts.py. ------------------------------
-_RECS_BUILD_VERSION = "v2"  # bump when the cooccurrence construction changes
-
-
-def _recs_artifact_dir(sf_dir: str) -> str:
-    import os
-
-    from ..operators.artifacts import artifact_dir
-
-    return artifact_dir(
-        "recs_lists",
-        os.path.join(sf_dir, "lineitem.parquet"),
-        _RECS_BUILD_VERSION,
-        _RECS_LISTS_SPEC,
-    )
-
-
-def _recs_shape_summary(lists: DataFrame) -> DataFrame:
-    """Shape-row builder for the co-occurrence list artifact (VERDICT
-    r11 #3): computed from the published list parquet at publish time,
-    served as an O(1) one-row scan by recs_lists_materialize. Columns
-    and types mirror the materialize oracle exactly."""
+# generalized: the build is a 2.54x/8x constant that each of the three
+# recsys consumers would otherwise re-execute). Keyed by lineitem
+# identity + version + a hash of _RECS_LISTS_SPEC; storage, orphan GC and
+# race handling live in operators/artifacts.py. ------------------------------
+def _recs_shape_summary(spark: SparkSession, sf_dir: str, lists: DataFrame) -> DataFrame:
+    """Shape row of the co-occurrence list artifact, computed from the
+    published list parquet at publish time and served as an O(1) one-row
+    scan by recs_lists_materialize. Columns and types mirror the
+    materialize oracle exactly."""
     return lists.agg(
         F.countDistinct("item").cast("bigint").alias("n_items_with_lists"),
         F.count(F.lit(1)).cast("bigint").alias("n_list_rows"),
@@ -491,24 +476,14 @@ def _recs_shape_summary(lists: DataFrame) -> DataFrame:
     )
 
 
-def _recs_lists_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 co-occurrence lists served from the at-rest parquet
-    artifact, building once per fixture (atomic rename; a concurrent
-    builder loses harmlessly — see operators/artifacts.py). The artifact
-    holds exactly recs_item_cooccurrence's output relation."""
-    import os
-
-    from ..operators.artifacts import serve_at_rest
-
-    return serve_at_rest(
-        spark,
-        "recs_lists",
-        os.path.join(sf_dir, "lineitem.parquet"),
-        _RECS_BUILD_VERSION,
-        _RECS_LISTS_SPEC,
-        lambda: _build_item_cooccurrence(spark, sf_dir),
-        summary=_recs_shape_summary,
-    )
+RECS_LISTS = AtRestIndex(
+    family="recs_lists",
+    fixture="lineitem",
+    version="v2",  # bump when the cooccurrence construction changes
+    spec=_RECS_LISTS_SPEC,
+    build=_build_item_cooccurrence,
+    summary=_recs_shape_summary,
+)
 
 
 @register(
@@ -577,19 +552,7 @@ def recs_lists_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     steady-state serves are a one-row scan of the published shape
     summary (tests/test_artifact_summaries.py recounts
     the full artifact and asserts agreement)."""
-    import os
-
-    from ..operators.artifacts import serve_summary_at_rest
-
-    return serve_summary_at_rest(
-        spark,
-        "recs_lists",
-        os.path.join(sf_dir, "lineitem.parquet"),
-        _RECS_BUILD_VERSION,
-        _RECS_LISTS_SPEC,
-        lambda: _build_item_cooccurrence(spark, sf_dir),
-        _recs_shape_summary,
-    )
+    return RECS_LISTS.serve_summary(spark, sf_dir)
 
 
 @register(
@@ -766,7 +729,7 @@ def recs_item_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
     nb = kept.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    lists = _recs_lists_at_rest(spark, sf_dir).select(
+    lists = RECS_LISTS.serve(spark, sf_dir).select(
         F.col("neighbor").alias("item")
     )
     nov = (
@@ -894,7 +857,7 @@ def recs_gini_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c"))
         .select("item")
     )
-    lists = _recs_lists_at_rest(spark, sf_dir).select(
+    lists = RECS_LISTS.serve(spark, sf_dir).select(
         F.col("neighbor").alias("item")
     )
     expo = (

@@ -23,6 +23,7 @@ from ..functions.text import (
     token_count,
     words,
 )
+from ..operators.artifacts import AtRestIndex
 from ..plans.lineage import cut
 from ..registry import register
 
@@ -2603,7 +2604,7 @@ def _spark_blocks(docs: DataFrame) -> DataFrame:
 # both consumers, the situation the kNN/recs/component artifacts were
 # built for. (dedup_ngram_prefix_filter was profiled too and stays
 # as-is: its 3-gram shingle stage is 0.91 s of 11.52 s = 8% — the cost
-# is the inherent global df-order + prefix shuffle; BENCHNOTES r12.)
+# is the inherent global df-order + prefix shuffle; BENCHNOTES.md.)
 # The artifact holds the AGGREGATED (source, block, n_inst, nd)
 # relation — boilerplate rolls it up per source, contamination joins
 # its key set — keyed by documents.parquet identity + version + the
@@ -2617,27 +2618,23 @@ _BLOCKS_SPEC = f"""
     )
     SELECT source, block, n_inst, nd FROM occ
     """
-_BLOCKS_BUILD_VERSION = "v1"  # bump when the block-occ construction changes
 
 
-def _blocks_artifact_dir(sf_dir: str) -> str:
-    import os
-
-    from ..operators.artifacts import artifact_dir
-
-    return artifact_dir(
-        "text_blocks",
-        os.path.join(sf_dir, "documents.parquet"),
-        _BLOCKS_BUILD_VERSION,
-        _BLOCKS_SPEC,
+def _build_blocks_occ(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The block-occurrence BUILD: the 8-word block cut of every
+    document, aggregated per (source, block)."""
+    blocks = _spark_blocks(load_fixture(spark, sf_dir, "documents"))
+    return blocks.groupBy("source", "block").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_inst"),
+        F.countDistinct("doc_id").cast("bigint").alias("nd"),
     )
 
 
-def _blocks_shape_summary(occ: DataFrame) -> DataFrame:
-    """Shape-row builder for the block-occ artifact: computed from the
-    published parquet at publish time, served as an O(1) one-row scan
-    by text_blocks_materialize. Columns and types mirror the
-    materialize oracle exactly."""
+def _blocks_shape_summary(spark: SparkSession, sf_dir: str, occ: DataFrame) -> DataFrame:
+    """Shape row of the block-occ artifact, computed from the published
+    parquet at publish time and served as an O(1) one-row scan by
+    text_blocks_materialize. Columns and types mirror the materialize
+    oracle exactly."""
     return occ.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_block_keys"),
         F.countDistinct("source").cast("bigint").alias("n_sources"),
@@ -2649,30 +2646,14 @@ def _blocks_shape_summary(occ: DataFrame) -> DataFrame:
     )
 
 
-def _blocks_occ_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(source, block, n_inst, nd) block-occurrence relation served from
-    the at-rest parquet artifact, building once per fixture (see
-    operators/artifacts.py for the lifecycle)."""
-    import os
-
-    from ..operators.artifacts import serve_at_rest
-
-    def build() -> DataFrame:
-        blocks = _spark_blocks(load_fixture(spark, sf_dir, "documents"))
-        return blocks.groupBy("source", "block").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_inst"),
-            F.countDistinct("doc_id").cast("bigint").alias("nd"),
-        )
-
-    return serve_at_rest(
-        spark,
-        "text_blocks",
-        os.path.join(sf_dir, "documents.parquet"),
-        _BLOCKS_BUILD_VERSION,
-        _BLOCKS_SPEC,
-        build,
-        summary=_blocks_shape_summary,
-    )
+TEXT_BLOCKS = AtRestIndex(
+    family="text_blocks",
+    fixture="documents",
+    version="v1",  # bump when the block-occ construction changes
+    spec=_BLOCKS_SPEC,
+    build=_build_blocks_occ,
+    summary=_blocks_shape_summary,
+)
 
 
 @register(
@@ -2694,8 +2675,8 @@ def _blocks_occ_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Build (or reuse) the at-rest per-source 8-word block-occurrence "
     "artifact and report its shape — the text family's index-build op, "
-    "the block analogue of graph_knn_materialize: the r12 profile "
-    "showed the block cut + (source, block) aggregate is 62-74% of "
+    "the block analogue of graph_knn_materialize: profiled at sf0.1, "
+    "the block cut + (source, block) aggregate is 62-74% of "
     "both block-audit consumers, so it's built once per fixture and "
     "scanned (text_source_boilerplate_share rolls it up per source; "
     "text_cross_source_contamination joins its key set). The shape "
@@ -2708,26 +2689,7 @@ def text_blocks_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: the block cut + (source, block) aggregate runs at
     most once per fixture; steady-state serves are a one-row scan of
     the published shape summary."""
-    import os
-
-    from ..operators.artifacts import serve_summary_at_rest
-
-    def build() -> DataFrame:
-        blocks = _spark_blocks(load_fixture(spark, sf_dir, "documents"))
-        return blocks.groupBy("source", "block").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_inst"),
-            F.countDistinct("doc_id").cast("bigint").alias("nd"),
-        )
-
-    return serve_summary_at_rest(
-        spark,
-        "text_blocks",
-        os.path.join(sf_dir, "documents.parquet"),
-        _BLOCKS_BUILD_VERSION,
-        _BLOCKS_SPEC,
-        build,
-        _blocks_shape_summary,
-    )
+    return TEXT_BLOCKS.serve_summary(spark, sf_dir)
 
 
 @register(
@@ -2763,11 +2725,11 @@ def text_blocks_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_source_boilerplate_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: the (source, block) aggregate is served from the
-    at-rest block-occ artifact (built once per fixture — r12, the stage
-    was 74% of this query's cost); what remains is a |sources|-row
+    at-rest block-occ artifact (built once per fixture — the stage was
+    74% of this query's cost at sf0.1); what remains is a |sources|-row
     rollup over the artifact scan. At 100 TB the block key shuffles as
     md5 — the paragraph_dedup note."""
-    occ = _blocks_occ_at_rest(spark, sf_dir)
+    occ = TEXT_BLOCKS.serve(spark, sf_dir)
     return occ.groupBy("source").agg(
         F.sum("n_inst").cast("bigint").alias("n_blocks"),
         F.count(F.lit(1)).cast("bigint").alias("n_distinct_blocks"),
@@ -2822,11 +2784,11 @@ def text_source_boilerplate_share(spark: SparkSession, sf_dir: str) -> DataFrame
 def text_cross_source_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: the distinct (source, block) relation is the key
     set of the at-rest block-occ artifact (built once per fixture —
-    r12, the stage was 62% of this query's cost); what remains is the
+    the stage was 62% of this query's cost at sf0.1); what remains is the
     block-key equi-join emitting only co-occurring source pairs (never
     the |sources|^2 cross) and a broadcast size join on the
     |sources|-row relation."""
-    blk = _blocks_occ_at_rest(spark, sf_dir).select("source", "block")
+    blk = TEXT_BLOCKS.serve(spark, sf_dir).select("source", "block")
     sz = blk.groupBy("source").agg(F.count(F.lit(1)).cast("bigint").alias("nb"))
     a = blk.select(F.col("source").alias("src_a"), "block")
     b = blk.select(F.col("source").alias("src_b"), "block")

@@ -89,10 +89,7 @@ def band_candidates(spark, sf_dir: str) -> int:
 
 def main() -> None:
     from cdw_spark.operators.similarity import derived_n_planes
-    from cdw_spark.suite.similarity import (
-        _knn_artifact_dir,
-        _knn_directed_at_rest,
-    )
+    from cdw_spark.suite.similarity import KNN_EDGES
 
     from cdw_spark.catalog import load_fixture
 
@@ -106,10 +103,10 @@ def main() -> None:
         n = load_fixture(spark, sf_dir, "embeddings").count()
         w = derived_n_planes(n)
         ncand = band_candidates(spark, sf_dir)
-        art = _knn_artifact_dir(sf_dir)
+        art = KNN_EDGES.dir(sf_dir)
         shutil.rmtree(art, ignore_errors=True)
         t0 = time.time()
-        _knn_directed_at_rest(spark, sf_dir).write.format("noop").mode(
+        KNN_EDGES.serve(spark, sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()
         dt = time.time() - t0

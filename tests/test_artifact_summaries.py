@@ -1,7 +1,7 @@
-"""Published shape summaries for the three at-rest index artifacts
-(VERDICT r11 #3): each ``*_materialize`` query serves a one-row summary
-written INTO the artifact at publish instead of recounting the full
-relation per call. These tests recompute every summary value from the
+"""Published shape summaries for the four at-rest index artifacts (kNN
+edges, co-occurrence lists, near-dup components, text blocks): each
+``*_materialize`` query serves a one-row summary written INTO the
+artifact at publish instead of recounting the full relation per call. These tests recompute every summary value from the
 full artifact and assert agreement — the integrity check that keeps the
 O(1) serve honest — and prove the serve really is a summary scan, not a
 recount."""
@@ -23,13 +23,10 @@ def _rows(df):
 
 def test_knn_summary_agrees_with_artifact(spark, sf_dir):
     from cdw_spark.catalog import load_fixture
-    from cdw_spark.suite.similarity import (
-        _knn_artifact_dir,
-        _knn_directed_at_rest,
-    )
+    from cdw_spark.suite.similarity import KNN_EDGES
 
     served = _rows(SPECS["graph_knn_materialize"].fn(spark, sf_dir))
-    knn = _knn_directed_at_rest(spark, sf_dir)
+    knn = KNN_EDGES.serve(spark, sf_dir)
     und = knn.select(
         F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
     ).distinct()
@@ -41,15 +38,15 @@ def test_knn_summary_agrees_with_artifact(spark, sf_dir):
     )
     assert served == [recounted]
     assert os.path.exists(
-        os.path.join(_knn_artifact_dir(sf_dir), "_summary", "_SUCCESS")
+        os.path.join(KNN_EDGES.dir(sf_dir), "_summary", "_SUCCESS")
     )
 
 
 def test_recs_summary_agrees_with_artifact(spark, sf_dir):
-    from cdw_spark.suite.recsys import _recs_artifact_dir, _recs_lists_at_rest
+    from cdw_spark.suite.recsys import RECS_LISTS
 
     served = _rows(SPECS["recs_lists_materialize"].fn(spark, sf_dir))
-    lists = _recs_lists_at_rest(spark, sf_dir)
+    lists = RECS_LISTS.serve(spark, sf_dir)
     recounted = (
         lists.select("item").distinct().count(),
         lists.count(),
@@ -58,18 +55,15 @@ def test_recs_summary_agrees_with_artifact(spark, sf_dir):
     )
     assert served == [recounted]
     assert os.path.exists(
-        os.path.join(_recs_artifact_dir(sf_dir), "_summary", "_SUCCESS")
+        os.path.join(RECS_LISTS.dir(sf_dir), "_summary", "_SUCCESS")
     )
 
 
 def test_components_summary_agrees_with_artifact(spark, sf_dir):
-    from cdw_spark.suite.dedup import (
-        _components_artifact_dir,
-        _components_at_rest,
-    )
+    from cdw_spark.suite.dedup import DEDUP_COMPONENTS
 
     served = _rows(SPECS["dedup_components_materialize"].fn(spark, sf_dir))
-    comp = _components_at_rest(spark, sf_dir)
+    comp = DEDUP_COMPONENTS.serve(spark, sf_dir)
     sizes = comp.groupBy("component_id").count()
     recounted = (
         comp.count(),
@@ -80,15 +74,15 @@ def test_components_summary_agrees_with_artifact(spark, sf_dir):
     )
     assert served == [recounted]
     assert os.path.exists(
-        os.path.join(_components_artifact_dir(sf_dir), "_summary", "_SUCCESS")
+        os.path.join(DEDUP_COMPONENTS.dir(sf_dir), "_summary", "_SUCCESS")
     )
 
 
 def test_text_blocks_summary_agrees_with_artifact(spark, sf_dir):
-    from cdw_spark.suite.text import _blocks_artifact_dir, _blocks_occ_at_rest
+    from cdw_spark.suite.text import TEXT_BLOCKS
 
     served = _rows(SPECS["text_blocks_materialize"].fn(spark, sf_dir))
-    occ = _blocks_occ_at_rest(spark, sf_dir)
+    occ = TEXT_BLOCKS.serve(spark, sf_dir)
     recounted = (
         occ.count(),
         occ.select("source").distinct().count(),
@@ -98,7 +92,7 @@ def test_text_blocks_summary_agrees_with_artifact(spark, sf_dir):
     )
     assert served == [recounted]
     assert os.path.exists(
-        os.path.join(_blocks_artifact_dir(sf_dir), "_summary", "_SUCCESS")
+        os.path.join(TEXT_BLOCKS.dir(sf_dir), "_summary", "_SUCCESS")
     )
 
 
@@ -106,16 +100,16 @@ def test_materialize_serves_summary_not_recount(spark, sf_dir):
     """Steady-state materialize plans must scan <artifact>/_summary and
     carry NO aggregate over the full relation (the recount moved to
     publish time)."""
-    from cdw_spark.suite.dedup import _components_artifact_dir
-    from cdw_spark.suite.recsys import _recs_artifact_dir
-    from cdw_spark.suite.similarity import _knn_artifact_dir
-    from cdw_spark.suite.text import _blocks_artifact_dir
+    from cdw_spark.suite.dedup import DEDUP_COMPONENTS
+    from cdw_spark.suite.recsys import RECS_LISTS
+    from cdw_spark.suite.similarity import KNN_EDGES
+    from cdw_spark.suite.text import TEXT_BLOCKS
 
     for name, art in (
-        ("graph_knn_materialize", _knn_artifact_dir(sf_dir)),
-        ("recs_lists_materialize", _recs_artifact_dir(sf_dir)),
-        ("dedup_components_materialize", _components_artifact_dir(sf_dir)),
-        ("text_blocks_materialize", _blocks_artifact_dir(sf_dir)),
+        ("graph_knn_materialize", KNN_EDGES.dir(sf_dir)),
+        ("recs_lists_materialize", RECS_LISTS.dir(sf_dir)),
+        ("dedup_components_materialize", DEDUP_COMPONENTS.dir(sf_dir)),
+        ("text_blocks_materialize", TEXT_BLOCKS.dir(sf_dir)),
     ):
         df = SPECS[name].fn(spark, sf_dir)  # ensures published
         files = df.inputFiles()

@@ -6,6 +6,8 @@ ADVICE r10 #2/#3)."""
 from __future__ import annotations
 
 import os
+import re
+from pathlib import Path
 
 import pytest
 
@@ -15,6 +17,23 @@ from cdw_spark.operators.artifacts import (
     clear_family,
     serve_at_rest,
 )
+
+
+def test_serves_live_only_in_artifact_store():
+    """Source-scan guard: outside operators/artifacts.py no module in
+    cdw_spark/ calls ``serve_at_rest``, ``serve_summary_at_rest`` or
+    ``artifact_dir``; each index family is served through its one
+    ``AtRestIndex`` declaration."""
+    pkg = Path(__file__).resolve().parent.parent / "cdw_spark"
+    pattern = re.compile(r"\b(serve_at_rest|serve_summary_at_rest|artifact_dir)\(")
+    offenders = sorted(
+        f"{path.relative_to(pkg.parent)}:{i}"
+        for path in pkg.rglob("*.py")
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    )
+    assert offenders, "the guard must see the store in operators/artifacts.py"
+    assert all(o.startswith("cdw_spark/operators/artifacts.py:") for o in offenders), offenders
 
 
 def test_store_is_warehouse_relative(sf_dir):

@@ -183,38 +183,6 @@ def test_pairs_topn_has_no_cross_join(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
-def test_ivf_at_rest_layout_prunes_lists(spark, sf_dir, tmp_path_factory):
-    """The IVF docstring's at-rest claim, proven: the corpus written
-    partitionBy("cid") must serve a probe's nprobe-list read through
-    PartitionFilters (directory pruning) — not a post-scan Filter — so
-    probe I/O at 100 TB is ~(nprobe/nlist) of the corpus bytes."""
-    from cdw_spark.catalog import load_fixture
-    from cdw_spark.functions.text_arrow import centroid_topn_arrow
-    from cdw_spark.operators.similarity import ivf_probe_read, ivf_write_index
-
-    emb = load_fixture(spark, sf_dir, "embeddings")
-    out = str(tmp_path_factory.mktemp("ivf")) + "/emb_by_cid"
-    cents = ivf_write_index(emb, out, nlist=16, iters=1)
-
-    probe = emb.filter(F.col("vec_id") == 0)
-    cids = [r.cid for r in centroid_topn_arrow(probe, cents, 4, id_col="vec_id").collect()]
-    assert len(cids) == 4
-    lists = ivf_probe_read(spark, out, cids)
-
-    plan = lists._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan, plan
-    pf = plan.split("PartitionFilters: [")[1].split("]")[0]
-    assert "cid" in pf, plan
-    # the cid predicate must NOT survive as a post-scan data filter
-    assert "PushedFilters: [In(cid" not in plan, plan
-
-    # pruned read returns exactly the probed lists' rows, nothing else
-    n_pruned = lists.count()
-    assert 0 < n_pruned < emb.count()
-    full = spark.read.parquet(out)
-    assert n_pruned == full.filter(F.col("cid").isin(cids)).count()
-
-
 def test_sparkify_staging_bucketed_join_zero_exchange(spark, tmp_path_factory):
     """VERDICT r2 #4: the actual pipeline tables, bucketed end-to-end. Both
     staging tables are written with write_bucketed on their artist join
@@ -516,9 +484,9 @@ def test_knn_graph_family_scans_at_rest_artifact(spark, sf_dir):
     the embeddings table at all beyond the node-set scan) is rebuilding.
     graph_knn_materialize itself builds eagerly INSIDE fn() — its
     returned stats plan must also be artifact-scan-only."""
-    from cdw_spark.suite.similarity import _knn_artifact_dir
+    from cdw_spark.suite.similarity import KNN_EDGES
 
-    art = _knn_artifact_dir(sf_dir)
+    art = KNN_EDGES.dir(sf_dir)
     # force the artifact to exist (first call may build)
     SPECS["graph_knn_materialize"].fn(spark, sf_dir).collect()
     for name in (
@@ -554,9 +522,9 @@ def test_dedup_components_family_scans_at_rest_artifact(spark, sf_dir):
     consumer plan that contains MapInPandas is rebuilding. (None of the
     five consumers uses mapInPandas for anything else — their own logic
     is pure Catalyst over the component relation + the documents scan.)"""
-    from cdw_spark.suite.dedup import _components_artifact_dir
+    from cdw_spark.suite.dedup import DEDUP_COMPONENTS
 
-    art = _components_artifact_dir(sf_dir)
+    art = DEDUP_COMPONENTS.dir(sf_dir)
     SPECS["dedup_components_materialize"].fn(spark, sf_dir).collect()
     for name in (
         "dedup_components_materialize",
@@ -579,9 +547,9 @@ def test_recs_family_scans_at_rest_artifact(spark, sf_dir):
     re-run the basket self-join per query. The build's plan hallmark is
     the per-item row_number ranking window; a consumer plan that
     contains it is rebuilding."""
-    from cdw_spark.suite.recsys import _recs_artifact_dir
+    from cdw_spark.suite.recsys import RECS_LISTS
 
-    art = _recs_artifact_dir(sf_dir)
+    art = RECS_LISTS.dir(sf_dir)
     SPECS["recs_lists_materialize"].fn(spark, sf_dir).collect()
     for name in (
         "recs_lists_materialize",
@@ -605,9 +573,9 @@ def test_text_blocks_family_scans_at_rest_artifact(spark, sf_dir):
     stage at 62-74% of both consumers). The build's plan hallmark is the
     array_join inside the block-cut transform; a consumer plan that
     contains it is rebuilding."""
-    from cdw_spark.suite.text import _blocks_artifact_dir
+    from cdw_spark.suite.text import TEXT_BLOCKS
 
-    art = _blocks_artifact_dir(sf_dir)
+    art = TEXT_BLOCKS.dir(sf_dir)
     SPECS["text_blocks_materialize"].fn(spark, sf_dir).collect()
     for name in (
         "text_blocks_materialize",
