@@ -1,8 +1,7 @@
 """Fixture catalog: the one read path for the parquet fixture tables
 (TESTDATA.md) and for the parquet the package writes itself, the event
 series derived from the fixtures that many queries share, and
-registration of the fixtures as temp views so the whole engine is
-queryable through ``spark.sql``.
+``fixture_sql``, which runs one SQL text over the fixtures as views.
 
 Every parquet read goes through ``read_parquet`` with a schema this
 process already knows, so it fires no Spark job. A fixture's schema is
@@ -18,6 +17,7 @@ reset is the ``overwrite`` mode of each write (``cdw_spark.elt``).
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,8 +39,6 @@ FIXTURE_TABLES = (
     "documents",
     "embeddings",
 )
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Parquet schemas known to this process, per absolute path, each stamped
 # with the (size, mtime_ns) of the file or directory it was taken from: a
@@ -125,8 +123,8 @@ def forget_schemas(root: str | None = None) -> None:
 
 def load_fixture(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table. Parquet scan: column pruning + predicate
-    pushdown come free from the declarative plan — never .cache() these;
-    at 100 TB the scan with pushed filters IS the fast path.
+    pushdown come free from the declarative plan — never hold these in
+    the cache; at 100 TB the scan with pushed filters IS the fast path.
 
     Timestamp normalization: fixture generations have varied — events.ts
     has been TIMESTAMP(NANOS) (vectorized reader rejects; read nanos as
@@ -177,13 +175,24 @@ def daily_purchase_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def register_fixtures(
-    spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, tables: tuple[str, ...] = FIXTURE_TABLES
-) -> dict[str, DataFrame]:
-    """Register every fixture parquet as a temp view named after the table."""
-    out: dict[str, DataFrame] = {}
-    for name in tables:
-        df = load_fixture(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
+_FIXTURE_SQL_LOCK = threading.RLock()
+
+
+def fixture_sql(spark: SparkSession, sf_dir: str, tables: tuple[str, ...], sql: str) -> DataFrame:
+    """``spark.sql(sql)`` with each of ``tables`` visible as a temp view
+    named after the table, for the analysis only.
+
+    ``spark.sql`` analyzes eagerly, so the returned frame already holds
+    each view's plan, and the views are dropped before it returns: the
+    session keeps no view it did not have. The lock spans register,
+    analysis and drop, so a concurrent call cannot replace or drop a view
+    between another call's register and its analysis; it is reentrant, so
+    a query can also hold it across a temp function's register and drop."""
+    with _FIXTURE_SQL_LOCK:
+        try:
+            for name in tables:
+                load_fixture(spark, sf_dir, name).createOrReplaceTempView(name)
+            return spark.sql(sql)
+        finally:
+            for name in tables:
+                spark.catalog.dropTempView(name)

@@ -125,7 +125,8 @@ def compare_with_connection(
 
     # Fetch through pandas (the driver's path), NOT fetchall(): fetchall
     # yields exact Python ints for HUGEINT/NULL-bearing-integer columns,
-    # while the driver sees float64 — the r8 fidelity gap. itertuples
+    # while the driver sees float64, so a value-identical BIGINT column
+    # would match here and mismatch in the driver's hash. itertuples
     # yields the numpy scalars / Timestamps the driver hashes.
     oracle_pdf = con.execute(oracle_sql).df()
     oracle_cols = [str(c) for c in oracle_pdf.columns]

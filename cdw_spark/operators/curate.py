@@ -562,7 +562,6 @@ def compression_ratio(
 def bpe_train_merges(
     docs: DataFrame,
     n_merges: int = 3,
-    id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
     """Byte-pair-encoding merge training (Sennrich et al. 2016) on the

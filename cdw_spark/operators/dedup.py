@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint_md5, shingles
-from ..plans.lineage import cut
+from ..plans.lineage import cut, held
 
 # Round cap of connected_components (see its docstring).
 CC_MAX_ROUNDS = 20
@@ -109,7 +109,6 @@ def minhash_signatures(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    shingle_tbl: DataFrame | None = None,
 ) -> DataFrame:
     """64-perm MinHash signature per document, one Arrow pass.
 
@@ -119,11 +118,7 @@ def minhash_signatures(
     min per batch — no exploded intermediate, no 64-aggregate shuffle; the
     output is already one 64-int row per doc. Banding recall with this
     hash is (re)proven against exact Jaccard in tests/test_dedup.py before
-    the exact query is declared as the LSH oracle.
-
-    ``shingle_tbl`` is accepted for API compatibility but unused — the
-    signature pass shingles in-batch; pass it to jaccard_verify instead."""
-    del shingle_tbl  # signatures no longer consume the exploded table
+    the exact query is declared as the LSH oracle."""
     from ..functions.text_arrow import minhash_signatures_arrow
 
     return minhash_signatures_arrow(
@@ -446,15 +441,14 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     it the plan doubles every iteration and planning time explodes long
     before data does. Near-dup graphs have tiny diameters (dup clusters
     are cliques-ish), so rounds ~ 2-3 in practice. The symmetrized edge
-    relation is cached for the rounds and unpersisted on every exit,
-    including a failed round."""
+    relation is held for the rounds (``plans.lineage.held``), so it is
+    released on every exit, including a failed round."""
     edges = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
         .distinct()
-        .persist()
     )
-    try:
+    with held(edges) as edges:
         labels = cut(
             edges.select(F.col("src").alias("id"))
             .distinct()
@@ -507,8 +501,6 @@ def connected_components(pairs: DataFrame) -> DataFrame:
                 f"({changed} labels still moving) — result would be split "
                 "components"
             )
-    finally:
-        edges.unpersist()
     return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("component_id"))
 
 
@@ -749,57 +741,51 @@ def ngram_jaccard_pairs_prefix(
     on binary-inexact products and silently shortens the prefix below
     the theorem's bound (missed pairs), the classic PPJoin port bug.
     """
-    from pyspark import StorageLevel
-
     # the shingle relation feeds FOUR consumers (doc counts, df counts,
-    # the ranked prefix, and both exact-verify sides); persist so the
+    # the ranked prefix, and both exact-verify sides); hold it so the
     # Arrow shingling pass runs once, not once per reference
-    sh = _shingle_table(df, text_col, id_col, n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    # Populate the cache BEFORE the consumers fan out: the final action
-    # plans ~6 concurrent subquery/broadcast stages over `sh`, and
-    # concurrent first readers of an unpopulated cache each recompute the
-    # Arrow shingling pass instead of one computing and the rest reading
-    # (measured: 102 s of task time for ~15 s of work at sf0.1 — the
-    # shingle pass ran ~6x). One count() materializes every partition
-    # once; downstream stages then scan the columnar cache.
-    sh.count()
-    counts = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("dfc"))
-    from pyspark.sql.window import Window
+    with held(_shingle_table(df, text_col, id_col, n)) as sh:
+        # Populate the cache BEFORE the consumers fan out: the final action
+        # plans ~6 concurrent subquery/broadcast stages over `sh`, and
+        # concurrent first readers of an unpopulated cache each recompute the
+        # Arrow shingling pass instead of one computing and the rest reading
+        # (measured: 102 s of task time for ~15 s of work at sf0.1 — the
+        # shingle pass ran ~6x). One count() materializes every partition
+        # once; downstream stages then scan the columnar cache.
+        sh.count()
+        counts = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
+        dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("dfc"))
+        from pyspark.sql.window import Window
 
-    ranked = (
-        sh.join(dfreq, "sh")
-        .join(counts, id_col)
-        .withColumn(
-            "rk",
-            F.row_number().over(Window.partitionBy(id_col).orderBy("dfc", "sh")),
+        ranked = (
+            sh.join(dfreq, "sh")
+            .join(counts, id_col)
+            .withColumn(
+                "rk",
+                F.row_number().over(Window.partitionBy(id_col).orderBy("dfc", "sh")),
+            )
         )
-    )
-    need = (
-        F.col("n_sh")
-        - F.expr(f"({t_num} * n_sh + {t_den} - 1) div {t_den}")
-        + F.lit(1)
-    )
-    prefix = ranked.filter(F.col("rk") <= need).select(F.col(id_col), "sh")
-    pa = prefix.select(F.col(id_col).alias("id_a"), "sh")
-    pb = prefix.select(F.col(id_col).alias("id_b"), "sh")
-    cand = (
-        pa.join(pb, "sh")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    # verification is exactly the shared helper the minhash paths use —
-    # one definition of the exact-Jaccard math; the persisted shingle
-    # table is reused instead of re-shingling. The verified pair set is
-    # tiny (it IS the dedup output), so materialize it eagerly and drop
-    # the cached shingle relation — otherwise every invocation leaks a
-    # cached table for the session's lifetime.
-    out = cut(jaccard_verify(
-        cand, df, text_col, id_col, n,
-        threshold=float(t_num) / float(t_den), shingle_tbl=sh,
-    ))
-    sh.unpersist()
+        need = (
+            F.col("n_sh")
+            - F.expr(f"({t_num} * n_sh + {t_den} - 1) div {t_den}")
+            + F.lit(1)
+        )
+        prefix = ranked.filter(F.col("rk") <= need).select(F.col(id_col), "sh")
+        pa = prefix.select(F.col(id_col).alias("id_a"), "sh")
+        pb = prefix.select(F.col(id_col).alias("id_b"), "sh")
+        cand = (
+            pa.join(pb, "sh")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b")
+            .distinct()
+        )
+        # verification is exactly the shared helper the minhash paths use —
+        # one definition of the exact-Jaccard math; the held shingle table
+        # is reused instead of re-shingling. The verified pair set is tiny
+        # (it IS the dedup output), so it is materialized eagerly, before
+        # the block releases the shingle relation.
+        out = cut(jaccard_verify(
+            cand, df, text_col, id_col, n,
+            threshold=float(t_num) / float(t_den), shingle_tbl=sh,
+        ))
     return out

@@ -21,12 +21,12 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.vectors import cosine, dot, to_double_array
-from ..plans.lineage import cut
+from ..plans.lineage import cut, held
 
 N_PLANES = 8
 
@@ -98,10 +98,11 @@ def hamming_ball_masks(n_planes: int, radius: int) -> list[int]:
 # exceed KNEE_W, i.e. n > 2^17 rows) the width grows 2 BITS PER CORPUS
 # DOUBLING instead of 1, which pins PER-BAND occupancy of the two-band
 # multi-index at its knee value (2^5 rows/band-bucket): band bits = w/2
-# gain 1 bit per doubling each, exactly matching the +1 of log2 n. This
-# replaces the r10 hard clamp at 24 (which let band occupancy — and with
-# it candidates-per-vector, measured ~sqrt(n) in BENCHNOTES r10 —
-# keep growing); the ceiling is now 62 bits (two 31-bit bands in a
+# gain 1 bit per doubling each, exactly matching the +1 of log2 n. A
+# hard clamp at 24 would let band occupancy — and with it
+# candidates-per-vector — keep growing: at 1 bit per doubling they
+# already doubled per 8x of corpus (5.4, 10.5, 19.8 per vector at
+# 1x/8x/64x, BENCHNOTES.md). The ceiling is 62 bits (two 31-bit bands in a
 # signed BIGINT signature), reached near n ~ 2^36 vectors. The fixture
 # regime (n <= 2^17) is numerically UNCHANGED, so every literal-plane
 # oracle still hash-matches; the graded fixtures stay at w = 16/20.
@@ -121,8 +122,8 @@ def derived_n_planes(n_rows: int, lo: int = 8, hi: int = 62, extra_bits: int = 7
     Clamp rationale: below 2^lo buckets the ball covers most of the
     space; above hi the signature leaves signed-BIGINT range. Recall at
     the fixed hamming<=3 verification radius decays with width
-    (binomial: more bits, more chances to flip) — the measured floor
-    per width is the BENCHNOTES r11 recall table, which is why the
+    (binomial: more bits, more chances to flip) — measured 0.985 at 18
+    bits down to 0.880 at 30 (BENCHNOTES.md recall floors), which is why the
     knee regime widens only past corpus sizes the fixtures never reach."""
     import math
 
@@ -348,33 +349,32 @@ def ivf_train(
     c = corpus.select(
         F.col(id_col).alias("_id"), to_double_array(F.col(vec_col)).alias("v")
     ).withColumn("_norm", F.expr(_norm_sql("v", dim)))
-    c = c.persist()  # read iters+1 times below
-    init = c.orderBy("_id").limit(nlist).collect()
-    cents = [
-        (i, [round(x / r["_norm"], 9) for x in r["v"]]) for i, r in enumerate(init)
-    ]
-    for _ in range(iters):
-        # Arrow per-batch partials instead of the nlist*dim literal-weight
-        # scoring array: the literals change every sync, so the codegen
-        # cache never hit and each iteration paid a fresh Janino compile
-        # of a ~1024-term expression (guide §4.2 — hand whole batches to
-        # numpy; the centroids ride the closure, the PLAN is
-        # iteration-invariant). Assignment = first argmax of
-        # dot(v, cent)/norm — np.argmax also takes the first maximum.
-        rows = _float_assign_partials_arrow(c, cents, dim).groupBy("cid").agg(
-            F.sum("n").alias("n"),
-            *[F.sum(F.col("s")[i]).alias(f"s{i}") for i in range(dim)],
-        ).collect()
+    with held(c) as c:  # read iters+1 times below
+        init = c.orderBy("_id").limit(nlist).collect()
         cents = [
-            (int(r["cid"]), [round(r[f"s{i}"] / r["n"], 9) for i in range(dim)])
-            for r in sorted(rows, key=lambda r: r["cid"])
+            (i, [round(x / r["_norm"], 9) for x in r["v"]]) for i, r in enumerate(init)
         ]
-    c.unpersist()
+        for _ in range(iters):
+            # Arrow per-batch partials instead of the nlist*dim literal-weight
+            # scoring array: the literals change every sync, so the codegen
+            # cache never hit and each iteration paid a fresh Janino compile
+            # of a ~1024-term expression (guide §4.2 — hand whole batches to
+            # numpy; the centroids ride the closure, the PLAN is
+            # iteration-invariant). Assignment = first argmax of
+            # dot(v, cent)/norm — np.argmax also takes the first maximum.
+            rows = _float_assign_partials_arrow(c, cents).groupBy("cid").agg(
+                F.sum("n").alias("n"),
+                *[F.sum(F.col("s")[i]).alias(f"s{i}") for i in range(dim)],
+            ).collect()
+            cents = [
+                (int(r["cid"]), [round(r[f"s{i}"] / r["n"], 9) for i in range(dim)])
+                for r in sorted(rows, key=lambda r: r["cid"])
+            ]
     return cents
 
 
 def _float_assign_partials_arrow(
-    c: DataFrame, cents: list[tuple[int, list[float]]], dim: int
+    c: DataFrame, cents: list[tuple[int, list[float]]]
 ) -> DataFrame:
     """Per-batch spherical-assignment partials for ivf_train: emits at
     most nlist rows (cid, n, s array<double>) per Arrow batch, where s
@@ -960,7 +960,6 @@ def mmr_rerank(
 
 def mmr_oracle_sql(
     probe_pred: str,
-    dim: int,
     pool: int = 12,
     steps: int = 4,
     lam: float = MMR_LAMBDA,
@@ -1231,34 +1230,34 @@ def pq_train(
     dsub = dim // m
     c = corpus.select(
         F.col(id_col).alias("_id"), to_double_array(F.col(vec_col)).alias("v")
-    ).persist()
-    init = c.orderBy("_id").limit(ksub).collect()
-    books = [
-        [
-            [round(float(r["v"][j * dsub + i]), 9) for i in range(dsub)]
-            for r in init
-        ]
-        for j in range(m)
-    ]
-    for _ in range(iters):
-        codes = pq_codes_arrow(c.withColumnRenamed("_id", "pqid"), books, "pqid", "v")
-        joined = c.join(codes, c["_id"] == codes["pqid"]).select("v", "codes")
-        exploded = joined.select(
-            F.posexplode("codes").alias("j", "code"), "v"
-        )
-        stats = exploded.groupBy("j", "code").agg(
-            F.count(F.lit(1)).alias("n"),
-            *[
-                F.sum(F.expr(f"v[j * {dsub} + {i}]")).alias(f"s{i}")
-                for i in range(dsub)
-            ],
-        )
-        rows = stats.collect()  # m*ksub rows — the k-means sync point
-        for r in rows:
-            books[r["j"]][r["code"]] = [
-                round(r[f"s{i}"] / r["n"], 9) for i in range(dsub)
+    )
+    with held(c) as c:
+        init = c.orderBy("_id").limit(ksub).collect()
+        books = [
+            [
+                [round(float(r["v"][j * dsub + i]), 9) for i in range(dsub)]
+                for r in init
             ]
-    c.unpersist()
+            for j in range(m)
+        ]
+        for _ in range(iters):
+            codes = pq_codes_arrow(c.withColumnRenamed("_id", "pqid"), books, "pqid", "v")
+            joined = c.join(codes, c["_id"] == codes["pqid"]).select("v", "codes")
+            exploded = joined.select(
+                F.posexplode("codes").alias("j", "code"), "v"
+            )
+            stats = exploded.groupBy("j", "code").agg(
+                F.count(F.lit(1)).alias("n"),
+                *[
+                    F.sum(F.expr(f"v[j * {dsub} + {i}]")).alias(f"s{i}")
+                    for i in range(dsub)
+                ],
+            )
+            rows = stats.collect()  # m*ksub rows — the k-means sync point
+            for r in rows:
+                books[r["j"]][r["code"]] = [
+                    round(r[f"s{i}"] / r["n"], 9) for i in range(dsub)
+                ]
     return books
 
 
@@ -1352,9 +1351,7 @@ def _int_assign_np(qv_np, cents_np):
     return cid, d[np.arange(len(cid)), cid]
 
 
-def _int_assign_stats_arrow(
-    q: DataFrame, cents: list[list[int]], dim: int, mode: str
-) -> DataFrame:
+def _int_assign_stats_arrow(q: DataFrame, cents: list[list[int]], mode: str) -> DataFrame:
     """One Arrow pass computing the exact-kmeans family's per-batch
     PARTIALS instead of k literal-centroid codegen folds per row.
 
@@ -1429,7 +1426,7 @@ def _kmeans_train_centroids(q: DataFrame, k: int, iters: int, dim: int) -> list[
         # compile every sync; the Arrow pass keeps the plan shape
         # iteration-invariant and the integer sums exact (guide §4.2).
         stats = (
-            _int_assign_stats_arrow(q, cents, dim, "train")
+            _int_assign_stats_arrow(q, cents, "train")
             .groupBy("cid")
             .agg(
                 F.sum("n").alias("_n"),
@@ -1443,6 +1440,22 @@ def _kmeans_train_centroids(q: DataFrame, k: int, iters: int, dim: int) -> list[
                 (512 * int(r[f"_s{i}"]) + n) // (2 * n) for i in range(dim)
             ]
     return cents
+
+
+def _quantized(vec_col: str) -> Column:
+    """``vec_col`` on the x16 integer grid: the exact-kmeans family's
+    input quantization (the oracles' ``CAST(round(x * 16) AS INTEGER)``)."""
+    return F.expr(f"transform({vec_col}, x -> cast(round(x * 16) as int))")
+
+
+def _centroid_digest(cents: list[list[int]]) -> Column:
+    """``centroid_md5`` per ``cid``: md5 of the trained centroid's ints
+    joined by spaces (the oracles' ``md5(array_to_string(arr, ' '))``)."""
+    digest = F.lit(None)
+    for c_idx in reversed(range(len(cents))):
+        text = " ".join(str(x) for x in cents[c_idx])
+        digest = F.when(F.col("cid") == c_idx, F.md5(F.lit(text))).otherwise(digest)
+    return digest
 
 
 def kmeans_exact(
@@ -1465,44 +1478,30 @@ def kmeans_exact(
     Output: (cid, n, inertia, centroid_md5) per cluster — sizes, exact
     integer inertia at the final assignment, and a digest of the final
     centroid grid so the whole trajectory is hash-checkable."""
-    q = df.select(
-        F.col(id_col).alias("_id"),
-        F.expr(f"transform({vec_col}, x -> cast(round(x * 16) as int))").alias("qv"),
-    ).persist()
-    cents = _kmeans_train_centroids(q, k, iters, dim)
-
-    # final sizes/inertia via the same Arrow partials as training (exact
-    # int64 sums; count/sum over partials == count/sum over rows)
-    final = _int_assign_stats_arrow(q, cents, dim, "final")
-    digests = {
-        c_idx: " ".join(str(x) for x in c) for c_idx, c in enumerate(cents)
-    }
-    digest_col = F.lit(None)
-    for c_idx in reversed(range(k)):
-        digest_col = F.when(F.col("cid") == c_idx, F.md5(F.lit(digests[c_idx]))).otherwise(
-            digest_col
-        )
-    q.unpersist()  # the final action re-reads the (trivial) quantize scan
+    q = df.select(F.col(id_col).alias("_id"), _quantized(vec_col).alias("qv"))
+    with held(q) as q:
+        cents = _kmeans_train_centroids(q, k, iters, dim)
+        # final sizes/inertia via the same Arrow partials as training (exact
+        # int64 sums; count/sum over partials == count/sum over rows)
+        final = _int_assign_stats_arrow(q, cents, "final")
+    # the final action re-reads the (trivial) quantize scan
     return (
         final.groupBy("cid")
         .agg(
             F.sum("n").cast("bigint").alias("n"),
             F.sum("inertia").cast("bigint").alias("inertia"),
         )
-        .withColumn("centroid_md5", digest_col)
+        .withColumn("centroid_md5", _centroid_digest(cents))
         .select("cid", "n", "inertia", "centroid_md5")
     )
 
 
-def kmeans_oracle_sql(
-    k: int = 4, iters: int = 2, dim: int = 64, table: str = "embeddings"
-) -> str:
-    """DuckDB rendering of ``kmeans_exact`` — the iterations unroll as
-    chained CTEs (assign_t -> cent_t), centroids as (cid, arr) relations,
-    every distance the same bigint sum of squares, the centroid update
-    the same exact integer floor((512*s + n) / (2n)). Because nothing in
-    the recurrence is a float, the oracle hash-checks every iteration of
-    the clustering bit-for-bit."""
+def _kmeans_train_sql(q_ctes: str, k: int, iters: int, dim: int) -> tuple[str, str, str]:
+    """The training CTEs the exact-kmeans oracles share: ``WITH`` +
+    ``q_ctes`` (which define ``q(id, qv)``), ``cent0`` (the k lowest ids
+    on the x256 grid), then ``assign{t}`` -> ``cent{t}`` per iteration.
+    Returns the SQL, the bigint squared-distance expression of ``q.qv``
+    to ``c.arr``, and the name of the trained centroids' CTE."""
     dist = (
         "list_sum([ (256*CAST(q.qv[i] AS BIGINT) - c.arr[i])"
         " * (256*CAST(q.qv[i] AS BIGINT) - c.arr[i])"
@@ -1510,11 +1509,7 @@ def kmeans_oracle_sql(
     )
     parts = [
         f"""
-    WITH q AS (
-        SELECT vec_id AS id,
-               [CAST(round(x * 16) AS INTEGER) FOR x IN embedding] AS qv
-        FROM {table}
-    ),
+    WITH {q_ctes},
     cent0 AS (
         SELECT CAST(id AS INTEGER) AS cid,
                [256 * CAST(v AS BIGINT) FOR v IN qv] AS arr
@@ -1556,24 +1551,41 @@ def kmeans_oracle_sql(
     )"""
         )
         prev = f"cent{t}"
-    parts.append(
-        f""",
+    return "".join(parts), dist, prev
+
+
+def kmeans_oracle_sql(
+    k: int = 4, iters: int = 2, dim: int = 64, table: str = "embeddings"
+) -> str:
+    """DuckDB rendering of ``kmeans_exact`` — the iterations unroll as
+    chained CTEs (assign_t -> cent_t), centroids as (cid, arr) relations,
+    every distance the same bigint sum of squares, the centroid update
+    the same exact integer floor((512*s + n) / (2n)). Because nothing in
+    the recurrence is a float, the oracle hash-checks every iteration of
+    the clustering bit-for-bit."""
+    train, dist, cents = _kmeans_train_sql(
+        f"""q AS (
+        SELECT vec_id AS id,
+               [CAST(round(x * 16) AS INTEGER) FOR x IN embedding] AS qv
+        FROM {table}
+    )""",
+        k, iters, dim,
+    )
+    return train + f""",
     final AS (
         SELECT id, cid, d FROM (
             SELECT q.id, c.cid, {dist} AS d,
                    ROW_NUMBER() OVER (PARTITION BY q.id
                                       ORDER BY {dist} ASC, c.cid ASC) AS rn
-            FROM q CROSS JOIN {prev} c
+            FROM q CROSS JOIN {cents} c
         ) WHERE rn = 1
     )
     SELECT f.cid,
            CAST(COUNT(*) AS BIGINT) AS n,
            CAST(SUM(f.d) AS BIGINT) AS inertia,
            ANY_VALUE(md5(array_to_string(c.arr, ' '))) AS centroid_md5
-    FROM final f JOIN {prev} c ON c.cid = f.cid
+    FROM final f JOIN {cents} c ON c.cid = f.cid
     GROUP BY f.cid"""
-    )
-    return "".join(parts)
 
 
 def ivf_incremental_add(
@@ -1602,32 +1614,22 @@ def ivf_incremental_add(
     retrain trigger a production deployment monitors."""
 
     def quantize(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias("_id"),
-            F.expr(f"transform({vec_col}, x -> cast(round(x * 16) as int))").alias("qv"),
-        )
+        return df.select(F.col(id_col).alias("_id"), _quantized(vec_col).alias("qv"))
 
-    q_old = quantize(old).persist()
-    cents = _kmeans_train_centroids(q_old, k, iters, dim)
-    # Arrow per-batch count partials (see _int_assign_stats_arrow): the
-    # literal-centroid folds forced a fresh Janino compile per call.
-    n_old = (
-        _int_assign_stats_arrow(q_old, cents, dim, "final")
-        .groupBy("cid")
-        .agg(F.sum("n").alias("n_old"))
-    )
-    q_old.unpersist()
+    with held(quantize(old)) as q_old:
+        cents = _kmeans_train_centroids(q_old, k, iters, dim)
+        # Arrow per-batch count partials (see _int_assign_stats_arrow): the
+        # literal-centroid folds forced a fresh Janino compile per call.
+        n_old = (
+            _int_assign_stats_arrow(q_old, cents, "final")
+            .groupBy("cid")
+            .agg(F.sum("n").alias("n_old"))
+        )
     n_new = (
-        _int_assign_stats_arrow(quantize(new), cents, dim, "final")
+        _int_assign_stats_arrow(quantize(new), cents, "final")
         .groupBy("cid")
         .agg(F.sum("n").alias("n_new"))
     )
-    digests = {c_idx: " ".join(str(x) for x in c) for c_idx, c in enumerate(cents)}
-    digest_col = F.lit(None)
-    for c_idx in reversed(range(k)):
-        digest_col = F.when(F.col("cid") == c_idx, F.md5(F.lit(digests[c_idx]))).otherwise(
-            digest_col
-        )
     return (
         n_old.join(n_new, "cid", "full")
         .select(
@@ -1635,7 +1637,7 @@ def ivf_incremental_add(
             F.coalesce("n_old", F.lit(0)).cast("bigint").alias("n_old"),
             F.coalesce("n_new", F.lit(0)).cast("bigint").alias("n_new"),
         )
-        .withColumn("centroid_md5", digest_col)
+        .withColumn("centroid_md5", _centroid_digest(cents))
     )
 
 
@@ -1647,71 +1649,31 @@ def ivf_incremental_oracle_sql(
     unrolled exact-integer training CTEs as kmeans_oracle_sql (with the
     empty-cluster carry-forward), then BOTH populations assigned against
     the final centroids and counted per cluster."""
-    dist = (
-        "list_sum([ (256*CAST(q.qv[i] AS BIGINT) - c.arr[i])"
-        " * (256*CAST(q.qv[i] AS BIGINT) - c.arr[i])"
-        f" FOR i IN range(1, {dim + 1}) ])"
-    )
-    parts = [
-        f"""
-    WITH qa AS (
+    train, dist, cents = _kmeans_train_sql(
+        f"""qa AS (
         SELECT vec_id AS id,
                [CAST(round(x * 16) AS INTEGER) FOR x IN embedding] AS qv,
                (vec_id % {mod} = {mod - 1}) AS is_new
         FROM {table}
     ),
-    q AS (SELECT id, qv FROM qa WHERE NOT is_new),
-    cent0 AS (
-        SELECT CAST(id AS INTEGER) AS cid,
-               [256 * CAST(v AS BIGINT) FOR v IN qv] AS arr
-        FROM q WHERE id < {k}
-    )"""
-    ]
-    prev = "cent0"
-    for t in range(1, iters + 1):
-        parts.append(
-            f""",
-    assign{t} AS (
-        SELECT id, qv, cid FROM (
-            SELECT q.id, q.qv, c.cid,
-                   ROW_NUMBER() OVER (PARTITION BY q.id
-                                      ORDER BY {dist} ASC, c.cid ASC) AS rn
-            FROM q CROSS JOIN {prev} c
-        ) WHERE rn = 1
-    ),
-    cent{t} AS (
-        SELECT p.cid, COALESCE(u{t}.arr, p.arr) AS arr
-        FROM {prev} p LEFT JOIN (
-            SELECT cid,
-                   list(CAST(floor((512 * s + n) / (2.0 * n)) AS BIGINT) ORDER BY i) AS arr
-            FROM (
-                SELECT cid, i, CAST(SUM(qv[i]) AS BIGINT) AS s,
-                       CAST(COUNT(*) AS BIGINT) AS n
-                FROM assign{t}, UNNEST(range(1, {dim + 1})) AS u(i)
-                GROUP BY cid, i
-            ) GROUP BY cid
-        ) u{t} ON u{t}.cid = p.cid
-    )"""
-        )
-        prev = f"cent{t}"
-    parts.append(
-        f""",
+    q AS (SELECT id, qv FROM qa WHERE NOT is_new)""",
+        k, iters, dim,
+    )
+    return train + f""",
     final AS (
         SELECT id, is_new, cid FROM (
             SELECT q.id, q.is_new, c.cid,
                    ROW_NUMBER() OVER (PARTITION BY q.id
                                       ORDER BY {dist} ASC, c.cid ASC) AS rn
-            FROM qa q CROSS JOIN {prev} c
+            FROM qa q CROSS JOIN {cents} c
         ) WHERE rn = 1
     )
     SELECT f.cid,
            CAST(SUM(CASE WHEN f.is_new THEN 0 ELSE 1 END) AS BIGINT) AS n_old,
            CAST(SUM(CASE WHEN f.is_new THEN 1 ELSE 0 END) AS BIGINT) AS n_new,
            ANY_VALUE(md5(array_to_string(c.arr, ' '))) AS centroid_md5
-    FROM final f JOIN {prev} c ON c.cid = f.cid
+    FROM final f JOIN {cents} c ON c.cid = f.cid
     GROUP BY f.cid"""
-    )
-    return "".join(parts)
 
 
 def ivfpq_topk(
@@ -1741,19 +1703,19 @@ def ivfpq_topk(
     scoring shuffles only the routed (probe x list) pairs, never
     all-pairs. The trained float variant of the same composition is
     ivf_topk + pq_topk (rows-only)."""
-    quant = F.expr(f"transform({vec_col}, x -> cast(round(x * 16) as int))")
-    q = corpus.select(F.col(id_col).alias("_id"), quant.alias("qv")).persist()
-    cents = _kmeans_train_centroids(q, nlist, iters, dim)
-    # Materialize the inverted index (this IS the index build — at rest
-    # it's the partitioned-by-cid table). Assignment is the Arrow exact-
-    # integer pass (_int_assign_stats_arrow 'rows' mode) — the former
-    # unrolled argmin folds both blew whole-stage codegen past the JVM's
-    # 64 KB method limit when fused downstream AND recompiled per call
-    # because the centroid literals differ per training run.
-    assigned = cut(
-        _int_assign_stats_arrow(q, cents, dim, "rows")
-        .select(F.col("_id").alias("cand_id"), F.col("qv").alias("cqv"), "cid")
-    )
+    quant = _quantized(vec_col)
+    with held(corpus.select(F.col(id_col).alias("_id"), quant.alias("qv"))) as q:
+        cents = _kmeans_train_centroids(q, nlist, iters, dim)
+        # Materialize the inverted index (this IS the index build — at rest
+        # it's the partitioned-by-cid table). Assignment is the Arrow exact-
+        # integer pass (_int_assign_stats_arrow 'rows' mode) — the former
+        # unrolled argmin folds both blew whole-stage codegen past the JVM's
+        # 64 KB method limit when fused downstream AND recompiled per call
+        # because the centroid literals differ per training run.
+        assigned = cut(
+            _int_assign_stats_arrow(q, cents, "rows")
+            .select(F.col("_id").alias("cand_id"), F.col("qv").alias("cqv"), "cid")
+        )
     pq_ = probes.select(F.col(id_col).alias("probe_id"), quant.alias("qv"))
     for c_idx, c in enumerate(cents):
         pq_ = pq_.withColumn(f"_d{c_idx}", F.expr(_centroid_dist_expr(c, dim)))
@@ -1798,14 +1760,12 @@ def ivfpq_topk(
             Window.partitionBy("probe_id").orderBy(F.col("d").asc(), F.col("cand_id"))
         ),
     ).filter(F.col("rank") <= k)
-    out = ranked.select(
+    return ranked.select(
         "probe_id",
         "cand_id",
         F.col("rank").cast("int").alias("rank"),
         F.col("d").cast("double").alias("adc_dist"),
     )
-    q.unpersist()
-    return out
 
 
 def ivfpq_oracle_sql(
@@ -1823,59 +1783,21 @@ def ivfpq_oracle_sql(
     the routed lists only — the oracle restates the PRUNING, not a
     brute-force equivalent, so the hash checks IVF's approximation
     faithfully."""
-    dist = (
-        "list_sum([ (256*CAST(q.qv[i] AS BIGINT) - c.arr[i])"
-        " * (256*CAST(q.qv[i] AS BIGINT) - c.arr[i])"
-        f" FOR i IN range(1, {dim + 1}) ])"
-    )
-    parts = [
-        f"""
-    WITH q AS (
+    train, dist, cents = _kmeans_train_sql(
+        f"""q AS (
         SELECT vec_id AS id,
                [CAST(round(x * 16) AS INTEGER) FOR x IN embedding] AS qv
         FROM {table}
-    ),
-    cent0 AS (
-        SELECT CAST(id AS INTEGER) AS cid,
-               [256 * CAST(v AS BIGINT) FOR v IN qv] AS arr
-        FROM q WHERE id < {nlist}
-    )"""
-    ]
-    prev = "cent0"
-    for t in range(1, iters + 1):
-        parts.append(
-            f""",
-    assign{t} AS (
-        SELECT id, qv, cid FROM (
-            SELECT q.id, q.qv, c.cid,
-                   ROW_NUMBER() OVER (PARTITION BY q.id
-                                      ORDER BY {dist} ASC, c.cid ASC) AS rn
-            FROM q CROSS JOIN {prev} c
-        ) WHERE rn = 1
-    ),
-    cent{t} AS (
-        SELECT p.cid, COALESCE(u{t}.arr, p.arr) AS arr
-        FROM {prev} p LEFT JOIN (
-            SELECT cid,
-                   list(CAST(floor((512 * s + n) / (2.0 * n)) AS BIGINT) ORDER BY i) AS arr
-            FROM (
-                SELECT cid, i, CAST(SUM(qv[i]) AS BIGINT) AS s,
-                       CAST(COUNT(*) AS BIGINT) AS n
-                FROM assign{t}, UNNEST(range(1, {dim + 1})) AS u(i)
-                GROUP BY cid, i
-            ) GROUP BY cid
-        ) u{t} ON u{t}.cid = p.cid
-    )"""
-        )
-        prev = f"cent{t}"
-    parts.append(
-        f""",
+    )""",
+        nlist, iters, dim,
+    )
+    return train + f""",
     route AS (
         SELECT id AS probe_id, cid FROM (
             SELECT q.id, c.cid,
                    ROW_NUMBER() OVER (PARTITION BY q.id
                                       ORDER BY {dist} ASC, c.cid ASC) AS rn
-            FROM q CROSS JOIN {prev} c
+            FROM q CROSS JOIN {cents} c
             WHERE q.id < {n_probes}
         ) WHERE rn <= {nprobe}
     ),
@@ -1884,7 +1806,7 @@ def ivfpq_oracle_sql(
             SELECT q.id, q.qv, c.cid,
                    ROW_NUMBER() OVER (PARTITION BY q.id
                                       ORDER BY {dist} ASC, c.cid ASC) AS rn
-            FROM q CROSS JOIN {prev} c
+            FROM q CROSS JOIN {cents} c
         ) WHERE rn = 1
     ),
     cand AS (
@@ -1905,5 +1827,3 @@ def ivfpq_oracle_sql(
         FROM cand
     )
     WHERE rank <= {k}"""
-    )
-    return "".join(parts)

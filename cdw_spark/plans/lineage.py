@@ -1,4 +1,5 @@
-"""Lineage cuts: the one place the package truncates a plan's lineage.
+"""Lineage cuts and held relations: the one place the package
+materializes a relation for repeated reads.
 
 Iterative loops, relations read by several branches and replayed
 micro-batch state all cut lineage, so a long run neither re-executes its
@@ -20,9 +21,20 @@ depends on the deployment, not on the caller:
   compute its input again, so ``eager=False`` only applies to local cuts.
   No lazy call site relies on deferred evaluation: each cuts a pure
   function of inputs that do not change before its first action.
+
+A relation that only a driver-side loop reads, for as long as one call
+runs, is ``held`` instead: persisted on entry and unpersisted on every
+exit, a raise included. It keeps its lineage, so a lost executor's
+blocks are recomputed rather than failing the job, and its cache entry
+is gone once the block ends, so no later query can read it in place of
+its own plan. A cut's blocks stay until its RDD is garbage-collected;
+callers release those between units of work.
 """
 
 from __future__ import annotations
+
+import contextlib
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 
@@ -36,3 +48,15 @@ def cut(df: DataFrame, eager: bool = True) -> DataFrame:
     if df.sparkSession.sparkContext.getCheckpointDir() is None:
         return df.localCheckpoint(eager)
     return df.checkpoint(eager=True)
+
+
+@contextlib.contextmanager
+def held(df: DataFrame) -> Iterator[DataFrame]:
+    """``df`` persisted for the ``with`` block and unpersisted on every
+    exit. Persisting fires no job: the first action inside the block
+    fills the cache, and later reads in the block scan it."""
+    df = df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()

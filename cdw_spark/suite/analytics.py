@@ -701,10 +701,9 @@ def unpivot_melt(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the grouping flags.",
 )
 def grouping_sets_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..catalog import register_fixtures
+    from ..catalog import fixture_sql
 
-    register_fixtures(spark, sf_dir, tables=("orders",))
-    return spark.sql("""
+    return fixture_sql(spark, sf_dir, ("orders",), """
         SELECT o_orderstatus AS status, o_orderpriority AS priority,
                GROUPING(o_orderstatus) AS g_status,
                GROUPING(o_orderpriority) AS g_priority,
@@ -741,10 +740,9 @@ def recursive_cte_calendar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Catalyst executes the recursion as an iterative UnionLoop; the
     recursion depth here is the calendar length (80 rows), not data-sized
     — the join against the fact table happens once, after generation."""
-    from ..catalog import register_fixtures
+    from ..catalog import fixture_sql
 
-    register_fixtures(spark, sf_dir, tables=("orders",))
-    return spark.sql(_RECURSIVE_CALENDAR_SQL)
+    return fixture_sql(spark, sf_dir, ("orders",), _RECURSIVE_CALENDAR_SQL)
 
 
 @register(
@@ -6092,8 +6090,8 @@ def _kendall_oracle_sql(k: int = _KT_K) -> str:
     "psx_q = #(qty<=q, price<p) / psd_q = #(qty<=q, price>p) per row "
     "— every pair is counted exactly once at its larger cell. Tie "
     "corrections n1/n2 from the two marginals; all pair counts in "
-    "HUGEINT/DECIMAL(38,0) (they are ~n^2/2, corpus-scaled — the r8 "
-    "micro-unit audit class); tau's two sqrt factors taken separately "
+    "HUGEINT/DECIMAL(38,0) (they are ~n^2/2, corpus-scaled, so BIGINT "
+    "would wrap on a large fact table); tau's two sqrt factors taken separately "
     "(the MCC overflow lesson). Oracle generated from the same spec.",
 )
 def agg_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:

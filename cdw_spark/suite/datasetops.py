@@ -2454,7 +2454,7 @@ def tcloseness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells — bounded by the audit's own output), per-class cumulative
     windows over m<=20 buckets, one aggregate. Micro-unit products
     (gc*N, the (2a+b) div 2b round) run in DECIMAL(38,0) / HUGEINT —
-    the agg_ks_two_sample convention (r8 micro-unit audit): gc*N wraps
+    the agg_ks_two_sample convention for corpus-scaled products: gc*N wraps
     int64 past N ~ 3e9, well inside a 100 TB corpus."""
     from pyspark.sql.window import Window
 
@@ -3101,8 +3101,7 @@ def layout_hilbert_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     "behind recommendations and (in a data pipeline) co-contamination "
     "checks. Ratios are exact rationals rounded half-away in integer "
     "micro-units; the n*c_ab*1e6 product runs in DECIMAL/HUGEINT (it "
-    "wraps int64 past n*c_ab ~ 4.6e12 — corpus-scaled, the r8 "
-    "micro-unit audit class).",
+    "wraps int64 past n*c_ab ~ 4.6e12, a corpus-scaled product).",
 )
 def basket_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: pair expansion is a self-join WITHIN an order key —

@@ -602,8 +602,8 @@ def dedup_ngram_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_split_doc_boundary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: boundary shingles are near-unique keys (3-word
-    strings over the vocabulary — entropy >> corpus^2, the r7 key-
-    entropy rule), so the self-equi-join is linear; shuffles carry
+    strings over the vocabulary — entropy >> corpus^2, so a key is
+    shared by few rows), so the self-equi-join is linear; shuffles carry
     3-word strings, never bodies."""
     from pyspark.sql import functions as F
 

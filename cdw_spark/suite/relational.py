@@ -415,10 +415,9 @@ def correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines. Catalyst rewrites the per-row subquery to a brand-level
     aggregate joined back (visible as Aggregate+Join in the plan) — the
     hand-decorrelated form, derived automatically."""
-    from ..catalog import register_fixtures
+    from ..catalog import fixture_sql
 
-    register_fixtures(spark, sf_dir, tables=("part",))
-    return spark.sql(_CORR_SUBQ_SQL)
+    return fixture_sql(spark, sf_dir, ("part",), _CORR_SUBQ_SQL)
 
 
 @register(
@@ -492,10 +491,9 @@ def string_agg_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     "plans it as a left-semi join.",
 )
 def exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..catalog import register_fixtures
+    from ..catalog import fixture_sql
 
-    register_fixtures(spark, sf_dir, tables=("orders", "lineitem"))
-    return spark.sql("""
+    return fixture_sql(spark, sf_dir, ("orders", "lineitem"), """
         SELECT o.o_orderpriority AS priority, COUNT(*) AS n_orders
         FROM orders o
         WHERE EXISTS (
@@ -522,10 +520,9 @@ def exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     "300k, by segment — planned as a left-anti join.",
 )
 def not_exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..catalog import register_fixtures
+    from ..catalog import fixture_sql
 
-    register_fixtures(spark, sf_dir, tables=("customer", "orders"))
-    return spark.sql("""
+    return fixture_sql(spark, sf_dir, ("customer", "orders"), """
         SELECT c.c_mktsegment AS segment, COUNT(*) AS n_customers
         FROM customer c
         WHERE NOT EXISTS (
@@ -553,10 +550,9 @@ def not_exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     "counts (NULL planted via NULLIF so the data needs no NULLs).",
 )
 def not_in_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..catalog import register_fixtures
+    from ..catalog import fixture_sql
 
-    register_fixtures(spark, sf_dir, tables=("part",))
-    return spark.sql("""
+    return fixture_sql(spark, sf_dir, ("part",), """
         SELECT
             (SELECT COUNT(*) FROM part
              WHERE p_size NOT IN (SELECT NULLIF(p_size, 45) FROM part WHERE p_size > 40)

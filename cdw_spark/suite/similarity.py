@@ -307,7 +307,7 @@ from ..operators.similarity import mmr_oracle_sql as _mmr_sql
 
 @register(
     "similarity_mmr_rerank",
-    oracle=_mmr_sql("p.vec_id < 3", _DIM),
+    oracle=_mmr_sql("p.vec_id < 3"),
     doc="Maximal Marginal Relevance diversified top-4 per probe "
     "(Carbonell-Goldstein, lambda=0.7) over the exact top-12 candidate "
     "pool: greedy score = 0.7*rel - 0.3*max-sim-to-selected, rounded "

@@ -318,7 +318,7 @@ def udtf_sentence_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.functions import udtf
 
-    from ..catalog import register_fixtures
+    from ..catalog import _FIXTURE_SQL_LOCK, fixture_sql
 
     @udtf(returnType="idx int, sentence string", useArrow=True)
     class SentenceSplit:
@@ -335,13 +335,20 @@ def udtf_sentence_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i, p in enumerate(parts):
                 yield i, p
 
-    spark.udtf.register("sentence_split", SentenceSplit)
-    register_fixtures(spark, sf_dir, tables=("documents",))
-    return spark.sql(
-        "SELECT d.doc_id, s.idx, s.sentence "
-        "FROM documents d, LATERAL sentence_split(d.text) AS s "
-        "WHERE d.doc_id % 25 = 0"
-    )
+    # The temp function, like the fixture view, is needed only for the
+    # analysis (the analyzed plan holds the UDTF); the fixture-SQL lock
+    # spans its register and drop, as it does the view's.
+    with _FIXTURE_SQL_LOCK:
+        spark.udtf.register("sentence_split", SentenceSplit)
+        try:
+            return fixture_sql(
+                spark, sf_dir, ("documents",),
+                "SELECT d.doc_id, s.idx, s.sentence "
+                "FROM documents d, LATERAL sentence_split(d.text) AS s "
+                "WHERE d.doc_id % 25 = 0",
+            )
+        finally:
+            spark.sql("DROP TEMPORARY FUNCTION IF EXISTS sentence_split")
 
 
 @register(
@@ -1411,7 +1418,7 @@ def quality_ttr_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame
         F.sum("c").cast("bigint").alias("n"),
         F.count(F.lit(1)).cast("bigint").alias("types"),
         F.sum(F.when(F.col("c") == 1, 1).otherwise(0)).cast("bigint").alias("hapax"),
-        # r8 micro-unit audit: rep2 <= n^2 and 2*rep2*1e6 wraps int64 at
+        # rep2 <= n^2 and 2*rep2*1e6 wraps int64 at
         # ~2.1e6 tokens per doc (a ~10 MB text) — DECIMAL keeps the
         # Simpson numerator exact for any document
         F.sum(F.col("c").cast("decimal(19,0)") * (F.col("c") - 1))
@@ -1625,8 +1632,8 @@ def text_novelty_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rounded heuristic is integer-valued there), bins are integer "
     "division — no float bin edge — and per-bin confidence, accuracy, "
     "and the n-weighted ECE all round half-away in integer micro-units "
-    "under DECIMAL(38,0)/HUGEINT (n * gap is corpus-scaled — the r8 "
-    "micro-unit audit class). The ECE window runs over the 10-row bin "
+    "under DECIMAL(38,0)/HUGEINT (n * gap is corpus-scaled, so BIGINT "
+    "would wrap on a large corpus). The ECE window runs over the 10-row bin "
     "relation — bounded by construction.",
 )
 def eval_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2533,8 +2540,8 @@ def text_hapax_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the vocabulary relation, one |sources|-row aggregate. NO
     rebalance_scan: the tokenize explode is one cheap regex per row —
     repartitioning first shuffles the text payload for parallelism the
-    explode doesn't need (measured r12: the rebalance REGRESSED this
-    query 0.45 -> 0.89 s; reverted r13)."""
+    explode doesn't need (measured: the rebalance REGRESSED this query
+    0.45 -> 0.89 s, so it was taken out)."""
     d = load_fixture(spark, sf_dir, "documents")
     tok = d.select(
         "source",
@@ -3083,7 +3090,7 @@ def text_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text). Char counts use translate (plain char-set deletion) and "
     "the run detector a single anchored-DFA search — the regex-"
     "split-and-measure form cost 2.44 s of the 3.50 s 8x leg for a "
-    "value the rule only ever thresholds (BENCHNOTES r12).",
+    "value the rule only ever thresholds (BENCHNOTES.md).",
 )
 def text_ocr_garbage_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: stateless per-document projection — regexp counts
@@ -3174,7 +3181,7 @@ def text_yule_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the (source, word, freq) vocabulary relation, one |sources|-row
     aggregate — frequencies ride the shuffle, never token bodies. NO
     rebalance_scan: same cheap-tokenize shape as text_hapax_ratio, where
-    the r12 rebalance measured as a 2x regression (reverted r13)."""
+    a rebalance measured as a 2x regression and was taken out."""
     d = load_fixture(spark, sf_dir, "documents")
     tok = d.select(
         "source",

@@ -15,15 +15,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..catalog import register_fixtures
+from ..catalog import fixture_sql
 from ..registry import register
 
 
 def _sql_query(name: str, tables: tuple[str, ...], sql: str, doc: str):
     @register(name, oracle=sql, doc=doc)
     def run(spark: SparkSession, sf_dir: str, _sql=sql, _tables=tables) -> DataFrame:
-        register_fixtures(spark, sf_dir, tables=_tables)
-        return spark.sql(_sql)
+        return fixture_sql(spark, sf_dir, _tables, _sql)
 
     run.__name__ = name
     return run

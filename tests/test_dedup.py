@@ -183,6 +183,22 @@ def test_connected_components_unpersists_edges_on_failure(spark):
     assert _cache_entries(spark) <= before
 
 
+def test_kmeans_exact_releases_held_vectors_on_failure(spark):
+    """A raise inside ``kmeans_exact``'s held block (ids not 0..k-1 break
+    the init contract) still releases its quantized vectors: the session's
+    cache manager is empty afterwards."""
+    from cdw_spark.operators.similarity import kmeans_exact
+
+    vecs = spark.createDataFrame(
+        [(10, [0.5, 0.25]), (11, [0.125, 1.0]), (12, [1.0, 0.0])],
+        "vec_id long, embedding array<float>",
+    )
+    spark.catalog.clearCache()
+    with pytest.raises(ValueError, match="kmeans init expects unique ids"):
+        kmeans_exact(vecs, k=2, iters=1, dim=2)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_paragraph_dedup_removes_cross_doc_blocks(spark):
     from cdw_spark.operators.dedup import paragraph_dedup
 

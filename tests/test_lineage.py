@@ -15,18 +15,31 @@ from cdw_spark.registry import load_all
 SPECS = load_all()
 
 
+def _package_lines_matching(pattern: str) -> list[str]:
+    pkg = Path(__file__).resolve().parent.parent / "cdw_spark"
+    rx = re.compile(pattern)
+    return sorted(
+        f"{path.relative_to(pkg.parent)}:{i}"
+        for path in pkg.rglob("*.py")
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if rx.search(line)
+    )
+
+
 def test_cuts_live_only_in_lineage_seam():
     """Source-scan guard: only cdw_spark/plans/lineage.py calls
     ``localCheckpoint`` or ``checkpoint``, so the choice between a local
     and a durable cut is made in one place."""
-    pkg = Path(__file__).resolve().parent.parent / "cdw_spark"
-    pattern = re.compile(r"localCheckpoint\(|\.checkpoint\(")
-    offenders = sorted(
-        f"{path.relative_to(pkg.parent)}:{i}"
-        for path in pkg.rglob("*.py")
-        for i, line in enumerate(path.read_text().splitlines(), 1)
-        if pattern.search(line)
-    )
+    offenders = _package_lines_matching(r"localCheckpoint\(|\.checkpoint\(")
+    assert offenders, "the guard must see the seam in plans/lineage.py"
+    assert all(o.startswith("cdw_spark/plans/lineage.py:") for o in offenders), offenders
+
+
+def test_held_relations_live_only_in_lineage_seam():
+    """Source-scan guard: only cdw_spark/plans/lineage.py persists,
+    caches or unpersists, so every held relation is released on every
+    exit of its block (``held``)."""
+    offenders = _package_lines_matching(r"\.persist\(|\.cache\(\)|\.unpersist\(")
     assert offenders, "the guard must see the seam in plans/lineage.py"
     assert all(o.startswith("cdw_spark/plans/lineage.py:") for o in offenders), offenders
 

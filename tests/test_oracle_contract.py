@@ -14,8 +14,54 @@ WITH_ORACLE = sorted(n for n, s in SPECS.items() if s.oracle is not None)
 ROWS_ONLY = sorted(n for n, s in SPECS.items() if s.oracle is None)
 
 
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def _temp_functions(spark) -> set[str]:
+    functions = spark._jsparkSession.sessionState().catalog().listTemporaryFunctions()
+    return {functions.apply(i).funcName() for i in range(functions.size())}
+
+
+@pytest.fixture
+def session_check(spark, tmp_path, monkeypatch):
+    """Run after a query's actions: the query left the session as it found
+    it. The cache manager holds no entry, no temp view or temp function
+    was added, no streaming query is active, and the query's replay
+    scratch (pointed at this test's temp dir) is empty. Cache entries and
+    temp views left by earlier tests are dropped first, so they are not
+    charged to this query, and a view the query re-registers under a name
+    an earlier query left behind still counts as added.
+
+    Persistent RDDs are not checked: a returned frame may still read the
+    blocks of its own lineage cuts (``plans.lineage.cut``), which stay
+    until the frame is dropped and its RDDs collected. Callers release
+    those between units of work (``bench.py`` and perfbench do)."""
+    scratch = tmp_path / "replay"
+    monkeypatch.setenv("SPARK_GRAFT_REPLAY_SCRATCH", str(scratch))
+    spark.catalog.clearCache()
+    for view in _temp_views(spark):
+        spark.catalog.dropTempView(view)
+    functions = _temp_functions(spark)
+
+    def check(name):
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
+            f"{name} left a cache entry"
+        )
+        views = sorted(_temp_views(spark))
+        assert not views, f"{name} left temp views {views}"
+        added = sorted(_temp_functions(spark) - functions)
+        assert not added, f"{name} left temp functions {added}"
+        assert not spark.streams.active, f"{name} left a streaming query active"
+        assert not scratch.exists() or not list(scratch.iterdir()), (
+            f"{name} left replay scratch {sorted(p.name for p in scratch.iterdir())}"
+        )
+
+    return check
+
+
 @pytest.mark.parametrize("name", WITH_ORACLE)
-def test_oracle_match(spark, sf_dir, name):
+def test_oracle_match(spark, sf_dir, session_check, name):
     spec = SPECS[name]
     df = spec.fn(spark, sf_dir)
     # The driver's hash canonicalizer sorts columns via pandas Categorical,
@@ -34,6 +80,7 @@ def test_oracle_match(spark, sf_dir, name):
     )
     res = compare_frames(name, df, spec.oracle, sf_dir)
     assert res.ok, str(res)
+    session_check(name)
 
 
 def test_oracle_output_types_drivable(sf_dir):
@@ -64,12 +111,13 @@ def test_oracle_output_types_drivable(sf_dir):
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY)
-def test_rows_only_runs(spark, sf_dir, name):
+def test_rows_only_runs(spark, sf_dir, session_check, name):
     """Queries without an oracle must at least run and return a stable schema."""
     spec = SPECS[name]
     df = spec.fn(spark, sf_dir)
     assert df.columns, name
     assert df.count() >= 0
+    session_check(name)
 
 
 def test_entry_smoke(spark):
